@@ -326,8 +326,10 @@ def narrow_barrier(
     every downstream plan branch (each branch embeds the same
     checkpointed RDD, so a single action computes it once and later
     references read the cached blocks — the rfm_segments precedent) but
-    skips the separate materialization JOB and its driver sync. Use it
-    when every consumer of the frame lives inside a single action (the
-    fold-based graph queries); loops that re-plan per round keep the
-    eager default."""
+    skips the separate materialization JOB and the wait for it. Eager
+    barriers are for loops with per-round ACTIONS (loops that collect or
+    count each round). A fixed-budget loop compiled into one action —
+    every consumer of the frame inside a single plan, as in the
+    fold-based graph queries and the round loops of bfs_hops_copurchase
+    and sssp_copurchase — may use lazy ones."""
     return iter_barrier(df.coalesce(width), eager=eager)

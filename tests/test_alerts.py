@@ -13,38 +13,21 @@ from ecommerce_lakehouse_spark.quality import AlertPolicy, QualityAlertError
 pytestmark = pytest.mark.slow
 
 
-def _write_inputs(spark, d, orders_rows, lineitem_rows):
-    spark.createDataFrame(
-        [(i, f"part{i}", 10.0 * i) for i in range(1, 7)],
-        "p_partkey int, p_name string, p_retailprice double",
-    ).write.mode("overwrite").parquet(f"{d}/part.parquet")
-    spark.createDataFrame(
-        orders_rows,
-        "o_orderkey int, o_custkey int, o_totalprice double, o_orderdate timestamp",
-    ).write.mode("overwrite").parquet(f"{d}/orders.parquet")
-    spark.createDataFrame(
-        lineitem_rows,
-        "l_orderkey int, l_linenumber int, l_partkey int, l_quantity double, "
-        "l_discount double, l_extendedprice double",
-    ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
-
-
 def _ts(spark):
     import datetime
 
     return datetime.datetime(1995, 3, 1, 12, 0, 0)
 
 
-def test_high_alert_recorded_run_completes(spark, tmp_path):
+def test_high_alert_recorded_run_completes(spark, tmp_path, medallion_inputs):
     """>0.1% invalid references fires a HIGH alert: recorded in the
     quality_alerts table, run still completes (only critical blocks)."""
-    d = str(tmp_path / "in")
     ts = _ts(spark)
     orders = [(i, 100 + i, 50.0 * i, ts) for i in range(1, 11)]
     lineitem = [
         (1 + (i % 10), i, 1 + (i % 6), 1.0, 0.1, 99.0) for i in range(99)
     ] + [(3, 999, 999, 1.0, 0.1, 99.0)]  # 1/100 invalid part ref = 1% > 0.1%
-    _write_inputs(spark, d, orders, lineitem)
+    d = medallion_inputs(orders, lineitem)
     root = str(tmp_path / "lake")
     t = run_medallion(spark, d, root, alert_policy=AlertPolicy())
     at = t["quality_alerts"].read()
@@ -54,41 +37,50 @@ def test_high_alert_recorded_run_completes(spark, tmp_path):
     assert t["gold.daily_sales"].read().count() > 0  # pipeline finished
 
 
-def test_critical_alert_records_then_raises(spark, tmp_path):
+def test_critical_alert_records_then_raises(spark, tmp_path, medallion_inputs):
     """A batch whose rejection rate crosses the critical threshold
     (schema-level failure) is recorded in quality_alerts AND aborts the
-    run before the batch reaches silver."""
-    d = str(tmp_path / "in")
+    run before the batch reaches silver. The flows run concurrently, so
+    the other datasets' flows still complete; every alert is recorded
+    exactly once and gold never runs."""
     ts = _ts(spark)
     orders = [(i, 100 + i, 50.0 * i, ts) for i in range(1, 6)] + [
         (None, 200 + i, 10.0, ts) for i in range(7)
     ]  # 7/12 null pk = 58% rejected > 50%
     lineitem = [(1, i, 1, 1.0, 0.1, 99.0) for i in range(10)]
-    _write_inputs(spark, d, orders, lineitem)
+    d = medallion_inputs(orders, lineitem)
     root = str(tmp_path / "lake")
     with pytest.raises(QualityAlertError, match="schema_validation"):
         run_medallion(spark, d, root, alert_policy=AlertPolicy())
-    at = LakeTable(spark, f"{root}/quality_alerts").read()
-    crit = [r for r in at.collect() if r.severity == "critical"]
-    assert crit and crit[0].dataset == "orders"
+    at = LakeTable(spark, f"{root}/quality_alerts")
+    assert len(at.history()) == 1  # recorded in one commit
+    rows = at.read().collect()
+    keys = [(r.dataset, r.alert_type, r.rule) for r in rows]
+    assert len(keys) == len(set(keys))
+    crit = [r for r in rows if r.severity == "critical"]
+    assert len(crit) == 1 and crit[0].dataset == "orders"
     assert crit[0].violation_pct > 50.0
-    # the poisoned batch never reached silver
+    # the poisoned batch never reached silver (nor quarantine)
     assert not LakeTable(spark, f"{root}/silver/orders").exists()
+    assert not LakeTable(spark, f"{root}/rejected/orders").exists()
+    # the sibling flows finished and committed; gold did not run
+    assert LakeTable(spark, f"{root}/silver/part").read().count() == 6
+    assert LakeTable(spark, f"{root}/silver/lineitem").read().count() == 10
+    assert not LakeTable(spark, f"{root}/gold/daily_sales").exists()
 
 
-def test_policy_off_by_default(spark, tmp_path):
+def test_policy_off_by_default(spark, tmp_path, medallion_inputs):
     """No policy, no alerts table, no extra jobs — oracle runs unchanged."""
-    d = str(tmp_path / "in")
     ts = _ts(spark)
     orders = [(i, 100 + i, 50.0 * i, ts) for i in range(1, 11)]
     lineitem = [(1 + (i % 10), i, 1 + (i % 6), 1.0, 0.1, 99.0) for i in range(20)]
-    _write_inputs(spark, d, orders, lineitem)
+    d = medallion_inputs(orders, lineitem)
     root = str(tmp_path / "lake")
     t = run_medallion(spark, d, root)
     assert "quality_alerts" not in t
 
 
-def test_processing_delay_and_metric_discrepancy(spark, tmp_path):
+def test_processing_delay_and_metric_discrepancy(spark, tmp_path, medallion_inputs):
     """Remaining two reference alert types: sla_seconds=0 makes every
     dataset fire a MEDIUM processing_delay alert (recorded, never
     blocking); the gold-vs-silver recalculated metric matches by
@@ -99,11 +91,10 @@ def test_processing_delay_and_metric_discrepancy(spark, tmp_path):
         metric_discrepancy_alert,
     )
 
-    d = str(tmp_path / "in")
     ts = _ts(spark)
     orders = [(i, 100 + i, 50.0 * i, ts) for i in range(1, 11)]
     lineitem = [(1 + (i % 10), i, 1 + (i % 6), 1.0, 0.1, 99.0) for i in range(20)]
-    _write_inputs(spark, d, orders, lineitem)
+    d = medallion_inputs(orders, lineitem)
     t = run_medallion(
         spark, d, str(tmp_path / "lake"), alert_policy=P(sla_seconds=0.0)
     )
