@@ -31,17 +31,15 @@ import os
 
 from pyspark.sql import DataFrame
 
-from ecommerce_lakehouse_spark.lake.table import LakeTable, _partition_predicate
-
-
-def _entry_norm(e) -> tuple[str, list[dict], list[str] | None]:
-    if isinstance(e, dict):
-        return e["path"], e.get("exclude") or [], e.get("live_files")
-    return e, [], None
-
-
-# physical-only reorganizations: no logical row change (Delta dataChange=false)
-_PHYSICAL_OPS = ("compact", "optimize", "optimize-zorder", "auto-compact")
+from ecommerce_lakehouse_spark.lake.table import (
+    _PHYSICAL_OPS,
+    LakeTable,
+    _apply_column_mapping,
+    _dv_join,
+    _entry_norm,
+    _partition_predicate,
+    check_table_features,
+)
 
 
 def _rel_parquet_files(d: str) -> set[str]:
@@ -61,6 +59,7 @@ def _rel_parquet_files(d: str) -> set[str]:
 
 def _read_slice(
     table: LakeTable,
+    head: dict,
     path: str,
     files: list[str] | None,
     pcols: list[str],
@@ -72,9 +71,10 @@ def _read_slice(
     ``minus_mask`` partitions, (when given) inside ``only_mask`` ones, and
     excluding rows named by the ``minus_dvs`` deletion vectors — a slice
     must reflect what its snapshot READ, or rows a merge-on-read DELETE
-    already removed would re-surface as feed deletes on the next rewrite."""
-    import pyspark.sql.functions as F
-
+    already removed would re-surface as feed deletes on the next rewrite.
+    Served under the logical schema of ``head``, the table's head manifest
+    (Delta CDF does the same for column-mapped tables): pre-rename slices
+    union cleanly with post-rename ones."""
     if files is not None:
         if not files:
             return None
@@ -84,21 +84,12 @@ def _read_slice(
         df = reader.parquet(*[os.path.join(path, rel) for rel in sorted(files)])
     else:
         df = table.spark.read.option("mergeSchema", "true").parquet(path)
-    # serve the feed under the CURRENT logical schema (Delta CDF does the
-    # same for column-mapped tables): pre-rename slices union cleanly
-    # with post-rename ones
-    from ecommerce_lakehouse_spark.lake.table import _apply_column_mapping
-
-    df = _apply_column_mapping(
-        df, table.column_mapping(), table.dropped_columns()
-    )
+    df = _apply_column_mapping(df, head)
     if minus_mask:
         df = df.filter(~_partition_predicate(pcols, minus_mask))
     if only_mask is not None:
         df = df.filter(_partition_predicate(pcols, only_mask))
     if minus_dvs:
-        from ecommerce_lakehouse_spark.lake.table import _dv_join
-
         df = _dv_join(df, table.spark.read.parquet(*minus_dvs), "left_anti")
     return df
 
@@ -137,11 +128,12 @@ def _conform(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
     return a.select(*cols), b.select(*cols)
 
 
-def _version_slices(table: LakeTable, v: int) -> tuple[DataFrame | None, DataFrame | None]:
-    """(pre, post): rows visible at v-1 but not carried into v, and rows
-    newly visible at v — reading only what commit v touched."""
-    m_cur = table._manifest(v)
-    m_prev = table._manifest(v - 1) if v > 1 else None
+def _version_slices(
+    table: LakeTable, head: dict, m_prev: dict | None, m_cur: dict
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """(pre, post): rows visible at ``m_prev`` (None before v1) but not
+    carried into ``m_cur``, and rows newly visible at ``m_cur`` — reading
+    only what that commit touched."""
     pcols_prev = m_prev["partition_by"] if m_prev else []
     pcols_cur = m_cur["partition_by"]
     prev = {p: (excl, live) for p, excl, live in map(_entry_norm, m_prev["data_dirs"] if m_prev else [])}
@@ -156,7 +148,7 @@ def _version_slices(table: LakeTable, v: int) -> tuple[DataFrame | None, DataFra
     for path, (excl_p, live_p) in prev.items():
         if path not in cur:
             removed.append(
-                _read_slice(table, path, live_p, pcols_prev, excl_p, minus_dvs=dvs_p)
+                _read_slice(table, head, path, live_p, pcols_prev, excl_p, minus_dvs=dvs_p)
             )
             continue
         excl_c, live_c = cur[path]
@@ -164,7 +156,7 @@ def _version_slices(table: LakeTable, v: int) -> tuple[DataFrame | None, DataFra
         if new_excl:
             removed.append(
                 _read_slice(
-                    table, path, live_p, pcols_prev, excl_p,
+                    table, head, path, live_p, pcols_prev, excl_p,
                     only_mask=new_excl, minus_dvs=dvs_p,
                 )
             )
@@ -172,7 +164,7 @@ def _version_slices(table: LakeTable, v: int) -> tuple[DataFrame | None, DataFra
         if un_excl:  # restore() can re-expose masked partitions
             added.append(
                 _read_slice(
-                    table, path, live_c, pcols_cur, excl_c,
+                    table, head, path, live_c, pcols_cur, excl_c,
                     only_mask=un_excl, minus_dvs=dvs_c,
                 )
             )
@@ -188,21 +180,21 @@ def _version_slices(table: LakeTable, v: int) -> tuple[DataFrame | None, DataFra
             if dropped:
                 removed.append(
                     _read_slice(
-                        table, path, sorted(dropped), pcols_prev, excl_p,
+                        table, head, path, sorted(dropped), pcols_prev, excl_p,
                         minus_dvs=dvs_p,
                     )
                 )
             if gained:
                 added.append(
                     _read_slice(
-                        table, path, sorted(gained), pcols_cur, excl_c,
+                        table, head, path, sorted(gained), pcols_cur, excl_c,
                         minus_dvs=dvs_c,
                     )
                 )
     for path, (excl_c, live_c) in cur.items():
         if path not in prev:
             added.append(
-                _read_slice(table, path, live_c, pcols_cur, excl_c, minus_dvs=dvs_c)
+                _read_slice(table, head, path, live_c, pcols_cur, excl_c, minus_dvs=dvs_c)
             )
 
     # merge-on-read DELETE (and its rollback): rows appear/vanish with no
@@ -211,8 +203,6 @@ def _version_slices(table: LakeTable, v: int) -> tuple[DataFrame | None, DataFra
     # file list is control-plane) and semi-join the ids back to full rows.
     def _dv_rows(dv_paths: list[str], owners: dict) -> list[DataFrame]:
         from urllib.parse import unquote, urlparse
-
-        from ecommerce_lakehouse_spark.lake.table import _dv_join
 
         dv = table.spark.read.parquet(*dv_paths)
         files = [r[0] for r in dv.select("__file_path").distinct().collect()]
@@ -264,23 +254,22 @@ def table_changes(
     matched delete+insert pairs to update_preimage/update_postimage."""
     import pyspark.sql.functions as F
 
-    from ecommerce_lakehouse_spark.lake.table import check_table_features
-
-    end = ending_version if ending_version is not None else table.current_version()
+    head = table._head()
+    end = ending_version if ending_version is not None else head["version"]
     # the feed decodes DV sidecars / mapped columns — gate like a read
-    check_table_features(
-        table._manifest(table.current_version()), for_write=False, where=table.root
-    )
-    if starting_version < 1 or end > table.current_version() or starting_version > end:
+    check_table_features(head, for_write=False, where=table.root)
+    if starting_version < 1 or end > head["version"] or starting_version > end:
         raise ValueError(
             f"change feed range [{starting_version}, {end}] outside table "
-            f"history [1, {table.current_version()}]"
+            f"history [1, {head['version']}]"
         )
     frames: list[DataFrame] = []
+    m_cur = table._manifest(starting_version - 1) if starting_version > 1 else None
     for v in range(starting_version, end + 1):
-        if table._manifest(v).get("operation") in _PHYSICAL_OPS:
+        m_prev, m_cur = m_cur, table._manifest(v)
+        if m_cur.get("operation") in _PHYSICAL_OPS:
             continue  # physical-only: pre == post by construction
-        pre, post = _version_slices(table, v)
+        pre, post = _version_slices(table, head, m_prev, m_cur)
         if pre is None and post is None:
             continue  # metadata-only commit
         if pre is None:

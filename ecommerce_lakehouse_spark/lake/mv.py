@@ -82,7 +82,7 @@ class MaterializedAggregate:
         """Full recompute from the current snapshot (first refresh, or
         explicit rebuild). Records the cursor with the overwrite."""
         head = self.src.current_version()
-        mv = self.src.read().groupBy(*self.group_cols).agg(*self._measures())
+        mv = self.src.read(version=head).groupBy(*self.group_cols).agg(*self._measures())
         self.dst.overwrite(mv, txn={"app_id": self.app_id, "version": head})
         return head
 

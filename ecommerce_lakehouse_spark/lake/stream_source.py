@@ -44,38 +44,21 @@ visible to the executors — same contract as every lake read.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator
-from urllib.parse import unquote
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _latest_version(root: str) -> int:
-    with open(os.path.join(root, "_manifest", "_LATEST")) as f:
-        return int(f.read().strip())
-
-
-def _load_manifest(root: str, version: int) -> dict:
-    with open(os.path.join(root, "_manifest", f"v{version:08d}.json")) as f:
-        return json.load(f)
-
-
-# physical-only reorganizations: no logical row change (Delta dataChange=false)
-_PHYSICAL_OPS = ("compact", "optimize", "optimize-zorder", "auto-compact")
-
-
-def _entry_path(e) -> str:
-    return e["path"] if isinstance(e, dict) else e
-
-
-def _entry_norm(e) -> tuple[str, list[dict], list[str] | None]:
-    if isinstance(e, dict):
-        return e["path"], e.get("exclude") or [], e.get("live_files")
-    return e, [], None
+from ecommerce_lakehouse_spark.lake.table import (
+    _PHYSICAL_OPS,
+    _entry_norm,
+    _entry_path,
+    _head_version,
+    _hive_values,
+    _read_manifest,
+    _row_canon,
+    check_table_features,
+)
 
 
 def _parquet_files(d: str) -> list[str]:
@@ -94,20 +77,6 @@ def _parquet_files(d: str) -> list[str]:
     return sorted(out)
 
 
-def _canon(d: dict) -> tuple:
-    """Hive-comparable form of a partition tuple (bools lowercase, None
-    stays None, everything else str) — mirrors lake.table._row_canon."""
-    out = []
-    for k in sorted(d):
-        v = d[k]
-        if isinstance(v, bool):
-            v = str(v).lower()
-        elif v is not None:
-            v = str(v)
-        out.append((k, v))
-    return tuple(out)
-
-
 def _live_files(entry) -> list[tuple[str, str]]:
     """(dir, rel) of the files a manifest entry actually exposes:
     honors ``live_files`` subsets (file-pruned DML) and skips files in
@@ -117,19 +86,9 @@ def _live_files(entry) -> list[tuple[str, str]]:
     path, excl, live = _entry_norm(entry)
     rels = sorted(live) if live is not None else _parquet_files(path)
     if excl:
-        dead = {_canon(row) for row in excl}
-        rels = [r for r in rels if _canon(_hive_values(r)) not in dead]
+        dead = {_row_canon(row) for row in excl}
+        rels = [r for r in rels if _row_canon(_hive_values(r)) not in dead]
     return [(path, r) for r in rels]
-
-
-def _hive_values(rel: str) -> dict[str, str | None]:
-    """Partition column values encoded in a hive-relative file path."""
-    vals: dict[str, str | None] = {}
-    for seg in rel.split(os.sep)[:-1]:
-        if "=" in seg:
-            c, v = seg.split("=", 1)
-            vals[c] = None if v == _HIVE_NULL else unquote(v)
-    return vals
 
 
 def _snapshot_arrow_schema(root: str):
@@ -144,10 +103,8 @@ def _snapshot_arrow_schema(root: str):
     import pyarrow as pa
     import pyarrow.dataset as pds
 
-    from ecommerce_lakehouse_spark.lake.table import check_table_features
-
-    v = _latest_version(root)
-    m = _load_manifest(root, v)
+    v = _head_version(root)
+    m = _read_manifest(root, v)
     # the stream decodes snapshot bytes like any reader — gate on
     # protocol features before serving a schema for them
     check_table_features(m, for_write=False, where=root)
@@ -158,7 +115,7 @@ def _snapshot_arrow_schema(root: str):
                 f"laketable source at {root}: no version has any data dirs — "
                 "cannot infer a stream schema from an always-empty table"
             )
-        m = _load_manifest(root, v)
+        m = _read_manifest(root, v)
     schemas = []
     for e in m["data_dirs"]:
         schemas.append(pds.dataset(_entry_path(e), partitioning="hive").schema)
@@ -186,7 +143,7 @@ def _carryover_visibility_changes(m_prev: dict | None, m: dict) -> list[str]:
             changes.append(f"data dir dropped: {p}")
             continue
         ec, lc = cur[p]
-        if {_canon(r) for r in ep} != {_canon(r) for r in ec}:
+        if {_row_canon(r) for r in ep} != {_row_canon(r) for r in ec}:
             changes.append(f"partition exclude mask changed: {p}")
         elif (lp is None) != (lc is None) or (
             lp is not None and sorted(lp) != sorted(lc)
@@ -248,7 +205,7 @@ class LakeTableStreamReader(DataSourceStreamReader):
         self._cdf = str(options.get("readchangefeed", "false")).lower() == "true"
         sv = str(options.get("startingversion", "latest")).lower()
         if sv == "latest":
-            self._start = _latest_version(root)
+            self._start = _head_version(root)
         elif sv == "earliest":
             self._start = 0
         else:
@@ -264,7 +221,7 @@ class LakeTableStreamReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        actual = _latest_version(self._root)
+        actual = _head_version(self._root)
         if self._max_commits is None:
             return {"version": actual}
         # rate limit (Delta maxFilesPerTrigger analogue, commit granule):
@@ -283,8 +240,9 @@ class LakeTableStreamReader(DataSourceStreamReader):
             known if self._last_end is None else max(self._last_end, known)
         )
         parts: list[_LakeFilePartition] = []
+        m = _read_manifest(self._root, start["version"]) if start["version"] else None
         for v in range(start["version"] + 1, end["version"] + 1):
-            m = _load_manifest(self._root, v)
+            m_prev, m = m, _read_manifest(self._root, v)
             if m.get("column_mapping") or m.get("dropped_columns"):
                 # this source serves files under their PHYSICAL schema
                 # (pyarrow reads, no mapping layer): streaming across a
@@ -296,7 +254,6 @@ class LakeTableStreamReader(DataSourceStreamReader):
                     f"v{m['version']}; the file-level stream cannot serve "
                     "renamed columns — use batch changes() or read()"
                 )
-            m_prev = _load_manifest(self._root, v - 1) if v > 1 else None
             prev_dirs = (
                 {_entry_path(e) for e in m_prev["data_dirs"]} if m_prev else set()
             )

@@ -1,20 +1,23 @@
 """LakeTable — a minimal lakehouse table format on plain parquet.
 
 Re-expresses the reference's Delta usage (SURVEY §2.2 K1-K7) without
-delta-spark (not installed here): versioned copy-on-write commits with an
-atomic manifest pointer, partitioned writes, append/overwrite/merge, and
-time-travel reads by version.
+delta-spark (not installed here): versioned copy-on-write commits,
+partitioned writes, append/overwrite/merge, and time-travel reads by
+version.
 
 Layout:
     <root>/
       _manifest/ v00000001.json ...   (one JSON per committed version)
-      _manifest/_LATEST               (atomic pointer: rename-swapped)
-      data/v00000001/ ... parquet (optionally partitioned subdirs)
+      _manifest/_LATEST               (roll-forward cache of the head)
+      data/v00000001-<uuid>/ ... parquet (optionally partitioned subdirs)
 
-Each commit writes a fresh data directory then atomically swaps _LATEST —
-readers never see partial writes (same spirit as Delta's log, single-writer
-only; a real deployment swaps this class for Delta/Iceberg which provide
-multi-writer transaction logs).
+Each operation reads the head manifest ONCE and commits against it (the
+Delta snapshot): it writes a fresh, uniquely-named data directory, then
+publishes the next version's manifest with an atomic ``os.link`` — the
+commit point. The link fails if another writer already claimed that
+version, so concurrent writers never overwrite each other (see
+ConcurrentWriteError). ``_LATEST`` is moved afterwards as a cache that
+readers roll forward over; readers never see partial writes.
 """
 
 from __future__ import annotations
@@ -48,10 +51,12 @@ class ConcurrentWriteError(RuntimeError):
     didn't see.
 
     LakeTable's commit protocol is optimistic concurrency control in the
-    Delta style: an operation snapshots the table version when it starts,
-    and the commit (a) refuses if the table moved past that snapshot and
-    (b) creates its manifest file with O_EXCL so two writers racing for
-    the same version number cannot both win. Logical conflict resolution
+    Delta style: an operation reads the head manifest once when it
+    starts and validates, writes and commits against it; the commit (a)
+    refuses if the table moved past that head and (b) publishes its
+    manifest with an atomic ``os.link``, which fails if the version's
+    name already exists, so two writers racing for the same version
+    number cannot both win. Logical conflict resolution
     (what delta-spark's commit protocol adds on top) is implemented for
     the common cases: blind appends rebase over any winner, and
     partition-pruned merge/delete/update rebase automatically when every
@@ -135,6 +140,99 @@ def _part_key(v):
 
 def _entry_path(e) -> str:
     return e["path"] if isinstance(e, dict) else e
+
+
+def _entry_norm(e) -> tuple[str, list[dict], list[str] | None]:
+    """(path, exclude mask, live_files) of a manifest data-dir entry."""
+    if isinstance(e, dict):
+        return e["path"], e.get("exclude") or [], e.get("live_files")
+    return e, [], None
+
+
+# physical-only reorganizations: no logical row change (Delta dataChange=false)
+_PHYSICAL_OPS = ("compact", "optimize", "optimize-zorder", "auto-compact")
+
+# Table metadata every commit carries from the manifest its operation
+# read unless the operation changes it (Delta: metadata lives in the log
+# and survives data operations), with the value for tables predating a key.
+_METADATA = {
+    "partition_by": [],
+    # CHECK constraints: {name: sql_expr}, enforced on every write
+    "constraints": {},
+    # generated columns: {col: sql_expr}, computed/validated on write
+    "generated_columns": {},
+    # merge-on-read DELETE sidecars: parquet dirs of (__file_path,
+    # __row_index) rows the snapshot excludes; rewrites that materialize
+    # them commit []
+    "deletion_vectors": [],
+    # table properties (Delta TBLPROPERTIES): auto_compact,
+    # auto_compact_min_files, target_file_bytes, identity, bloom_index
+    "properties": {},
+    # Delta column mapping: {logical: [physical aliases, newest-first]}
+    # applied at read; renames never rewrite files
+    "column_mapping": {},
+    # dead names (DROP COLUMN): hidden from every read; a dropped name
+    # stays dead — see drop_column's contract
+    "dropped_columns": [],
+}
+
+
+def _metadata(manifest: dict) -> dict:
+    """The table metadata (:data:`_METADATA` keys) of ``manifest``."""
+    return {k: manifest.get(k, d) for k, d in _METADATA.items()}
+
+
+def _read_manifest(root: str, version: int) -> dict:
+    with open(os.path.join(root, "_manifest", f"v{version:08d}.json")) as f:
+        return json.load(f)
+
+
+def _head_version(root: str) -> int:
+    """Head version of the table at ``root`` (no SparkSession needed —
+    the streaming source calls this from its reader). The COMMIT POINT
+    of the protocol is the atomic ``os.link`` of a version's manifest
+    (see :meth:`LakeTable._commit`); the ``_LATEST`` pointer is only an
+    O(1) cache of the head and may lag by any number of versions if
+    writers crash between the link and the pointer swap. Reads roll
+    FORWARD from the pointer over contiguously-present manifests — a
+    lagging pointer can therefore never hide a durable commit, and a
+    crashed writer can never wedge the next one (fault-injection
+    contract: tests/test_lake_fault_injection.py). The healed head is
+    written back opportunistically so the next read is O(1) again.
+    Raises FileNotFoundError when there is neither pointer nor manifest."""
+    mdir = os.path.join(root, "_manifest")
+    latest = os.path.join(mdir, "_LATEST")
+    try:
+        with open(latest) as f:
+            head = int(f.read().strip())
+    except FileNotFoundError:
+        if not os.path.exists(os.path.join(mdir, "v00000001.json")):
+            raise
+        head = 0
+    rolled = head
+    while os.path.exists(os.path.join(mdir, f"v{rolled + 1:08d}.json")):
+        rolled += 1
+    if rolled > head:
+        try:
+            fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
+            with os.fdopen(fd, "w") as f:
+                f.write(str(rolled))
+            os.replace(tmp, latest)
+        except OSError:
+            pass  # healing is best-effort; roll-forward re-applies
+    return rolled
+
+
+def _hive_values(rel: str) -> dict[str, str | None]:
+    """Partition column values encoded in a hive-relative file path."""
+    from urllib.parse import unquote
+
+    vals: dict[str, str | None] = {}
+    for seg in rel.split(os.sep)[:-1]:
+        if "=" in seg:
+            c, v = seg.split("=", 1)
+            vals[c] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+    return vals
 
 
 def _dv_join(df: "DataFrame", dv: "DataFrame", how: str) -> "DataFrame":
@@ -225,16 +323,18 @@ def _dir_partition_tuples(path: str, pcols: list[str]) -> set[tuple]:
     return found
 
 
-def _apply_column_mapping(df, mapping: dict, dropped: list):
-    """Serve a physical frame under the table's LOGICAL schema (Delta
-    column mapping): each logical column is the newest-first COALESCE of
-    whatever names (logical + physical aliases) the frame carries —
-    a mergeSchema scan spanning pre- and post-rename files holds BOTH
-    vintages' columns, null-filled per row by file vintage, so coalesce
-    reassembles exactly one value per row. Single-name frames reduce to
-    a rename. Dead (dropped) names are hidden. Pure projection."""
+def _apply_column_mapping(df, manifest: dict):
+    """Serve a physical frame under the LOGICAL schema of ``manifest``
+    (Delta column mapping): each logical column is the newest-first
+    COALESCE of whatever names (logical + physical aliases) the frame
+    carries — a mergeSchema scan spanning pre- and post-rename files
+    holds BOTH vintages' columns, null-filled per row by file vintage, so
+    coalesce reassembles exactly one value per row. Single-name frames
+    reduce to a rename. Dead (dropped) names are hidden. Pure projection."""
     import pyspark.sql.functions as F
 
+    mapping = manifest.get("column_mapping", {})
+    dropped = manifest.get("dropped_columns", [])
     for logical, aliases in mapping.items():
         cols = set(df.columns)
         present = [c for c in [logical] + list(aliases) if c in cols]
@@ -385,44 +485,27 @@ class LakeTable:
         )
 
     def current_version(self) -> int:
-        """Head version. The COMMIT POINT of the protocol is the atomic
-        ``os.link`` of a version's manifest (see :meth:`_commit`); the
-        ``_LATEST`` pointer is only an O(1) cache of the head and may lag
-        by any number of versions if writers crash between the link and
-        the pointer swap. Reads roll FORWARD from the pointer over
-        contiguously-present manifests — a lagging pointer can therefore
-        never hide a durable commit, and a crashed writer can never wedge
-        the next one (fault-injection contract:
-        tests/test_lake_fault_injection.py). The healed head is written
-        back opportunistically so the next read is O(1) again."""
-        try:
-            with open(self._latest_path()) as f:
-                head = int(f.read().strip())
-        except FileNotFoundError:
-            head = 0
-        rolled = head
-        while os.path.exists(
-            os.path.join(self._manifest_dir, f"v{rolled + 1:08d}.json")
-        ):
-            rolled += 1
-        if rolled == 0:
-            # neither pointer nor any manifest: preserve the historical
-            # "missing table" contract (callers guard with exists())
-            with open(self._latest_path()) as f:
-                return int(f.read().strip())
-        if rolled > head:
-            try:
-                fd, tmp = tempfile.mkstemp(dir=self._manifest_dir, suffix=".tmp")
-                with os.fdopen(fd, "w") as f:
-                    f.write(str(rolled))
-                os.replace(tmp, self._latest_path())
-            except OSError:
-                pass  # healing is best-effort; roll-forward re-applies
-        return rolled
+        """Head version (roll-forward over durable manifests — see
+        :func:`_head_version`)."""
+        return _head_version(self.root)
 
     def _manifest(self, version: int) -> dict:
-        with open(os.path.join(self._manifest_dir, f"v{version:08d}.json")) as f:
-            return json.load(f)
+        return _read_manifest(self.root, version)
+
+    def _head(self, op: str | None = None) -> dict:
+        """The head manifest, read ONCE at the start of an operation: the
+        op validates, reads (``read(version=prior["version"])``), writes
+        and commits against this one dict (Delta's per-operation
+        snapshot), so a concurrent commit surfaces at :meth:`_commit`
+        instead of mixing two versions' state into one op. A table with
+        no commit yet yields ``{"version": 0}`` — the prior of a first
+        commit — or, when ``op`` names an operation that needs an
+        existing table, raises its "does not exist yet" ValueError."""
+        if self.exists():
+            return _read_manifest(self.root, self.current_version())
+        if op is not None:
+            raise ValueError(f"{op}: table does not exist yet")
+        return {"version": 0}
 
     def history(self) -> list[dict]:
         out = []
@@ -433,91 +516,56 @@ class LakeTable:
 
     def _commit(
         self,
-        data_dirs: list[str],
+        prior: dict,
+        data_dirs: list,
         operation: str,
-        partition_by: list[str],
-        base_version: int | None = None,
+        *,
         touched: list[dict] | None = None,
         txn: dict | None = None,
-        constraints: dict[str, str] | None = None,
-        generated: dict[str, str] | None = None,
-        deletion_vectors: list[str] | None = None,
-        properties: dict | None = None,
-        column_mapping: dict[str, list[str]] | None = None,
-        dropped_columns: list[str] | None = None,
-        features_override: tuple[set, set] | None = None,
+        **changes,
     ) -> int:
+        """Commit ``data_dirs`` as the version after ``prior`` — the head
+        manifest the operation read (see :meth:`_head`). Table metadata
+        (:data:`_METADATA`) is carried from ``prior`` unless ``changes``
+        overrides it. ``changes`` may also set ``features`` (drop_feature);
+        features the commit exercises re-add themselves regardless, so a
+        manifest never lies about its own content.
+
+        ``touched``: partition tuples this commit wrote/rewrote ([] = blind
+        append); None = full-table (overwrite/compact/unpartitioned DML) —
+        the rebase protocol's disjointness check reads it. ``txn``: Delta's
+        {"app_id", "version"} idempotent-replay marker (streaming
+        foreachBatch records its batch id here)."""
+        unknown = set(changes) - set(_METADATA) - {"features"}
+        if unknown:
+            raise TypeError(f"_commit: not table metadata: {sorted(unknown)}")
         _crash_hook("commit_enter")
+        base = prior["version"]
         current = self.current_version() if self.exists() else 0
-        if properties is None:
-            # table properties ride every commit (Delta TBLPROPERTIES)
-            properties = (
-                self._manifest(current).get("properties", {}) if current else {}
-            )
-        if column_mapping is None:
-            # column-mapping metadata rides every commit (Delta column
-            # mapping: renames/drops live in the log, not the files)
-            column_mapping = (
-                self._manifest(current).get("column_mapping", {}) if current else {}
-            )
-        if dropped_columns is None:
-            dropped_columns = (
-                self._manifest(current).get("dropped_columns", []) if current else []
-            )
-        if constraints is None:
-            # table-level metadata rides every commit (Delta: constraints
-            # live in the log and survive data operations)
-            constraints = (
-                self._manifest(current).get("constraints", {}) if current else {}
-            )
-        if generated is None:
-            generated = (
-                self._manifest(current).get("generated_columns", {}) if current else {}
-            )
-        if deletion_vectors is None:
-            # DVs ride commits that keep the underlying files (appends,
-            # metadata); rewrites that materialize them pass [] explicitly
-            deletion_vectors = (
-                self._manifest(current).get("deletion_vectors", []) if current else []
-            )
-        if base_version is not None and current != base_version:
+        if current != base:
             raise ConcurrentWriteError(
-                f"{operation}: table advanced v{base_version} -> v{current} "
+                f"{operation}: table advanced v{base} -> v{current} "
                 "since this operation read it; re-read and retry"
             )
         # protocol features: gate on what the table already requires, then
         # record (monotonically) what this commit starts requiring
-        prior_feats = (
-            self._manifest(current).get("features", {}) if current else {}
-        )
-        if current:
-            check_table_features(
-                self._manifest(current), for_write=True, where=self.root
-            )
-        if features_override is not None:
-            # drop_feature path: start from the caller's sets; the
-            # exercise-based additions below still run, so a feature the
-            # commit STILL exercises silently re-adds itself (a drop can
-            # never leave the manifest lying about its own content)
-            reader_feats, writer_feats = (
-                set(features_override[0]),
-                set(features_override[1]),
-            )
-        else:
-            reader_feats = set(prior_feats.get("reader", []))
-            writer_feats = set(prior_feats.get("writer", []))
-        if deletion_vectors:
+        check_table_features(prior, for_write=True, where=self.root)
+        meta = {**_metadata(prior), **changes}
+        feats = meta.pop("features", prior.get("features", {}))
+        reader_feats = set(feats.get("reader", []))
+        writer_feats = set(feats.get("writer", []))
+        if meta["deletion_vectors"]:
             reader_feats.add("deletion-vectors")
-        if column_mapping or dropped_columns:
+        if meta["column_mapping"] or meta["dropped_columns"]:
             reader_feats.add("column-mapping")
-        if constraints:
+        if meta["constraints"]:
             writer_feats.add("check-constraints")
-        if generated:
+        if meta["generated_columns"]:
             writer_feats.add("generated-columns")
-        if properties.get("auto_compact"):
+        if meta["properties"].get("auto_compact"):
             writer_feats.add("auto-compaction")
         version = current + 1
-        txns = self._txn_map(current)
+        txns = self._txn_map(prior)
         if txn:
             a, tv = txn["app_id"], txn["version"]
             txns[a] = tv if a not in txns else max(txns[a], tv)
@@ -526,32 +574,11 @@ class LakeTable:
             "version": version,
             "operation": operation,
             "data_dirs": data_dirs,
-            "partition_by": partition_by,
-            # list = partition tuples this commit wrote/rewrote ([] = blind
-            # append); None = full-table (overwrite/compact/unpartitioned
-            # DML) — used by the rebase protocol's disjointness check.
             "touched_partitions": touched,
-            # Delta txn pattern: {"app_id", "version"} for idempotent
-            # replays (streaming foreachBatch records its batch id here).
             "txn": txn,
             # accumulated SetTransaction state: O(1) last_txn lookups
             "txns": txns,
-            # CHECK constraints: {name: sql_expr}, enforced on every write
-            "constraints": constraints,
-            # generated columns: {col: sql_expr}, computed/validated on write
-            "generated_columns": generated,
-            # merge-on-read DELETE sidecars: parquet dirs of
-            # (__file_path, __row_index) rows the snapshot excludes
-            "deletion_vectors": deletion_vectors,
-            # table properties (Delta TBLPROPERTIES): auto_compact,
-            # auto_compact_min_files, target_file_bytes — see set_properties
-            "properties": properties,
-            # Delta column mapping: {logical: [physical aliases,
-            # newest-first]} applied at read; renames never rewrite files
-            "column_mapping": column_mapping,
-            # dead names (DROP COLUMN): hidden from every read; a dropped
-            # name stays dead — see drop_column's contract
-            "dropped_columns": dropped_columns,
+            **meta,
             # protocol features (Delta table-features analogue): reader =
             # "these bytes mean something extra", writer = "commits must
             # uphold an invariant"; monotone — see check_table_features
@@ -566,7 +593,7 @@ class LakeTable:
         # to a temp file first, then os.link() publishes it under the
         # version name — link is atomic and fails if the name exists, so
         # exactly one writer wins the version AND a manifest can never be
-        # observed truncated (the old O_EXCL-create-then-dump left a
+        # observed truncated (an O_EXCL create-then-dump would leave a
         # partial file owning the version if the writer died mid-dump).
         # The link IS the commit point; the _LATEST pointer below is a
         # cache that current_version() rolls forward over, so dying
@@ -602,7 +629,8 @@ class LakeTable:
             except FileNotFoundError:
                 pass
         _crash_hook("manifest_linked")
-        # atomic pointer swap: write temp file then rename
+        # move the head cache (temp file then atomic rename); readers
+        # roll forward over the linked manifest if this never happens
         fd, tmp = tempfile.mkstemp(dir=self._manifest_dir, suffix=".tmp")
         with os.fdopen(fd, "w") as f:
             f.write(str(version))
@@ -619,29 +647,18 @@ class LakeTable:
         never the whole log; at 100k commits the walk this replaces is
         the difference between a microbatch and a pause. Tables whose
         head predates the map fall back to the walk once."""
-        if not self.exists():
-            return None
-        m = self._manifest(self.current_version())
-        if "txns" in m:
-            return m["txns"].get(app_id)
-        last = None
-        for h in self.history():
-            t = h.get("txn")
-            if t and t.get("app_id") == app_id:
-                last = t["version"] if last is None else max(last, t["version"])
-        return last
+        return self._txn_map(self._head()).get(app_id)
 
-    def _txn_map(self, current: int) -> dict:
-        """Accumulated SetTransaction state as of ``current`` (building it
-        by one walk for pre-map tables)."""
-        if not current:
+    def _txn_map(self, prior: dict) -> dict:
+        """Accumulated SetTransaction state as of manifest ``prior``
+        (building it by one walk for pre-map tables)."""
+        if "txns" in prior:
+            return dict(prior["txns"])
+        if not prior["version"]:
             return {}
-        m = self._manifest(current)
-        if "txns" in m:
-            return dict(m["txns"])
         txns: dict[str, int] = {}
         for h in self.history():
-            if h["version"] > current:
+            if h["version"] > prior["version"]:
                 break
             t = h.get("txn")
             if t:
@@ -651,21 +668,23 @@ class LakeTable:
 
     def _commit_rebasing(
         self,
+        prior: dict,
         make_entries,
         operation: str,
-        partition_by: list[str],
-        base_version: int,
+        *,
         touched: list[dict] | None,
         txn: dict | None = None,
         delta_check=None,
         blind: bool = False,
         max_retries: int = 5,
-        properties: dict | None = None,
+        **changes,
     ) -> int:
         """Commit with Delta-style logical conflict auto-resolution.
 
-        ``make_entries(prior_manifest_or_None)`` rebuilds the manifest
-        entry list against an arbitrary base. On ``ConcurrentWriteError``,
+        ``make_entries(base_manifest)`` rebuilds the manifest entry list
+        against an arbitrary base — first ``prior``, the head this
+        operation read, then each newer head it rebases onto (``changes``
+        ride every attempt, as in :meth:`_commit`). On ``ConcurrentWriteError``,
         the winners (manifests between our base and the new head) are
         examined: a blind append (``touched == []``) rebases over
         anything; a partition-scoped op rebases only if every winner
@@ -675,21 +694,16 @@ class LakeTable:
         confirms the winner's new rows cannot affect our read set.
         Anything else re-raises: the caller must re-read and retry, since
         its rewritten data itself may be stale."""
-        base = base_version
         last_err: ConcurrentWriteError | None = None
         for _ in range(max_retries + 1):
             try:
                 return self._commit(
-                    make_entries(self._manifest(base) if base else None),
-                    operation,
-                    partition_by,
-                    base_version=base,
-                    touched=touched,
-                    txn=txn,
-                    properties=properties,
+                    prior, make_entries(prior), operation,
+                    touched=touched, txn=txn, **changes,
                 )
             except ConcurrentWriteError as err:
                 last_err = err
+                base = prior["version"]
                 head = self.current_version() if self.exists() else 0
                 if head <= base:
                     # manifest race without an advanced head (half-committed
@@ -702,14 +716,13 @@ class LakeTable:
                 # validation/computation — even a blind append's rows may
                 # lack a column the head now declares generated, or
                 # violate a constraint it was never checked against.
-                base_meta = self._manifest(base) if base else {}
                 for w in winners:
                     if (
-                        w.get("constraints", {}) != base_meta.get("constraints", {})
+                        w.get("constraints", {}) != prior.get("constraints", {})
                         or w.get("generated_columns", {})
-                        != base_meta.get("generated_columns", {})
+                        != prior.get("generated_columns", {})
                         or (w.get("properties") or {}).get("identity")
-                        != (base_meta.get("properties") or {}).get("identity")
+                        != (prior.get("properties") or {}).get("identity")
                     ):
                         raise ConcurrentWriteError(
                             f"{operation}: a concurrent commit changed table "
@@ -730,20 +743,18 @@ class LakeTable:
                         if mine & {_row_canon(r) for r in w_touched}:
                             raise
                     if delta_check is not None:
-                        delta_df = self._winners_delta_df(base, winners)
+                        delta_df = self._winners_delta_df(prior, winners)
                         if delta_df is not None and not delta_check(delta_df):
                             raise
-                base = head
+                prior = winners[-1]
         raise last_err if last_err else ConcurrentWriteError(
             f"{operation}: exceeded rebase retries"
         )
 
-    def _winners_delta_df(self, base: int, winners: list[dict]) -> DataFrame | None:
+    def _winners_delta_df(self, prior: dict, winners: list[dict]) -> DataFrame | None:
         """Union of data dirs the winners added beyond our base manifest —
         the winners' write delta, read raw (bounded by what they wrote)."""
-        base_paths = (
-            {_entry_path(e) for e in self._manifest(base)["data_dirs"]} if base else set()
-        )
+        base_paths = {_entry_path(e) for e in prior.get("data_dirs", [])}
         new_paths: list[str] = []
         for w in winners:
             for e in w["data_dirs"]:
@@ -760,13 +771,13 @@ class LakeTable:
             out = out.unionByName(other, allowMissingColumns=True)
         return out
 
-    def _new_data_dir(self) -> str:
+    def _new_data_dir(self, prior: dict) -> str:
         # Unique per writer (Delta-style GUID naming): two racing writers
         # must never share a data dir, or the loser's mode("overwrite")
         # write would clobber the winner's already-committed files before
         # the loser's _commit even runs. The manifest stores paths, so
         # nothing depends on version-number naming.
-        n = self.current_version() + 1 if self.exists() else 1
+        n = prior["version"] + 1
         return os.path.join(self.root, "data", f"v{n:08d}-{uuid.uuid4().hex[:12]}")
 
     @staticmethod
@@ -852,16 +863,12 @@ class LakeTable:
 
     def constraints(self) -> dict[str, str]:
         """Current CHECK constraints ({name: sql_expr})."""
-        if not self.exists():
-            return {}
-        return self._manifest(self.current_version()).get("constraints", {})
+        return self._head().get("constraints", {})
 
-    def _enforce_constraints(
-        self, df: DataFrame, cons: dict[str, str] | None = None
-    ) -> None:
-        """Reject ``df`` if any row violates any current constraint (or
-        the explicit ``cons`` dict, for writes that set constraints in
-        the same commit).
+    def _enforce_constraints(self, df: DataFrame, cons: dict[str, str]) -> None:
+        """Reject ``df`` if any row violates any constraint in ``cons``
+        (the op's prior manifest's, plus any the write sets in the same
+        commit).
 
         One Spark job regardless of constraint count: a single aggregate
         computes a violation flag per constraint (NULL-evaluating rows
@@ -880,7 +887,6 @@ class LakeTable:
         source should be materialized (e.g. localCheckpoint) first."""
         import pyspark.sql.functions as F
 
-        cons = self.constraints() if cons is None else cons
         if not cons:
             return
         names = sorted(cons)
@@ -898,9 +904,7 @@ class LakeTable:
         if violated:
             raise ConstraintViolationError(self.root, violated)
 
-    def _enforce_constraints_on_entry(
-        self, entry: dict, cons: dict[str, str] | None = None
-    ) -> None:
+    def _enforce_constraints_on_entry(self, entry: dict, cons: dict[str, str]) -> None:
         """Enforce CHECK constraints on the rows actually WRITTEN — a
         re-scan of the freshly-written data dir — instead of the incoming
         DataFrame. A non-deterministic input (rand()-derived columns, a
@@ -912,7 +916,6 @@ class LakeTable:
         what is validated is bit-identical to what readers will see
         (including hive-partition round-tripping). On violation the
         orphan dir is removed and nothing is committed."""
-        cons = self.constraints() if cons is None else cons
         if not cons:
             return
         d = entry["path"]
@@ -933,9 +936,7 @@ class LakeTable:
 
     def generated_columns(self) -> dict[str, str]:
         """Current generated-column definitions ({col: sql_expr})."""
-        if not self.exists():
-            return {}
-        return self._manifest(self.current_version()).get("generated_columns", {})
+        return self._head().get("generated_columns", {})
 
     def add_generated_column(self, col: str, expr: str) -> int:
         """Delta ``GENERATED ALWAYS AS (expr)``: registers ``col`` so
@@ -943,42 +944,32 @@ class LakeTable:
         or validates the provided values against the expression (writer-
         supplied values that disagree are rejected — Delta semantics).
         Existing rows are backfilled in a copy-on-write commit."""
-        if not self.exists():
-            raise ValueError("add_generated_column: table does not exist yet")
+        prior = self._head("add_generated_column")
         import pyspark.sql.functions as F
 
-        prior = self._manifest(self.current_version())
         gen = dict(prior.get("generated_columns", {}))
         if col in gen:
             raise ValueError(f"generated column {col!r} already defined")
-        snap = self.read()
+        snap = self.read(version=prior["version"])
         if col in snap.columns:
             raise ValueError(
                 f"column {col!r} already exists with writer-authored data; "
                 "a generated column cannot shadow it (Delta rejects this too)"
             )
         gen[col] = expr
-        backfilled = snap.withColumn(col, F.expr(expr))
-        entry = self._write_dir_entry(backfilled, prior["partition_by"])
+        entry = self._write_dir_entry(snap.withColumn(col, F.expr(expr)), prior)
         return self._commit(
-            [entry],
-            "add_generated_column",
-            prior["partition_by"],
-            base_version=prior["version"],
-            deletion_vectors=[],
-            generated=gen,
+            prior, [entry], "add_generated_column",
+            deletion_vectors=[], generated_columns=gen,
         )
 
-    def _apply_generated(
-        self, df: DataFrame, gen: dict[str, str] | None = None
-    ) -> DataFrame:
-        """Compute absent generated columns; validate supplied ones (one
-        aggregate job for all disagreements, like constraint checks).
-        Callers holding a manifest pass its definitions to avoid a second
-        manifest read racing the commit base."""
+    def _apply_generated(self, df: DataFrame, prior: dict) -> DataFrame:
+        """Compute absent generated columns of manifest ``prior``; validate
+        supplied ones (one aggregate job for all disagreements, like
+        constraint checks)."""
         import pyspark.sql.functions as F
 
-        gen = self.generated_columns() if gen is None else gen
+        gen = prior.get("generated_columns", {})
         if not gen:
             return df
         supplied = [c for c in gen if c in df.columns]
@@ -1025,11 +1016,9 @@ class LakeTable:
         (the rebase protocol's metadata check); the loser re-reads and
         re-allocates. If the table already has data in ``col``, the
         watermark starts above the existing maximum."""
-        if not self.exists():
-            raise ValueError("set_identity: table does not exist yet")
+        prior = self._head("set_identity")
         if step < 1:
             raise ValueError("set_identity: step must be a positive integer")
-        prior = self._manifest(self.current_version())
         props = dict(prior.get("properties", {}))
         if props.get("identity"):
             raise ValueError(
@@ -1037,10 +1026,11 @@ class LakeTable:
                 f"{props['identity']['col']!r}"
             )
         hwm = start
-        if col in self.read().columns:
+        snap = self.read(version=prior["version"])
+        if col in snap.columns:
             import pyspark.sql.functions as F
 
-            row = self.read().agg(F.max(col).alias("m")).first()
+            row = snap.agg(F.max(col).alias("m")).first()
             if row["m"] is not None:
                 hwm = max(start, int(row["m"]) + step)
         props["identity"] = {
@@ -1049,13 +1039,7 @@ class LakeTable:
             "step": step,
             "high_watermark": hwm,
         }
-        return self._commit(
-            prior["data_dirs"],
-            "set-identity",
-            prior["partition_by"],
-            base_version=prior["version"],
-            properties=props,
-        )
+        return self._commit(prior, prior["data_dirs"], "set-identity", properties=props)
 
     def _apply_identity(self, df: DataFrame, prior: dict) -> DataFrame:
         """Fill the identity column's NULL/absent slots with fresh values
@@ -1076,16 +1060,17 @@ class LakeTable:
             col, F.coalesce(F.col(col).cast("long"), gen)
         )
 
-    def _identity_props_after(self, prior: dict, new_dirs: list[str]) -> dict | None:
-        """Post-write properties with the identity watermark advanced past
-        every value in ``new_dirs`` — read from parquet FOOTERS (same
-        control-plane walk the stats collector does), never the data.
-        None when no identity is configured (callers pass it straight to
-        _commit, where None means carry-forward)."""
+    @staticmethod
+    def _identity_changes(prior: dict, new_dirs: list[str]) -> dict:
+        """The ``properties`` change a write commits: the identity
+        watermark advanced past every value in ``new_dirs`` — read from
+        parquet FOOTERS (same control-plane walk the stats collector
+        does), never the data. {} (carry ``prior``'s) when no identity is
+        configured."""
         props = dict(prior.get("properties", {}))
         ident = props.get("identity")
         if not ident:
-            return None
+            return {}
         col, step = ident["col"], ident["step"]
         hi = ident["high_watermark"]
         observed = None
@@ -1098,7 +1083,7 @@ class LakeTable:
         if observed is not None:
             hi = max(hi, observed + step)
         props["identity"] = {**ident, "high_watermark": hi}
-        return props
+        return {"properties": props}
 
     # ---------------- bloom filter indexes ----------------
 
@@ -1126,11 +1111,9 @@ class LakeTable:
         the written files (hash positions map-side, one bitmap per file
         assembled in an Arrow-batched group), and stored at m/8 bytes per
         file — the same write-amortized cost model as Delta's index files."""
-        if not self.exists():
-            raise ValueError("create_bloom_index: table does not exist yet")
+        prior = self._head("create_bloom_index")
         if not (0.0 < fpp < 1.0):
             raise ValueError("create_bloom_index: fpp must be in (0, 1)")
-        prior = self._manifest(self.current_version())
         if col in (prior.get("partition_by") or []):
             raise ValueError(
                 "create_bloom_index: partition columns are pruned by "
@@ -1144,25 +1127,12 @@ class LakeTable:
         idx[col] = {"fpp": fpp, "m": m, "k": k}
         props["bloom_index"] = idx
         return self._commit(
-            prior["data_dirs"],
-            "create-bloom-index",
-            prior["partition_by"],
-            base_version=prior["version"],
-            properties=props,
+            prior, prior["data_dirs"], "create-bloom-index", properties=props
         )
 
-    def _bloom_config(self) -> dict:
-        """{col: {fpp,m,k}} for the current version ({} pre-creation)."""
-        if not self.exists():
-            return {}
-        return (
-            self._manifest(self.current_version())
-            .get("properties", {})
-            .get("bloom_index", {})
-        )
-
-    def _write_bloom_sidecar(self, d: str, cols: list[str]) -> None:
-        """Build per-file Bloom bitmaps for every indexed column present
+    def _write_bloom_sidecar(self, d: str, cfg: dict) -> None:
+        """Build per-file Bloom bitmaps for every indexed column of
+        ``cfg`` ({col: {fpp,m,k}}, the table's ``bloom_index`` property)
         in the freshly-written dir ``d`` and drop them in a ``_bloom.json``
         sidecar (lives inside the dir: vacuum reclaims it with the data,
         shallow clones see it, Spark scans ignore it).
@@ -1176,9 +1146,6 @@ class LakeTable:
 
         import pyspark.sql.functions as F
 
-        cfg = {c: p for c, p in self._bloom_config().items() if c in cols}
-        if not cfg:
-            return
         back = self.spark.read.parquet(d)
         parts = []
         for c, p in cfg.items():
@@ -1259,15 +1226,11 @@ class LakeTable:
 
     def column_mapping(self) -> dict[str, list[str]]:
         """Current {logical: [physical aliases]} rename mapping."""
-        if not self.exists():
-            return {}
-        return self._manifest(self.current_version()).get("column_mapping", {})
+        return self._head().get("column_mapping", {})
 
     def dropped_columns(self) -> list[str]:
         """Names hidden by DROP COLUMN (dead names — see drop_column)."""
-        if not self.exists():
-            return []
-        return self._manifest(self.current_version()).get("dropped_columns", [])
+        return self._head().get("dropped_columns", [])
 
     def rename_column(self, old: str, new: str) -> int:
         """``ALTER TABLE RENAME COLUMN`` without rewriting a byte (Delta
@@ -1284,15 +1247,13 @@ class LakeTable:
         rewrite, not metadata. Time travel to pre-rename versions shows
         the old name (the mapping lives in the manifest it was committed
         to, exactly like Delta)."""
-        if not self.exists():
-            raise ValueError("rename_column: table does not exist yet")
-        prior = self._manifest(self.current_version())
+        prior = self._head("rename_column")
         if old in prior["partition_by"]:
             raise ValueError(
                 f"rename_column({old!r}): partition columns are baked into "
                 "hive paths and pruning masks; rewrite the table instead"
             )
-        cur_cols = self.read().columns
+        cur_cols = self.read(version=prior["version"]).columns
         if old not in cur_cols:
             raise ValueError(f"rename_column: no column {old!r} in {cur_cols}")
         mapping = {k: list(v) for k, v in prior.get("column_mapping", {}).items()}
@@ -1307,11 +1268,7 @@ class LakeTable:
             raise ValueError(f"rename_column: name {new!r} already in use")
         mapping[new] = [old] + mapping.pop(old, [])
         return self._commit(
-            prior["data_dirs"],
-            "rename-column",
-            prior["partition_by"],
-            base_version=prior["version"],
-            column_mapping=mapping,
+            prior, prior["data_dirs"], "rename-column", column_mapping=mapping
         )
 
     def drop_column(self, name: str) -> int:
@@ -1324,12 +1281,10 @@ class LakeTable:
         be told apart from the dropped column; dead-forever is the safe
         semantics and it is enforced rather than documented away).
         Pick a fresh name instead."""
-        if not self.exists():
-            raise ValueError("drop_column: table does not exist yet")
-        prior = self._manifest(self.current_version())
+        prior = self._head("drop_column")
         if name in prior["partition_by"]:
             raise ValueError(f"drop_column({name!r}): cannot drop a partition column")
-        cur_cols = self.read().columns
+        cur_cols = self.read(version=prior["version"]).columns
         if name not in cur_cols:
             raise ValueError(f"drop_column: no column {name!r} in {cur_cols}")
         mapping = {k: list(v) for k, v in prior.get("column_mapping", {}).items()}
@@ -1337,48 +1292,39 @@ class LakeTable:
         dropped = list(prior.get("dropped_columns", []))
         dropped += [c for c in dead if c not in dropped]
         return self._commit(
-            prior["data_dirs"],
-            "drop-column",
-            prior["partition_by"],
-            base_version=prior["version"],
-            column_mapping=mapping,
-            dropped_columns=dropped,
+            prior, prior["data_dirs"], "drop-column",
+            column_mapping=mapping, dropped_columns=dropped,
         )
 
     def add_constraint(self, name: str, expr: str) -> int:
         """``ALTER TABLE ADD CONSTRAINT name CHECK (expr)``: validates all
-        EXISTING rows first (as Delta does), then commits a metadata-only
-        version carrying the prior data dirs unchanged."""
-        if not self.exists():
-            raise ValueError("add_constraint: table does not exist yet")
-        cons = self.constraints()
+        rows of the head it read first (as Delta does), then commits a
+        metadata-only version on that same head carrying its data dirs
+        unchanged — a write landing in between fails the commit."""
+        prior = self._head("add_constraint")
+        cons = prior.get("constraints", {})
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists")
         import pyspark.sql.functions as F
 
-        bad = self.read().filter(~F.coalesce(F.expr(expr), F.lit(False)))
+        bad = self.read(version=prior["version"]).filter(
+            ~F.coalesce(F.expr(expr), F.lit(False))
+        )
         if not bad.isEmpty():
             raise ConstraintViolationError(self.root, {name: expr})
-        prior = self._manifest(self.current_version())
         return self._commit(
-            prior["data_dirs"],
-            "add_constraint",
-            prior["partition_by"],
-            base_version=prior["version"],
+            prior, prior["data_dirs"], "add_constraint",
             constraints={**cons, name: expr},
         )
 
     def drop_constraint(self, name: str) -> int:
         """``ALTER TABLE DROP CONSTRAINT``: metadata-only commit."""
-        cons = self.constraints()
+        prior = self._head()
+        cons = prior.get("constraints", {})
         if name not in cons:
             raise ValueError(f"no such constraint {name!r}")
-        prior = self._manifest(self.current_version())
         return self._commit(
-            prior["data_dirs"],
-            "drop_constraint",
-            prior["partition_by"],
-            base_version=prior["version"],
+            prior, prior["data_dirs"], "drop_constraint",
             constraints={k: v for k, v in cons.items() if k != name},
         )
 
@@ -1389,16 +1335,14 @@ class LakeTable:
         (deletion vectors compacted away, column mapping absent, ...);
         a drop that would make the manifest lie about its own content is
         refused (and the commit path would silently re-add it anyway —
-        see ``_commit``'s features_override).
+        see ``_commit``'s ``features`` change).
 
         Historical versions keep requiring the feature: time travel to
         them stays gated. Delta resolves the same problem by truncating
         history at drop time; keeping the history but keeping it gated
         is strictly more informative (the data is still there for a
         capable client)."""
-        if not self.exists():
-            raise ValueError("drop_feature: table does not exist yet")
-        prior = self._manifest(self.current_version())
+        prior = self._head("drop_feature")
         feats = prior.get("features", {})
         reader = set(feats.get("reader", []))
         writer = set(feats.get("writer", []))
@@ -1421,27 +1365,31 @@ class LakeTable:
                 "exercises it (compact/purge or remove the metadata first)"
             )
         return self._commit(
-            prior["data_dirs"],
-            "drop_feature",
-            prior["partition_by"],
-            base_version=prior["version"],
-            features_override=(reader - {name}, writer - {name}),
+            prior, prior["data_dirs"], "drop_feature",
+            features={"reader": reader - {name}, "writer": writer - {name}},
         )
 
     # ---------------- writers (K1-K6) ----------------
 
-    def _write_dir_entry(self, df: DataFrame, partition_by: list[str]):
+    def _write_dir_entry(
+        self, df: DataFrame, prior: dict, partition_by: list[str] | None = None
+    ):
         """Write ``df`` into a fresh uniquely-named data dir; return the
-        manifest entry. Every dir carries per-file footer min/max stats
+        manifest entry. Layout (``partition_by``, default ``prior``'s) and
+        bloom indexes come from ``prior``, the manifest the op read.
+        Every dir carries per-file footer min/max stats
         (Delta data-skipping analogue): unpartitioned DML file-prunes on
         them, and read_skipping() uses them on the query side — for
         partitioned dirs the file keys are hive-relative paths, so
         partition values ride along for path-level pruning too. (The
         partition-pruned DML rewrite paths write their dirs directly and
         stay stats-less; reads fall back to plain filters there.)"""
-        d = self._new_data_dir()
+        if partition_by is None:
+            partition_by = prior["partition_by"]
+        d = self._new_data_dir(prior)
         w = df.write.mode("overwrite")
-        bloom_cols = [c for c in self._bloom_config() if c in df.columns]
+        bloom = prior.get("properties", {}).get("bloom_index", {})
+        bloom_cols = [c for c in bloom if c in df.columns]
         for c in bloom_cols:
             # native parquet row-group blooms ride along for free: scans
             # that survive file-level skipping still skip row groups on
@@ -1454,7 +1402,7 @@ class LakeTable:
             # file-level bloom sidecar (unpartitioned dirs only — the
             # partitioned read path prunes on partition values; its
             # interior columns keep the row-group blooms above)
-            self._write_bloom_sidecar(d, bloom_cols)
+            self._write_bloom_sidecar(d, {c: bloom[c] for c in bloom_cols})
         return {"path": d, "files": _collect_file_stats(d)}
 
     @classmethod
@@ -1500,7 +1448,7 @@ class LakeTable:
                     "actual partition columns"
                 )
         entry = {"path": path, "live_files": sorted(stats), "files": stats}
-        t._commit([entry], "convert", pcols)
+        t._commit({"version": 0}, [entry], "convert", partition_by=pcols)
         return t
 
     def overwrite(
@@ -1520,26 +1468,22 @@ class LakeTable:
         overwrite + per-constraint add_constraint, which would re-scan
         the table once per constraint and burn a commit each."""
         partition_by = partition_by or []
-        base = self.current_version() if self.exists() else 0
-        base_m = self._manifest(base) if base else {}
-        df = self._apply_generated(df, base_m.get("generated_columns", {}))
-        df = self._apply_identity(df, base_m)
-        entry = self._write_dir_entry(df, partition_by)
+        prior = self._head()
+        df = self._apply_generated(df, prior)
+        df = self._apply_identity(df, prior)
+        entry = self._write_dir_entry(df, prior, partition_by)
         # post-write validation (see _enforce_constraints_on_entry: checks
         # the written bytes, immune to non-deterministic inputs); explicit
         # same-commit constraints merge into one aggregate pass
         self._enforce_constraints_on_entry(
-            entry,
-            {
-                **(self.constraints() if self.exists() else {}),
-                **(constraints or {}),
-            },
+            entry, {**prior.get("constraints", {}), **(constraints or {})}
         )
+        changes = self._identity_changes(prior, [entry["path"]])
+        if constraints is not None:
+            changes["constraints"] = constraints
         return self._commit(
-            [entry], "overwrite", partition_by, base_version=base, txn=txn,
-            constraints=constraints,
-            deletion_vectors=[],
-            properties=self._identity_props_after(base_m, [entry["path"]]),
+            prior, [entry], "overwrite", txn=txn,
+            partition_by=partition_by, deletion_vectors=[], **changes,
         )
 
     def append(
@@ -1559,10 +1503,14 @@ class LakeTable:
         ``"strict"`` (Delta's default posture: reject new columns and
         type changes before anything is written; schema comparison reads
         parquet footers only, never data)."""
-        if not self.exists():
+        prior = self._head()
+        if not prior["version"]:
             return self.overwrite(df, partition_by, txn=txn)
         if schema_mode == "strict":
-            current = {f.name: f.dataType.simpleString() for f in self.read().schema.fields}
+            current = {
+                f.name: f.dataType.simpleString()
+                for f in self.read(version=prior["version"]).schema.fields
+            }
             incoming = {f.name: f.dataType.simpleString() for f in df.schema.fields}
             extra = sorted(set(incoming) - set(current))
             mismatched = sorted(
@@ -1576,7 +1524,6 @@ class LakeTable:
                 )
         elif schema_mode != "merge":
             raise ValueError(f"schema_mode must be 'merge' or 'strict', got {schema_mode!r}")
-        prior = self._manifest(self.current_version())
         partition_by = partition_by or prior["partition_by"]
         if partition_by != prior["partition_by"]:
             # Delta parity: appends cannot change the partitioning scheme
@@ -1587,10 +1534,10 @@ class LakeTable:
                 f"from the table's {prior['partition_by']}; use overwrite() "
                 "to change partitioning"
             )
-        df = self._apply_generated(df, prior.get("generated_columns", {}))
+        df = self._apply_generated(df, prior)
         df = self._apply_identity(df, prior)
-        entry = self._write_dir_entry(df, partition_by)
-        self._enforce_constraints_on_entry(entry)
+        entry = self._write_dir_entry(df, prior)
+        self._enforce_constraints_on_entry(entry, prior.get("constraints", {}))
         # Record the partitions this append wrote (filesystem walk of the
         # freshly-written dir — no extra Spark job) so OTHER writers'
         # disjointness checks see them; the append itself rebases blindly.
@@ -1600,16 +1547,15 @@ class LakeTable:
             else []
         )
         v = self._commit_rebasing(
-            lambda head: (head["data_dirs"] if head else []) + [entry],
+            prior,
+            lambda head: head["data_dirs"] + [entry],
             "append",
-            partition_by,
-            base_version=prior["version"],
             touched=touched,
             txn=txn,
             blind=True,
-            properties=self._identity_props_after(prior, [entry["path"]]),
+            **self._identity_changes(prior, [entry["path"]]),
         )
-        if self.properties().get("auto_compact"):
+        if prior.get("properties", {}).get("auto_compact"):
             # follow-up physical-only commit; the append above is already
             # durable and its version is what we return
             self._auto_compact()
@@ -1660,18 +1606,20 @@ class LakeTable:
         """
         import pyspark.sql.functions as F
 
-        if not self.exists():
+        prior = self._head()
+        if not prior["version"]:
             return self.overwrite(updates, txn=txn)
-        prior = self._manifest(self.current_version())
         self._reject_cow_with_dvs(prior, "merge")
-        updates = self._apply_generated(updates, prior.get("generated_columns", {}))
+        updates = self._apply_generated(updates, prior)
         if (prior.get("properties") or {}).get("identity"):
             # MERGE + identity: matched keys must KEEP the target row's id
             # (the update payload usually omits it), only true inserts
             # allocate — so carry target ids over by key first, then fill
             ident = prior["properties"]["identity"]
             icol = ident["col"]
-            tgt_ids = self.read().select(*keys, F.col(icol).alias("__tgt_id"))
+            tgt_ids = self.read(version=prior["version"]).select(
+                *keys, F.col(icol).alias("__tgt_id")
+            )
             if icol not in updates.columns:
                 updates = updates.withColumn(icol, F.lit(None).cast("long"))
             updates = (
@@ -1680,7 +1628,7 @@ class LakeTable:
                 .drop("__tgt_id")
             )
             updates = self._apply_identity(updates, prior)
-        self._enforce_constraints(updates)
+        self._enforce_constraints(updates, prior.get("constraints", {}))
         key_frame = updates.select(*keys)
         if _delete_keys is not None:
             key_frame = key_frame.unionByName(_delete_keys.select(*keys))
@@ -1712,8 +1660,7 @@ class LakeTable:
                     self.spark.read.option("mergeSchema", "true").parquet(
                         *cand_paths
                     ),
-                    prior.get("column_mapping", {}),
-                    prior.get("dropped_columns", []),
+                    prior,
                 ).select(*keys, F.input_file_name().alias("__file"))
                 hit = (
                     scan.join(key_frame, on=keys, how="left_semi")
@@ -1732,33 +1679,31 @@ class LakeTable:
                     self.spark.read.option("mergeSchema", "true").parquet(
                         *[os.path.join(d_, rel) for d_, rel, _ in touched]
                     ),
-                    prior.get("column_mapping", {}),
-                    prior.get("dropped_columns", []),
+                    prior,
                 )
                 if touched
-                else self.read().limit(0)
+                else self.read(version=prior["version"]).limit(0)
             )
             merged = merge_upsert(target, updates, keys)
             if _delete_keys is not None:
                 merged = merged.join(_delete_keys, on=keys, how="left_anti")
-            entry = self._write_dir_entry(merged, [])
+            entry = self._write_dir_entry(merged, prior)
             untouched = [f for f in inventory if f not in touched]
             # a CDC batch can delete every touched row: a fileless dir
             # must not enter the manifest (parquet schema inference fails)
             new_entries = [entry] if entry["files"] else []
             v = self._commit(
+                prior,
                 self._surviving_file_entries(prior, untouched) + new_entries,
                 _operation,
-                pcols,
-                base_version=prior["version"],
                 txn=txn,
-                properties=self._identity_props_after(prior, [entry["path"]]),
+                **self._identity_changes(prior, [entry["path"]]),
             )
-            if self.properties().get("auto_compact"):
+            if prior.get("properties", {}).get("auto_compact"):
                 self._auto_compact()
             return v
 
-        target = self.read()
+        target = self.read(version=prior["version"])
         # Touched partitions: the updates' own partitions plus partitions
         # of target rows whose keys match (key-column-pruned semi-join —
         # one slim shuffle), so a key that moved partitions is rewritten.
@@ -1772,7 +1717,7 @@ class LakeTable:
         )
         if _delete_keys is not None:
             merged = merged.join(_delete_keys, on=keys, how="left_anti")
-        d = self._new_data_dir()
+        d = self._new_data_dir(prior)
         merged.write.mode("overwrite").partitionBy(*pcols).parquet(d)
         # a CDC batch can delete every row of the touched partitions: a
         # fileless dir must not enter the manifest (same hazard as DELETE)
@@ -1800,16 +1745,15 @@ class LakeTable:
             )
 
         v = self._commit_rebasing(
+            prior,
             lambda head: self._carry_prior_dirs(head, touched_rows, d),
             _operation,
-            pcols,
-            base_version=prior["version"],
             touched=touched_rows,
             delta_check=_no_key_overlap,
             txn=txn,
-            properties=self._identity_props_after(prior, [d] if d else []),
+            **self._identity_changes(prior, [d] if d else []),
         )
-        if self.properties().get("auto_compact"):
+        if prior.get("properties", {}).get("auto_compact"):
             self._auto_compact()
         return v
 
@@ -1970,9 +1914,7 @@ class LakeTable:
             return [], []
         paths = [os.path.join(d_, rel) for d_, rel, _ in inventory]
         scan = _apply_column_mapping(
-            self.spark.read.option("mergeSchema", "true").parquet(*paths),
-            prior.get("column_mapping", {}),
-            prior.get("dropped_columns", []),
+            self.spark.read.option("mergeSchema", "true").parquet(*paths), prior
         ).withColumn("__file", F.input_file_name())
         hit = (
             scan.filter(F.coalesce(cond, F.lit(False)))
@@ -2021,7 +1963,7 @@ class LakeTable:
         into clean files (Delta's PURGE)."""
         import pyspark.sql.functions as F
 
-        prior = self._manifest(self.current_version())
+        prior = self._head("delete")
         pcols = prior["partition_by"]
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if mode == "merge-on-read":
@@ -2038,29 +1980,28 @@ class LakeTable:
         if not pcols:
             touched, untouched = self._touched_files_by_cond(prior, cond)
             if not touched:
-                return self.current_version()  # no-op delete
+                return prior["version"]  # no-op delete
             kept = (
                 self.spark.read.option("mergeSchema", "true")
                 .parquet(*[os.path.join(d_, rel) for d_, rel, _ in touched])
                 .filter(keep_pred)
             )
-            entry = self._write_dir_entry(kept, [])
+            entry = self._write_dir_entry(kept, prior)
             # every touched row deleted → the rewrite dir is empty;
             # referencing it would break schema inference on later reads
             new_entries = [entry] if entry["files"] else []
             return self._commit(
+                prior,
                 self._surviving_file_entries(prior, untouched) + new_entries,
                 "delete",
-                pcols,
-                base_version=prior["version"],
             )
 
-        target = self.read()
+        target = self.read(version=prior["version"])
         touched_rows = self._touched_partitions(target.filter(cond), pcols)
         if not touched_rows:
-            return self.current_version()  # no-op delete: nothing matched
+            return prior["version"]  # no-op delete: nothing matched
         kept = target.filter(_partition_predicate(pcols, touched_rows)).filter(keep_pred)
-        d = self._new_data_dir()
+        d = self._new_data_dir(prior)
         kept.write.mode("overwrite").partitionBy(*pcols).parquet(d)
         # a DELETE can empty every touched partition: the dir then holds
         # no parquet files and must not enter the manifest (filesystem
@@ -2071,10 +2012,9 @@ class LakeTable:
             for name in files
         )
         return self._commit_rebasing(
+            prior,
             lambda head: self._carry_prior_dirs(head, touched_rows, d if has_rows else None),
             "delete",
-            pcols,
-            base_version=prior["version"],
             touched=touched_rows,
             delta_check=self._cond_delta_check(cond),
         )
@@ -2097,21 +2037,18 @@ class LakeTable:
         import pyspark.sql.functions as F
 
         if not prior["data_dirs"]:
-            return self.current_version()  # empty table: no-op
+            return prior["version"]  # empty table: no-op
         doomed = (
             self.read(version=prior["version"], _with_rowids=True)
             .filter(F.coalesce(cond, F.lit(False)))
             .select("__file_path", "__row_index")
         )
         if doomed.isEmpty():
-            return self.current_version()  # no-op delete
+            return prior["version"]  # no-op delete
         dv_dir = os.path.join(self.root, "_dv", uuid.uuid4().hex[:12])
         doomed.write.mode("overwrite").parquet(dv_dir)
         return self._commit(
-            prior["data_dirs"],
-            "delete-dv",
-            prior["partition_by"],
-            base_version=prior["version"],
+            prior, prior["data_dirs"], "delete-dv",
             deletion_vectors=prior.get("deletion_vectors", []) + [dv_dir],
         )
 
@@ -2123,7 +2060,7 @@ class LakeTable:
         partition correctly)."""
         import pyspark.sql.functions as F
 
-        prior = self._manifest(self.current_version())
+        prior = self._head("update")
         self._reject_cow_with_dvs(prior, "update")
         pcols = prior["partition_by"]
         bad = set(assignments) & set(pcols)
@@ -2152,37 +2089,34 @@ class LakeTable:
             # file-pruned: rewrite only files containing matching rows
             touched, untouched = self._touched_files_by_cond(prior, cond)
             if not touched:
-                return self.current_version()
+                return prior["version"]
             rewritten = apply(
                 _apply_column_mapping(
                     self.spark.read.option("mergeSchema", "true").parquet(
                         *[os.path.join(d_, rel) for d_, rel, _ in touched]
                     ),
-                    prior.get("column_mapping", {}),
-                    prior.get("dropped_columns", []),
+                    prior,
                 )
             )
-            self._enforce_constraints(rewritten)
-            entry = self._write_dir_entry(rewritten, [])
+            self._enforce_constraints(rewritten, prior.get("constraints", {}))
+            entry = self._write_dir_entry(rewritten, prior)
             return self._commit(
+                prior,
                 self._surviving_file_entries(prior, untouched) + [entry],
                 "update",
-                pcols,
-                base_version=prior["version"],
             )
-        target = self.read()
+        target = self.read(version=prior["version"])
         touched_rows = self._touched_partitions(target.filter(cond), pcols)
         if not touched_rows:
-            return self.current_version()
+            return prior["version"]
         rewritten = apply(target.filter(_partition_predicate(pcols, touched_rows)))
-        self._enforce_constraints(rewritten)
-        d = self._new_data_dir()
+        self._enforce_constraints(rewritten, prior.get("constraints", {}))
+        d = self._new_data_dir(prior)
         rewritten.write.mode("overwrite").partitionBy(*pcols).parquet(d)
         return self._commit_rebasing(
+            prior,
             lambda head: self._carry_prior_dirs(head, touched_rows, d),
             "update",
-            pcols,
-            base_version=prior["version"],
             touched=touched_rows,
             delta_check=self._cond_delta_check(cond),
         )
@@ -2202,10 +2136,6 @@ class LakeTable:
                 f"no version of {self.root} existed at or before timestamp {ts}"
             )
         return best
-
-    # NOTE: restore() is defined once, below (the vacuum-guarded,
-    # metadata-carrying implementation) — an earlier duplicate def that
-    # this class shadowed was removed in r09.
 
     def read(
         self,
@@ -2258,9 +2188,7 @@ class LakeTable:
                 df = self.spark.read.option("mergeSchema", "true").parquet(_entry_path(e))
             # logical schema (column mapping AS OF the version being read:
             # time travel before a rename shows the old name, like Delta)
-            df = _apply_column_mapping(
-                df, m.get("column_mapping", {}), m.get("dropped_columns", [])
-            )
+            df = _apply_column_mapping(df, m)
             if dvs or _with_rowids:
                 # stable row identity for merge-on-read DELETE (Delta
                 # deletion vectors): parquet-native, no data rewrite
@@ -2376,9 +2304,7 @@ class LakeTable:
         if not keep:
             return bound_filter(self.read(version=v)).limit(0)
         df = _apply_column_mapping(
-            self.spark.read.option("mergeSchema", "true").parquet(*keep),
-            manifest.get("column_mapping", {}),
-            manifest.get("dropped_columns", []),
+            self.spark.read.option("mergeSchema", "true").parquet(*keep), manifest
         )
         return bound_filter(df)
 
@@ -2389,10 +2315,8 @@ class LakeTable:
         because path strings don't order numerically), footer stats prune
         on data columns; dirs written by pruned-DML rewrites carry no
         stats and pass through un-skipped. Exclusion masks still apply."""
-        import pyspark.sql.functions as F
-        from urllib.parse import unquote
-
         pcols = manifest["partition_by"]
+
         def hive_str(v):
             # hive writes booleans lowercase — same canonicalization as
             # _row_canon, which exists for exactly this mismatch
@@ -2404,14 +2328,6 @@ class LakeTable:
             if c in pcols and lo is not None and lo == hi
         }
 
-        def rel_partition_values(rel: str) -> dict:
-            out = {}
-            for part in rel.split(os.sep):
-                if "=" in part:
-                    k, _, val = part.partition("=")
-                    out[k] = unquote(val)
-            return out
-
         dfs = []
         for e in manifest["data_dirs"]:
             dpath = _entry_path(e)
@@ -2422,7 +2338,7 @@ class LakeTable:
             else:
                 keep = []
                 for rel, fs in stats.items():
-                    pvals = rel_partition_values(rel)
+                    pvals = _hive_values(rel)
                     if any(
                         c in pvals and pvals[c] != val for c, val in eq_bounds.items()
                     ):
@@ -2437,11 +2353,7 @@ class LakeTable:
                     .option("basePath", dpath)
                     .parquet(*keep)
                 )
-            df = _apply_column_mapping(
-                df,
-                manifest.get("column_mapping", {}),
-                manifest.get("dropped_columns", []),
-            )
+            df = _apply_column_mapping(df, manifest)
             if excl:
                 df = df.filter(~_partition_predicate(pcols, excl))
             dfs.append(df)
@@ -2468,8 +2380,8 @@ class LakeTable:
         plus a filesystem walk, zero Spark jobs."""
         from ecommerce_lakehouse_spark.lake.stream_source import _live_files
 
-        v = self.current_version()
-        m = self._manifest(v)
+        m = self._head("describe_detail")
+        v = m["version"]
         hist = self.history()
         files = [
             os.path.join(d, rel)
@@ -2496,9 +2408,7 @@ class LakeTable:
 
     def properties(self) -> dict:
         """Current table properties ({key: value})."""
-        if not self.exists():
-            return {}
-        return self._manifest(self.current_version()).get("properties", {})
+        return self._head().get("properties", {})
 
     def set_properties(self, props: dict) -> int:
         """Delta ``ALTER TABLE .. SET TBLPROPERTIES`` analogue (reference
@@ -2516,12 +2426,9 @@ class LakeTable:
           test file counts).
         - ``target_file_bytes`` (int, default 128 MiB): output file size
           target, the reference's bronze-layer target."""
-        prior = self._manifest(self.current_version())
+        prior = self._head("set_properties")
         return self._commit(
-            prior["data_dirs"],
-            "set-properties",
-            prior["partition_by"],
-            base_version=prior["version"],
+            prior, prior["data_dirs"], "set-properties",
             properties={**prior.get("properties", {}), **props},
         )
 
@@ -2529,28 +2436,16 @@ class LakeTable:
         """{canonical partition tuple: live parquet file count} for a
         partitioned snapshot, honoring exclude masks. Control-plane
         filesystem walk, bounded by file count."""
-        from urllib.parse import unquote
-
         counts: dict[tuple, int] = {}
         for e in m["data_dirs"]:
-            d = _entry_path(e)
-            excl = e.get("exclude", []) if isinstance(e, dict) else []
+            d, excl, _ = _entry_norm(e)
             dead = {_row_canon(x) for x in excl}
             for base, _, names in os.walk(d):
                 for name in names:
                     if not name.endswith(".parquet"):
                         continue
                     rel = os.path.relpath(os.path.join(base, name), d)
-                    vals: dict = {}
-                    for seg in rel.split(os.sep)[:-1]:
-                        if "=" in seg:
-                            c, v = seg.split("=", 1)
-                            vals[c] = (
-                                None
-                                if v == "__HIVE_DEFAULT_PARTITION__"
-                                else unquote(v)
-                            )
-                    key = _row_canon(vals)
+                    key = _row_canon(_hive_values(rel))
                     if key in dead:
                         continue
                     counts[key] = counts.get(key, 0) + 1
@@ -2573,10 +2468,10 @@ class LakeTable:
         have to split DV sidecars — run compact() to purge DVs first).
         Returns the compaction commit's version, or None if nothing to
         do."""
-        props = self.properties()
+        prior = self._head()
+        props = prior.get("properties", {})
         minf = int(props.get("auto_compact_min_files", 8))
         target_bytes = int(props.get("target_file_bytes", 128 << 20))
-        prior = self._manifest(self.current_version())
         if prior.get("deletion_vectors"):
             return None
         pcols = prior["partition_by"]
@@ -2588,14 +2483,15 @@ class LakeTable:
                 touched = [dict(k) for k, n in sorted(counts.items()) if n >= minf]
                 if not touched:
                     return None
-                df = self.read().filter(_partition_predicate(pcols, touched))
+                df = self.read(version=prior["version"]).filter(
+                    _partition_predicate(pcols, touched)
+                )
                 # one output file per partition: rows hash to their
                 # partition's task, each task writes one file per hive dir
-                entry = self._write_dir_entry(df.repartition(*pcols), pcols)
+                entry = self._write_dir_entry(df.repartition(*pcols), prior)
                 entries = self._carry_prior_dirs(prior, touched, entry)
                 return self._commit(
-                    entries, "auto-compact", pcols,
-                    base_version=prior["version"], touched=touched,
+                    prior, entries, "auto-compact", touched=touched,
                     deletion_vectors=[],
                 )
             inv = self._file_inventory(prior)
@@ -2612,14 +2508,13 @@ class LakeTable:
             df = self.spark.read.option("mergeSchema", "true").parquet(
                 *[os.path.join(d, rel) for d, rel, _, _ in small]
             )
-            entry = self._write_dir_entry(df.coalesce(nout), [])
+            entry = self._write_dir_entry(df.coalesce(nout), prior)
             untouched = [
                 (d, rel, st) for d, rel, st, sz in sized if sz >= target_bytes
             ]
             entries = self._surviving_file_entries(prior, untouched) + [entry]
             return self._commit(
-                entries, "auto-compact", [],
-                base_version=prior["version"], deletion_vectors=[],
+                prior, entries, "auto-compact", deletion_vectors=[]
             )
         except ConcurrentWriteError:
             return None
@@ -2648,7 +2543,7 @@ class LakeTable:
         "missing_dvs": [...], "repaired_version": int | None}.
         Control-plane only: existence checks against the file inventory,
         no Spark job."""
-        prior = self._manifest(self.current_version())
+        prior = self._head("fsck")
         missing_files: list[tuple] = []
         missing_dirs: list[str] = []
         repaired: list = []
@@ -2694,12 +2589,7 @@ class LakeTable:
                 "dropping them would resurrect deleted rows — restore the "
                 "files or RESTORE the table to a version before the delete"
             )
-        report["repaired_version"] = self._commit(
-            repaired,
-            "fsck-repair",
-            prior["partition_by"],
-            base_version=prior["version"],
-        )
+        report["repaired_version"] = self._commit(prior, repaired, "fsck-repair")
         return report
 
     def compact(
@@ -2718,39 +2608,36 @@ class LakeTable:
         name rows in them; rows DVs removed from rewritten files stay
         removed because read() applied them before the rewrite);
         full-table compaction still materializes DVs (Delta PURGE)."""
-        prior = self._manifest(self.current_version())
+        prior = self._head("compact")
         pcols = prior["partition_by"]
+        if where is not None and not pcols:
+            raise ValueError(
+                "compact(where=...): partition-scoped compaction needs a "
+                "partitioned table; use plain compact() instead"
+            )
+        target = self.read(version=prior["version"])
         if where is not None:
-            if not pcols:
-                raise ValueError(
-                    "compact(where=...): partition-scoped compaction needs a "
-                    "partitioned table; use plain compact() instead"
-                )
-            target = self.read()
             touched_rows = self._touched_partitions(target.filter(where), pcols)
             if not touched_rows:
-                return self.current_version()
+                return prior["version"]
             df = target.filter(_partition_predicate(pcols, touched_rows))
             if target_partitions:
                 df = df.repartition(target_partitions, *pcols)
-            d = self._new_data_dir()
+            d = self._new_data_dir(prior)
             df.write.mode("overwrite").partitionBy(*pcols).parquet(d)
             return self._commit(
+                prior,
                 self._carry_prior_dirs(prior, touched_rows, d),
                 "compact",
-                pcols,
-                base_version=prior["version"],
                 touched=touched_rows,
             )
-        df = self.read()
         if target_partitions:
-            df = df.repartition(target_partitions, *(pcols or []))
-        entry = self._write_dir_entry(df, pcols)
+            target = target.repartition(target_partitions, *(pcols or []))
+        entry = self._write_dir_entry(target, prior)
         # DVs may have deleted every row: a fileless dir must not enter
         # the manifest (same hazard the cow delete path guards)
         return self._commit(
-            [entry] if entry["files"] else [],
-            "compact", pcols, base_version=prior["version"],
+            prior, [entry] if entry["files"] else [], "compact",
             deletion_vectors=[],  # rewrite via read() materializes DVs (Delta PURGE)
         )
 
@@ -2771,8 +2658,8 @@ class LakeTable:
         """
         from pyspark.sql import functions as F
 
-        prior = self._manifest(self.current_version())
-        df = self.read()
+        prior = self._head("optimize")
+        df = self.read(version=prior["version"])
         n_bins = 1 << bits
         bounds = df.agg(
             *[F.min(c).alias(f"{c}_min") for c in zorder_by],
@@ -2801,10 +2688,9 @@ class LakeTable:
             .sortWithinPartitions("__z")
             .drop("__z")
         )
-        entry = self._write_dir_entry(clustered, prior["partition_by"])
+        entry = self._write_dir_entry(clustered, prior)
         return self._commit(
-            [entry], "optimize-zorder", prior["partition_by"],
-            base_version=prior["version"], deletion_vectors=[]
+            prior, [entry], "optimize-zorder", deletion_vectors=[]
         )
 
     def restore(self, version: int) -> int:
@@ -2826,7 +2712,8 @@ class LakeTable:
         rows surface as inserts, rolled-back rows as deletes), and the
         streaming source treats it as a non-append change (loud unless
         ignoreChanges), matching Delta streaming."""
-        current = self.current_version()
+        prior = self._head("restore")
+        current = prior["version"]
         if not 1 <= version <= current:
             raise ValueError(
                 f"restore: version {version} out of range 1..{current}"
@@ -2847,19 +2734,7 @@ class LakeTable:
                 f"{'...' if len(missing) > 3 else ''} — cannot restore past "
                 "a vacuum horizon"
             )
-        return self._commit(
-            m["data_dirs"],
-            "restore",
-            m["partition_by"],
-            base_version=current,
-            touched=None,
-            constraints=m.get("constraints", {}),
-            generated=m.get("generated_columns", {}),
-            deletion_vectors=m.get("deletion_vectors", []),
-            properties=m.get("properties", {}),
-            column_mapping=m.get("column_mapping", {}),
-            dropped_columns=m.get("dropped_columns", []),
-        )
+        return self._commit(prior, m["data_dirs"], "restore", **_metadata(m))
 
     def clone_to(
         self,
@@ -2886,36 +2761,23 @@ class LakeTable:
         copies), files come out right-sized, and column-mapped tables
         materialize under their logical schema (dead names stay
         reserved). At 100 TB a deep clone is a full copy either way."""
-        v = version if version is not None else self.current_version()
-        m = self._manifest(v)
+        m = self._manifest(version) if version is not None else self._head("clone_to")
         dest = LakeTable(self.spark, dest_root)
         if dest.exists():
             raise ValueError(f"clone destination {dest_root!r} already exists")
         os.makedirs(os.path.join(dest_root, "data"), exist_ok=True)
-        meta = dict(
-            constraints=m.get("constraints", {}),
-            generated=m.get("generated_columns", {}),
-            properties=m.get("properties", {}),
-            column_mapping=m.get("column_mapping", {}),
-            dropped_columns=m.get("dropped_columns", []),
-        )
+        new = {"version": 0}
         if deep:
-            entry = dest._write_dir_entry(self.read(version=v), m["partition_by"])
-            dest._commit(
-                [entry] if entry["files"] else [],
-                "clone-deep",
-                m["partition_by"],
-                deletion_vectors=[],  # applied by read(): rows already gone
-                **meta,
+            entry = dest._write_dir_entry(
+                self.read(version=m["version"]), new, m["partition_by"]
             )
-            return dest
-        dest._commit(
-            m["data_dirs"],
-            "clone",
-            m["partition_by"],
-            deletion_vectors=m.get("deletion_vectors", []),
-            **meta,
-        )
+            dest._commit(
+                new, [entry] if entry["files"] else [], "clone-deep",
+                # deletion vectors were applied by read(): rows already gone
+                **{**_metadata(m), "deletion_vectors": []},
+            )
+        else:
+            dest._commit(new, m["data_dirs"], "clone", **_metadata(m))
         return dest
 
     def vacuum(
@@ -3007,7 +2869,8 @@ class LakeTable:
         """
         import pyspark.sql.functions as F
 
-        df = self.read()
+        head = self.current_version()
+        df = self.read(version=head)
         atomic = {
             "byte", "short", "integer", "long", "float", "double", "decimal",
             "string", "boolean", "date", "timestamp", "timestamp_ntz",
@@ -3029,7 +2892,7 @@ class LakeTable:
             return v if isinstance(v, (int, float, str, bool, type(None))) else str(v)
 
         stats = {
-            "version": self.current_version(),
+            "version": head,
             "row_count": row["__n"],
             "columns": {
                 c: {

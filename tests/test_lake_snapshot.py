@@ -1,0 +1,187 @@
+"""Each LakeTable operation reads the table head once and commits against
+it (Delta's per-operation snapshot): metadata DDL validates and commits
+on one version, the stream source rolls forward over durable commits the
+``_LATEST`` cache has not caught up with, and a warm handle's DML opens
+exactly one manifest file per operation."""
+
+import builtins
+import os
+
+import pytest
+
+import ecommerce_lakehouse_spark.lake.table as lake_table
+from ecommerce_lakehouse_spark.lake.stream_source import (
+    LakeTableStreamReader,
+    _snapshot_arrow_schema,
+)
+from ecommerce_lakehouse_spark.lake.mv import MaterializedAggregate
+from ecommerce_lakehouse_spark.lake.table import ConcurrentWriteError, LakeTable
+
+
+def _df(spark, rows):
+    return spark.createDataFrame(rows, "k int, v string, part string")
+
+
+def test_add_constraint_validates_and_commits_on_one_version(spark, tmp_path):
+    """A row violating the new constraint, appended by another writer
+    right after add_constraint's validation scan, must fail the commit —
+    never leave a constraint the table's rows break. drop_constraint
+    likewise never loses a constraint added after it read the head."""
+    root = str(tmp_path / "t")
+    t = LakeTable(spark, root)
+    other = LakeTable(spark, root)
+    t.overwrite(_df(spark, [(1, "a", "x"), (2, "b", "y")]))
+    orig_read = t.read
+    fired = []
+
+    def read_then_race(*args, **kwargs):
+        df = orig_read(*args, **kwargs)
+        if not fired:
+            fired.append(True)
+            other.append(_df(spark, [(-5, "bad", "x")]))
+        return df
+
+    t.read = read_then_race
+    with pytest.raises(ConcurrentWriteError):
+        t.add_constraint("kpos", "k >= 0")
+    del t.read
+    assert fired
+    assert t.constraints() == {}
+    assert t.current_version() == 2
+
+    t.add_constraint("k_small", "k < 100")
+    orig_cv = t.current_version
+    raced = []
+
+    def head_then_race():
+        v = orig_cv()
+        if not raced:
+            raced.append(True)
+            other.add_constraint("v_set", "v IS NOT NULL")
+        return v
+
+    t.current_version = head_then_race
+    with pytest.raises(ConcurrentWriteError):
+        t.drop_constraint("k_small")
+    del t.current_version
+    assert t.constraints() == {"k_small": "k < 100", "v_set": "v IS NOT NULL"}
+
+
+def test_mv_bootstrap_aggregates_the_version_it_records(spark, tmp_path):
+    """bootstrap() records the source version it aggregated as the
+    refresh cursor: a source commit landing right after it resolved that
+    version is folded in by the next refresh — exactly once."""
+    src = LakeTable(spark, str(tmp_path / "src"))
+    dst = LakeTable(spark, str(tmp_path / "mv"))
+    mv = MaterializedAggregate(src, dst, ["g"], {})
+    rows = "k int, g string"
+    src.overwrite(spark.createDataFrame([(1, "a")], rows))
+    other = LakeTable(spark, src.root)
+    orig_cv = src.current_version
+    raced = []
+
+    def head_then_race():
+        v = orig_cv()
+        if not raced:
+            raced.append(True)
+            other.append(spark.createDataFrame([(2, "a")], rows))
+        return v
+
+    src.current_version = head_then_race
+    assert mv.bootstrap() == 1
+    del src.current_version
+    assert mv.refresh() == 2
+    assert [(r.g, r.n_rows) for r in dst.read().collect()] == [("a", 2)]
+
+
+def test_stream_source_rolls_forward_over_torn_commit(spark, tmp_path, monkeypatch):
+    """A writer that dies after linking its manifest but before moving
+    ``_LATEST`` has committed; the stream source's offsets, its
+    ``startingVersion=latest`` position and its schema must all see that
+    commit, exactly as LakeTable.current_version() does."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    root = str(tmp_path / "m")
+    t = LakeTable(spark, root)
+    t.overwrite(spark.createDataFrame([(1, "a", 1.0)], "id int, k string, v double"))
+
+    def crash(point):
+        if point == "manifest_linked":
+            raise RuntimeError(point)
+
+    monkeypatch.setattr(lake_table, "_crash_hook", crash)
+    with pytest.raises(RuntimeError, match="manifest_linked"):
+        t.append(
+            spark.createDataFrame(
+                [(2, "b", 2.0, "new")], "id int, k string, v double, extra string"
+            )
+        )
+    monkeypatch.setattr(lake_table, "_crash_hook", lambda p: None)
+    latest = os.path.join(root, "_manifest", "_LATEST")
+
+    def lagging_pointer():
+        # the torn state: v2 linked, the cache still names v1 (each
+        # check below starts from it, since a roll-forward heals it)
+        with open(latest, "w") as f:
+            f.write("1")
+
+    lagging_pointer()
+    schema = _snapshot_arrow_schema(root)
+    assert "extra" in schema.names
+    spark_schema = from_arrow_schema(schema)
+
+    lagging_pointer()
+    reader = LakeTableStreamReader({"path": root, "startingversion": "earliest"}, spark_schema)
+    assert reader.latestOffset() == {"version": 2}
+
+    lagging_pointer()
+    tail = LakeTableStreamReader({"path": root, "startingversion": "latest"}, spark_schema)
+    assert tail.initialOffset() == {"version": 2}
+
+    assert t.current_version() == 2
+
+
+def test_warm_handle_dml_opens_one_manifest(spark, tmp_path, monkeypatch):
+    """Manifest I/O budget per operation on a warm handle (its head
+    version already read once): exactly one ``v*.json`` open — the head
+    read — and at most two ``_LATEST`` opens, one at op start and one
+    for the commit-time head check."""
+    opens = {"json": 0, "latest": 0}
+    real_open = builtins.open
+
+    def counting_open(path, *args, **kwargs):
+        p = str(path)
+        if os.path.basename(os.path.dirname(p)) == "_manifest":
+            name = os.path.basename(p)
+            if name == "_LATEST":
+                opens["latest"] += 1
+            elif name.startswith("v") and name.endswith(".json"):
+                opens["json"] += 1
+        return real_open(path, *args, **kwargs)
+
+    ops = {
+        "merge": lambda t: t.merge(_df(spark, [(2, "B", "y"), (20, "n", "x")]), keys=["k"]),
+        "append": lambda t: t.append(_df(spark, [(30, "a", "x")])),
+        "update": lambda t: t.update("k = 3", {"v": "'U'"}),
+        "delete": lambda t: t.delete("k = 4"),
+        "set_properties": lambda t: t.set_properties({"owner": "etl"}),
+        "add_constraint": lambda t: t.add_constraint("kpos", "k >= 0"),
+    }
+    got = {}
+    for layout, pby in (("unpartitioned", None), ("partitioned", ["part"])):
+        t = LakeTable(spark, str(tmp_path / layout))
+        t.overwrite(
+            _df(spark, [(i, f"v{i}", "x" if i % 2 else "y") for i in range(1, 9)]),
+            partition_by=pby,
+        )
+        for name, op in ops.items():
+            t.read()  # warm: this version's snapshot already read once
+            opens.update(json=0, latest=0)
+            monkeypatch.setattr(builtins, "open", counting_open)
+            try:
+                op(t)
+            finally:
+                monkeypatch.setattr(builtins, "open", real_open)
+            got[(layout, name)] = (opens["json"], opens["latest"])
+    over_budget = {k: v for k, v in got.items() if v[0] != 1 or v[1] > 2}
+    assert not over_budget, f"(v*.json, _LATEST) opens per op: {got}"

@@ -208,14 +208,14 @@ def test_optimistic_concurrency_detects_conflicts(spark, tbl):
     from ecommerce_lakehouse_spark.lake import ConcurrentWriteError
 
     tbl.overwrite(_df(spark, [(1, "a", "x")]))
-    base = tbl.current_version()
+    stale = tbl._manifest(tbl.current_version())
 
     # writer B commits in between
     tbl.append(_df(spark, [(2, "b", "x")]))
 
     # writer A tries to commit against its stale snapshot
     with _pytest.raises(ConcurrentWriteError, match="advanced"):
-        tbl._commit(["/nonexistent"], "merge", [], base_version=base)
+        tbl._commit(stale, ["/nonexistent"], "merge")
 
     # helper: simulate a concurrent writer committing version v as a
     # metadata-only copy of the current head (real data_dirs — a
@@ -535,11 +535,11 @@ def test_concurrent_disjoint_appends_both_commit(spark, tmp_path):
     orig = LakeTable._new_data_dir
     fired = {}
 
-    def hooked(self):
+    def hooked(self, prior):
         if self is a and "done" not in fired:
             fired["done"] = True
             b.append(_df(spark, [(2, "b", "y")]))
-        return orig(self)
+        return orig(self, prior)
 
     LakeTable._new_data_dir = hooked
     try:
@@ -566,11 +566,11 @@ def test_concurrent_disjoint_partition_merges_both_commit(spark, tmp_path):
     orig = LakeTable._new_data_dir
     fired = {}
 
-    def hooked(self):
+    def hooked(self, prior):
         if self is a and "done" not in fired:
             fired["done"] = True
             b.merge(_df(spark, [(2, "B", "y")]), keys=["k"])  # touches y only
-        return orig(self)
+        return orig(self, prior)
 
     LakeTable._new_data_dir = hooked
     try:
@@ -597,11 +597,11 @@ def test_concurrent_overlapping_merges_conflict(spark, tmp_path):
     orig = LakeTable._new_data_dir
     fired = {}
 
-    def hooked(self):
+    def hooked(self, prior):
         if self is a and "done" not in fired:
             fired["done"] = True
             b.merge(_df(spark, [(2, "B", "x")]), keys=["k"])
-        return orig(self)
+        return orig(self, prior)
 
     LakeTable._new_data_dir = hooked
     try:
@@ -629,11 +629,11 @@ def test_racing_writers_never_share_data_dirs(spark, tmp_path):
     orig = LakeTable._new_data_dir
     fired = {}
 
-    def hooked(self):
+    def hooked(self, prior):
         if self is a and "done" not in fired:
             fired["done"] = True
             b.overwrite(_df(spark, [(9, "winner", "x")]))
-        return orig(self)
+        return orig(self, prior)
 
     LakeTable._new_data_dir = hooked
     try:
@@ -1012,15 +1012,14 @@ def test_blind_append_conflicts_with_concurrent_metadata_change(spark, tmp_path)
     # then A's append tries to commit from the stale base
     writer_a = LakeTable(spark, root)
     df_a = spark.createDataFrame([(2, 20.0)], "id int, amount double")
-    base = writer_a.current_version()
-    entry = writer_a._write_dir_entry(df_a, [])
+    prior = writer_a._manifest(writer_a.current_version())
+    entry = writer_a._write_dir_entry(df_a, prior)
     t.add_generated_column("amount_cents", "CAST(amount * 100 AS BIGINT)")  # B wins
     with pytest.raises(ConcurrentWriteError, match="metadata"):
         writer_a._commit_rebasing(
-            lambda head: (head["data_dirs"] if head else []) + [entry],
+            prior,
+            lambda head: head["data_dirs"] + [entry],
             "append",
-            [],
-            base_version=base,
             touched=[],
             blind=True,
         )
@@ -1284,8 +1283,8 @@ def test_auto_compact_loses_race_silently(spark, tmp_path):
     orig = LakeTable._write_dir_entry
     state = {"appends": 0}
 
-    def hooked(self, df, partition_by):
-        entry = orig(self, df, partition_by)
+    def hooked(self, df, prior):
+        entry = orig(self, df, prior)
         # fire B's append during A's *compaction* write (the write that
         # follows an append once the threshold is crossed)
         if state.get("arm") and "fired" not in state:
