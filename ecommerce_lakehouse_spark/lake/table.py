@@ -1568,6 +1568,7 @@ class LakeTable:
         txn: dict | None = None,
         _delete_keys: DataFrame | None = None,
         _operation: str = "merge",
+        _prior: dict | None = None,
     ) -> int:
         """K5/K6: MERGE upsert with create-if-absent fallback (reference
         src/glue_etl.py:439-497, Delta ``whenMatchedUpdateAll /
@@ -1603,10 +1604,14 @@ class LakeTable:
         the touched-partition/file discovery spans both key sets, and
         the rewritten slice is anti-joined before writing, so a CDC
         batch of upserts + deletes lands as one pruned commit.
+
+        ``_prior`` (internal, used by :meth:`apply_changes_scd2`): the
+        head the caller already read and derived ``updates`` from; the
+        merge commits against it instead of reading the head again.
         """
         import pyspark.sql.functions as F
 
-        prior = self._head()
+        prior = self._head() if _prior is None else _prior
         if not prior["version"]:
             return self.overwrite(updates, txn=txn)
         self._reject_cow_with_dvs(prior, "merge")
@@ -1859,8 +1864,13 @@ class LakeTable:
             F.col(sequence_col).alias("__start_at"),
             (F.col(change_type_col) == "delete").alias("__is_delete"),
         )
-        if self.exists():
-            tgt = self.read()
+        # one head for the whole op: the history below is derived from
+        # this version, and the merge commits against it, so a commit that
+        # lands in between raises ConcurrentWriteError instead of being
+        # absorbed into intervals computed without it
+        prior = self._head()
+        if prior["version"]:
+            tgt = self.read(version=prior["version"])
             affected = tgt.join(
                 events.select(*keys).distinct(), on=keys, how="left_semi"
             )
@@ -1899,6 +1909,7 @@ class LakeTable:
             keys + ["__start_at"],
             txn=txn,
             _operation="apply_changes_scd2",
+            _prior=prior,
         )
 
     def _touched_files_by_cond(self, prior: dict, cond) -> tuple[list, list]:

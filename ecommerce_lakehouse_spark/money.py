@@ -61,20 +61,10 @@ def dsum(expr: Column, scale: int = 2) -> Column:
 
 
 # SQL-side mirrors (DuckDB oracle fragments)
-SQL_SUM2 = "CAST(round(sum(CAST({c} AS DECIMAL(18,2))), {s}) AS DOUBLE)"
-SQL_AVG2 = "CAST(sum(CAST({c} AS DECIMAL(18,2))) AS DOUBLE) / count({c})"
 SQL_DISC_PRICE = (
     "CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(9,4))"
 )
 SQL_CHARGE = SQL_DISC_PRICE + " * CAST(1 + l_tax AS DECIMAL(9,4))"
-
-
-def sql_sum2(c: str, s: int = 2) -> str:
-    return SQL_SUM2.format(c=c, s=s)
-
-
-def sql_avg2(c: str, s: int = 4) -> str:
-    return SQL_AVG2.format(c=c, s=s)
 
 
 def sql_dsum(expr: str, s: int = 2) -> str:

@@ -105,16 +105,6 @@ def _encode_value(w: _BitWriter, v: int, codes: dict) -> None:
         w.write(v if v >= 0 else v + (1 << s) - 1, s)
 
 
-def _blocks_of(plane: np.ndarray) -> tuple[np.ndarray, int, int]:
-    """Pad to 8-multiples by edge replication, return (nby*nbx, 8, 8)."""
-    h, w = plane.shape
-    ph, pw = -h % 8, -w % 8
-    padded = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
-    nby, nbx = padded.shape[0] // 8, padded.shape[1] // 8
-    blocks = padded.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-    return blocks, nby, nbx
-
-
 def _block_runs(zz: np.ndarray, prev_dc: int) -> tuple[int, list]:
     """One block's (dc_diff, [(ac_symbol, value), ...]) in zigzag order."""
     diff = int(zz[0]) - prev_dc

@@ -43,14 +43,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ecommerce_lakehouse_spark.lake import LakeTable
-from ecommerce_lakehouse_spark.queries.llm2 import (
-    _BUCKET_CAP,
-    _EST_THRESHOLD,
+from ecommerce_lakehouse_spark.operators.lsh import (
+    MH_BUCKET_CAP,
+    MH_EST_THRESHOLD,
     minhash_bands_df,
     minhash_est_jaccard,
     minhash_signatures_df,
 )
-from ecommerce_lakehouse_spark.queries.llm4 import _EMAIL
+from ecommerce_lakehouse_spark.operators.text import EMAIL
 
 # quality-gate thresholds (Gopher-style repetition + PII)
 MIN_WORDS = 5
@@ -81,7 +81,7 @@ def quality_gate(docs: DataFrame) -> DataFrame:
         "i -> concat(element_at(w, i), ' ', element_at(w, i + 1)))"
     )
     dup_ratio = (F.size(bg) - F.size(F.array_distinct(bg))) / F.size(bg).cast("double")
-    emails = F.size(F.regexp_extract_all("text", F.lit(_EMAIL), F.lit(0)))
+    emails = F.size(F.regexp_extract_all("text", F.lit(EMAIL), F.lit(0)))
     return base.filter(
         (F.size("w") >= MIN_WORDS)
         & (emails == 0)
@@ -268,7 +268,7 @@ def curate(
     )
 
     # ---- stage 4: candidate pairs (incremental: new ⋈ full index),
-    # with the stop-band skew guard (llm2._BUCKET_CAP policy): band keys
+    # with the stop-band skew guard (the MH_BUCKET_CAP policy): band keys
     # whose index bucket exceeds the cap are excluded from the join —
     # degenerate boilerplate bands would otherwise make the new-batch
     # join quadratic in the hot bucket. Anti-join keeps it plan-side.
@@ -276,7 +276,7 @@ def curate(
     hot = (
         index.groupBy("band_key")
         .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > _BUCKET_CAP)
+        .filter(F.col("n") > MH_BUCKET_CAP)
         .select("band_key")
     )
     index = index.join(hot, "band_key", "left_anti")
@@ -296,7 +296,7 @@ def curate(
     )
     new_pairs = (
         cand.withColumn("est_jaccard", minhash_est_jaccard("sa", "sb"))
-        .filter(F.col("est_jaccard") >= _EST_THRESHOLD)
+        .filter(F.col("est_jaccard") >= MH_EST_THRESHOLD)
         .select("doc_a", "doc_b", "est_jaccard")
     )
     if done("pairs"):

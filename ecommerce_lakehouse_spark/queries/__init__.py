@@ -9,7 +9,10 @@ this package populates REGISTRY / ORACLES.
 from __future__ import annotations
 
 import functools
+import hashlib
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,30 +25,24 @@ ORACLES: dict[str, str] = {}
 # Managed session confs (r10 opt, guide §1.2-3: config LAST, and scoped
 # to where it is measured to win). The r09 session-global values
 # (minPartitionSize=16k, openCostInBytes=64k) were A/B'd registry-wide
-# this round — full registry, fresh JVM per run, 3 runs per arm,
-# interleaved (r10/ab_confs/): they win 13.9 s on the 15-query
+# — full registry, fresh JVM per run, 3 runs per arm, interleaved
+# (r10/ab_confs/): they win 13.9 s on the 15-query
 # dedup/LSH/text-similarity family but cost 21.6 s across 45 other
 # queries (and a long tail of smaller losses) by inflating task counts
 # for every tiny stage at local core counts. A third/fourth arm isolated
 # the confs: minPartitionSize alone reproduces ALL the family wins;
-# openCostInBytes=64k adds nothing even there. So the session baseline
-# is Spark defaults (session.py) and the winning conf is pinned
-# PER-QUERY via ``@query(..., confs=TINY_STAGE_CONFS)``.
+# openCostInBytes=64k adds nothing even there. So the session runs on
+# Spark's defaults and the winning conf is pinned PER-QUERY via
+# ``@query(..., confs=TINY_STAGE_CONFS)``.
 #
 # The wrapper sets EVERY managed conf on each registry build — the
-# query's declared value if it opts in, the session baseline otherwise —
-# so one query's tuning never leaks into the next query timed in the
-# same session (bench.py runs the whole registry through one session).
-# Both confs are runtime-settable SQL confs, and they shape plans only
-# at execution time, so build-time assignment covers the materialize
-# that follows.
+# query's declared value if it opts in, Spark's default otherwise — so
+# one query's tuning never leaks into the next query timed in the same
+# session (bench.py runs the whole registry through one session). The
+# conf is runtime-settable and shapes plans only at execution time, so
+# build-time assignment covers the materialize that follows.
 _MANAGED_CONFS: dict[str, str] = {
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_MIN_PARTITION", "1m"
-    ),
-    "spark.sql.files.openCostInBytes": os.environ.get(
-        "SPARK_GRAFT_OPEN_COST", "4m"
-    ),
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m",
 }
 
 #: The dedup/LSH-family override: post-exact-collapse stages there are
@@ -91,8 +88,23 @@ def query(name: str, oracle: str | None = None, confs: dict[str, str] | None = N
     return deco
 
 
-# Import side effects populate the registry.
+def scratch_root(kind: str, sf_dir: str) -> str:
+    """An emptied scratch directory for a query that builds LakeTables:
+    ``<tmpdir>/spark_graft_<kind>_<first 8 hex of md5(sf_dir)>``. The path
+    depends only on (kind, sf_dir), so a re-run wipes and reuses it and
+    nothing accumulates across repeated bench or entry-point runs."""
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    root = os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}_{tag}")
+    shutil.rmtree(root, ignore_errors=True)
+    return root
+
+
+# Import side effects populate the registry, in this order: it is the
+# REGISTRY order, which __spark_entry__.queries() exposes, so it must not
+# change (llm2 and llm4 lead; wave7 precedes tpch2).
 from ecommerce_lakehouse_spark.queries import (  # noqa: E402,F401
+    llm2,
+    llm4,
     curation,
     events,
     experiment,
@@ -100,9 +112,7 @@ from ecommerce_lakehouse_spark.queries import (  # noqa: E402,F401
     graph_ml,
     lakehouse,
     llm,
-    llm2,
     llm3,
-    llm4,
     llm5,
     llm6,
     llm7,

@@ -14,23 +14,11 @@ round-2 verdict asked for (item #2).
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ecommerce_lakehouse_spark.queries import query
-from ecommerce_lakehouse_spark.queries.llm2 import (
-    _BANDS,
-    _EST_THRESHOLD,
-    _H32_D,
-    _K,
-    _P,
-    _TOKS_D,
-)
-from ecommerce_lakehouse_spark.queries.llm4 import _EMAIL
+from ecommerce_lakehouse_spark.operators.lsh import MH_BANDS, MH_EST_THRESHOLD, MH_K, MH_P
+from ecommerce_lakehouse_spark.operators.text import EMAIL, H32_D, WS_TOKS_D
+from ecommerce_lakehouse_spark.queries import query, scratch_root
 from ecommerce_lakehouse_spark.tables import load
 
 _FUNNEL_SQL = f"""
@@ -40,7 +28,7 @@ WITH base AS (
 ), gated AS (
   SELECT doc_id, lang, text FROM base
   WHERE len(w) >= 5
-    AND len(regexp_extract_all(text, '{_EMAIL}')) = 0
+    AND len(regexp_extract_all(text, '{EMAIL}')) = 0
     AND (len(list_transform(range(1, len(w)), i -> concat(w[i], ' ', w[i+1])))
          - len(list_distinct(list_transform(range(1, len(w)), i -> concat(w[i], ' ', w[i+1])))))
         / CAST(len(w) - 1 AS DOUBLE) <= 0.6
@@ -48,30 +36,30 @@ WITH base AS (
   SELECT min(doc_id) AS doc_id, count(*) AS n_copies, text
   FROM gated GROUP BY text
 ), t AS (
-  SELECT doc_id, {_TOKS_D} AS toks FROM canon
+  SELECT doc_id, {WS_TOKS_D} AS toks FROM canon
 ), sh AS (
   SELECT doc_id,
          list_distinct(list_transform(range(1, len(toks) - 1),
              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
   FROM t WHERE len(toks) >= 3
 ), hs AS (
-  SELECT doc_id, list_transform(shingles, s -> {_H32_D.format(x='s')}) AS hashes
+  SELECT doc_id, list_transform(shingles, s -> {H32_D.format(x='s')}) AS hashes
   FROM sh
 ), sig AS (
   SELECT doc_id,
-         list_transform(range(0, {_K}),
-             k -> list_min(list_transform(hashes, h -> (h * (2*k + 1) + (12345 + k)) % {_P}))) AS sig
+         list_transform(range(0, {MH_K}),
+             k -> list_min(list_transform(hashes, h -> (h * (2*k + 1) + (12345 + k)) % {MH_P}))) AS sig
   FROM hs
 ), bands AS (
   SELECT doc_id, sig,
-         unnest(list_transform(range(0, {_BANDS}),
+         unnest(list_transform(range(0, {MH_BANDS}),
              j -> concat_ws(',', j, sig[4*j+1], sig[4*j+2], sig[4*j+3], sig[4*j+4]))) AS band_key
   FROM sig
 ), mp AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-  WHERE len(list_filter(range(1, {_K} + 1), i -> a.sig[i] = b.sig[i])) / {_K}.0
-        >= {_EST_THRESHOLD}
+  WHERE len(list_filter(range(1, {MH_K} + 1), i -> a.sig[i] = b.sig[i])) / {MH_K}.0
+        >= {MH_EST_THRESHOLD}
 ), edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM mp
   UNION ALL
@@ -126,10 +114,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_lakehouse_spark.pipelines.curation import curate, funnel
 
     docs = load(spark, sf_dir, "documents")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_curation_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
-    t = curate(spark, docs, root)
+    t = curate(spark, docs, scratch_root("curation", sf_dir))
     # the raw count folds into the funnel's single action (passing the
     # DataFrame) instead of an eager count() job before it
     return funnel(spark, t, docs)

@@ -33,6 +33,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ecommerce_lakehouse_spark.operators.graph import dense_graph_frame
 from ecommerce_lakehouse_spark.operators.scale import iter_barrier, narrow_barrier
 from ecommerce_lakehouse_spark.queries import query
 from ecommerce_lakehouse_spark.tables import load
@@ -192,70 +193,6 @@ def _support_graph(spark: SparkSession, sf_dir: str, prune: bool = True):
         e.select(F.col("d").alias("z"), F.col("s").alias("nbr"))
     )
     return e, adj
-
-
-def dense_graph_frame(adj: DataFrame) -> DataFrame:
-    """ONE-ROW dense adjacency over the support-bounded symmetric
-    adjacency ``(z, nbr)``: column ``nodes`` (array<bigint>, ascending —
-    index order is node-id order) and ``adjx`` (array<array<int>>,
-    1-based neighbor indexes, ascending per node).
-
-    r10 opt (guide §1.2-1, the kcore_profile_frame idiom generalized):
-    the relative-support cut bounds the surviving graph independent of
-    corpus size (E <= C(avg_width, 2) * 150000/2 — the per-basket
-    edge-weight budget over the threshold, which scales with n_baskets),
-    so the graph is control-plane-sized BY CONSTRUCTION and
-    bounded-round iteration over it (label propagation, PageRank) is a
-    fixed-cost problem: round-per-job execution pays ~2 jobs of
-    scheduler overhead per round against a few-thousand-row frame. The
-    index is built DISTRIBUTEDLY (bounded row_number + two broadcast
-    hash joins + one groupBy, O(E)) and only the final collect_list is
-    single-task — sized by the support-bounded graph itself, the same
-    argument that lets every graph consumer broadcast its node table
-    per round. NOT valid for the unthresholded co-purchase graph
-    (bfs/sssp), whose edge set densifies with the corpus."""
-    from pyspark.sql import Window
-
-    from ecommerce_lakehouse_spark.operators.scale import narrow_barrier
-
-    # idx feeds THREE consumers (both eidx sides + the final join);
-    # lazy narrow barrier computes the bounded window once per action
-    idx = (
-        adj.select("z")
-        .distinct()
-        .select(
-            "z",
-            F.row_number().over(Window.orderBy("z")).cast("int").alias("i"),
-        )
-        .transform(lambda d: narrow_barrier(d, eager=False))
-    )
-    eidx = (
-        adj.join(F.broadcast(idx), "z")
-        .join(
-            F.broadcast(
-                idx.select(F.col("z").alias("nbr"), F.col("i").alias("j"))
-            ),
-            "nbr",
-        )
-        .select("i", "j")
-    )
-    adjp = eidx.groupBy("i").agg(F.sort_array(F.collect_list("j")).alias("nbrs"))
-    return (
-        # broadcast the right side explicitly: both inputs scan barrier
-        # RDDs (no size stats), so the planner would otherwise pick a
-        # SortMergeJoin with two exchanges for two node-domain frames
-        idx.join(F.broadcast(adjp), "i", "left")
-        .select(
-            "i",
-            "z",
-            F.coalesce("nbrs", F.array().cast("array<int>")).alias("nbrs"),
-        )
-        .agg(F.expr("array_sort(collect_list(struct(i, z, nbrs)))").alias("nd"))
-        .select(
-            F.expr("transform(nd, x -> x.z)").alias("nodes"),
-            F.expr("transform(nd, x -> x.nbrs)").alias("adjx"),
-        )
-    )
 
 
 @query(

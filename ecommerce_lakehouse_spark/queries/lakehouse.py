@@ -6,12 +6,16 @@ as a pure-DataFrame query so the oracle can verify them."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ecommerce_lakehouse_spark.lake.merge import merge_upsert
+from ecommerce_lakehouse_spark.lake.mv import MaterializedAggregate
+from ecommerce_lakehouse_spark.lake.table import LakeTable
 from ecommerce_lakehouse_spark.money import dec2
-from ecommerce_lakehouse_spark.queries import query
+from ecommerce_lakehouse_spark.queries import query, scratch_root
 from ecommerce_lakehouse_spark.tables import load
 
 
@@ -117,13 +121,6 @@ def cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the feed reads only what each commit touched (file-pruned
     here; partition-pruned on partitioned tables — see lake/cdf.py),
     never two full snapshots."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ecommerce_lakehouse_spark.lake.table import LakeTable
-
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 4 == 1)
     target = o.filter(F.col("o_orderdate") < "1998-01-01 00:00:00").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -135,11 +132,7 @@ def cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("o_totalprice"),
     )
-    # deterministic per-sf scratch root, wiped on re-run (the curation
-    # pipeline's pattern) — never accumulates across bench/driver rounds
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_cdc_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root("cdc", sf_dir)
     t = LakeTable(spark, os.path.join(root, "orders"))
     t.overwrite(target.coalesce(8))  # v1
     t.merge(updates, keys=["o_orderkey"])  # v2
@@ -195,13 +188,6 @@ def cdc_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the feed reads only touched slices per commit; the apply
     lands as one merge-shaped pruned commit per batch."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ecommerce_lakehouse_spark.lake.table import LakeTable
-
     base = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 5 == 2)
     target = base.filter(F.col("o_orderdate") < "1998-01-01 00:00:00").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -213,9 +199,7 @@ def cdc_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("o_totalprice"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_cdcapply_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root("cdcapply", sf_dir)
     src = LakeTable(spark, os.path.join(root, "src"))
     src.overwrite(target.coalesce(8))  # v1
     src.merge(updates, keys=["o_orderkey"])  # v2
@@ -276,13 +260,6 @@ def convert_parquet_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the convert is footer-only I/O (one read per file, no data
     movement) — exactly how Delta converts a petabyte directory without
     rewriting it; subsequent DML is partition-pruned as usual."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ecommerce_lakehouse_spark.lake.table import LakeTable
-
     base = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 9 == 4)
     target = base.filter(F.col("o_orderdate") < "1998-01-01 00:00:00").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
@@ -294,9 +271,7 @@ def convert_parquet_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("o_totalprice"),
         F.lit("U").alias("o_orderstatus"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_convert_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root("convert", sf_dir)
     plain = os.path.join(root, "plain")
     target.coalesce(4).write.partitionBy("o_orderstatus").parquet(plain)
     t = LakeTable.convert_from_parquet(spark, plain, partition_by=["o_orderstatus"])
@@ -350,13 +325,6 @@ def rename_column_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the rename costs one manifest write regardless of table
     size — the 100 TB schema-evolution story; the read-side mapping is
     pure projection on top of unchanged scans."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ecommerce_lakehouse_spark.lake.table import LakeTable
-
     base = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 11 == 6)
     target = base.filter(F.col("o_orderdate") < "1998-01-01 00:00:00").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -368,9 +336,7 @@ def rename_column_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("revenue"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_rename_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root("rename", sf_dir)
     t = LakeTable(spark, os.path.join(root, "t"))
     t.overwrite(target.coalesce(8))  # v1: files under o_totalprice
     t.rename_column("o_totalprice", "revenue")  # v2: metadata only
@@ -426,14 +392,6 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each refresh reads only the commit's CDF slice and shuffles
     one (group, delta) frame — gold stays fresh without re-scanning
     silver."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ecommerce_lakehouse_spark.lake.mv import MaterializedAggregate
-    from ecommerce_lakehouse_spark.lake.table import LakeTable
-
     base = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 6 == 1)
     target = base.filter(F.col("o_orderdate") < "1998-01-01 00:00:00").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -445,9 +403,7 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("o_totalprice"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_mv_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root("mv", sf_dir)
     src = LakeTable(spark, os.path.join(root, "src"))
     mart = LakeTable(spark, os.path.join(root, "mart"))
     mv = MaterializedAggregate(
@@ -524,13 +480,6 @@ def scd2_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: interval construction is a per-key window (bounded by commits
     per batch) + the merge's pruned commit — no global sort, no
     snapshot diff."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ecommerce_lakehouse_spark.lake.table import LakeTable
-
     base = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 == 3)
     target = base.filter(F.col("o_orderdate") < "1998-01-01 00:00:00").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -542,9 +491,7 @@ def scd2_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("o_totalprice"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_scd2_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root("scd2", sf_dir)
     src = LakeTable(spark, os.path.join(root, "src"))
     src.overwrite(target.coalesce(8))  # v1
     src.merge(updates, keys=["o_orderkey"])  # v2
@@ -610,13 +557,6 @@ def scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on o_orderkey, asserted in tests/test_plans.py. The SCD2 build
     itself is bounded by commits, not data volume (see
     scd2_apply_snapshot)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ecommerce_lakehouse_spark.lake.table import LakeTable
-
     base = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 == 3)
     target = base.filter(F.col("o_orderdate") < "1998-01-01 00:00:00").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -628,9 +568,7 @@ def scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("o_totalprice"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_scd2pt_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root("scd2pt", sf_dir)
     src = LakeTable(spark, os.path.join(root, "src"))
     src.overwrite(target.coalesce(8))  # v1
     src.merge(updates, keys=["o_orderkey"])  # v2
@@ -691,19 +629,10 @@ def zorder_skipping_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the whole point of Z-order — both rectangle dimensions prune
     files, not just a lexicographic leading column; row-level exactness
     rides the same parquet filter pushdown any scan gets."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ecommerce_lakehouse_spark.lake.table import LakeTable
-
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_zorder_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root("zorder", sf_dir)
     t = LakeTable(spark, os.path.join(root, "orders"))
     t.overwrite(o.repartition(8))
     t.optimize(zorder_by=["o_totalprice", "o_custkey"], target_partitions=8)
@@ -746,13 +675,6 @@ def bloom_skipping_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet row-group blooms inside surviving files. Probe keys are
     derived by deterministic rules (max/min over a residue class), each
     a 1-row control-plane scalar, never a data collect."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ecommerce_lakehouse_spark.lake.table import LakeTable
-
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -762,9 +684,7 @@ def bloom_skipping_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     k2 = o.filter(F.col("o_orderkey") % 32 == 19).agg(
         F.min("o_orderkey")
     ).first()[0]
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_bloom_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root("bloom", sf_dir)
     t = LakeTable(spark, os.path.join(root, "orders"))
     t.overwrite(o.limit(0))  # v1: establish the table, then index it
     t.create_bloom_index("o_orderkey", fpp=0.001, max_keys_per_file=200_000)
@@ -821,19 +741,10 @@ def identity_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark advance reads parquet FOOTERS of the files just written,
     and concurrent allocators conflict-and-rebase rather than mint
     duplicates."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ecommerce_lakehouse_spark.lake.table import LakeTable
-
     c = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_ident_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root("ident", sf_dir)
     t = LakeTable(spark, os.path.join(root, "cust"))
     t.overwrite(c.filter(F.col("c_custkey") % 3 == 0))
     t.set_identity("row_id", start=1000)
@@ -897,21 +808,12 @@ def restore_table_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (restore refuses to advertise reclaimed bytes) is what makes that
     safe. Reference: /root/reference/docs/data_model.md's versioned
     lake layers; Delta RESTORE semantics."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ecommerce_lakehouse_spark.lake.table import LakeTable
-
     base = (
         load(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 13 == 5)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_restore_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_root("restore", sf_dir)
     t = LakeTable(spark, root)
     t.overwrite(base)                                   # v1
     t.delete("o_orderkey % 4 = 1")                      # v2

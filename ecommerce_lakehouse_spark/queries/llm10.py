@@ -41,6 +41,7 @@ from ecommerce_lakehouse_spark.operators.sketch import (
     kll_level_sketch,
     md5_hash60,
 )
+from ecommerce_lakehouse_spark.operators.text import ALPHA_TOKS_D, ALPHA_TOKS_S
 from ecommerce_lakehouse_spark.queries import TINY_STAGE_CONFS, query
 from ecommerce_lakehouse_spark.tables import load
 
@@ -167,8 +168,6 @@ def kll_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # learned quality classifier (CCNet/fastText shape)
 # ---------------------------------------------------------------------------
 
-from ecommerce_lakehouse_spark.queries.llm6 import _TOKENIZE_SQL  # noqa: E402
-
 _QC_B = 256  # hashed feature buckets
 _QC_TRAIN_PCT = 80  # same deterministic split rule as bigram_lm_score
 
@@ -177,7 +176,7 @@ _QC_TRAIN_PCT = 80  # same deterministic split rule as bigram_lm_score
 # the confusion-matrix query and the calibration curve)
 _QC_CTE = rf"""
 WITH d AS (
-  SELECT doc_id, {_TOKENIZE_SQL} AS t,
+  SELECT doc_id, {ALPHA_TOKS_D} AS t,
          len(string_split_regex(trim(text), '\s+')) BETWEEN 50 AND 100000 AS pos,
          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
            < {_QC_TRAIN_PCT} AS is_train
@@ -280,10 +279,7 @@ def _qc_test_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the confusion-matrix and calibration queries."""
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.expr(
-            "filter(split(regexp_replace(lower(text), '[^a-z]+', ' '), ' '),"
-            " x -> x <> '')"
-        ).alias("t"),
+        F.expr(ALPHA_TOKS_S).alias("t"),
         F.size(F.split(F.trim("text"), r"\s+")).between(50, 100000).alias("pos"),
         (
             F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)

@@ -2,11 +2,11 @@
 SimHash, n-gram Jaccard), LSH-bucketed ANN, language-ID heuristic, and
 multimodal binary plumbing (north star; SURVEY §7.3 v6).
 
-Hashing primitive shared with the DuckDB oracle: the first 8 hex chars of
-md5 as a 32-bit integer — Spark ``conv(substr(md5(x),1,8),16,10)`` and
-DuckDB ``('0x'||substr(md5(x),1,8))::BIGINT`` agree bit-for-bit, so MinHash
-signatures, SimHash bits, and LSH planes are engine-independent and fully
-oracle-checkable (no rows-only fallbacks needed).
+Hashing primitive shared with the DuckDB oracle: the 32-bit md5 prefix
+of operators/text.py, whose Spark and DuckDB twins agree bit-for-bit, so
+MinHash signatures (operators/lsh.py), SimHash bits, and LSH planes are
+engine-independent and fully oracle-checkable (no rows-only fallbacks
+needed).
 
 Scale design notes are on each query; the common theme: candidate
 generation via bucketing (band join / hyperplane buckets) so nothing is
@@ -16,97 +16,27 @@ multimodal featurizer.
 
 from __future__ import annotations
 
-import hashlib
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ecommerce_lakehouse_spark.operators.lsh import (
+    ANN_PLANES,
+    EMBED_DIM,
+    MH_BANDS,
+    MH_BUCKET_CAP,
+    MH_EST_THRESHOLD,
+    MH_K,
+    MH_P,
+    bucket_col,
+    bucket_sql,
+    minhash_bands_df,
+    minhash_est_jaccard,
+    minhash_signatures_df,
+)
 from ecommerce_lakehouse_spark.operators.multimodal import featurize_binary, with_binary_payload
+from ecommerce_lakehouse_spark.operators.text import H32_D, H32_S, WS_TOKS_D, WS_TOKS_S
 from ecommerce_lakehouse_spark.queries import TINY_STAGE_CONFS, query
 from ecommerce_lakehouse_spark.tables import load
-
-# ---------------------------------------------------------------------------
-# shared expression fragments (Spark SQL expr ↔ DuckDB SQL)
-# ---------------------------------------------------------------------------
-
-_TOKS_S = r"split(trim(text), '\\s+')"
-_TOKS_D = r"string_split_regex(trim(text), '\s+')"
-_H32_S = "cast(conv(substr(md5({x}),1,8),16,10) as bigint)"
-_H32_D = "('0x' || substr(md5({x}),1,8))::BIGINT"
-
-# MinHash parameters: K universal hashes (a_k*h+b_k mod P), banded 8×4.
-_K, _BANDS, _ROWS = 32, 8, 4
-_P = 4294967311  # prime > 2^32
-_EST_THRESHOLD = 0.125  # ≥4 of 32 signature positions agree
-
-# Skew guard (round-2 verdict item #8): a band bucket larger than this is
-# a degenerate "stop band" — after exact-collapse, only template/
-# boilerplate corpora produce them, and expanding such a bucket is
-# quadratic work for near-zero dedup signal (the same pair is recoverable
-# from its other 7 bands unless it is pathological in ALL bands). Buckets
-# over the cap are dropped WHOLE (never truncated) in both the Spark plan
-# and the DuckDB oracle; the drop is observable, not silent — the
-# registered band_skew_profile query reports bucket-size stats and the
-# over-cap count, and tools/scale_smoke.py's poisoned-corpus variant
-# measures the guard keeping wall time bounded.
-_BUCKET_CAP = 512
-
-
-def minhash_signatures_df(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(…, text) -> (…, sig): the module's 3-gram-shingle MinHash
-    signature as an array<bigint> column, all other columns preserved.
-    Shared by minhash_lsh_pairs and pipelines/curation (the incremental
-    band index). Docs with < 3 tokens are dropped (no shingle exists).
-
-    Single pass over the hash array with a K-wide accumulator — see the
-    projection-collapse note inside (Catalyst inlines md5 work into every
-    reference of the naive per-k form; measured 9.1s -> 0.9s at sf0.1)."""
-    passthrough = [c for c in docs.columns if c != text_col]
-    return (
-        docs.select(*passthrough, F.expr(_TOKS_S.replace("text", text_col)).alias("toks"))
-        .filter(F.expr("size(toks) >= 3"))
-        .withColumn(
-            "shingles",
-            F.expr(
-                "array_distinct(transform(sequence(0, size(toks) - 3),"
-                " i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])))"
-            ),
-        )
-        # Init value _P is a safe +inf: universal-hash outputs are % _P.
-        .withColumn(
-            "sig",
-            F.expr(
-                f"aggregate(transform(shingles, s -> {_H32_S.format(x='s')}),"
-                f" array_repeat(cast({_P} as bigint), {_K}),"
-                f" (acc, h) -> zip_with(acc, sequence(0, {_K - 1}),"
-                f"   (m, k) -> least(m, (h * (2*k + 1) + (12345 + k)) % {_P})))"
-            ),
-        )
-        .select(*passthrough, "sig")
-    )
-
-
-def minhash_bands_df(sig_df: DataFrame) -> DataFrame:
-    """(…, sig) -> (…, sig, band_key) with one row per band — the LSH
-    index shape ((band_key, doc_id) is the inverted index a 100 TB
-    incremental dedup maintains as a table)."""
-    return sig_df.select(
-        "*",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {_BANDS - 1}),"
-                " j -> concat_ws(',', j, sig[4*j], sig[4*j+1], sig[4*j+2], sig[4*j+3]))"
-            )
-        ).alias("band_key"),
-    )
-
-
-def minhash_est_jaccard(sa, sb):
-    """Signature-agreement Jaccard estimate between two sig columns."""
-    return F.expr(
-        f"size(filter(zip_with({sa}, {sb}, (x, y) -> x = y), v -> v)) / cast({_K} as double)"
-    )
-
 
 @query(
     "minhash_lsh_pairs",
@@ -116,7 +46,7 @@ WITH canon AS (
   SELECT min(doc_id) AS doc_id, count(*) AS n_copies, text
   FROM documents GROUP BY text
 ), t AS (
-  SELECT doc_id, n_copies, {_TOKS_D} AS toks FROM canon
+  SELECT doc_id, n_copies, {WS_TOKS_D} AS toks FROM canon
 ), sh AS (
   SELECT doc_id, n_copies,
          list_distinct(list_transform(range(1, len(toks) - 1),
@@ -124,16 +54,16 @@ WITH canon AS (
   FROM t WHERE len(toks) >= 3
 ), hs AS (
   SELECT doc_id, n_copies,
-         list_transform(shingles, s -> {_H32_D.format(x='s')}) AS hashes
+         list_transform(shingles, s -> {H32_D.format(x='s')}) AS hashes
   FROM sh
 ), sig AS (
   SELECT doc_id, n_copies,
-         list_transform(range(0, {_K}),
-             k -> list_min(list_transform(hashes, h -> (h * (2*k + 1) + (12345 + k)) % {_P}))) AS sig
+         list_transform(range(0, {MH_K}),
+             k -> list_min(list_transform(hashes, h -> (h * (2*k + 1) + (12345 + k)) % {MH_P}))) AS sig
   FROM hs
 ), bands AS (
   SELECT doc_id, n_copies, sig,
-         unnest(list_transform(range(0, {_BANDS}),
+         unnest(list_transform(range(0, {MH_BANDS}),
              j -> concat_ws(',', j, sig[4*j+1], sig[4*j+2], sig[4*j+3], sig[4*j+4]))) AS band_key
   FROM sig
 ), bsz AS (
@@ -143,13 +73,13 @@ WITH canon AS (
          a.n_copies AS copies_a, b.n_copies AS copies_b
   FROM bands a
   JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-  JOIN bsz s ON a.band_key = s.band_key AND s.n <= {_BUCKET_CAP}
+  JOIN bsz s ON a.band_key = s.band_key AND s.n <= {MH_BUCKET_CAP}
 )
 SELECT doc_a, doc_b,
-       len(list_filter(range(1, {_K} + 1), i -> sa[i] = sb[i])) / {_K}.0 AS est_jaccard,
+       len(list_filter(range(1, {MH_K} + 1), i -> sa[i] = sb[i])) / {MH_K}.0 AS est_jaccard,
        copies_a, copies_b
 FROM pairs
-WHERE len(list_filter(range(1, {_K} + 1), i -> sa[i] = sb[i])) / {_K}.0 >= {_EST_THRESHOLD}
+WHERE len(list_filter(range(1, {MH_K} + 1), i -> sa[i] = sb[i])) / {MH_K}.0 >= {MH_EST_THRESHOLD}
 """,
 )
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -206,10 +136,10 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         bands.groupBy("band_key")
         .agg(members.alias("members"))
-        # skew guard: degenerate stop-band buckets (> _BUCKET_CAP) drop
-        # whole — see the cap's definition above for the policy + where
-        # the drop is surfaced (band_skew_profile, scale_smoke)
-        .filter(F.size("members").between(2, _BUCKET_CAP))
+        # skew guard: degenerate stop-band buckets (> MH_BUCKET_CAP) drop
+        # whole — see MH_BUCKET_CAP (operators/lsh.py) for the policy +
+        # where the drop is surfaced (band_skew_profile, scale_smoke)
+        .filter(F.size("members").between(2, MH_BUCKET_CAP))
         .select(F.explode(pair_expr).alias("p"))
         .select("p.doc_a", "p.doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
@@ -231,7 +161,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= _EST_THRESHOLD)
+        .filter(F.col("est_jaccard") >= MH_EST_THRESHOLD)
         .select("doc_a", "doc_b", "est_jaccard", "copies_a", "copies_b")
     )
 
@@ -243,23 +173,23 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH canon AS (
   SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text
 ), t AS (
-  SELECT doc_id, {_TOKS_D} AS toks FROM canon
+  SELECT doc_id, {WS_TOKS_D} AS toks FROM canon
 ), sh AS (
   SELECT doc_id,
          list_distinct(list_transform(range(1, len(toks) - 1),
              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
   FROM t WHERE len(toks) >= 3
 ), hs AS (
-  SELECT doc_id, list_transform(shingles, s -> {_H32_D.format(x='s')}) AS hashes
+  SELECT doc_id, list_transform(shingles, s -> {H32_D.format(x='s')}) AS hashes
   FROM sh
 ), sig AS (
   SELECT doc_id,
-         list_transform(range(0, {_K}),
-             k -> list_min(list_transform(hashes, h -> (h * (2*k + 1) + (12345 + k)) % {_P}))) AS sig
+         list_transform(range(0, {MH_K}),
+             k -> list_min(list_transform(hashes, h -> (h * (2*k + 1) + (12345 + k)) % {MH_P}))) AS sig
   FROM hs
 ), bands AS (
   SELECT doc_id,
-         unnest(list_transform(range(0, {_BANDS}),
+         unnest(list_transform(range(0, {MH_BANDS}),
              j -> concat_ws(',', j, sig[4*j+1], sig[4*j+2], sig[4*j+3], sig[4*j+4]))) AS band_key
   FROM sig
 ), bsz AS (
@@ -268,10 +198,10 @@ WITH canon AS (
 SELECT count(*) AS n_buckets,
        CAST(sum(CASE WHEN n >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_multi_buckets,
        max(n) AS max_bucket,
-       CAST(sum(CASE WHEN n > {_BUCKET_CAP} THEN 1 ELSE 0 END) AS BIGINT) AS n_over_cap,
-       CAST(sum(CASE WHEN n BETWEEN 2 AND {_BUCKET_CAP} THEN n * (n - 1) // 2 ELSE 0 END)
+       CAST(sum(CASE WHEN n > {MH_BUCKET_CAP} THEN 1 ELSE 0 END) AS BIGINT) AS n_over_cap,
+       CAST(sum(CASE WHEN n BETWEEN 2 AND {MH_BUCKET_CAP} THEN n * (n - 1) // 2 ELSE 0 END)
             AS BIGINT) AS candidates_kept,
-       CAST(sum(CASE WHEN n > {_BUCKET_CAP} THEN n * (n - 1) // 2 ELSE 0 END)
+       CAST(sum(CASE WHEN n > {MH_BUCKET_CAP} THEN n * (n - 1) // 2 ELSE 0 END)
             AS BIGINT) AS candidates_dropped
 FROM bsz
 """,
@@ -281,7 +211,7 @@ def band_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     'no silent truncation'): bucket-size statistics of the MinHash LSH
     band index on THIS corpus — total buckets, multi-member buckets, the
     max bucket, and exactly how many buckets / candidate pairs the
-    _BUCKET_CAP guard drops. An operator that caps must publish what it
+    MH_BUCKET_CAP guard drops. An operator that caps must publish what it
     capped; run this alongside minhash_lsh_pairs whenever dedup recall
     matters (candidates_dropped == 0 means the guard was a no-op).
 
@@ -298,13 +228,13 @@ def band_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     canon = d.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     bands = minhash_bands_df(minhash_signatures_df(canon.select("doc_id", "text")))
     bsz = bands.groupBy("band_key").agg(F.count("*").alias("n"))
-    kept_pairs = F.expr(f"CASE WHEN n BETWEEN 2 AND {_BUCKET_CAP} THEN n * (n - 1) div 2 ELSE 0 END")
-    dropped_pairs = F.expr(f"CASE WHEN n > {_BUCKET_CAP} THEN n * (n - 1) div 2 ELSE 0 END")
+    kept_pairs = F.expr(f"CASE WHEN n BETWEEN 2 AND {MH_BUCKET_CAP} THEN n * (n - 1) div 2 ELSE 0 END")
+    dropped_pairs = F.expr(f"CASE WHEN n > {MH_BUCKET_CAP} THEN n * (n - 1) div 2 ELSE 0 END")
     return bsz.agg(
         F.count("*").alias("n_buckets"),
         F.sum(F.when(F.col("n") >= 2, 1).otherwise(0)).cast("bigint").alias("n_multi_buckets"),
         F.max("n").alias("max_bucket"),
-        F.sum(F.when(F.col("n") > _BUCKET_CAP, 1).otherwise(0)).cast("bigint").alias("n_over_cap"),
+        F.sum(F.when(F.col("n") > MH_BUCKET_CAP, 1).otherwise(0)).cast("bigint").alias("n_over_cap"),
         F.sum(kept_pairs).cast("bigint").alias("candidates_kept"),
         F.sum(dropped_pairs).cast("bigint").alias("candidates_dropped"),
     )
@@ -314,10 +244,10 @@ def band_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "simhash_signatures",
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, lang, {_TOKS_D} AS toks FROM documents
+  SELECT doc_id, lang, {WS_TOKS_D} AS toks FROM documents
 ), hs AS (
   SELECT doc_id, lang,
-         list_transform(toks, s -> {_H32_D.format(x='s')}) AS hashes
+         list_transform(toks, s -> {H32_D.format(x='s')}) AS hashes
   FROM t
 )
 SELECT doc_id, lang,
@@ -343,12 +273,12 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         "lang",
-        F.expr(_TOKS_S).alias("toks"),
+        F.expr(WS_TOKS_S).alias("toks"),
     ).select(
         "doc_id",
         "lang",
         F.expr(
-            f"aggregate(transform(toks, s -> {_H32_S.format(x='s')}),"
+            f"aggregate(transform(toks, s -> {H32_S.format(x='s')}),"
             " array_repeat(cast(0 as bigint), 32),"
             " (acc, h) -> zip_with(acc, sequence(0, 31),"
             "   (c, i) -> c + IF((shiftright(h, i) & 1) = 1, 1, -1)),"
@@ -363,7 +293,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ngram_jaccard_pairs",
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, list_distinct({_TOKS_D}) AS toks FROM documents
+  SELECT doc_id, list_distinct({WS_TOKS_D}) AS toks FROM documents
 )
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        len(list_intersect(a.toks, b.toks)) AS n_common,
@@ -379,7 +309,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     full dedup flow this verifier runs on minhash_lsh_pairs candidates,
     keeping it O(candidates), never O(n²)."""
     d = load(spark, sf_dir, "documents")
-    t = d.select("doc_id", F.expr(f"array_distinct({_TOKS_S})").alias("toks"))
+    t = d.select("doc_id", F.expr(f"array_distinct({WS_TOKS_S})").alias("toks"))
     a = t.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
     b = t.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
     return (
@@ -412,7 +342,7 @@ def _marker_sql(lang: str) -> str:
     "lang_id_heuristic",
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, lang, {_TOKS_D} AS toks FROM documents
+  SELECT doc_id, lang, {WS_TOKS_D} AS toks FROM documents
 ), c AS (
   SELECT doc_id, lang,
          {_marker_sql('en')} AS c_en,
@@ -438,7 +368,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram/marker scoring entirely in JVM array expressions — is what a
     real fastText-style scorer would replace.)"""
     d = load(spark, sf_dir, "documents")
-    t = d.select("doc_id", "lang", F.expr(_TOKS_S).alias("toks"))
+    t = d.select("doc_id", "lang", F.expr(WS_TOKS_S).alias("toks"))
     def _count(ws: tuple) -> "F.Column":
         return F.size(F.filter(F.col("toks"), lambda x: x.isin(*list(ws))))
 
@@ -470,33 +400,6 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _h32_py(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-
-_N_PLANES, _DIM = 8, 64
-# Deterministic pseudo-random hyperplanes derived from md5 — identical
-# constants are embedded as literals in BOTH the Spark plan and the oracle.
-_PLANES = [
-    [(_h32_py(f"{p}_{j}") % 2001 - 1000) / 1000.0 for j in range(_DIM)]
-    for p in range(_N_PLANES)
-]
-
-
-# Explicit 64-term multiply-add per plane: DuckDB evaluates this as flat
-# vectorized scalar arithmetic. The previous list_transform(range, j ->
-# emb[j] * literal_list[j]) form re-materialized the 64-literal plane
-# list per element and ran ~29x slower (4.05 s -> 0.14 s for the bucket
-# stage at sf0.01), pushing every composed eval oracle over the 5 s
-# check_oracles budget (VERDICT r08 #4).
-_BUCKET_D = " + ".join(
-    "(CASE WHEN ("
-    + " + ".join(f"emb[{j + 1}] * ({_PLANES[p][j]!r})" for j in range(_DIM))
-    + f") > 0 THEN {1 << p} ELSE 0 END)"
-    for p in range(_N_PLANES)
-)
-
-
 @query(
     "embedding_lsh_ann",
     oracle=f"""
@@ -505,11 +408,11 @@ WITH v AS (
          sqrt(list_aggregate(list_transform(embedding::DOUBLE[], x -> x * x), 'sum')) AS nrm
   FROM embeddings
 ), bv AS (
-  SELECT vec_id, emb, nrm, ({_BUCKET_D}) AS bucket FROM v
+  SELECT vec_id, emb, nrm, ({bucket_sql(ANN_PLANES)}) AS bucket FROM v
 ), q AS (SELECT * FROM bv WHERE vec_id < 10),
 cand AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.bucket,
-         list_aggregate(list_transform(range(1, {_DIM} + 1),
+         list_aggregate(list_transform(range(1, {EMBED_DIM} + 1),
              i -> q.emb[i] * c.emb[i]), 'sum') / (q.nrm * c.nrm) AS sim
   FROM q JOIN bv c ON q.bucket = c.bucket AND c.vec_id != q.vec_id
 )
@@ -534,15 +437,7 @@ def embedding_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
     sq = F.aggregate(F.transform("emb", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    bucket = None
-    for p in range(_N_PLANES):
-        plane = F.array(*[F.lit(x) for x in _PLANES[p]])
-        dot = F.aggregate(
-            F.zip_with("emb", plane, lambda a, b: a * b), F.lit(0.0), lambda a, x: a + x
-        )
-        term = F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = term if bucket is None else bucket + term
-    bv = e.withColumn("nrm", F.sqrt(sq)).withColumn("bucket", bucket)
+    bv = e.withColumn("nrm", F.sqrt(sq)).withColumn("bucket", bucket_col(ANN_PLANES))
 
     q = bv.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),

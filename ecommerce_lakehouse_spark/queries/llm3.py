@@ -10,20 +10,18 @@ fully value-checkable.
 
 from __future__ import annotations
 
-import hashlib
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ecommerce_lakehouse_spark.operators.lsh import (
+    EMBED_DIM,
+    bucket_col,
+    bucket_sql,
+    hyperplanes,
+)
+from ecommerce_lakehouse_spark.operators.text import H32_S, WS_TOKS_S
 from ecommerce_lakehouse_spark.queries import TINY_STAGE_CONFS, query
 from ecommerce_lakehouse_spark.tables import load
-
-_DIM = 64
-
-
-def _h32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
 
 # ---------------------------------------------------------------------------
 # embedding-cosine near-duplicate pairs via banded hyperplane LSH
@@ -35,34 +33,21 @@ def _h32(s: str) -> int:
 # tune bands/planes for recall vs candidate volume at scale.
 _CD_BANDS, _CD_PLANES = 4, 3
 _CD_THRESHOLD = 0.4
-# Skew guard — same policy as minhash's _BUCKET_CAP (queries/llm2.py):
+# Skew guard — same policy as minhash's MH_BUCKET_CAP (operators/lsh.py):
 # a hyperplane bucket holding more vectors than this is degenerate (e.g.
 # a near-zero-vector cluster landing on every plane's boundary side);
 # expansion is dropped whole, mirrored in the oracle, surfaced by
 # band_skew_profile + scale_smoke.
 _CD_BUCKET_CAP = 512
-_PLANES_CD = [
-    [(_h32(f"cd{p}_{j}") % 2001 - 1000) / 1000.0 for j in range(_DIM)]
-    for p in range(_CD_BANDS * _CD_PLANES)
-]
+_PLANES_CD = hyperplanes("cd", _CD_BANDS * _CD_PLANES)
 
 
-def _band_bucket_sql(b: int) -> str:
-    # Explicit multiply-add sums (see llm2._BUCKET_D): flat scalar
-    # arithmetic instead of per-element literal-list materialization.
-    return " + ".join(
-        "(CASE WHEN ("
-        + " + ".join(
-            f"emb[{j + 1}] * ({_PLANES_CD[_CD_PLANES * b + i][j]!r})"
-            for j in range(_DIM)
-        )
-        + f") > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(_CD_PLANES)
-    )
+def _band_planes(b: int) -> list[list[float]]:
+    return _PLANES_CD[_CD_PLANES * b : _CD_PLANES * (b + 1)]
 
 
 _CD_BANDS_SQL = " UNION ALL ".join(
-    f"SELECT vec_id, emb, nrm, {b} AS band, ({_band_bucket_sql(b)}) AS bucket FROM v"
+    f"SELECT vec_id, emb, nrm, {b} AS band, ({bucket_sql(_band_planes(b))}) AS bucket FROM v"
     for b in range(_CD_BANDS)
 )
 
@@ -88,7 +73,7 @@ WITH v AS (
 )
 SELECT vec_a, vec_b, round(cos, 5) AS cosine_sim
 FROM (SELECT vec_a, vec_b,
-             list_aggregate(list_transform(range(1, {_DIM} + 1),
+             list_aggregate(list_transform(range(1, {EMBED_DIM} + 1),
                  i -> ea[i] * eb[i]), 'sum') / (na * nb) AS cos
       FROM pairs)
 WHERE cos >= {_CD_THRESHOLD}
@@ -202,24 +187,16 @@ def _cosine_pair_search(
     bucket is over the cap must not emit its within-group pairs either).
     """
 
-    def band_bucket(b: int):
-        bucket = None
-        for i in range(_CD_PLANES):
-            plane = F.array(*[F.lit(x) for x in _PLANES_CD[_CD_PLANES * b + i]])
-            dot = F.aggregate(
-                F.zip_with("emb", plane, lambda a, x: a * x), F.lit(0.0), lambda a, x: a + x
-            )
-            term = F.when(dot > 0, F.lit(1 << i)).otherwise(F.lit(0))
-            bucket = term if bucket is None else bucket + term
-        return bucket
-
     # All band buckets in ONE projection + explode (not a per-band union,
     # which would scan the embeddings table once per band at 100 TB). Only
     # the slim (vec_id, band, bucket) triple flows into the explode; the
     # vectors rejoin after candidate generation.
     band_structs = F.array(
         *[
-            F.struct(F.lit(b).cast("int").alias("band"), band_bucket(b).alias("bucket"))
+            F.struct(
+                F.lit(b).cast("int").alias("band"),
+                bucket_col(_band_planes(b)).alias("bucket"),
+            )
             for b in range(_CD_BANDS)
         ]
     )
@@ -301,7 +278,7 @@ WITH canon AS (
 ), confirmed AS (
   SELECT vec_a, vec_b, round(cos, 5) AS cosine_sim
   FROM (SELECT vec_a, vec_b,
-               list_aggregate(list_transform(range(1, {_DIM} + 1),
+               list_aggregate(list_transform(range(1, {EMBED_DIM} + 1),
                    i -> ea[i] * eb[i]), 'sum') / (na * nb) AS cos
         FROM pairs)
   WHERE cos >= {_CD_THRESHOLD}
@@ -373,7 +350,7 @@ WITH v AS (
   SELECT vec_id AS cid, emb AS cemb, nrm AS cnrm FROM v WHERE vec_id < {_IVF_K}
 ), scored AS (
   SELECT v.vec_id, v.emb, v.nrm, c.cid,
-         list_aggregate(list_transform(range(1, {_DIM} + 1),
+         list_aggregate(list_transform(range(1, {EMBED_DIM} + 1),
              i -> v.emb[i] * c.cemb[i]), 'sum') / (v.nrm * c.cnrm) AS ccos
   FROM v CROSS JOIN cent c
 ), asg AS (
@@ -384,7 +361,7 @@ WITH v AS (
 ), q AS (SELECT * FROM asg WHERE vec_id < 10),
 cand AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-         list_aggregate(list_transform(range(1, {_DIM} + 1),
+         list_aggregate(list_transform(range(1, {EMBED_DIM} + 1),
              i -> q.emb[i] * c.emb[i]), 'sum') / (q.nrm * c.nrm) AS sim
   FROM q JOIN asg c ON q.cell = c.cell AND c.vec_id != q.vec_id
 )
@@ -612,7 +589,6 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin uses slice(hashes, i, w). Both emit windows of exactly w.
     """
     d = load(spark, sf_dir, "documents")
-    h32 = "cast(conv(substr(md5({x}),1,8),16,10) as bigint)"
     gram = "concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4])"
     # Two materialization barriers (localCheckpoint), NOT withColumn:
     # Catalyst neither stops projection collapse at a named column nor
@@ -625,14 +601,14 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size(toks) >= GRAM+W-1 ⟺ at least one full winnow window exists
     # (equals the oracle's two-stage length guards).
     toks_df = (
-        d.select("doc_id", F.expr(r"split(trim(text), '\\s+')").alias("toks"))
+        d.select("doc_id", F.expr(WS_TOKS_S).alias("toks"))
         .filter(F.size("toks") >= _WIN_GRAM + _WIN_W - 1)
         .localCheckpoint()
     )
     hashed = toks_df.select(
         "doc_id",
         F.expr(
-            f"transform(sequence(0, size(toks) - {_WIN_GRAM}), i -> {h32.format(x=gram)})"
+            f"transform(sequence(0, size(toks) - {_WIN_GRAM}), i -> {H32_S.format(x=gram)})"
         ).alias("hashes"),
     ).localCheckpoint()
     fps = F.expr(

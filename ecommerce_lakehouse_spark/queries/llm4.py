@@ -11,14 +11,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ecommerce_lakehouse_spark.operators.text import EMAIL, IPV4, PHONE
 from ecommerce_lakehouse_spark.queries import query
 from ecommerce_lakehouse_spark.tables import load
-
-# PII patterns chosen to behave identically under Java regex and RE2
-# (DuckDB): no lookaround, no backrefs.
-_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_PHONE = r"\b\d{3}[-. ]\d{3}[-. ]\d{4}\b"
-_IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 
 
 @query(
@@ -89,15 +84,15 @@ def repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT source,
        count(*) AS n_docs,
-       CAST(sum(CASE WHEN len(regexp_extract_all(text, '{_EMAIL}')) > 0
+       CAST(sum(CASE WHEN len(regexp_extract_all(text, '{EMAIL}')) > 0
                 THEN 1 ELSE 0 END) AS BIGINT) AS docs_with_email,
-       CAST(sum(len(regexp_extract_all(text, '{_EMAIL}'))) AS BIGINT) AS total_emails,
-       CAST(sum(CASE WHEN len(regexp_extract_all(text, '{_PHONE}')) > 0
+       CAST(sum(len(regexp_extract_all(text, '{EMAIL}'))) AS BIGINT) AS total_emails,
+       CAST(sum(CASE WHEN len(regexp_extract_all(text, '{PHONE}')) > 0
                 THEN 1 ELSE 0 END) AS BIGINT) AS docs_with_phone,
-       CAST(sum(len(regexp_extract_all(text, '{_PHONE}'))) AS BIGINT) AS total_phones,
-       CAST(sum(CASE WHEN len(regexp_extract_all(text, '{_IPV4}')) > 0
+       CAST(sum(len(regexp_extract_all(text, '{PHONE}'))) AS BIGINT) AS total_phones,
+       CAST(sum(CASE WHEN len(regexp_extract_all(text, '{IPV4}')) > 0
                 THEN 1 ELSE 0 END) AS BIGINT) AS docs_with_ipv4,
-       CAST(sum(len(regexp_extract_all(text, '{_IPV4}'))) AS BIGINT) AS total_ipv4
+       CAST(sum(len(regexp_extract_all(text, '{IPV4}'))) AS BIGINT) AS total_ipv4
 FROM documents
 GROUP BY 1
 """,
@@ -125,9 +120,9 @@ def pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        *agg_pair(_EMAIL, "email"),
-        *agg_pair(_PHONE, "phone"),
-        *agg_pair(_IPV4, "ipv4"),
+        *agg_pair(EMAIL, "email"),
+        *agg_pair(PHONE, "phone"),
+        *agg_pair(IPV4, "ipv4"),
     )
 
 

@@ -15,14 +15,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ecommerce_lakehouse_spark.operators.text import ALPHA_TOKS_D
 from ecommerce_lakehouse_spark.queries import query
 from ecommerce_lakehouse_spark.tables import load
-
-# one tokenization, shared by query and oracle: lowercase, alpha runs only
-_TOKENIZE_SQL = (
-    "list_filter(string_split(regexp_replace(lower(text), '[^a-z]+', ' ', 'g')"
-    ", ' '), x -> x <> '')"
-)
 
 
 def _tokens(d: DataFrame) -> DataFrame:
@@ -38,7 +33,7 @@ def _tokens(d: DataFrame) -> DataFrame:
 @query(
     "trigram_backoff_scores",
     oracle=f"""
-WITH d AS (SELECT doc_id, {_TOKENIZE_SQL} AS t FROM documents),
+WITH d AS (SELECT doc_id, {ALPHA_TOKS_D} AS t FROM documents),
 tr AS (SELECT * FROM d
        WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80),
 n AS (SELECT CAST(sum(len(t)) AS BIGINT) AS n_tok FROM tr),
@@ -314,7 +309,7 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DSIR hashed-ngram model, shared by the scoring and resampling queries:
 # per-doc bucket counts + the 256-row smoothed log-ratio table
 _DSIR_CTE = f"""
-WITH d AS (SELECT doc_id, lang, {_TOKENIZE_SQL} AS t FROM documents),
+WITH d AS (SELECT doc_id, lang, {ALPHA_TOKS_D} AS t FROM documents),
 grams AS (
   SELECT doc_id, lang, unnest(t) AS g FROM d
   UNION ALL
@@ -463,7 +458,7 @@ def _bpe_train_sql(steps: int = _BPE_STEPS) -> str:
     parts = [
         f"""WITH w0 AS (
   SELECT u AS word, CAST(count(*) AS BIGINT) AS freq
-  FROM (SELECT unnest({_TOKENIZE_SQL}) AS u FROM documents) GROUP BY 1),
+  FROM (SELECT unnest({ALPHA_TOKS_D}) AS u FROM documents) GROUP BY 1),
 s0 AS MATERIALIZED (SELECT word, freq,
               ' ' || array_to_string(regexp_extract_all(word, '.'), ' ') || ' ' AS seq
        FROM w0)"""
@@ -563,7 +558,7 @@ def bpe_train_to_table(
     + f""",
 dw AS (
   SELECT doc_id, u AS word
-  FROM (SELECT doc_id, unnest({_TOKENIZE_SQL}) AS u FROM documents)),
+  FROM (SELECT doc_id, unnest({ALPHA_TOKS_D}) AS u FROM documents)),
 wt AS (
   SELECT word,
          CAST(len(list_filter(string_split(seq, ' '), x -> x <> ''))

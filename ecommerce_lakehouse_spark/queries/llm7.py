@@ -19,6 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ecommerce_lakehouse_spark.operators.scale import iter_barrier, narrow_barrier
+from ecommerce_lakehouse_spark.operators.text import ALPHA_TOKS_D, ALPHA_TOKS_S, WS_TOKS_D
 from ecommerce_lakehouse_spark.queries import TINY_STAGE_CONFS, query
 from ecommerce_lakehouse_spark.tables import load
 
@@ -47,14 +48,6 @@ _BM25_SCORE_N = (
     "ELSE CAST(0 AS BIGINT) END"
 )
 
-_ALPHA_TOKS_D = (
-    "list_filter(string_split(regexp_replace(lower(text), '[^a-z]+', ' ', 'g')"
-    ", ' '), x -> x <> '')"
-)
-_ALPHA_TOKS_S = (
-    "filter(split(regexp_replace(lower(text), '[^a-z]+', ' '), ' '), x -> x != '')"
-)
-
 
 def _bm25_oracle() -> str:
     tf_cols = ",\n         ".join(
@@ -78,7 +71,7 @@ def _bm25_oracle() -> str:
 WITH w AS (
   SELECT doc_id, len(t) AS dl,
          {tf_cols}
-  FROM (SELECT doc_id, {_ALPHA_TOKS_D} AS t FROM documents)),
+  FROM (SELECT doc_id, {ALPHA_TOKS_D} AS t FROM documents)),
 st AS (
   SELECT CAST(count(*) AS BIGINT) AS n_docs,
          CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl,
@@ -126,7 +119,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered — the same plan at 100 TB, with df/avgdl maintainable
     incrementally as corpus metadata."""
     d = load(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.expr(_ALPHA_TOKS_S).alias("t"))
+    toks = d.select("doc_id", F.expr(ALPHA_TOKS_S).alias("t"))
     w = toks.select(
         "doc_id",
         F.size("t").alias("dl"),
@@ -291,16 +284,13 @@ def hll_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from ecommerce_lakehouse_spark.queries import ORACLES as _ORACLES  # noqa: E402
-from ecommerce_lakehouse_spark.queries.llm2 import (  # noqa: E402
-    _TOKS_D,
-    minhash_lsh_pairs as _lsh_pairs,
-)
+from ecommerce_lakehouse_spark.queries.llm2 import minhash_lsh_pairs as _lsh_pairs  # noqa: E402
 
 _SIM_TAU = 0.5  # Jaccard threshold; prefix math below is specialized to 1/2
 
 _SIM_ORACLE = f"""
 WITH canon AS (SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text),
-t AS (SELECT doc_id, {_TOKS_D} AS toks FROM canon),
+t AS (SELECT doc_id, {WS_TOKS_D} AS toks FROM canon),
 sh AS (SELECT doc_id,
               list_distinct(list_transform(range(1, len(toks) - 1),
                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles

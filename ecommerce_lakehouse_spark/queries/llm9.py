@@ -47,11 +47,16 @@ from ecommerce_lakehouse_spark.operators.kmeans import (
     collect_seed_vectors,
     lloyd_rounds,
 )
+from ecommerce_lakehouse_spark.operators.lsh import (
+    ANN_PLANES,
+    EMBED_DIM,
+    bucket_col,
+    bucket_sql,
+)
 from ecommerce_lakehouse_spark.operators.scale import iter_barrier
 from ecommerce_lakehouse_spark.queries import TINY_STAGE_CONFS, query
 from ecommerce_lakehouse_spark.tables import load
 
-_DIM = 64
 _SD_K = 16  # cluster count: literal shared with the oracle. At warehouse
 # scale set K ~ N / target_cluster_size (SemDeDup uses 11k clusters for
 # LAION-440M); the plan shape is K-independent.
@@ -59,14 +64,14 @@ _SD_ROUNDS = 4  # fixed Lloyd budget, matching the oracle's unrolled CTEs
 _SD_TAU = 0.30  # cosine threshold for "semantic duplicate"
 _SD_CAP = 2048  # skew guard: clusters larger than this (canonical
 # vectors) skip pair expansion, loudly (cluster_capped=true) — the
-# _BUCKET_CAP policy of queries/llm2.py applied to clusters.
+# MH_BUCKET_CAP policy of operators/lsh.py applied to clusters.
 
 _U_SQL = "list_transform(e, x -> CAST(round((x + 1.0) * 1000000) AS BIGINT))"
 
 _SD_DIST = (
     "list_aggregate(list_transform(range(1, {dim} + 1),"
     " i -> (v.u[i] - c.c[i]) * (v.u[i] - c.c[i])), 'sum')"
-).format(dim=_DIM)
+).format(dim=EMBED_DIM)
 
 
 def _sd_assign_sql(prev_c: str, name: str) -> str:
@@ -115,7 +120,7 @@ WITH g AS MATERIALIZED (
          sqrt(list_aggregate(list_transform(e, x -> x * x), 'sum')) AS nrm,
          {_U_SQL} AS u
   FROM g
-), dims AS (SELECT unnest(range(1, {_DIM} + 1)) AS i),
+), dims AS (SELECT unnest(range(1, {EMBED_DIM} + 1)) AS i),
 c0 AS MATERIALIZED (
   SELECT CAST(rn - 1 AS INT) AS cid, u AS c FROM (
     SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
@@ -138,7 +143,7 @@ jx AS MATERIALIZED (
   FROM jx x
   JOIN jx y ON x.cid = y.cid AND x.vec_id <> y.vec_id
   JOIN sz s ON x.cid = s.cid AND s.csize <= {_SD_CAP}
-  WHERE list_aggregate(list_transform(range(1, {_DIM} + 1),
+  WHERE list_aggregate(list_transform(range(1, {EMBED_DIM} + 1),
             i -> x.e[i] * y.e[i]), 'sum') / (x.nrm * y.nrm) >= {_SD_TAU}
   GROUP BY x.vec_id
 ), ex AS (
@@ -196,7 +201,7 @@ def semantic_cluster_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(iter_barrier)
 
     # Lloyd loop via operators/kmeans.py: centroid state is
-    # control-plane-sized BY DEFINITION (K*(_DIM+1) bigints, a few KB),
+    # control-plane-sized BY DEFINITION (K*(EMBED_DIM+1) bigints, a few KB),
     # so init + rounds run as the BPE literal-replace pattern — one
     # aggregate-collect job per round, centroids re-entering as
     # literals — instead of the former per-round broadcast crossJoin +
@@ -209,7 +214,7 @@ def semantic_cluster_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cid, u in enumerate(collect_seed_vectors(v, "vec_id", "u", _SD_K))
     }
     cent = lloyd_rounds(
-        v.select("vec_id", "u"), "u", cent, _SD_ROUNDS, _DIM
+        v.select("vec_id", "u"), "u", cent, _SD_ROUNDS, EMBED_DIM
     )
     af = assign_nearest(v.select("vec_id", "u"), "u", cent).select(
         "vec_id", "cid", "dist"
@@ -530,8 +535,6 @@ _NDCG_IDCG = "29.9661092489406"
 
 
 def _ndcg_oracle() -> str:
-    from ecommerce_lakehouse_spark.queries.llm2 import _BUCKET_D, _DIM
-
     disc_list = "[" + ", ".join(_NDCG_DISC) + "]"
     return f"""
 WITH v AS (
@@ -539,14 +542,14 @@ WITH v AS (
          sqrt(list_aggregate(list_transform(embedding::DOUBLE[], x -> x * x),
               'sum')) AS nrm
   FROM embeddings),
-bv AS (SELECT vec_id, emb, nrm, ({_BUCKET_D}) AS bucket FROM v),
+bv AS (SELECT vec_id, emb, nrm, ({bucket_sql(ANN_PLANES)}) AS bucket FROM v),
 q AS (SELECT * FROM bv WHERE vec_id < 10),
 exact AS (
   SELECT query_id, neighbor_id, 11 - rn AS g FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
            row_number() OVER (
              PARTITION BY q.vec_id
-             ORDER BY list_aggregate(list_transform(range(1, {_DIM} + 1),
+             ORDER BY list_aggregate(list_transform(range(1, {EMBED_DIM} + 1),
                         i -> q.emb[i] * c.emb[i]), 'sum') / (q.nrm * c.nrm)
                DESC, c.vec_id ASC) AS rn
     FROM q, v c WHERE c.vec_id != q.vec_id)
@@ -556,7 +559,7 @@ sys AS (
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
            row_number() OVER (
              PARTITION BY q.vec_id
-             ORDER BY list_aggregate(list_transform(range(1, {_DIM} + 1),
+             ORDER BY list_aggregate(list_transform(range(1, {EMBED_DIM} + 1),
                         i -> q.emb[i] * c.emb[i]), 'sum') / (q.nrm * c.nrm)
                DESC, c.vec_id ASC) AS rn
     FROM q JOIN bv c ON q.bucket = c.bucket AND c.vec_id != q.vec_id)
@@ -608,25 +611,13 @@ def ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: inherits the LSH shape — queries broadcast, candidates only
     within the bucket; the exact side is the knn broadcast pass; the
     NDCG arithmetic touches queries × 10 rows."""
-    from ecommerce_lakehouse_spark.queries.llm2 import _N_PLANES, _PLANES
-
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
     sq = F.aggregate(
         F.transform("emb", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
     )
-    bucket = None
-    for p in range(_N_PLANES):
-        plane = F.array(*[F.lit(x) for x in _PLANES[p]])
-        dot = F.aggregate(
-            F.zip_with("emb", plane, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        term = F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = term if bucket is None else bucket + term
-    bv = e.withColumn("nrm", F.sqrt(sq)).withColumn("bucket", bucket)
+    bv = e.withColumn("nrm", F.sqrt(sq)).withColumn("bucket", bucket_col(ANN_PLANES))
     q = bv.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("q_emb"),
@@ -700,10 +691,8 @@ def ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _multiprobe_oracle() -> str:
-    from ecommerce_lakehouse_spark.queries.llm2 import _BUCKET_D, _DIM, _N_PLANES
-
     probes_multi = ", ".join(
-        ["q.bucket"] + [f"xor(q.bucket, {1 << p})" for p in range(_N_PLANES)]
+        ["q.bucket"] + [f"xor(q.bucket, {1 << p})" for p in range(len(ANN_PLANES))]
     )
     return f"""
 WITH knn AS ({_ORACLES['embedding_knn_bruteforce']}),
@@ -712,7 +701,7 @@ v AS (
          sqrt(list_aggregate(list_transform(embedding::DOUBLE[], x -> x * x),
               'sum')) AS nrm
   FROM embeddings),
-bv AS (SELECT vec_id, emb, nrm, ({_BUCKET_D}) AS bucket FROM v),
+bv AS (SELECT vec_id, emb, nrm, ({bucket_sql(ANN_PLANES)}) AS bucket FROM v),
 q AS (SELECT * FROM bv WHERE vec_id < 10),
 probes AS (
   SELECT q.vec_id AS query_id, q.emb AS q_emb, q.nrm AS q_nrm,
@@ -723,7 +712,7 @@ probes AS (
                            ELSE [{probes_multi}] END) AS pb(p)),
 cand AS (
   SELECT pr.mode, pr.query_id, c.vec_id AS neighbor_id,
-         list_aggregate(list_transform(range(1, {_DIM} + 1),
+         list_aggregate(list_transform(range(1, {EMBED_DIM} + 1),
                         i -> pr.q_emb[i] * c.emb[i]), 'sum')
            / (pr.q_nrm * c.nrm) AS sim
   FROM probes pr JOIN bv c
@@ -772,25 +761,13 @@ def lsh_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay bucket-bounded (9/2^planes of the corpus per query); top-5 via
     bounded per-(mode, query) windows; ground truth composes the
     registered knn oracle in both engines."""
-    from ecommerce_lakehouse_spark.queries.llm2 import _N_PLANES, _PLANES
-
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
     sq = F.aggregate(
         F.transform("emb", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
     )
-    bucket = None
-    for p in range(_N_PLANES):
-        plane = F.array(*[F.lit(x) for x in _PLANES[p]])
-        dot = F.aggregate(
-            F.zip_with("emb", plane, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        term = F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = term if bucket is None else bucket + term
-    bv = e.withColumn("nrm", F.sqrt(sq)).withColumn("bucket", bucket)
+    bv = e.withColumn("nrm", F.sqrt(sq)).withColumn("bucket", bucket_col(ANN_PLANES))
     q = bv.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("q_emb"),
@@ -800,7 +777,7 @@ def lsh_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     single = F.array(F.col("q_bucket"))
     multi = F.array(
         F.col("q_bucket"),
-        *[F.expr(f"q_bucket ^ {1 << p}") for p in range(_N_PLANES)],
+        *[F.expr(f"q_bucket ^ {1 << p}") for p in range(len(ANN_PLANES))],
     )
     probes = q.select(
         "query_id",

@@ -55,16 +55,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ecommerce_lakehouse_spark.operators.scale import iter_barrier
+from ecommerce_lakehouse_spark.operators.text import ALPHA_TOKS_D, ALPHA_TOKS_S, H32_S, WS_TOKS_S
 from ecommerce_lakehouse_spark.queries import TINY_STAGE_CONFS, query
-from ecommerce_lakehouse_spark.queries.llm6 import _TOKENIZE_SQL
 from ecommerce_lakehouse_spark.tables import load
 
-# Spark twin of llm6._TOKENIZE_SQL (lowercased [a-z]+ words)
-_TOK_S = (
-    "filter(split(regexp_replace(lower(text), '[^a-z]+', ' '), ' '),"
-    " x -> x <> '')"
-)
 
 # ---------------------------------------------------------------------------
 # PMI bigram collocations
@@ -77,7 +71,7 @@ _PMI_TOP = 20
 @query(
     "pmi_collocations",
     oracle=f"""
-WITH d AS (SELECT {_TOKENIZE_SQL} AS t FROM documents),
+WITH d AS (SELECT {ALPHA_TOKS_D} AS t FROM documents),
 uni AS (
   SELECT u AS w, CAST(count(*) AS BIGINT) AS c
   FROM (SELECT unnest(t) AS u FROM d) GROUP BY 1),
@@ -124,7 +118,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global sort). Nothing is corpus² anywhere.""".format(
         top=_PMI_TOP, mc=_PMI_MIN_COUNT
     )
-    d = load(spark, sf_dir, "documents").select(F.expr(_TOK_S).alias("t"))
+    d = load(spark, sf_dir, "documents").select(F.expr(ALPHA_TOKS_S).alias("t"))
     d = d.localCheckpoint(eager=False)  # unigram + bigram branches
     uni = (
         d.select(F.explode("t").alias("w"))
@@ -235,7 +229,7 @@ def readability_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. No shuffle beyond the fixed-width groupBy."""
     d = load(spark, sf_dir, "documents").select(
         "lang",
-        F.size(F.expr(_TOK_S)).cast("long").alias("w"),
+        F.size(F.expr(ALPHA_TOKS_S)).cast("long").alias("w"),
         F.size(
             F.filter(
                 F.split(F.col("text"), r"[.!?]+"), lambda x: F.trim(x) != ""
@@ -275,7 +269,7 @@ def readability_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SH_MAXDIST = 3  # Hamming radius; 4 bands of 8 bits => pigeonhole-complete
 _SH_BANDS = 4
-_SH_CAP = 512  # stop-band skew cap (llm2._BUCKET_CAP policy)
+_SH_CAP = 512  # stop-band skew cap (the MH_BUCKET_CAP policy)
 
 # 32-bit simhash over whitespace tokens — MUST stay in lockstep with
 # llm2.simhash_signatures (same tokens, same md5-derived bit votes)
@@ -348,8 +342,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = canon.select(
         "doc_id",
         F.expr(
-            r"aggregate(transform(split(trim(text), '\\s+'),"
-            " s -> cast(conv(substr(md5(s),1,8),16,10) as bigint)),"
+            f"aggregate(transform({WS_TOKS_S}, s -> {H32_S.format(x='s')}),"
             " array_repeat(cast(0 as bigint), 32),"
             " (acc, h) -> zip_with(acc, sequence(0, 31),"
             "   (c, i) -> c + IF((shiftright(h, i) & 1) = 1, 1, -1)),"
@@ -505,7 +498,7 @@ def kcore_profile_frame(
     (an edge (z, w) is subtracted exactly when w is removed; removed
     slots go NULL), and each round's stats are taken BEFORE its
     removal, exactly like the round-per-job form."""
-    from ecommerce_lakehouse_spark.queries.graph_ml import dense_graph_frame
+    from ecommerce_lakehouse_spark.operators.graph import dense_graph_frame
 
     # shared dense index (r10): degree = size of each neighbor list, so
     # the generic (nodes, adjx) frame carries everything the peel needs.
@@ -737,7 +730,6 @@ def ar2_yule_walker_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         "phi1",
         "phi2",
     )
-
 
 
 # ---------------------------------------------------------------------------
@@ -2102,7 +2094,7 @@ def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vocab_chao1_estimate",
     oracle=f"""
 WITH tok AS (
-  SELECT u AS w FROM (SELECT unnest({_TOKENIZE_SQL}) AS u FROM documents)),
+  SELECT u AS w FROM (SELECT unnest({ALPHA_TOKS_D}) AS u FROM documents)),
 freq AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
 fof AS (
   SELECT CAST(count(*) AS BIGINT) AS vocab_observed,
@@ -2139,7 +2131,7 @@ def vocab_chao1_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-number aggregate over it — strictly cheaper than any query that
     touches the vocabulary at all."""
     tok = load(spark, sf_dir, "documents").select(
-        F.explode(F.expr(_TOK_S)).alias("w")
+        F.explode(F.expr(ALPHA_TOKS_S)).alias("w")
     )
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("c"))
     fof = freq.agg(

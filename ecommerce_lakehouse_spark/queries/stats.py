@@ -18,11 +18,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ecommerce_lakehouse_spark.operators.scale import iter_barrier, narrow_barrier
 from ecommerce_lakehouse_spark.money import dec2, money_sum
 from ecommerce_lakehouse_spark.operators.scale import (
     bucketed_global_row_number,
     fixed_width_bucket,
+    narrow_barrier,
     ntile_from_rank,
 )
 from ecommerce_lakehouse_spark.queries import TINY_STAGE_CONFS, query
@@ -1213,7 +1213,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_ml._support_graph — one shuffle of the slim projection,
     Apriori-pruned weighted expansion inside the row, never a self-join,
     edges barriered once. The 5 SpMV rounds then run as ONE in-row fold
-    over the dense adjacency index (graph_ml.dense_graph_frame — valid
+    over the dense adjacency index (graph.dense_graph_frame — valid
     because the support cut bounds the graph independent of the corpus,
     the kcore/label-propagation argument): with symmetric edges,
     in-neighbors(i) = adjx[i], so round r computes
@@ -1231,7 +1231,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration is a contraction; 5 rounds is the fixed, documented budget
     (rank deltas at round 5 are <1%% of SCALE on this graph), matching
     the oracle exactly rather than iterating to convergence."""
-    from ecommerce_lakehouse_spark.queries.graph_ml import dense_graph_frame
+    from ecommerce_lakehouse_spark.operators.graph import dense_graph_frame
 
     _, adj = _support_graph(spark, sf_dir)
     dense = dense_graph_frame(adj)

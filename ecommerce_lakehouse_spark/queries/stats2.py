@@ -39,6 +39,7 @@ from ecommerce_lakehouse_spark.operators.scale import (
     bucketed_global_row_number,
     ntile_from_rank,
 )
+from ecommerce_lakehouse_spark.operators.timeseries import spike_flags_from_daily
 from ecommerce_lakehouse_spark.queries import query
 from ecommerce_lakehouse_spark.tables import load
 
@@ -2300,43 +2301,3 @@ def daily_revenue_spike_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents")
     )
     return spike_flags_from_daily(daily)
-
-
-def spike_flags_from_daily(daily: DataFrame) -> DataFrame:
-    """Rolling-MAD flags from a (d, cents) daily frame — shared by the
-    batch query above and the streaming twin
-    (streaming/jobs.py::stream_spike_monitor), which folds daily cents
-    additively per micro-batch and recomputes flags from the state."""
-    win = Window.orderBy("d").rowsBetween(-14, -1)
-    w = daily.select(
-        "d", "cents", F.sort_array(F.collect_list("cents").over(win)).alias("base")
-    ).filter(F.size("base") >= 7)
-    med2 = F.expr(
-        "element_at(base, CAST((size(base) + 1) DIV 2 AS INT))"
-        " + element_at(base, CAST(size(base) DIV 2 + 1 AS INT))"
-    )
-    m = w.select(
-        "d",
-        "cents",
-        F.size("base").cast("long").alias("wn"),
-        med2.alias("med2"),
-        F.expr(
-            "array_sort(transform(base, x -> abs(2 * x -"
-            " (element_at(base, CAST((size(base) + 1) DIV 2 AS INT))"
-            "  + element_at(base, CAST(size(base) DIV 2 + 1 AS INT))))))"
-        ).alias("devs"),
-    )
-    mad2 = F.expr(
-        "element_at(devs, CAST((wn + 1) DIV 2 AS INT))"
-        " + element_at(devs, CAST(wn DIV 2 + 1 AS INT))"
-    )
-    return m.select(
-        "d",
-        F.col("wn").alias("window_n"),
-        (F.col("cents").cast("double") / F.lit(100.0)).alias("revenue"),
-        (F.col("med2").cast("double") / F.lit(200.0)).alias("baseline_median"),
-        (mad2.cast("double") / F.lit(400.0)).alias("baseline_mad"),
-        (
-            4 * F.abs(2 * F.col("cents") - F.col("med2")) > 3 * mad2
-        ).alias("is_spike"),
-    )

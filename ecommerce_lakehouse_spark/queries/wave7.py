@@ -48,6 +48,18 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ecommerce_lakehouse_spark.operators.lsh import EMBED_DIM
+from ecommerce_lakehouse_spark.operators.text import ALPHA_TOKS_S
+from ecommerce_lakehouse_spark.operators.timeseries import (
+    HW_ALPHA,
+    HW_BETA,
+    HW_GAMMA,
+    HW_H,
+    PH_LAMBDA_SIGMA,
+    hw_forecast_from_monthly,
+    mixture_shift_summary,
+    ph_summary_from_daily,
+)
 from ecommerce_lakehouse_spark.queries import TINY_STAGE_CONFS, query
 from ecommerce_lakehouse_spark.queries.graph_ml import (
     _COPURCHASE_EDGES,
@@ -445,8 +457,6 @@ aggregate(sequence(2, {lag}), array(element_at(r, 1)),
 # Page-Hinkley sequential drift statistic
 # ---------------------------------------------------------------------------
 
-_PH_LAMBDA_SIGMA = 3.0  # alarm threshold in units of daily-dollar stddev
-
 
 @query(
     "page_hinkley_drift",
@@ -486,13 +496,13 @@ g AS (
              AS n2 FROM d) q
   GROUP BY n2)
 SELECT g.n AS n_days,
-       round(g.sigma_cents * {_PH_LAMBDA_SIGMA} / 100.0, 9)
+       round(g.sigma_cents * {PH_LAMBDA_SIGMA} / 100.0, 9)
          AS lambda_threshold,
        CAST(count(CASE WHEN CAST(e.excess AS DOUBLE)
-                            > g.sigma_cents * {_PH_LAMBDA_SIGMA}
+                            > g.sigma_cents * {PH_LAMBDA_SIGMA}
                        THEN 1 END) AS BIGINT) AS n_alarm_days,
        min(CASE WHEN CAST(e.excess AS DOUBLE)
-                     > g.sigma_cents * {_PH_LAMBDA_SIGMA}
+                     > g.sigma_cents * {PH_LAMBDA_SIGMA}
                 THEN e.day END) AS first_alarm_day,
        round(CAST(max(e.excess) AS DOUBLE) / 100.0, 9) AS max_excess
 FROM e CROSS JOIN g
@@ -525,7 +535,7 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one row per day map-side; three day-ordered windows over the
     date-domain-bounded frame (the sanctioned aggregate-bounded window
-    class); output is ONE row.""".format(L=_PH_LAMBDA_SIGMA)
+    class); output is ONE row.""".format(L=PH_LAMBDA_SIGMA)
     o = load(spark, sf_dir, "orders")
     d = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
@@ -533,78 +543,6 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents")
     )
     return ph_summary_from_daily(d)
-
-
-def ph_summary_from_daily(d: DataFrame) -> DataFrame:
-    """The PH statistic itself over any exact (day, cents) daily frame —
-    factored out so the streaming twin (streaming/jobs.py::
-    stream_page_hinkley) recomputes the identical summary from its
-    folded daily state (the spike_flags_from_daily pattern)."""
-    from pyspark.sql import Window
-
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    srt = d.select(
-        "day",
-        "cents",
-        F.sum("cents").over(w).cast("long").alias("cum_cents"),
-        F.row_number().over(Window.orderBy("day")).cast("long").alias("i"),
-    )
-    t = srt.select(
-        "day",
-        F.expr(
-            "CAST(round(CAST(i * cents - cum_cents AS DOUBLE) / i, 0)"
-            " AS BIGINT)"
-        ).alias("dev_cents"),
-    )
-    c = t.select(
-        "day", F.sum("dev_cents").over(w).cast("long").alias("cum")
-    )
-    e = c.select(
-        "day", "cum", (F.col("cum") - F.min("cum").over(w)).alias("excess")
-    )
-    g = d.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sqrt(
-            (
-                F.count(F.lit(1)).cast("decimal(38,0)")
-                * F.sum(
-                    F.col("cents").cast("decimal(19,0)")
-                    * F.col("cents").cast("decimal(19,0)")
-                )
-                - F.sum(F.col("cents").cast("decimal(19,0)"))
-                * F.sum(F.col("cents").cast("decimal(19,0)"))
-            ).cast("double")
-            / (
-                F.count(F.lit(1)).cast("long")
-                * (F.count(F.lit(1)).cast("long") - 1)
-            )
-        ).alias("sigma_cents"),
-    )
-    lam = F.col("sigma_cents") * F.lit(_PH_LAMBDA_SIGMA)
-    return (
-        e.crossJoin(F.broadcast(g))
-        .groupBy("n", "sigma_cents")
-        .agg(
-            F.sum(
-                F.when(F.col("excess").cast("double") > lam, 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_alarm_days"),
-            F.min(
-                F.when(F.col("excess").cast("double") > lam, F.col("day"))
-            ).alias("first_alarm_day"),
-            F.round(F.max("excess").cast("double") / 100.0, 9).alias(
-                "max_excess"
-            ),
-        )
-        .select(
-            F.col("n").alias("n_days"),
-            F.round(lam / 100.0, 9).alias("lambda_threshold"),
-            "n_alarm_days",
-            "first_alarm_day",
-            "max_excess",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -772,7 +710,6 @@ def propensity_strata_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MMR_K = 10
 _MMR_POOL = 40
 _MMR_LAMBDA = "0.7"
-_MMR_DIM = 64
 
 _MMR_DOT_SQL = (
     "list_aggregate(list_transform(range(1, {d} + 1),"
@@ -782,7 +719,7 @@ _MMR_DOT_SQL = (
 
 def _mmr_oracle() -> str:
     lam = _MMR_LAMBDA
-    d = _MMR_DIM
+    d = EMBED_DIM
     dot_qc = _MMR_DOT_SQL.format(d=d, a="q.emb", b="c.emb")
     return f"""
 WITH v AS (
@@ -951,7 +888,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embedding anisotropy: top eigenpair by power iteration
 # ---------------------------------------------------------------------------
 
-_PCA_DIM = 64
 _PCA_SCALE = 1048576  # 2^20 fixed-point quantization (the llm9 idiom)
 _PCA_ROUNDS = 16  # power-iteration budget: the OUTPUT is defined as the
 # 16-round iterate (deterministic in both engines regardless of spectral
@@ -983,8 +919,8 @@ WITH q AS (
   FROM embeddings),
 terms AS (
   SELECT u.i, u.j, u.p
-  FROM (SELECT unnest(flatten(list_transform(range(1, {_PCA_DIM} + 1),
-          i -> list_transform(range(i, {_PCA_DIM} + 1),
+  FROM (SELECT unnest(flatten(list_transform(range(1, {EMBED_DIM} + 1),
+          i -> list_transform(range(i, {EMBED_DIM} + 1),
             j -> {{'i': i, 'j': j, 'p': qv[i] * qv[j]}})))) AS u
         FROM q), LATERAL (SELECT u.i AS i, u.j AS j, u.p AS p) z),
 sums AS (
@@ -993,10 +929,10 @@ sums AS (
   FROM terms GROUP BY 1, 2),
 means AS (
   SELECT i, CAST(sum(CASE WHEN u.k = i THEN u.q END) AS HUGEINT) AS m
-  FROM (SELECT unnest(list_transform(range(1, {_PCA_DIM} + 1),
+  FROM (SELECT unnest(list_transform(range(1, {EMBED_DIM} + 1),
                  k -> {{'k': k, 'q': qv[k]}})) AS u FROM q),
        LATERAL (SELECT u.k AS k, u.q AS q) z,
-       (SELECT unnest(range(1, {_PCA_DIM} + 1)) AS i) d
+       (SELECT unnest(range(1, {EMBED_DIM} + 1)) AS i) d
   GROUP BY i),
 flat AS (
   SELECT list_transform(
@@ -1009,8 +945,8 @@ flat AS (
   FROM sums s2 JOIN means m1 ON m1.i = s2.i JOIN means m2 ON m2.i = s2.j),
 mat AS (
   SELECT n, f,
-         list_transform(range(1, {_PCA_DIM} + 1), i ->
-           list_transform(range(1, {_PCA_DIM} + 1), j ->
+         list_transform(range(1, {EMBED_DIM} + 1), i ->
+           list_transform(range(1, {EMBED_DIM} + 1), j ->
              CASE WHEN i <= j THEN f[{_pca_pos_duck("i", "j")}]
                   ELSE f[{_pca_pos_duck("j", "i")}] END)) AS c
   FROM flat),
@@ -1018,23 +954,23 @@ pw AS (
   SELECT n, c,
          list_reduce(
            list_prepend(
-             list_transform(range(1, {_PCA_DIM} + 1),
+             list_transform(range(1, {EMBED_DIM} + 1),
                             d -> CAST(1.0 AS DOUBLE)),
              list_transform(range(1, {_PCA_ROUNDS} + 1),
                             it -> [CAST(it AS DOUBLE)])),
            (w, e) -> (
              list_transform(
-               list_transform(range(1, {_PCA_DIM} + 1), i ->
+               list_transform(range(1, {EMBED_DIM} + 1), i ->
                  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                   list_transform(range(1, {_PCA_DIM} + 1),
+                   list_transform(range(1, {EMBED_DIM} + 1),
                                   j -> c[i][j] * w[j])),
                    (s, x) -> s + x)),
                y -> y / sqrt(list_reduce(
                  list_prepend(CAST(0 AS DOUBLE),
                    list_transform(
-                     list_transform(range(1, {_PCA_DIM} + 1), i2 ->
+                     list_transform(range(1, {EMBED_DIM} + 1), i2 ->
                        list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                         list_transform(range(1, {_PCA_DIM} + 1),
+                         list_transform(range(1, {EMBED_DIM} + 1),
                                         j2 -> c[i2][j2] * w[j2])),
                          (s, x) -> s + x)),
                      z2 -> z2 * z2)),
@@ -1043,21 +979,21 @@ pw AS (
 fin AS (
   SELECT n, c, w,
          list_reduce(list_prepend(CAST(0 AS DOUBLE),
-           list_transform(range(1, {_PCA_DIM} + 1), i ->
+           list_transform(range(1, {EMBED_DIM} + 1), i ->
              w[i] * list_reduce(list_prepend(CAST(0 AS DOUBLE),
-               list_transform(range(1, {_PCA_DIM} + 1),
+               list_transform(range(1, {EMBED_DIM} + 1),
                               j -> c[i][j] * w[j])),
                (s, x) -> s + x))),
            (s, x) -> s + x) AS lambda1,
          list_reduce(list_prepend(CAST(0 AS DOUBLE),
-           list_transform(range(1, {_PCA_DIM} + 1), i -> c[i][i])),
+           list_transform(range(1, {EMBED_DIM} + 1), i -> c[i][i])),
            (s, x) -> s + x) AS trace
   FROM pw)
-SELECT n, {_PCA_DIM} AS dim,
+SELECT n, {EMBED_DIM} AS dim,
        round(trace, 9) AS trace,
        round(lambda1, 9) AS lambda1,
        round(lambda1 / trace, 9) AS lambda1_share,
-       CAST(list_sort(list_transform(range(1, {_PCA_DIM} + 1),
+       CAST(list_sort(list_transform(range(1, {EMBED_DIM} + 1),
          i -> struct_pack(na := -abs(w[i]), i := i)))[1].i AS INT)
          AS top_component_dim
 FROM fin
@@ -1104,7 +1040,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("i0") + 1).alias("i"),
         "qi",
         F.posexplode(
-            F.expr(f"slice(qv, i0 + 1, {_PCA_DIM} - i0)")
+            F.expr(f"slice(qv, i0 + 1, {EMBED_DIM} - i0)")
         ).alias("j0", "qj"),
     ).select(
         "i",
@@ -1151,20 +1087,20 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mat = flat.selectExpr(
         "n",
-        f"""transform(sequence(1, {_PCA_DIM}), i ->
-  transform(sequence(1, {_PCA_DIM}), j ->
+        f"""transform(sequence(1, {EMBED_DIM}), i ->
+  transform(sequence(1, {EMBED_DIM}), j ->
     IF(i <= j, element_at(f, {_pca_pos("i", "j")}),
        element_at(f, {_pca_pos("j", "i")})))) AS c""",
     )
-    matvec = f"""transform(sequence(1, {_PCA_DIM}), i ->
-  aggregate(transform(sequence(1, {_PCA_DIM}),
+    matvec = f"""transform(sequence(1, {EMBED_DIM}), i ->
+  aggregate(transform(sequence(1, {EMBED_DIM}),
     j -> element_at(element_at(c, i), j) * element_at(w, j)),
     CAST(0 AS DOUBLE), (s, x) -> s + x))"""
     pw = mat.selectExpr(
         "n",
         "c",
         f"""aggregate(sequence(1, {_PCA_ROUNDS}),
-  transform(sequence(1, {_PCA_DIM}), d -> CAST(1.0 AS DOUBLE)),
+  transform(sequence(1, {EMBED_DIM}), d -> CAST(1.0 AS DOUBLE)),
   (w, it) -> transform({matvec},
     y -> y / sqrt(aggregate(transform({matvec}, z -> z * z),
                             CAST(0 AS DOUBLE), (s, x) -> s + x)))) AS w""",
@@ -1172,24 +1108,24 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     pw = pw.localCheckpoint(eager=False)
     return pw.selectExpr(
         "n",
-        f"{_PCA_DIM} AS dim",
-        f"""round(aggregate(transform(sequence(1, {_PCA_DIM}),
+        f"{EMBED_DIM} AS dim",
+        f"""round(aggregate(transform(sequence(1, {EMBED_DIM}),
   i -> element_at(element_at(c, i), i)),
   CAST(0 AS DOUBLE), (s, x) -> s + x), 9) AS trace""",
-        f"""round(aggregate(transform(sequence(1, {_PCA_DIM}), i ->
-  element_at(w, i) * aggregate(transform(sequence(1, {_PCA_DIM}),
+        f"""round(aggregate(transform(sequence(1, {EMBED_DIM}), i ->
+  element_at(w, i) * aggregate(transform(sequence(1, {EMBED_DIM}),
     j -> element_at(element_at(c, i), j) * element_at(w, j)),
     CAST(0 AS DOUBLE), (s, x) -> s + x)),
   CAST(0 AS DOUBLE), (s, x) -> s + x), 9) AS lambda1""",
-        f"""round(aggregate(transform(sequence(1, {_PCA_DIM}), i ->
-  element_at(w, i) * aggregate(transform(sequence(1, {_PCA_DIM}),
+        f"""round(aggregate(transform(sequence(1, {EMBED_DIM}), i ->
+  element_at(w, i) * aggregate(transform(sequence(1, {EMBED_DIM}),
     j -> element_at(element_at(c, i), j) * element_at(w, j)),
     CAST(0 AS DOUBLE), (s, x) -> s + x)),
   CAST(0 AS DOUBLE), (s, x) -> s + x)
-  / aggregate(transform(sequence(1, {_PCA_DIM}),
+  / aggregate(transform(sequence(1, {EMBED_DIM}),
     i -> element_at(element_at(c, i), i)),
     CAST(0 AS DOUBLE), (s, x) -> s + x), 9) AS lambda1_share""",
-        f"""CAST(array_min(transform(sequence(1, {_PCA_DIM}),
+        f"""CAST(array_min(transform(sequence(1, {EMBED_DIM}),
   i -> struct(-abs(element_at(w, i)) AS na, i AS i))).i AS INT)
   AS top_component_dim""",
     ).select(
@@ -1288,48 +1224,9 @@ def dedup_mixture_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mixture_shift_summary(per_source)
 
 
-def mixture_shift_summary(per_source: DataFrame) -> DataFrame:
-    """Shares + shift from an exact-integer per-source frame (source,
-    n_docs, n_canonical, tok_raw, tok_dedup) — factored out so the
-    streaming twin (streaming/jobs.py::stream_mixture_shift) derives
-    the identical summary from its folded state (the
-    ph_summary_from_daily pattern): equal integers in, bit-identical
-    doubles out (each share is a single division of exact BIGINTs)."""
-    tot = per_source.agg(
-        F.sum("tok_raw").cast("long").alias("raw_total"),
-        F.sum("tok_dedup").cast("long").alias("dedup_total"),
-    )
-    return (
-        per_source.crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "n_docs",
-            "n_canonical",
-            "tok_raw",
-            "tok_dedup",
-            (F.col("tok_raw").cast("double") / F.col("raw_total")).alias(
-                "share_raw"
-            ),
-            (F.col("tok_dedup").cast("double") / F.col("dedup_total")).alias(
-                "share_dedup"
-            ),
-            (
-                F.col("tok_dedup").cast("double") / F.col("dedup_total")
-                - F.col("tok_raw").cast("double") / F.col("raw_total")
-            ).alias("share_shift"),
-        )
-        .orderBy("source")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Holt-Winters additive seasonal smoothing
 # ---------------------------------------------------------------------------
-
-_HW_ALPHA = "0.2"
-_HW_BETA = "0.1"
-_HW_GAMMA = "0.3"
-_HW_H = 6
 
 
 @query(
@@ -1364,17 +1261,17 @@ folded AS (
                x -> [x.rev, CAST(month(x.month) AS DOUBLE)])),
            (st, e) -> list_transform(range(1, 15), i -> CASE
              WHEN i = 1 THEN
-               {_HW_ALPHA} * (e[1] - st[CAST(e[2] AS INT) + 2])
-               + (1 - {_HW_ALPHA}) * (st[1] + st[2])
+               {HW_ALPHA} * (e[1] - st[CAST(e[2] AS INT) + 2])
+               + (1 - {HW_ALPHA}) * (st[1] + st[2])
              WHEN i = 2 THEN
-               {_HW_BETA} * (({_HW_ALPHA} * (e[1] - st[CAST(e[2] AS INT) + 2])
-                 + (1 - {_HW_ALPHA}) * (st[1] + st[2])) - st[1])
-               + (1 - {_HW_BETA}) * st[2]
+               {HW_BETA} * (({HW_ALPHA} * (e[1] - st[CAST(e[2] AS INT) + 2])
+                 + (1 - {HW_ALPHA}) * (st[1] + st[2])) - st[1])
+               + (1 - {HW_BETA}) * st[2]
              WHEN i = CAST(e[2] AS INT) + 2 THEN
-               {_HW_GAMMA} * (e[1]
-                 - ({_HW_ALPHA} * (e[1] - st[CAST(e[2] AS INT) + 2])
-                    + (1 - {_HW_ALPHA}) * (st[1] + st[2])))
-               + (1 - {_HW_GAMMA}) * st[CAST(e[2] AS INT) + 2]
+               {HW_GAMMA} * (e[1]
+                 - ({HW_ALPHA} * (e[1] - st[CAST(e[2] AS INT) + 2])
+                    + (1 - {HW_ALPHA}) * (st[1] + st[2])))
+               + (1 - {HW_GAMMA}) * st[CAST(e[2] AS INT) + 2]
              ELSE st[i] END)) AS st
   FROM st0),
 fc AS (
@@ -1384,7 +1281,7 @@ fc AS (
            + st[CAST(month(a[n].month + to_months(h)) AS INT) + 2]
            AS forecast,
          st[1] AS level, st[2] AS trend
-  FROM folded, (SELECT CAST(unnest(range(1, {_HW_H} + 1)) AS INT) AS h) hh)
+  FROM folded, (SELECT CAST(unnest(range(1, {HW_H} + 1)) AS INT) AS h) hh)
 SELECT h, forecast_month, forecast, level, trend FROM fc
 """,
 )
@@ -1407,7 +1304,7 @@ def holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     holt_linear_forecast discipline).
 
     Scale: map-side collapse to one row per month, one in-row fold —
-    noise next to the scan.""".format(h=_HW_H)
+    noise next to the scan.""".format(h=HW_H)
     o = load(spark, sf_dir, "orders")
     m = o.groupBy(
         F.to_date(F.date_trunc("month", "o_orderdate")).alias("month")
@@ -1417,83 +1314,6 @@ def holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("revenue")
     )
     return hw_forecast_from_monthly(m)
-
-
-def hw_forecast_from_monthly(m: DataFrame) -> DataFrame:
-    """The Holt-Winters fit + forecast over any exact (month, revenue)
-    monthly frame - factored out so the streaming twin
-    (streaming/jobs.py::stream_holt_winters) recomputes the identical
-    forecast from its folded monthly-cents state (the
-    ph_summary_from_daily pattern). Bit-equality rests on the monthly
-    revenue doubles matching: the stream folds exact cents (BIGINT) and
-    divides by 100 once, landing on the same nearest-double as the
-    batch decimal sum."""
-    arr = m.agg(
-        F.expr("array_sort(collect_list(struct(month, revenue)))").alias("a")
-    )
-    st0 = arr.selectExpr(
-        "a",
-        "size(a) AS n",
-        """aggregate(transform(slice(a, 1, 12), x -> x.revenue),
-  CAST(0 AS DOUBLE), (s, x) -> s + x) / 12 AS m1""",
-        """aggregate(transform(slice(a, 13, 12), x -> x.revenue),
-  CAST(0 AS DOUBLE), (s, x) -> s + x) / 12 AS m2""",
-    ).selectExpr(
-        "a",
-        "n",
-        """concat(array(m1, (m2 - m1) / 12),
-  transform(sequence(1, 12),
-    i -> element_at(a, i).revenue - m1)) AS s0""",
-    )
-    a, b, g = _HW_ALPHA, _HW_BETA, _HW_GAMMA
-    folded = st0.selectExpr(
-        "a",
-        "n",
-        f"""aggregate(
-  transform(slice(a, 25, size(a) - 24),
-    x -> array(x.revenue, CAST(month(x.month) AS DOUBLE))),
-  s0,
-  (st, e) -> transform(sequence(1, 14), i -> CASE
-    WHEN i = 1 THEN
-      {a} * (element_at(e, 1)
-             - element_at(st, CAST(element_at(e, 2) AS INT) + 2))
-      + (1 - {a}) * (element_at(st, 1) + element_at(st, 2))
-    WHEN i = 2 THEN
-      {b} * (({a} * (element_at(e, 1)
-               - element_at(st, CAST(element_at(e, 2) AS INT) + 2))
-          + (1 - {a}) * (element_at(st, 1) + element_at(st, 2)))
-          - element_at(st, 1))
-      + (1 - {b}) * element_at(st, 2)
-    WHEN i = CAST(element_at(e, 2) AS INT) + 2 THEN
-      {g} * (element_at(e, 1)
-        - ({a} * (element_at(e, 1)
-             - element_at(st, CAST(element_at(e, 2) AS INT) + 2))
-           + (1 - {a}) * (element_at(st, 1) + element_at(st, 2))))
-      + (1 - {g}) * element_at(st, CAST(element_at(e, 2) AS INT) + 2)
-    ELSE element_at(st, i) END)) AS st""",
-    )
-    folded = folded.localCheckpoint(eager=False)  # h branches reuse it
-    out = None
-    for h in range(1, _HW_H + 1):
-        row = folded.selectExpr(
-            f"{h} AS h",
-            f"add_months(element_at(a, CAST(n AS INT)).month, {h})"
-            " AS forecast_month",
-            f"""element_at(st, 1) + {h} * element_at(st, 2)
-  + element_at(st,
-      CAST(month(add_months(element_at(a, CAST(n AS INT)).month, {h}))
-           AS INT) + 2) AS forecast""",
-            "element_at(st, 1) AS level",
-            "element_at(st, 2) AS trend",
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.select(
-        F.col("h").cast("int").alias("h"),
-        "forecast_month",
-        "forecast",
-        "level",
-        "trend",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2175,7 +1995,6 @@ def safety_stock_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SC_THRESHOLD = "0.95"
-_SC_DIM = 64
 
 
 @query(
@@ -2197,7 +2016,7 @@ te AS (
   FROM v WHERE NOT is_train GROUP BY 1, 2),
 mxd AS (
   SELECT te.emb, te.n_dup,
-         max(list_aggregate(list_transform(range(1, {_SC_DIM} + 1),
+         max(list_aggregate(list_transform(range(1, {EMBED_DIM} + 1),
                i -> te.emb[i] * tr.emb[i]), 'sum') / (te.nrm * tr.nrm))
            AS max_train_sim
   FROM te CROSS JOIN tr
@@ -2395,10 +2214,7 @@ def prefix_share_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles beyond its first k tokens) — the exact_dedup shape
     with a prefix key.""".format(ks=_PS_KS)
     d = load(spark, sf_dir, "documents").select(
-        F.expr(
-            "filter(split(regexp_replace(lower(text), '[^a-z]+', ' '), ' '),"
-            " x -> x <> '')"
-        ).alias("toks")
+        F.expr(ALPHA_TOKS_S).alias("toks")
     )
     d = d.localCheckpoint(eager=False)  # one tokenize, three prefix passes
     out = None

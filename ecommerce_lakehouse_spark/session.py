@@ -45,25 +45,11 @@ def get_spark(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", "32")),
         )
-        # AQE coalescing floor / scan open cost (r10 opt, guide §1.2-3):
-        # r09 set these session-global to 16k / 64k; the r10 registry-wide
-        # interleaved cold A/B (r10/ab_confs/, OPTIMIZATION_r10.md) showed
-        # that outside the dedup/LSH family the raised task counts COST
-        # more than they win (21.6 s of losses vs 13.9 s of wins at
-        # sf0.1, the r09 driver-bench regression). The session baseline is
-        # therefore the Spark DEFAULT for both (still env-parameterised
-        # for cluster tuning), and the dedup/LSH-family queries pin the
-        # one conf that drives their win (minPartitionSize=16k — the
-        # openCost change added nothing even for them, per the isolated
-        # arm-C/D runs) per-query via queries.TINY_STAGE_CONFS.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"),
-        )
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", "4m"),
-        )
+        # The AQE coalescing floor and the scan open cost stay at Spark's
+        # defaults (1m / 4m): session-wide 16k / 64k lost more than it won
+        # registry-wide (OPTIMIZATION_r10.md), so the dedup/LSH-family
+        # queries pin minPartitionSize=16k per query via
+        # queries.TINY_STAGE_CONFS.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

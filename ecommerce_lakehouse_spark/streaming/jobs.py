@@ -27,6 +27,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ecommerce_lakehouse_spark.lake import LakeTable
+from ecommerce_lakehouse_spark.operators.timeseries import (
+    hw_forecast_from_monthly,
+    mixture_shift_summary,
+    ph_summary_from_daily,
+    spike_flags_from_daily,
+)
 
 
 def read_events_stream(
@@ -871,10 +877,6 @@ def stream_page_hinkley(
     app = f"ph:{state_root}"
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        from ecommerce_lakehouse_spark.queries.wave7 import (
-            ph_summary_from_daily,
-        )
-
         inc = (
             batch_df.select(
                 F.to_date("o_orderdate").alias("day"),
@@ -1011,10 +1013,6 @@ def stream_spike_monitor(
     app = f"spike:{state_root}"
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        from ecommerce_lakehouse_spark.queries.stats2 import (
-            spike_flags_from_daily,
-        )
-
         inc = (
             batch_df.select(
                 F.to_date("o_orderdate").alias("d"),
@@ -1086,10 +1084,6 @@ def stream_holt_winters(
     app = f"hw:{state_root}"
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        from ecommerce_lakehouse_spark.queries.wave7 import (
-            hw_forecast_from_monthly,
-        )
-
         inc = (
             batch_df.select(
                 F.to_date(F.date_trunc("month", "o_orderdate")).alias(
@@ -1173,10 +1167,6 @@ def stream_mixture_shift(
     app = f"mix:{state_root}"
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        from ecommerce_lakehouse_spark.queries.wave7 import (
-            mixture_shift_summary,
-        )
-
         d = batch_df.select(
             "doc_id",
             "source",

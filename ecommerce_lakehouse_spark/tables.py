@@ -85,14 +85,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return normalize_events_ts(read_events_raw(spark, path))
     return spark.read.parquet(path)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() consumption
-    (reference's Athena-over-catalog path, SURVEY §3.3 → spark.sql)."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

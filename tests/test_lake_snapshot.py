@@ -185,3 +185,42 @@ def test_warm_handle_dml_opens_one_manifest(spark, tmp_path, monkeypatch):
             got[(layout, name)] = (opens["json"], opens["latest"])
     over_budget = {k: v for k, v in got.items() if v[0] != 1 or v[1] > 2}
     assert not over_budget, f"(v*.json, _LATEST) opens per op: {got}"
+
+
+def test_apply_changes_scd2_commits_on_the_head_it_read(spark, tmp_path):
+    """apply_changes_scd2 derives the new history from the head it read
+    and merges against that same head: a commit landing in between must
+    fail the commit, never be absorbed into intervals computed without
+    it (which would leave key 1 with two open rows)."""
+    root = str(tmp_path / "dim")
+    dim = LakeTable(spark, root)
+    other = LakeTable(spark, root)
+
+    def feed(rows):
+        return spark.createDataFrame(
+            rows, "k int, v string, _change_type string, seq int"
+        )
+
+    dim.apply_changes_scd2(feed([(1, "a", "insert", 10)]), keys=["k"], sequence_col="seq")
+    orig_merge = dim.merge
+    fired = []
+
+    def race_then_merge(*args, **kwargs):
+        if not fired:
+            fired.append(True)
+            other.apply_changes_scd2(
+                feed([(1, "b", "update_postimage", 15)]), keys=["k"], sequence_col="seq"
+            )
+        return orig_merge(*args, **kwargs)
+
+    dim.merge = race_then_merge
+    with pytest.raises(ConcurrentWriteError):
+        dim.apply_changes_scd2(
+            feed([(1, "c", "update_postimage", 20)]), keys=["k"], sequence_col="seq"
+        )
+    del dim.merge
+    assert fired
+    hist = {
+        (r.k, r["__start_at"]): (r.v, r["__end_at"]) for r in dim.read().collect()
+    }
+    assert hist == {(1, 10): ("a", 15), (1, 15): ("b", None)}

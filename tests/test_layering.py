@@ -1,0 +1,88 @@
+"""Dependencies point down: queries and pipelines import operators and
+the lake, never the other way round. Every import in every package
+module counts, including imports inside functions, so a lazy import
+cannot hide an upward edge."""
+
+import ast
+import pathlib
+
+import pytest
+
+PKG = "ecommerce_lakehouse_spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent / PKG
+
+# layer (a subpackage dir or a top-level module) -> packages it must not import
+FORBIDDEN = {
+    "lake": ("queries", "pipelines", "streaming"),
+    "operators": ("queries", "pipelines", "streaming"),
+    "quality": ("queries",),
+    "sources": ("queries",),
+    "pipelines": ("queries",),
+    "streaming": ("queries",),
+    "tables.py": ("queries",),
+    "money.py": ("queries",),
+    "session.py": ("queries",),
+}
+
+
+def _module_name(path: pathlib.Path, root: pathlib.Path) -> str:
+    parts = path.relative_to(root.parent).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported(path: pathlib.Path, root: pathlib.Path):
+    """(line, dotted name) for every import in the file: the module of an
+    ``import`` and both ``module`` and ``module.name`` of a
+    ``from module import name`` (so ``from pkg import queries`` counts)."""
+    here = _module_name(path, root)
+    package = here if path.name == "__init__.py" else here.rpartition(".")[0]
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                yield node.lineno, alias.name
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                anchor = package.split(".")[: len(package.split(".")) - node.level + 1]
+                base = ".".join(anchor + ([base] if base else []))
+            yield node.lineno, base
+            for alias in node.names:
+                yield node.lineno, f"{base}.{alias.name}"
+
+
+def _violations(layer: str, banned: tuple[str, ...], root=ROOT) -> list[str]:
+    target = root / layer
+    files = [target] if target.suffix == ".py" else sorted(target.rglob("*.py"))
+    assert files, f"no modules found for layer {layer}"
+    out = []
+    for f in files:
+        for line, name in _imported(f, root):
+            for b in banned:
+                prefix = f"{PKG}.{b}"
+                if name == prefix or name.startswith(prefix + "."):
+                    out.append(f"{f.relative_to(root.parent)}:{line} imports {name}")
+    return sorted(set(out))
+
+
+@pytest.mark.parametrize("layer", sorted(FORBIDDEN))
+def test_layer_imports_point_down(layer):
+    assert _violations(layer, FORBIDDEN[layer]) == []
+
+
+def test_scan_sees_function_local_and_relative_imports(tmp_path):
+    """The scan itself: a lazy import inside a function and a relative
+    import are both reported."""
+    pkg = tmp_path / PKG
+    (pkg / "lake").mkdir(parents=True)
+    (pkg / "lake" / "__init__.py").write_text("")
+    (pkg / "lake" / "m.py").write_text(
+        "def f():\n"
+        "    from ecommerce_lakehouse_spark.queries.llm2 import x\n"
+        "from ..pipelines import curation\n"
+    )
+    assert _violations("lake", FORBIDDEN["lake"], root=pkg) == [
+        f"{PKG}/lake/m.py:2 imports {PKG}.queries.llm2",
+        f"{PKG}/lake/m.py:2 imports {PKG}.queries.llm2.x",
+        f"{PKG}/lake/m.py:3 imports {PKG}.pipelines",
+        f"{PKG}/lake/m.py:3 imports {PKG}.pipelines.curation",
+    ]

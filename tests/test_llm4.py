@@ -5,7 +5,7 @@ must agree with hand-computed values on synthetic docs."""
 import pytest
 import pyspark.sql.functions as F
 
-from ecommerce_lakehouse_spark.queries.llm4 import _EMAIL, _IPV4, _PHONE
+from ecommerce_lakehouse_spark.operators.text import EMAIL as _EMAIL, IPV4 as _IPV4, PHONE as _PHONE
 
 
 def test_pii_patterns_fire_on_positives(spark):

@@ -90,7 +90,7 @@ def test_band_skew_guard_drops_hot_buckets(spark, tmp_path):
     band_skew_profile must report the drop (no silent truncation)."""
     import pyspark.sql.functions as F
 
-    from ecommerce_lakehouse_spark.queries.llm2 import _BUCKET_CAP
+    from ecommerce_lakehouse_spark.operators.lsh import MH_BUCKET_CAP as _BUCKET_CAP
     from ecommerce_lakehouse_spark.queries import REGISTRY
 
     boiler = (

@@ -4,13 +4,23 @@ headline queries, with a one-line note on what each plan should show.
 Run after any plan-affecting change: ``python tools/dump_plans.py``.
 Keeping the trees in-repo lets a reviewer audit shuffle/broadcast/pruning
 decisions without spinning up Spark.
+
+``python tools/dump_plans.py --out DIR [names...]`` instead writes
+``DIR/<name>.txt``: the optimized logical plan of each named registry
+query (every query when no names are given), with expression ids
+(``#123``) and LakeTable data-dir names (``v00000003-<12 hex>``)
+normalized, so two checkouts' dumps diff cleanly. A refactor that claims
+to be a pure move dumps before and after and expects ``diff -r`` to be
+empty. Both modes read the tables under ``$SPARK_GRAFT_SF_DIR``.
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -63,9 +73,33 @@ NAMES = {
 }
 
 
+_EXPR_ID = re.compile(r"#\d+")
+_DATA_DIR = re.compile(r"v\d+-[0-9a-f]{12}")
+
+
+def dump_optimized(spark, sf: str, out_dir: str, names: list[str]) -> None:
+    """Write each query's normalized optimized logical plan to out_dir."""
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names or list(REGISTRY):
+        plan = REGISTRY[name](spark, sf)._jdf.queryExecution().optimizedPlan().toString()
+        plan = _DATA_DIR.sub("v{n}-{uuid}", _EXPR_ID.sub("#", plan))
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write(plan)
+        print("wrote", name, flush=True)
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.partition("\n\n")[0])
+    ap.add_argument("--out", help="write normalized optimized plans here instead of PLANS.md")
+    ap.add_argument("names", nargs="*", help="registry queries for --out (default: all)")
+    args = ap.parse_args()
+    if args.names and not args.out:
+        ap.error("query names need --out")
     spark = get_spark("plans", shuffle_partitions=32)
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if args.out:
+        dump_optimized(spark, sf, args.out, args.names)
+        return
     out = [
         "# PLANS — physical plans of the headline queries (sf0.1, local[32])",
         "",

@@ -17,7 +17,7 @@ Writes the synthetic corpus under /tmp/spark_graft_scale_smoke.
 boilerplate prefix (each with a unique tail token) — the adversarial
 hot-band case: they are NOT exact dups (collapse can't remove them) and
 most of their MinHash band buckets coincide, so without the
-_BUCKET_CAP stop-band guard the band join expands ~N²/2 candidate
+MH_BUCKET_CAP stop-band guard the band join expands ~N²/2 candidate
 pairs. With the guard, wall time stays bounded and band_skew_profile
 reports exactly what was dropped.
 """
