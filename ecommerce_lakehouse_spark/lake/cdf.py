@@ -33,11 +33,11 @@ from pyspark.sql import DataFrame
 
 from ecommerce_lakehouse_spark.lake.table import (
     _PHYSICAL_OPS,
+    _ROW_ID,
     LakeTable,
-    _apply_column_mapping,
-    _dv_join,
     _entry_norm,
     _partition_predicate,
+    _read_dvs,
     check_table_features,
 )
 
@@ -57,40 +57,42 @@ def _rel_parquet_files(d: str) -> set[str]:
     return out
 
 
+def _under_head(snap: dict, head: dict) -> dict:
+    """Snapshot ``snap`` (its schema, layout and deletion vectors) served
+    under the logical names of ``head``, the table's head manifest (Delta
+    CDF does the same for column-mapped tables): pre-rename slices union
+    cleanly with post-rename ones."""
+    return {
+        **snap,
+        "column_mapping": head.get("column_mapping", {}),
+        "dropped_columns": head.get("dropped_columns", []),
+    }
+
+
 def _read_slice(
     table: LakeTable,
-    head: dict,
+    snap: dict,
     path: str,
     files: list[str] | None,
-    pcols: list[str],
     minus_mask: list[dict],
     only_mask: list[dict] | None = None,
-    minus_dvs: list[str] | None = None,
 ) -> DataFrame | None:
-    """Rows of one data dir restricted to ``files`` (None = all), outside
-    ``minus_mask`` partitions, (when given) inside ``only_mask`` ones, and
-    excluding rows named by the ``minus_dvs`` deletion vectors — a slice
-    must reflect what its snapshot READ, or rows a merge-on-read DELETE
-    already removed would re-surface as feed deletes on the next rewrite.
-    Served under the logical schema of ``head``, the table's head manifest
-    (Delta CDF does the same for column-mapped tables): pre-rename slices
-    union cleanly with post-rename ones."""
-    if files is not None:
-        if not files:
-            return None
-        reader = table.spark.read.option("mergeSchema", "true").option(
-            "basePath", path
-        )
-        df = reader.parquet(*[os.path.join(path, rel) for rel in sorted(files)])
-    else:
-        df = table.spark.read.option("mergeSchema", "true").parquet(path)
-    df = _apply_column_mapping(df, head)
-    if minus_mask:
-        df = df.filter(~_partition_predicate(pcols, minus_mask))
+    """Rows of one data dir of snapshot ``snap`` restricted to ``files``
+    (None = all), outside ``minus_mask`` partitions and (when given)
+    inside ``only_mask`` ones, minus the rows ``snap``'s deletion vectors
+    name — a slice must reflect what its snapshot READ, or rows a
+    merge-on-read DELETE already removed would re-surface as feed
+    deletes on the next rewrite."""
+    if files is not None and not files:
+        return None
+    entry = {
+        "path": path,
+        "live_files": None if files is None else sorted(files),
+        "exclude": minus_mask,
+    }
+    df = table._scan(snap, [entry])
     if only_mask is not None:
-        df = df.filter(_partition_predicate(pcols, only_mask))
-    if minus_dvs:
-        df = _dv_join(df, table.spark.read.parquet(*minus_dvs), "left_anti")
+        df = df.filter(_partition_predicate(snap["partition_by"], only_mask))
     return df
 
 
@@ -133,13 +135,13 @@ def _version_slices(
 ) -> tuple[DataFrame | None, DataFrame | None]:
     """(pre, post): rows visible at ``m_prev`` (None before v1) but not
     carried into ``m_cur``, and rows newly visible at ``m_cur`` — reading
-    only what that commit touched."""
-    pcols_prev = m_prev["partition_by"] if m_prev else []
-    pcols_cur = m_cur["partition_by"]
+    only what that commit touched, each side as its own snapshot read it
+    (rows behind that snapshot's deletion vectors were already gone /
+    never visible)."""
+    snap_p = _under_head(m_prev, head) if m_prev else None
+    snap_c = _under_head(m_cur, head)
     prev = {p: (excl, live) for p, excl, live in map(_entry_norm, m_prev["data_dirs"] if m_prev else [])}
     cur = {p: (excl, live) for p, excl, live in map(_entry_norm, m_cur["data_dirs"])}
-    # a slice reflects what its snapshot READ: rows behind that
-    # snapshot's deletion vectors were already gone / never visible
     dvs_p = m_prev.get("deletion_vectors", []) if m_prev else []
     dvs_c = m_cur.get("deletion_vectors", [])
 
@@ -147,26 +149,18 @@ def _version_slices(
     added: list[DataFrame] = []
     for path, (excl_p, live_p) in prev.items():
         if path not in cur:
-            removed.append(
-                _read_slice(table, head, path, live_p, pcols_prev, excl_p, minus_dvs=dvs_p)
-            )
+            removed.append(_read_slice(table, snap_p, path, live_p, excl_p))
             continue
         excl_c, live_c = cur[path]
         new_excl = _mask_minus(excl_c, excl_p)
         if new_excl:
             removed.append(
-                _read_slice(
-                    table, head, path, live_p, pcols_prev, excl_p,
-                    only_mask=new_excl, minus_dvs=dvs_p,
-                )
+                _read_slice(table, snap_p, path, live_p, excl_p, only_mask=new_excl)
             )
         un_excl = _mask_minus(excl_p, excl_c)
         if un_excl:  # restore() can re-expose masked partitions
             added.append(
-                _read_slice(
-                    table, head, path, live_c, pcols_cur, excl_c,
-                    only_mask=un_excl, minus_dvs=dvs_c,
-                )
+                _read_slice(table, snap_c, path, live_c, excl_c, only_mask=un_excl)
             )
         if live_p != live_c:
             all_files = (
@@ -178,67 +172,54 @@ def _version_slices(
             cf = set(live_c) if live_c is not None else all_files
             dropped, gained = pf - cf, cf - pf
             if dropped:
-                removed.append(
-                    _read_slice(
-                        table, head, path, sorted(dropped), pcols_prev, excl_p,
-                        minus_dvs=dvs_p,
-                    )
-                )
+                removed.append(_read_slice(table, snap_p, path, dropped, excl_p))
             if gained:
-                added.append(
-                    _read_slice(
-                        table, head, path, sorted(gained), pcols_cur, excl_c,
-                        minus_dvs=dvs_c,
-                    )
-                )
+                added.append(_read_slice(table, snap_c, path, gained, excl_c))
     for path, (excl_c, live_c) in cur.items():
         if path not in prev:
-            added.append(
-                _read_slice(table, head, path, live_c, pcols_cur, excl_c, minus_dvs=dvs_c)
-            )
+            added.append(_read_slice(table, snap_c, path, live_c, excl_c))
 
     # merge-on-read DELETE (and its rollback): rows appear/vanish with no
     # file change — deletion vectors name them by (file, row_index). Read
     # ONLY the files the DV touches (the sidecar is small; its distinct
     # file list is control-plane) and semi-join the ids back to full rows.
-    def _dv_rows(dv_paths: list[str], owners: dict) -> list[DataFrame]:
+    def _dv_rows(dv_paths: list[str], snap: dict) -> list[DataFrame]:
         from urllib.parse import unquote, urlparse
 
-        dv = table.spark.read.parquet(*dv_paths)
-        files = [r[0] for r in dv.select("__file_path").distinct().collect()]
-        # group by owning data dir + basePath so hive partition columns
-        # survive the per-file read (a bare file scan would drop them);
-        # both sides normalized (the _metadata path is an absolute
-        # percent-encoded URI; manifest paths may be relative). A DV file
-        # outside the relevant snapshot's dirs contributes no rows to it.
-        owner_by_abs = {os.path.abspath(p): p for p in owners}
+        dv = _read_dvs(table.spark, dv_paths)
+        files = [r[0] for r in dv.select(_ROW_ID[0]).distinct().collect()]
+        # group by owning data dir, read as a file list under it (hive
+        # partition columns survive); both sides normalized (the _metadata
+        # path is an absolute percent-encoded URI; manifest paths may be
+        # relative). A DV file outside the snapshot's dirs contributes no
+        # rows to it.
+        owner_by_abs = {os.path.abspath(e[0]): e[0] for e in map(_entry_norm, snap["data_dirs"])}
         by_dir: dict[str, list[str]] = {}
         for f in files:
             local = os.path.abspath(unquote(urlparse(f).path))
             owner = next(
-                (
-                    orig
-                    for ap, orig in owner_by_abs.items()
-                    if local.startswith(ap.rstrip("/") + "/")
-                ),
+                (ap for ap in owner_by_abs if local.startswith(ap.rstrip("/") + "/")),
                 None,
             )
             if owner is not None:
-                by_dir.setdefault(owner, []).append(f)
-        out = []
-        for d, fs in by_dir.items():
-            reader = table.spark.read.option("mergeSchema", "true").option(
-                "basePath", d
-            )
-            out.append(_dv_join(reader.parquet(*fs), dv, "left_semi"))
-        return out
+                by_dir.setdefault(owner_by_abs[owner], []).append(
+                    os.path.relpath(local, owner)
+                )
+        if not by_dir:
+            return []
+        rows = table._scan(
+            snap,
+            [{"path": d, "live_files": rels} for d, rels in by_dir.items()],
+            row_ids=True,
+        )
+        return [rows.join(dv, on=_ROW_ID, how="left_semi").drop(*_ROW_ID)]
 
     new_dvs = [p for p in dvs_c if p not in set(dvs_p)]
     if new_dvs and m_prev is not None:  # rows removed FROM the prior snapshot
-        removed.extend(_dv_rows(new_dvs, prev))
+        removed.extend(_dv_rows(new_dvs, snap_p))
     dropped_dvs = [p for p in dvs_p if p not in set(dvs_c)]
     if dropped_dvs:  # restore() to a pre-delete version: rows come back
-        added.extend(_dv_rows(dropped_dvs, cur))
+        added.extend(_dv_rows(dropped_dvs, snap_c))
     return _union(removed), _union(added)
 
 

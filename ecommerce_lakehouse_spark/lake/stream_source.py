@@ -56,6 +56,7 @@ from ecommerce_lakehouse_spark.lake.table import (
     _head_version,
     _hive_values,
     _read_manifest,
+    _recorded_schema,
     _row_canon,
     check_table_features,
 )
@@ -92,34 +93,17 @@ def _live_files(entry) -> list[tuple[str, str]]:
 
 
 def _snapshot_arrow_schema(root: str):
-    """Unified arrow schema of the current snapshot's data dirs (hive
-    partition columns included, types by pyarrow's hive inference — the
-    same inference the read path uses, so the two always agree).
+    """Arrow schema of the head snapshot: the schema its manifest records
+    (hive partition columns included) — the one LakeTable.read() scans
+    with, so the two always agree. No data file is opened, and a head
+    with no data dirs (a DELETE removed every row) has one too."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    A snapshot can have ZERO data dirs (a DELETE removed every row);
-    mirror LakeTable.read()'s fallback and infer from the most recent
-    version that still had data, instead of handing pyarrow an empty
-    unify_schemas call."""
-    import pyarrow as pa
-    import pyarrow.dataset as pds
-
-    v = _head_version(root)
-    m = _read_manifest(root, v)
+    m = _read_manifest(root, _head_version(root))
     # the stream decodes snapshot bytes like any reader — gate on
     # protocol features before serving a schema for them
     check_table_features(m, for_write=False, where=root)
-    while not m["data_dirs"]:
-        v -= 1
-        if v < 1:
-            raise ValueError(
-                f"laketable source at {root}: no version has any data dirs — "
-                "cannot infer a stream schema from an always-empty table"
-            )
-        m = _read_manifest(root, v)
-    schemas = []
-    for e in m["data_dirs"]:
-        schemas.append(pds.dataset(_entry_path(e), partitioning="hive").schema)
-    return pa.unify_schemas(schemas)
+    return to_arrow_schema(_recorded_schema(m, root))
 
 
 def _carryover_visibility_changes(m_prev: dict | None, m: dict) -> list[str]:
@@ -162,8 +146,9 @@ class _LakeFilePartition(InputPartition):
 def _file_batches(partition: _LakeFilePartition, target) -> Iterator:
     """One parquet file → arrow batches conformed to the stream schema:
     present columns cast, hive partition values materialized as constant
-    columns, columns this file predates filled with nulls (unionByName
-    semantics, matching LakeTable.read's mergeSchema)."""
+    columns, columns this file predates filled with nulls (the recorded
+    schema holds every column written since the last overwrite — the
+    nulls LakeTable.read's scans serve too)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

@@ -174,12 +174,86 @@ _METADATA = {
     # dead names (DROP COLUMN): hidden from every read; a dropped name
     # stays dead — see drop_column's contract
     "dropped_columns": [],
+    # the PHYSICAL schema every scan passes (StructType JSON, Delta's
+    # metaData.schemaString): the columns written since the last
+    # overwrite, under their stored names; every commit records one
+    "schema": None,
 }
 
 
 def _metadata(manifest: dict) -> dict:
     """The table metadata (:data:`_METADATA` keys) of ``manifest``."""
     return {k: manifest.get(k, d) for k, d in _METADATA.items()}
+
+
+def _recorded_schema(manifest: dict, where: str):
+    """The StructType ``manifest`` records; a manifest without one is
+    refused by name — no scan falls back to footer inference."""
+    from pyspark.sql.types import StructType
+
+    if not manifest.get("schema"):
+        raise ValueError(
+            f"table {where}: manifest v{manifest.get('version')} records no "
+            "schema; rewrite the table with overwrite() or re-adopt its "
+            "files with convert_from_parquet()"
+        )
+    return StructType.fromJson(manifest["schema"])
+
+
+def _nullable(t):
+    """Spark schema JSON with every field, array element and map value
+    nullable — what any parquet scan reports, whatever the writer said."""
+    if isinstance(t, list):
+        return [_nullable(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    out = {k: v if k == "metadata" else _nullable(v) for k, v in t.items()}
+    for k in ("nullable", "containsNull", "valueContainsNull"):
+        if k in out:
+            out[k] = True
+    return out
+
+
+def _schema_json(schema, partition_by: list[str]) -> dict:
+    """The schema a write of a frame with ``schema`` records: hive
+    partition columns last, in ``partition_by`` order (where a scan puts
+    them), everything nullable — from the frame, never the footers."""
+    from pyspark.sql.types import StructType
+
+    fields = [f for f in schema.fields if f.name not in partition_by]
+    fields += [schema[c] for c in partition_by]
+    return _nullable(json.loads(StructType(fields).json()))
+
+
+# type changes a recorded schema widens across (the parquet reader
+# upcasts older files' values on scan), narrowest first
+_WIDENING = (("byte", "short", "integer", "long"), ("float", "double"))
+
+
+def _widen(prior: dict, written: dict, where: str) -> dict:
+    """Union of two recorded schemas, in the order a merged-schema scan
+    lists them: ``prior``'s columns, then the ones ``written`` adds. A
+    column written under another type takes the wider one (int -> long,
+    float -> double); any other type change raises."""
+    fields = [dict(f) for f in prior["fields"]]
+    at = {f["name"]: i for i, f in enumerate(fields)}
+    for f in written["fields"]:
+        i = at.get(f["name"])
+        if i is None:
+            fields.append(f)
+            continue
+        old, new = fields[i]["type"], f["type"]
+        if old == new:
+            continue
+        ladder = next((t for t in _WIDENING if old in t and new in t), None)
+        if ladder is None:
+            raise SchemaMismatchError(
+                f"write to {where}: column {f['name']!r} changes type "
+                f"{old} -> {new}; overwrite() the table to change a "
+                "column's type"
+            )
+        fields[i]["type"] = max(old, new, key=ladder.index)
+    return {"type": "struct", "fields": fields}
 
 
 def _read_manifest(root: str, version: int) -> dict:
@@ -235,22 +309,15 @@ def _hive_values(rel: str) -> dict[str, str | None]:
     return vals
 
 
-def _dv_join(df: "DataFrame", dv: "DataFrame", how: str) -> "DataFrame":
-    """Join ``df`` against a deletion-vector frame on parquet row identity
-    (_metadata file_path + row_index), dropping the id columns after —
-    the ONE place the row-identity scheme lives (read path, change feed,
-    and DV-row recovery all route through it)."""
-    import pyspark.sql.functions as F
+# parquet row identity (_metadata file_path + row_index), as
+# LakeTable._scan attaches it and deletion-vector sidecars store it
+_ROW_ID = ["__file_path", "__row_index"]
+_DV_SCHEMA = "__file_path string, __row_index long"
 
-    return (
-        df.select(
-            "*",
-            F.col("_metadata.file_path").alias("__file_path"),
-            F.col("_metadata.row_index").alias("__row_index"),
-        )
-        .join(dv, on=["__file_path", "__row_index"], how=how)
-        .drop("__file_path", "__row_index")
-    )
+
+def _read_dvs(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """The (file, row) ids named by the deletion-vector sidecars ``paths``."""
+    return spark.read.schema(_DV_SCHEMA).parquet(*paths)
 
 
 def _partition_predicate(pcols: list[str], rows: list[dict]):
@@ -327,10 +394,11 @@ def _apply_column_mapping(df, manifest: dict):
     """Serve a physical frame under the LOGICAL schema of ``manifest``
     (Delta column mapping): each logical column is the newest-first
     COALESCE of whatever names (logical + physical aliases) the frame
-    carries — a mergeSchema scan spanning pre- and post-rename files
-    holds BOTH vintages' columns, null-filled per row by file vintage, so
-    coalesce reassembles exactly one value per row. Single-name frames
-    reduce to a rename. Dead (dropped) names are hidden. Pure projection."""
+    carries — once a write follows a rename, the recorded schema holds
+    BOTH names, and a scan null-fills the one a file lacks, so coalesce
+    reassembles exactly one value per row, in the oldest name's position.
+    Single-name frames reduce to a rename. Dead (dropped) names are
+    hidden. Pure projection."""
     import pyspark.sql.functions as F
 
     mapping = manifest.get("column_mapping", {})
@@ -343,9 +411,12 @@ def _apply_column_mapping(df, manifest: dict):
         if len(present) == 1:
             df = df.withColumnRenamed(present[0], logical)
         else:
-            keep = [c for c in df.columns if c not in present]
+            at = next(i for i, c in enumerate(df.columns) if c in present)
+            rest = [c for c in df.columns if c not in present]
             df = df.select(
-                *keep, F.coalesce(*[F.col(c) for c in present]).alias(logical)
+                *rest[:at],
+                F.coalesce(*[F.col(c) for c in present]).alias(logical),
+                *rest[at:],
             )
     dead = [c for c in dropped if c in df.columns]
     if dead:
@@ -451,21 +522,29 @@ def _local_path(uri: str) -> str:
     return uri
 
 
+def _written(df, partition_by: list[str]) -> dict:
+    """The one-dir snapshot a fresh write of ``df`` scans back as."""
+    return {"schema": _schema_json(df.schema, partition_by), "partition_by": partition_by}
+
+
+def _has_parquet(d: str) -> bool:
+    return any(n.endswith(".parquet") for _, _, names in os.walk(d) for n in names)
+
+
+def _files_entry(files: list[tuple]) -> dict:
+    """One data-dir entry naming ``files`` ((dir, rel, ...) tuples of an
+    unpartitioned snapshot) under their common directory, so they scan
+    as ONE relation across data dirs."""
+    paths = [os.path.join(f[0], f[1]) for f in files]
+    base = os.path.commonpath([os.path.dirname(p) for p in paths])
+    return {"path": base, "live_files": [os.path.relpath(p, base) for p in paths]}
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         self._manifest_dir = os.path.join(root, "_manifest")
-        # analyzed-DataFrame reuse keyed by (version, rowid flag) — PLAN
-        # reuse only, never result caching: the cached object is a lazy
-        # DataFrame whose every action still reads the version's parquet.
-        # A version's file set is immutable once committed (the manifest
-        # link is the commit point), so reuse is always sound; repeated
-        # read() calls otherwise re-pay schema inference (a Spark job
-        # per call under mergeSchema) and Catalyst re-analysis — the
-        # multi-stage pipelines re-read the same version up to 4x per
-        # run (guide §7.3: planning time is driver-side wall).
-        self._read_cache: dict[tuple[int, bool], DataFrame] = {}
 
     # ---------------- manifest plumbing ----------------
 
@@ -494,7 +573,7 @@ class LakeTable:
 
     def _head(self, op: str | None = None) -> dict:
         """The head manifest, read ONCE at the start of an operation: the
-        op validates, reads (``read(version=prior["version"])``), writes
+        op validates, reads (``read(_snapshot=prior)``), writes
         and commits against this one dict (Delta's per-operation
         snapshot), so a concurrent commit surfaces at :meth:`_commit`
         instead of mixing two versions' state into one op. A table with
@@ -522,6 +601,7 @@ class LakeTable:
         *,
         touched: list[dict] | None = None,
         txn: dict | None = None,
+        written=None,
         **changes,
     ) -> int:
         """Commit ``data_dirs`` as the version after ``prior`` — the head
@@ -530,6 +610,10 @@ class LakeTable:
         overrides it. ``changes`` may also set ``features`` (drop_feature);
         features the commit exercises re-add themselves regardless, so a
         manifest never lies about its own content.
+
+        ``written``: the StructType of the frame this commit wrote; the
+        recorded schema widens to include it (see :func:`_widen`).
+        Writes that replace the schema (overwrite) pass ``schema``.
 
         ``touched``: partition tuples this commit wrote/rewrote ([] = blind
         append); None = full-table (overwrite/compact/unpartitioned DML) —
@@ -551,6 +635,12 @@ class LakeTable:
         # record (monotonically) what this commit starts requiring
         check_table_features(prior, for_write=True, where=self.root)
         meta = {**_metadata(prior), **changes}
+        if not meta["schema"]:
+            _recorded_schema(prior, self.root)  # raises, naming the table
+        if written is not None:
+            meta["schema"] = _widen(
+                meta["schema"], _schema_json(written, meta["partition_by"]), self.root
+            )
         feats = meta.pop("features", prior.get("features", {}))
         reader_feats = set(feats.get("reader", []))
         writer_feats = set(feats.get("writer", []))
@@ -684,7 +774,9 @@ class LakeTable:
         ``make_entries(base_manifest)`` rebuilds the manifest entry list
         against an arbitrary base — first ``prior``, the head this
         operation read, then each newer head it rebases onto (``changes``
-        ride every attempt, as in :meth:`_commit`). On ``ConcurrentWriteError``,
+        ride every attempt, as in :meth:`_commit`; a ``written`` schema
+        widens the schema of the head each attempt commits on, so a
+        winner's new columns survive the rebase). On ``ConcurrentWriteError``,
         the winners (manifests between our base and the new head) are
         examined: a blind append (``touched == []``) rebases over
         anything; a partition-scoped op rebases only if every winner
@@ -753,7 +845,8 @@ class LakeTable:
 
     def _winners_delta_df(self, prior: dict, winners: list[dict]) -> DataFrame | None:
         """Union of data dirs the winners added beyond our base manifest —
-        the winners' write delta, read raw (bounded by what they wrote)."""
+        the winners' write delta, whole dirs under the newest winner's
+        schema and names (bounded by what they wrote)."""
         base_paths = {_entry_path(e) for e in prior.get("data_dirs", [])}
         new_paths: list[str] = []
         for w in winners:
@@ -763,13 +856,7 @@ class LakeTable:
                     new_paths.append(p)
         if not new_paths:
             return None
-        dfs = [
-            self.spark.read.option("mergeSchema", "true").parquet(p) for p in new_paths
-        ]
-        out = dfs[0]
-        for other in dfs[1:]:
-            out = out.unionByName(other, allowMissingColumns=True)
-        return out
+        return self._scan(winners[-1], new_paths)
 
     def _new_data_dir(self, prior: dict) -> str:
         # Unique per writer (Delta-style GUID naming): two racing writers
@@ -793,9 +880,8 @@ class LakeTable:
         old versions age out, instead of storage growing monotonically.
 
         ``new_dir=None``: the rewrite produced no rows (a DELETE emptied
-        every touched partition) — referencing the empty dir would make
-        every later read fail parquet schema inference, so it is omitted
-        and vacuum reclaims it."""
+        every touched partition); the empty dir adds nothing to any read,
+        so it is omitted and vacuum reclaims it."""
         pcols = prior["partition_by"]
         entries = []
         for e in prior["data_dirs"]:
@@ -904,9 +990,12 @@ class LakeTable:
         if violated:
             raise ConstraintViolationError(self.root, violated)
 
-    def _enforce_constraints_on_entry(self, entry: dict, cons: dict[str, str]) -> None:
+    def _enforce_constraints_on_entry(
+        self, entry: dict, written: dict, cons: dict[str, str]
+    ) -> None:
         """Enforce CHECK constraints on the rows actually WRITTEN — a
-        re-scan of the freshly-written data dir — instead of the incoming
+        re-scan of the freshly-written data dir, under the ``written``
+        snapshot (see :func:`_written`) — instead of the incoming
         DataFrame. A non-deterministic input (rand()-derived columns, a
         source that changed between jobs) can evaluate differently in a
         pre-write validation job vs the write itself, letting a
@@ -916,22 +1005,14 @@ class LakeTable:
         what is validated is bit-identical to what readers will see
         (including hive-partition round-tripping). On violation the
         orphan dir is removed and nothing is committed."""
-        if not cons:
-            return
-        d = entry["path"]
-        has_files = any(
-            name.endswith(".parquet")
-            for _, _, files in os.walk(d)
-            for name in files
-        )
-        if not has_files:  # empty batch: nothing to violate
+        if not cons or not entry["files"]:  # empty batch: nothing to violate
             return
         try:
-            self._enforce_constraints(self.spark.read.parquet(d), cons)
+            self._enforce_constraints(self._scan(written, [entry]), cons)
         except ConstraintViolationError:
             import shutil
 
-            shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(entry["path"], ignore_errors=True)
             raise
 
     def generated_columns(self) -> dict[str, str]:
@@ -950,17 +1031,18 @@ class LakeTable:
         gen = dict(prior.get("generated_columns", {}))
         if col in gen:
             raise ValueError(f"generated column {col!r} already defined")
-        snap = self.read(version=prior["version"])
+        snap = self.read(_snapshot=prior)
         if col in snap.columns:
             raise ValueError(
                 f"column {col!r} already exists with writer-authored data; "
                 "a generated column cannot shadow it (Delta rejects this too)"
             )
         gen[col] = expr
-        entry = self._write_dir_entry(snap.withColumn(col, F.expr(expr)), prior)
+        backfilled = snap.withColumn(col, F.expr(expr))
+        entry = self._write_dir_entry(backfilled, prior)
         return self._commit(
             prior, [entry], "add_generated_column",
-            deletion_vectors=[], generated_columns=gen,
+            deletion_vectors=[], generated_columns=gen, written=backfilled.schema,
         )
 
     def _apply_generated(self, df: DataFrame, prior: dict) -> DataFrame:
@@ -1026,7 +1108,7 @@ class LakeTable:
                 f"{props['identity']['col']!r}"
             )
         hwm = start
-        snap = self.read(version=prior["version"])
+        snap = self.read(_snapshot=prior)
         if col in snap.columns:
             import pyspark.sql.functions as F
 
@@ -1130,10 +1212,11 @@ class LakeTable:
             prior, prior["data_dirs"], "create-bloom-index", properties=props
         )
 
-    def _write_bloom_sidecar(self, d: str, cfg: dict) -> None:
+    def _write_bloom_sidecar(self, back: DataFrame, d: str, cfg: dict) -> None:
         """Build per-file Bloom bitmaps for every indexed column of
         ``cfg`` ({col: {fpp,m,k}}, the table's ``bloom_index`` property)
-        in the freshly-written dir ``d`` and drop them in a ``_bloom.json``
+        over ``back``, the row-id scan of the freshly-written dir ``d``,
+        and drop them in a ``_bloom.json``
         sidecar (lives inside the dir: vacuum reclaims it with the data,
         shallow clones see it, Spark scans ignore it).
 
@@ -1146,7 +1229,6 @@ class LakeTable:
 
         import pyspark.sql.functions as F
 
-        back = self.spark.read.parquet(d)
         parts = []
         for c, p in cfg.items():
             if c not in back.columns:
@@ -1159,7 +1241,7 @@ class LakeTable:
             ]
             parts.append(
                 back.filter(F.col(c).isNotNull()).select(
-                    F.col("_metadata.file_path").alias("f"),
+                    F.col("__file_path").alias("f"),
                     F.lit(c).alias("col"),
                     F.explode(F.array(*pos)).alias("pos"),
                 )
@@ -1253,7 +1335,7 @@ class LakeTable:
                 f"rename_column({old!r}): partition columns are baked into "
                 "hive paths and pruning masks; rewrite the table instead"
             )
-        cur_cols = self.read(version=prior["version"]).columns
+        cur_cols = self.read(_snapshot=prior).columns
         if old not in cur_cols:
             raise ValueError(f"rename_column: no column {old!r} in {cur_cols}")
         mapping = {k: list(v) for k, v in prior.get("column_mapping", {}).items()}
@@ -1284,7 +1366,7 @@ class LakeTable:
         prior = self._head("drop_column")
         if name in prior["partition_by"]:
             raise ValueError(f"drop_column({name!r}): cannot drop a partition column")
-        cur_cols = self.read(version=prior["version"]).columns
+        cur_cols = self.read(_snapshot=prior).columns
         if name not in cur_cols:
             raise ValueError(f"drop_column: no column {name!r} in {cur_cols}")
         mapping = {k: list(v) for k, v in prior.get("column_mapping", {}).items()}
@@ -1307,7 +1389,7 @@ class LakeTable:
             raise ValueError(f"constraint {name!r} already exists")
         import pyspark.sql.functions as F
 
-        bad = self.read(version=prior["version"]).filter(
+        bad = self.read(_snapshot=prior).filter(
             ~F.coalesce(F.expr(expr), F.lit(False))
         )
         if not bad.isEmpty():
@@ -1402,7 +1484,11 @@ class LakeTable:
             # file-level bloom sidecar (unpartitioned dirs only — the
             # partitioned read path prunes on partition values; its
             # interior columns keep the row-group blooms above)
-            self._write_bloom_sidecar(d, {c: bloom[c] for c in bloom_cols})
+            self._write_bloom_sidecar(
+                self._scan(_written(df, []), [d], row_ids=True),
+                d,
+                {c: bloom[c] for c in bloom_cols},
+            )
         return {"path": d, "files": _collect_file_stats(d)}
 
     @classmethod
@@ -1448,7 +1534,19 @@ class LakeTable:
                     "actual partition columns"
                 )
         entry = {"path": path, "live_files": sorted(stats), "files": stats}
-        t._commit({"version": 0}, [entry], "convert", partition_by=pcols)
+        # the one schema inference in a table's life: foreign files come
+        # with no recorded schema, so the manifest adopts what a merged-
+        # schema scan of them infers; every later scan passes it
+        inferred = (
+            spark.read.option("mergeSchema", "true")
+            .option("basePath", path)
+            .parquet(*[os.path.join(path, rel) for rel in entry["live_files"]])
+            .schema
+        )
+        t._commit(
+            {"version": 0}, [entry], "convert",
+            partition_by=pcols, schema=_schema_json(inferred, pcols),
+        )
         return t
 
     def overwrite(
@@ -1458,8 +1556,8 @@ class LakeTable:
         txn: dict | None = None,
         constraints: dict[str, str] | None = None,
     ) -> int:
-        """K1/K4: full overwrite (schema evolution implicit — the new
-        version's parquet schema wins). Never auto-rebases: replace-all
+        """K1/K4: full overwrite (schema evolution implicit — the written
+        frame's schema becomes the table's). Never auto-rebases: replace-all
         semantics racing any other writer must surface.
 
         ``constraints`` sets the table's CHECK constraints in the SAME
@@ -1476,14 +1574,17 @@ class LakeTable:
         # the written bytes, immune to non-deterministic inputs); explicit
         # same-commit constraints merge into one aggregate pass
         self._enforce_constraints_on_entry(
-            entry, {**prior.get("constraints", {}), **(constraints or {})}
+            entry,
+            _written(df, partition_by),
+            {**prior.get("constraints", {}), **(constraints or {})},
         )
         changes = self._identity_changes(prior, [entry["path"]])
         if constraints is not None:
             changes["constraints"] = constraints
         return self._commit(
             prior, [entry], "overwrite", txn=txn,
-            partition_by=partition_by, deletion_vectors=[], **changes,
+            partition_by=partition_by, deletion_vectors=[],
+            schema=_schema_json(df.schema, partition_by), **changes,
         )
 
     def append(
@@ -1498,18 +1599,18 @@ class LakeTable:
         commit it auto-rebases onto the new head (Delta semantics — blind
         appends read nothing, so they conflict with nothing).
 
-        ``schema_mode``: ``"merge"`` (default here — reads use
-        mergeSchema/unionByName, so evolution is implicit) or
+        ``schema_mode``: ``"merge"`` (default here — the recorded schema
+        widens to the new columns, so evolution is implicit) or
         ``"strict"`` (Delta's default posture: reject new columns and
-        type changes before anything is written; schema comparison reads
-        parquet footers only, never data)."""
+        type changes before anything is written; the comparison reads
+        the recorded schema, never data)."""
         prior = self._head()
         if not prior["version"]:
             return self.overwrite(df, partition_by, txn=txn)
         if schema_mode == "strict":
             current = {
                 f.name: f.dataType.simpleString()
-                for f in self.read(version=prior["version"]).schema.fields
+                for f in self.read(_snapshot=prior).schema.fields
             }
             incoming = {f.name: f.dataType.simpleString() for f in df.schema.fields}
             extra = sorted(set(incoming) - set(current))
@@ -1537,7 +1638,9 @@ class LakeTable:
         df = self._apply_generated(df, prior)
         df = self._apply_identity(df, prior)
         entry = self._write_dir_entry(df, prior)
-        self._enforce_constraints_on_entry(entry, prior.get("constraints", {}))
+        self._enforce_constraints_on_entry(
+            entry, _written(df, partition_by), prior.get("constraints", {})
+        )
         # Record the partitions this append wrote (filesystem walk of the
         # freshly-written dir — no extra Spark job) so OTHER writers'
         # disjointness checks see them; the append itself rebases blindly.
@@ -1553,6 +1656,7 @@ class LakeTable:
             touched=touched,
             txn=txn,
             blind=True,
+            written=df.schema,
             **self._identity_changes(prior, [entry["path"]]),
         )
         if prior.get("properties", {}).get("auto_compact"):
@@ -1594,9 +1698,9 @@ class LakeTable:
         Schema evolution (Delta ``withSchemaEvolution()`` semantics,
         SURVEY K4): updates may carry NEW columns — merged/inserted rows
         store them, untouched partitions/files pass through under their
-        old schema (never rewritten for a metadata change), and the read
-        path's mergeSchema/unionByName serves old rows with NULLs in the
-        new columns. Contract locked by
+        old schema (never rewritten for a metadata change), the recorded
+        schema widens to the new columns, and scans serve old rows with
+        NULLs in them. Contract locked by
         tests/test_lake_table.py::test_merge_schema_evolution_new_column.
 
         ``_delete_keys`` (internal, used by :meth:`apply_changes`): a
@@ -1622,7 +1726,7 @@ class LakeTable:
             # allocate — so carry target ids over by key first, then fill
             ident = prior["properties"]["identity"]
             icol = ident["col"]
-            tgt_ids = self.read(version=prior["version"]).select(
+            tgt_ids = self.read(_snapshot=prior).select(
                 *keys, F.col(icol).alias("__tgt_id")
             )
             if icol not in updates.columns:
@@ -1657,58 +1761,33 @@ class LakeTable:
                 f for f in inventory if _ranges_intersect(f[2], key_ranges)
             ]
             # exact touched-file check (Delta's matched-file join): scan
-            # only the candidates, key columns only, semi-join the updates
-            touched_paths: set[str] = set()
-            if candidates:
-                cand_paths = [os.path.join(d_, rel) for d_, rel, _ in candidates]
-                scan = _apply_column_mapping(
-                    self.spark.read.option("mergeSchema", "true").parquet(
-                        *cand_paths
-                    ),
-                    prior,
-                ).select(*keys, F.input_file_name().alias("__file"))
-                hit = (
-                    scan.join(key_frame, on=keys, how="left_semi")
-                    .select("__file")
-                    .distinct()
-                    .collect()
-                )
-                touched_paths = {_local_path(r["__file"]) for r in hit}
-            touched = [
-                f
-                for f in candidates
-                if os.path.abspath(os.path.join(f[0], f[1])) in touched_paths
-            ]
-            target = (
-                _apply_column_mapping(
-                    self.spark.read.option("mergeSchema", "true").parquet(
-                        *[os.path.join(d_, rel) for d_, rel, _ in touched]
-                    ),
-                    prior,
-                )
-                if touched
-                else self.read(version=prior["version"]).limit(0)
+            # only the candidates, semi-join the updates
+            touched = self._files_holding(
+                prior, candidates, lambda scan: scan.join(key_frame, on=keys, how="left_semi")
             )
+            target = self._scan(prior, [_files_entry(touched)] if touched else [])
             merged = merge_upsert(target, updates, keys)
             if _delete_keys is not None:
                 merged = merged.join(_delete_keys, on=keys, how="left_anti")
             entry = self._write_dir_entry(merged, prior)
             untouched = [f for f in inventory if f not in touched]
             # a CDC batch can delete every touched row: a fileless dir
-            # must not enter the manifest (parquet schema inference fails)
+            # adds nothing to any read, so it stays out of the manifest
+            # and vacuum reclaims it
             new_entries = [entry] if entry["files"] else []
             v = self._commit(
                 prior,
                 self._surviving_file_entries(prior, untouched) + new_entries,
                 _operation,
                 txn=txn,
+                written=merged.schema,
                 **self._identity_changes(prior, [entry["path"]]),
             )
             if prior.get("properties", {}).get("auto_compact"):
                 self._auto_compact()
             return v
 
-        target = self.read(version=prior["version"])
+        target = self.read(_snapshot=prior)
         # Touched partitions: the updates' own partitions plus partitions
         # of target rows whose keys match (key-column-pruned semi-join —
         # one slim shuffle), so a key that moved partitions is rewritten.
@@ -1725,12 +1804,8 @@ class LakeTable:
         d = self._new_data_dir(prior)
         merged.write.mode("overwrite").partitionBy(*pcols).parquet(d)
         # a CDC batch can delete every row of the touched partitions: a
-        # fileless dir must not enter the manifest (same hazard as DELETE)
-        if not any(
-            name.endswith(".parquet")
-            for _b, _d2, files in os.walk(d)
-            for name in files
-        ):
+        # fileless dir stays out of the manifest (as in DELETE)
+        if not _has_parquet(d):
             d = None
 
         # Prior dirs pass through with the touched partitions masked out;
@@ -1756,6 +1831,7 @@ class LakeTable:
             touched=touched_rows,
             delta_check=_no_key_overlap,
             txn=txn,
+            written=merged.schema,
             **self._identity_changes(prior, [d] if d else []),
         )
         if prior.get("properties", {}).get("auto_compact"):
@@ -1870,7 +1946,7 @@ class LakeTable:
         # absorbed into intervals computed without it
         prior = self._head()
         if prior["version"]:
-            tgt = self.read(version=prior["version"])
+            tgt = self.read(_snapshot=prior)
             affected = tgt.join(
                 events.select(*keys).distinct(), on=keys, how="left_semi"
             )
@@ -1912,35 +1988,21 @@ class LakeTable:
             _prior=prior,
         )
 
-    def _touched_files_by_cond(self, prior: dict, cond) -> tuple[list, list]:
-        """(touched, untouched) file inventory split for an unpartitioned
-        snapshot: a file is touched iff it physically contains a row where
-        ``cond`` is TRUE (one column-pruned scan — parquet footer pushdown
-        does the skipping — then a bounded distinct-file collect, exactly
-        Delta's find-touched-files scan)."""
+    def _files_holding(self, prior: dict, files: list[tuple], rows) -> list[tuple]:
+        """The ``files`` (inventory tuples of unpartitioned snapshot
+        ``prior``) holding a row of ``rows(scan)`` — Delta's
+        find-touched-files scan: one column-pruned scan of ``files``
+        (parquet footer pushdown does the skipping), then a bounded
+        distinct-file collect."""
         import pyspark.sql.functions as F
 
-        inventory = self._file_inventory(prior)
-        if not inventory:
-            return [], []
-        paths = [os.path.join(d_, rel) for d_, rel, _ in inventory]
-        scan = _apply_column_mapping(
-            self.spark.read.option("mergeSchema", "true").parquet(*paths), prior
-        ).withColumn("__file", F.input_file_name())
-        hit = (
-            scan.filter(F.coalesce(cond, F.lit(False)))
-            .select("__file")
-            .distinct()
-            .collect()
-        )
-        touched_paths = {_local_path(r["__file"]) for r in hit}
-        touched = [
-            f
-            for f in inventory
-            if os.path.abspath(os.path.join(f[0], f[1])) in touched_paths
-        ]
-        untouched = [f for f in inventory if f not in touched]
-        return touched, untouched
+        if not files:
+            return []
+        scan = self._scan(prior, [_files_entry(files)])
+        hit = rows(scan.withColumn("__file", F.input_file_name()))
+        hit = hit.select("__file").distinct().collect()
+        paths = {_local_path(r["__file"]) for r in hit}
+        return [f for f in files if os.path.abspath(os.path.join(f[0], f[1])) in paths]
 
     @staticmethod
     def _cond_delta_check(cond):
@@ -1989,25 +2051,26 @@ class LakeTable:
         # silently drop them (3-valued logic), so coalesce NULL -> FALSE.
         keep_pred = ~F.coalesce(cond, F.lit(False))
         if not pcols:
-            touched, untouched = self._touched_files_by_cond(prior, cond)
+            inventory = self._file_inventory(prior)
+            touched = self._files_holding(
+                prior, inventory, lambda scan: scan.filter(F.coalesce(cond, F.lit(False)))
+            )
+            untouched = [f for f in inventory if f not in touched]
             if not touched:
                 return prior["version"]  # no-op delete
-            kept = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(*[os.path.join(d_, rel) for d_, rel, _ in touched])
-                .filter(keep_pred)
-            )
+            kept = self._scan(prior, [_files_entry(touched)]).filter(keep_pred)
             entry = self._write_dir_entry(kept, prior)
-            # every touched row deleted → the rewrite dir is empty;
-            # referencing it would break schema inference on later reads
+            # every touched row deleted → the rewrite dir is empty and
+            # stays out of the manifest (vacuum reclaims it)
             new_entries = [entry] if entry["files"] else []
             return self._commit(
                 prior,
                 self._surviving_file_entries(prior, untouched) + new_entries,
                 "delete",
+                written=kept.schema,
             )
 
-        target = self.read(version=prior["version"])
+        target = self.read(_snapshot=prior)
         touched_rows = self._touched_partitions(target.filter(cond), pcols)
         if not touched_rows:
             return prior["version"]  # no-op delete: nothing matched
@@ -2015,19 +2078,18 @@ class LakeTable:
         d = self._new_data_dir(prior)
         kept.write.mode("overwrite").partitionBy(*pcols).parquet(d)
         # a DELETE can empty every touched partition: the dir then holds
-        # no parquet files and must not enter the manifest (filesystem
-        # check, no extra Spark job; the orphan dir is vacuum-reclaimable)
-        has_rows = any(
-            name.endswith(".parquet")
-            for _b, _d, files in os.walk(d)
-            for name in files
-        )
+        # no parquet files, adds nothing to any read and stays out of the
+        # manifest (filesystem check, no extra Spark job; the orphan dir
+        # is vacuum-reclaimable)
+        if not _has_parquet(d):
+            d = None
         return self._commit_rebasing(
             prior,
-            lambda head: self._carry_prior_dirs(head, touched_rows, d if has_rows else None),
+            lambda head: self._carry_prior_dirs(head, touched_rows, d),
             "delete",
             touched=touched_rows,
             delta_check=self._cond_delta_check(cond),
+            written=kept.schema,
         )
 
     def _reject_cow_with_dvs(self, prior: dict, operation: str) -> None:
@@ -2050,7 +2112,7 @@ class LakeTable:
         if not prior["data_dirs"]:
             return prior["version"]  # empty table: no-op
         doomed = (
-            self.read(version=prior["version"], _with_rowids=True)
+            self.read(_snapshot=prior, _with_rowids=True)
             .filter(F.coalesce(cond, F.lit(False)))
             .select("__file_path", "__row_index")
         )
@@ -2098,25 +2160,23 @@ class LakeTable:
 
         if not pcols:
             # file-pruned: rewrite only files containing matching rows
-            touched, untouched = self._touched_files_by_cond(prior, cond)
+            inventory = self._file_inventory(prior)
+            touched = self._files_holding(
+                prior, inventory, lambda scan: scan.filter(F.coalesce(cond, F.lit(False)))
+            )
+            untouched = [f for f in inventory if f not in touched]
             if not touched:
                 return prior["version"]
-            rewritten = apply(
-                _apply_column_mapping(
-                    self.spark.read.option("mergeSchema", "true").parquet(
-                        *[os.path.join(d_, rel) for d_, rel, _ in touched]
-                    ),
-                    prior,
-                )
-            )
+            rewritten = apply(self._scan(prior, [_files_entry(touched)]))
             self._enforce_constraints(rewritten, prior.get("constraints", {}))
             entry = self._write_dir_entry(rewritten, prior)
             return self._commit(
                 prior,
                 self._surviving_file_entries(prior, untouched) + [entry],
                 "update",
+                written=rewritten.schema,
             )
-        target = self.read(version=prior["version"])
+        target = self.read(_snapshot=prior)
         touched_rows = self._touched_partitions(target.filter(cond), pcols)
         if not touched_rows:
             return prior["version"]
@@ -2130,6 +2190,7 @@ class LakeTable:
             "update",
             touched=touched_rows,
             delta_check=self._cond_delta_check(cond),
+            written=rewritten.schema,
         )
 
     # ---------------- readers (S4 + time travel) ----------------
@@ -2153,77 +2214,70 @@ class LakeTable:
         version: int | None = None,
         as_of_timestamp: float | None = None,
         _with_rowids: bool = False,
+        _snapshot: dict | None = None,
     ) -> DataFrame:
+        """The snapshot at ``version`` (default: the head) or at
+        ``as_of_timestamp``: a new DataFrame per call, built with no Spark
+        job. ``_snapshot``: the manifest an operation already read."""
         if version is not None and as_of_timestamp is not None:
             raise ValueError("pass version OR as_of_timestamp, not both")
         if as_of_timestamp is not None:
             version = self.version_as_of(as_of_timestamp)
-        v = version if version is not None else self.current_version()
-        cached = self._read_cache.get((v, _with_rowids))
-        if cached is not None:
-            return cached
-        m = self._manifest(v)
+        m = _snapshot
+        if m is None:
+            m = self._manifest(version if version is not None else self.current_version())
         check_table_features(m, for_write=False, where=self.root)
-        entries = m["data_dirs"]
-        pcols = m["partition_by"]
-        dvs = m.get("deletion_vectors", [])
+        return self._scan(m, row_ids=_with_rowids)
+
+    def _scan(
+        self, manifest: dict, entries: list | None = None, *, row_ids: bool = False
+    ) -> DataFrame:
+        """The one reader of table data files: the rows of ``entries``
+        (default ``manifest``'s data dirs) as ``manifest``'s snapshot
+        serves them. Each entry is one parquet scan under the recorded
+        schema (no footer read, no Spark job) with ``basePath`` at its
+        dir, served under the logical names AS OF ``manifest`` (time
+        travel before a rename shows the old name, like Delta), masked
+        partitions filtered out; the scans are unioned (partitioned roots
+        cannot share one) and the manifest's deletion vectors anti-joined
+        on :data:`_ROW_ID`, which ``row_ids`` keeps."""
         import pyspark.sql.functions as F
 
-        if not entries:
-            # a DELETE removed every row: serve an empty frame with the
-            # schema of the most recent version that still had data
-            for pv in range(v - 1, 0, -1):
-                if self._manifest(pv)["data_dirs"]:
-                    return self.read(version=pv).limit(0)
-            raise ValueError(f"table {self.root} has no data in any version")
-        # one read per commit dir, unioned: multiple partitioned roots can't
-        # share a single scan (CONFLICTING_DIRECTORY_STRUCTURES) and schema
-        # evolution across commits needs unionByName anyway. Dict entries
-        # carry a partition exclusion mask (partitions superseded by a later
-        # MERGE) applied as a partition-pruning filter.
-        dfs = []
-        for e in entries:
-            if isinstance(e, dict) and e.get("live_files") is not None:
-                # file-pruned DML carried these files forward by name;
-                # basePath recovers hive partition columns when the entry
-                # points into a partitioned layout (converted tables)
-                paths = [os.path.join(e["path"], rel) for rel in e["live_files"]]
-                if not paths:
-                    continue
-                df = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .option("basePath", e["path"])
-                    .parquet(*paths)
-                )
-            else:
-                df = self.spark.read.option("mergeSchema", "true").parquet(_entry_path(e))
-            # logical schema (column mapping AS OF the version being read:
-            # time travel before a rename shows the old name, like Delta)
-            df = _apply_column_mapping(df, m)
-            if dvs or _with_rowids:
-                # stable row identity for merge-on-read DELETE (Delta
-                # deletion vectors): parquet-native, no data rewrite
+        schema = _recorded_schema(manifest, self.root)
+        pcols = manifest.get("partition_by", [])
+        dvs = manifest.get("deletion_vectors", [])
+        frames = []
+        for e in manifest["data_dirs"] if entries is None else entries:
+            path, excl, live = _entry_norm(e)
+            if live is not None and not live:
+                continue
+            paths = [path] if live is None else [os.path.join(path, r) for r in live]
+            df = self.spark.read.schema(schema).option("basePath", path).parquet(*paths)
+            if df.columns != schema.names:
+                # a scan lists partition columns last; the recorded order
+                # may hold columns added after them
+                df = df.select(*schema.names)
+            df = _apply_column_mapping(df, manifest)
+            if dvs or row_ids:
                 df = df.select(
                     "*",
-                    F.col("_metadata.file_path").alias("__file_path"),
-                    F.col("_metadata.row_index").alias("__row_index"),
+                    F.col("_metadata.file_path").alias(_ROW_ID[0]),
+                    F.col("_metadata.row_index").alias(_ROW_ID[1]),
                 )
-            excl = e.get("exclude") if isinstance(e, dict) else None
             if excl:
                 df = df.filter(~_partition_predicate(pcols, excl))
-            dfs.append(df)
-        out = dfs[0]
-        for other in dfs[1:]:
-            out = out.unionByName(other, allowMissingColumns=True)
+            frames.append(df)
+        if not frames:  # limit(0): plans as an empty local relation
+            return _apply_column_mapping(
+                self.spark.createDataFrame([], schema).limit(0), manifest
+            )
+        out = frames[0]
+        for other in frames[1:]:
+            out = out.unionByName(other)
         if dvs:
-            # left-anti on (file, row): the Delta merge-on-read scan shape.
-            # The ids were already attached per-entry above, so join and
-            # (unless the caller wants them) drop directly.
-            dv = self.spark.read.parquet(*dvs)
-            out = out.join(dv, on=["__file_path", "__row_index"], how="left_anti")
-            if not _with_rowids:
-                out = out.drop("__file_path", "__row_index")
-        self._read_cache[(v, _with_rowids)] = out
+            out = out.join(_read_dvs(self.spark, dvs), on=_ROW_ID, how="left_anti")
+            if not row_ids:
+                out = out.drop(*_ROW_ID)
         return out
 
     def changes(
@@ -2272,10 +2326,10 @@ class LakeTable:
             # footer stats can admit rows a deletion vector removed, and
             # the DV anti-join needs row ids from every surviving file —
             # serve the exact filtered read instead of file pruning
-            return bound_filter(self.read(version=v))
+            return bound_filter(self.read(_snapshot=manifest))
         pcols = manifest["partition_by"]
         if pcols:
-            return self._read_skipping_partitioned(manifest, bounds, bound_filter, v)
+            return self._read_skipping_partitioned(manifest, bounds, bound_filter)
         inventory = self._file_inventory(manifest)
         keep = [
             (d, rel)
@@ -2311,15 +2365,9 @@ class LakeTable:
                     continue  # proven absent from this file
                 kept.append((d, rel))
             keep = kept
-        keep = [os.path.join(d, rel) for d, rel in keep]
-        if not keep:
-            return bound_filter(self.read(version=v)).limit(0)
-        df = _apply_column_mapping(
-            self.spark.read.option("mergeSchema", "true").parquet(*keep), manifest
-        )
-        return bound_filter(df)
+        return bound_filter(self._scan(manifest, [_files_entry(keep)] if keep else []))
 
-    def _read_skipping_partitioned(self, manifest, bounds, bound_filter, v):
+    def _read_skipping_partitioned(self, manifest, bounds, bound_filter):
         """Hybrid skipping for partitioned snapshots: hive path values
         prune on partition-column EQUALITY bounds (string compare of the
         encoded value — range bounds on partition columns stay filter-only
@@ -2339,41 +2387,20 @@ class LakeTable:
             if c in pcols and lo is not None and lo == hi
         }
 
-        dfs = []
+        entries = []
         for e in manifest["data_dirs"]:
-            dpath = _entry_path(e)
             stats = e.get("files") if isinstance(e, dict) else None
-            excl = e.get("exclude") if isinstance(e, dict) else None
-            if not stats:
-                df = self.spark.read.option("mergeSchema", "true").parquet(dpath)
-            else:
+            if stats:
                 keep = []
                 for rel, fs in stats.items():
                     pvals = _hive_values(rel)
-                    if any(
-                        c in pvals and pvals[c] != val for c, val in eq_bounds.items()
+                    if _ranges_intersect(fs, bounds) and all(
+                        pvals.get(c, val) == val for c, val in eq_bounds.items()
                     ):
-                        continue
-                    if not _ranges_intersect(fs, bounds):
-                        continue
-                    keep.append(os.path.join(dpath, rel))
-                if not keep:
-                    continue
-                df = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .option("basePath", dpath)
-                    .parquet(*keep)
-                )
-            df = _apply_column_mapping(df, manifest)
-            if excl:
-                df = df.filter(~_partition_predicate(pcols, excl))
-            dfs.append(df)
-        if not dfs:
-            return bound_filter(self.read(version=v)).limit(0)
-        out = dfs[0]
-        for other in dfs[1:]:
-            out = out.unionByName(other, allowMissingColumns=True)
-        return bound_filter(out)
+                        keep.append(rel)
+                e = {"path": e["path"], "live_files": keep, "exclude": e.get("exclude") or []}
+            entries.append(e)
+        return bound_filter(self._scan(manifest, entries))
 
     def register(self, name: str, version: int | None = None) -> None:
         """K7 catalog registration (CREATE TABLE ... USING ... LOCATION)."""
@@ -2494,7 +2521,7 @@ class LakeTable:
                 touched = [dict(k) for k, n in sorted(counts.items()) if n >= minf]
                 if not touched:
                     return None
-                df = self.read(version=prior["version"]).filter(
+                df = self.read(_snapshot=prior).filter(
                     _partition_predicate(pcols, touched)
                 )
                 # one output file per partition: rows hash to their
@@ -2503,7 +2530,7 @@ class LakeTable:
                 entries = self._carry_prior_dirs(prior, touched, entry)
                 return self._commit(
                     prior, entries, "auto-compact", touched=touched,
-                    deletion_vectors=[],
+                    deletion_vectors=[], written=df.schema,
                 )
             inv = self._file_inventory(prior)
             sized = [
@@ -2516,16 +2543,15 @@ class LakeTable:
             nout = max(1, math.ceil(sum(x[3] for x in small) / target_bytes))
             if nout >= len(small):
                 return None
-            df = self.spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(d, rel) for d, rel, _, _ in small]
-            )
+            df = self._scan(prior, [_files_entry(small)])
             entry = self._write_dir_entry(df.coalesce(nout), prior)
             untouched = [
                 (d, rel, st) for d, rel, st, sz in sized if sz >= target_bytes
             ]
             entries = self._surviving_file_entries(prior, untouched) + [entry]
             return self._commit(
-                prior, entries, "auto-compact", deletion_vectors=[]
+                prior, entries, "auto-compact", deletion_vectors=[],
+                written=df.schema,
             )
         except ConcurrentWriteError:
             return None
@@ -2626,7 +2652,7 @@ class LakeTable:
                 "compact(where=...): partition-scoped compaction needs a "
                 "partitioned table; use plain compact() instead"
             )
-        target = self.read(version=prior["version"])
+        target = self.read(_snapshot=prior)
         if where is not None:
             touched_rows = self._touched_partitions(target.filter(where), pcols)
             if not touched_rows:
@@ -2641,15 +2667,17 @@ class LakeTable:
                 self._carry_prior_dirs(prior, touched_rows, d),
                 "compact",
                 touched=touched_rows,
+                written=df.schema,
             )
         if target_partitions:
             target = target.repartition(target_partitions, *(pcols or []))
         entry = self._write_dir_entry(target, prior)
-        # DVs may have deleted every row: a fileless dir must not enter
-        # the manifest (same hazard the cow delete path guards)
+        # DVs may have deleted every row: a fileless dir stays out of the
+        # manifest (as the cow delete path does)
         return self._commit(
             prior, [entry] if entry["files"] else [], "compact",
             deletion_vectors=[],  # rewrite via read() materializes DVs (Delta PURGE)
+            written=target.schema,
         )
 
     def optimize(self, zorder_by: list[str], target_partitions: int = 8, bits: int = 8) -> int:
@@ -2670,7 +2698,7 @@ class LakeTable:
         from pyspark.sql import functions as F
 
         prior = self._head("optimize")
-        df = self.read(version=prior["version"])
+        df = self.read(_snapshot=prior)
         n_bins = 1 << bits
         bounds = df.agg(
             *[F.min(c).alias(f"{c}_min") for c in zorder_by],
@@ -2701,7 +2729,8 @@ class LakeTable:
         )
         entry = self._write_dir_entry(clustered, prior)
         return self._commit(
-            prior, [entry], "optimize-zorder", deletion_vectors=[]
+            prior, [entry], "optimize-zorder", deletion_vectors=[],
+            written=clustered.schema,
         )
 
     def restore(self, version: int) -> int:
@@ -2779,11 +2808,12 @@ class LakeTable:
         os.makedirs(os.path.join(dest_root, "data"), exist_ok=True)
         new = {"version": 0}
         if deep:
-            entry = dest._write_dir_entry(
-                self.read(version=m["version"]), new, m["partition_by"]
-            )
+            snap = self.read(_snapshot=m)
+            entry = dest._write_dir_entry(snap, new, m["partition_by"])
             dest._commit(
                 new, [entry] if entry["files"] else [], "clone-deep",
+                # the copies hold the logical names: the schema widens to them
+                written=snap.schema,
                 # deletion vectors were applied by read(): rows already gone
                 **{**_metadata(m), "deletion_vectors": []},
             )

@@ -106,3 +106,20 @@ def test_cdf_restore_emits_reverting_changes(spark, tmp_path):
     t.restore(1)  # v3: id=2 disappears again
 
     assert _feed(t, 3, 3) == [(3, "delete", 2, 2.0)]
+
+
+def test_cdf_dv_delete_after_rename_serves_logical_name(spark, tmp_path):
+    """The change feed of a merge-on-read DELETE recovers the deleted
+    rows from the files the deletion vector names; after a rename they
+    carry the logical name, like every other slice of the feed."""
+    t = LakeTable(spark, str(tmp_path / "rdv"))
+    t.overwrite(
+        spark.createDataFrame([(1, 10.0), (2, 20.0)], "k int, amt double").coalesce(1)
+    )
+    t.rename_column("amt", "revenue")
+    v = t.delete("revenue > 15", mode="merge-on-read")
+    feed = t.changes(v)
+    assert "amt" not in feed.columns and "revenue" in feed.columns
+    assert [(r.k, r.revenue, r._change_type) for r in feed.collect()] == [
+        (2, 20.0, "delete")
+    ]

@@ -6,6 +6,7 @@ exactly one manifest file per operation."""
 
 import builtins
 import os
+import time
 
 import pytest
 
@@ -185,6 +186,39 @@ def test_warm_handle_dml_opens_one_manifest(spark, tmp_path, monkeypatch):
             got[(layout, name)] = (opens["json"], opens["latest"])
     over_budget = {k: v for k, v in got.items() if v[0] != 1 or v[1] > 2}
     assert not over_budget, f"(v*.json, _LATEST) opens per op: {got}"
+
+
+def test_read_of_many_dirs_launches_no_spark_job(spark, tmp_path):
+    """Building read() of a version spanning several data dirs launches
+    no Spark job, partitioned or not: every scan passes the schema the
+    manifest records instead of inferring it from parquet footers (one
+    job per dir)."""
+    sc = spark.sparkContext
+    launched = {}
+    for layout, pby in (("unpartitioned", None), ("partitioned", ["part"])):
+        t = LakeTable(spark, str(tmp_path / layout))
+        t.overwrite(_df(spark, [(1, "a", "x"), (2, "b", "y")]), partition_by=pby)
+        t.append(_df(spark, [(3, "c", "x")]))
+        t.append(_df(spark, [(4, "d", "y")]))
+        assert len(t._manifest(t.current_version())["data_dirs"]) == 3
+        group, probe = f"lake-read-budget-{layout}", f"lake-read-probe-{layout}"
+        try:
+            sc.setJobGroup(group, group)
+            df = LakeTable(spark, t.root).read()
+            # a probe job after it: once the (async) status store reports
+            # the probe, it has seen every job the read launched
+            sc.setJobGroup(probe, probe)
+            sc.parallelize([1], 1).count()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        deadline = time.time() + 30
+        while not sc.statusTracker().getJobIdsForGroup(probe):
+            assert time.time() < deadline, f"job of {probe} never reported"
+            time.sleep(0.05)
+        launched[layout] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert sorted(r.k for r in df.collect()) == [1, 2, 3, 4]
+    assert launched == {"unpartitioned": 0, "partitioned": 0}
 
 
 def test_apply_changes_scd2_commits_on_the_head_it_read(spark, tmp_path):

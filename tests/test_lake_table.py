@@ -1739,6 +1739,54 @@ def test_dml_on_renamed_key_column(spark, tmp_path):
     }
 
 
+def test_cow_delete_on_renamed_column_unpartitioned(spark, tmp_path):
+    """A copy-on-write DELETE on an unpartitioned table rewrites the
+    touched files through the same scan reads use: the condition names
+    the logical column, and the kept rows are served (and rewritten)
+    under it, not under the physical name the files store."""
+    t = LakeTable(spark, str(tmp_path / "rd"))
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, 10.0), (2, 20.0), (3, 30.0)], "k int, amt double"
+        ).coalesce(1)
+    )
+    t.rename_column("amt", "revenue")
+    t.delete("revenue > 15")
+    got = t.read()
+    assert got.columns == ["k", "revenue"]
+    assert sorted((r.k, r.revenue) for r in got.collect()) == [(1, 10.0)]
+
+
+def test_recorded_schema_widens_numeric_types_only(spark, tmp_path):
+    """A write under a wider numeric type widens the recorded schema, and
+    older files scan up to it; any other type change is refused at the
+    write instead of failing every later read."""
+    from ecommerce_lakehouse_spark.lake.table import SchemaMismatchError
+
+    t = LakeTable(spark, str(tmp_path / "wt"))
+    t.overwrite(spark.createDataFrame([(1, 1)], "k int, n int"))
+    t.append(spark.createDataFrame([(2, 2**40)], "k int, n long"))
+    got = t.read()
+    assert dict(got.dtypes)["n"] == "bigint"
+    assert sorted(r.n for r in got.collect()) == [1, 2**40]
+    with pytest.raises(SchemaMismatchError, match="changes type"):
+        t.append(spark.createDataFrame([(3, "x")], "k int, n string"))
+    assert t.current_version() == 2
+
+
+def test_reads_of_one_version_self_join(spark, tmp_path):
+    """Each read() is a fresh DataFrame: two reads of one version on one
+    handle join on a Column condition like two reads on two handles,
+    instead of sharing attribute ids (an ambiguous self-join)."""
+    root = str(tmp_path / "sj")
+    t = LakeTable(spark, root)
+    t.overwrite(spark.createDataFrame([(1, 1.0), (2, 2.0), (3, 3.0)], "k int, amt double"))
+    a, b = t.read(), t.read()
+    assert a.join(b, a["amt"] < b["amt"]).count() == 3
+    fresh = LakeTable(spark, root).read()
+    assert a.join(fresh, a["amt"] < fresh["amt"]).count() == 3
+
+
 def test_read_skipping_on_renamed_column(spark, tmp_path):
     """read_skipping with bounds on a renamed column: old-name footer
     stats cannot prove disjointness for the logical name (file kept),
