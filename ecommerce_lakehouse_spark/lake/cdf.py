@@ -4,7 +4,7 @@ Delta materializes CDF as change files written alongside each commit;
 this implementation derives the same row-level feed at READ time from
 the manifests, while preserving Delta's cost profile: for each commit it
 reads only the slices that commit touched (new data dirs, dirs or files
-it dropped, partitions it newly masked), NEVER two full snapshots.
+it dropped), NEVER two full snapshots.
 Logical changes fall out of multiset difference — rows that a rewrite
 carried through unchanged appear in both the pre and post slice and
 cancel in ``exceptAll``, so a copy-on-write rewrite emits exactly the
@@ -20,8 +20,8 @@ multiset); they are skipped by name so the feed also never pays for
 reading a full physical rewrite twice (Delta: ``dataChange=false``).
 
 Scale: per commit, the work is bounded by the data that commit touched —
-a daily partitioned MERGE on a 100 TB table feeds only that day's
-partitions through one ``exceptAll`` (a hash-partition shuffle on the
+a daily MERGE on a 100 TB table feeds only the files it rewrote and the
+files it wrote through one aggregation (a hash-partition shuffle on the
 full row), matching Delta's CDF read cost up to the one rewrite factor.
 """
 
@@ -35,8 +35,6 @@ from ecommerce_lakehouse_spark.lake.table import (
     _PHYSICAL_OPS,
     _ROW_ID,
     LakeTable,
-    _entry_norm,
-    _partition_predicate,
     _read_dvs,
     check_table_features,
 )
@@ -70,39 +68,17 @@ def _under_head(snap: dict, head: dict) -> dict:
 
 
 def _read_slice(
-    table: LakeTable,
-    snap: dict,
-    path: str,
-    files: list[str] | None,
-    minus_mask: list[dict],
-    only_mask: list[dict] | None = None,
+    table: LakeTable, snap: dict, path: str, files: list[str] | None
 ) -> DataFrame | None:
     """Rows of one data dir of snapshot ``snap`` restricted to ``files``
-    (None = all), outside ``minus_mask`` partitions and (when given)
-    inside ``only_mask`` ones, minus the rows ``snap``'s deletion vectors
-    name — a slice must reflect what its snapshot READ, or rows a
-    merge-on-read DELETE already removed would re-surface as feed
-    deletes on the next rewrite."""
+    (None = all), minus the rows ``snap``'s deletion vectors name — a
+    slice must reflect what its snapshot READ, or rows a merge-on-read
+    DELETE already removed would re-surface as feed deletes on the next
+    rewrite."""
     if files is not None and not files:
         return None
-    entry = {
-        "path": path,
-        "live_files": None if files is None else sorted(files),
-        "exclude": minus_mask,
-    }
-    df = table._scan(snap, [entry])
-    if only_mask is not None:
-        df = df.filter(_partition_predicate(snap["partition_by"], only_mask))
-    return df
-
-
-def _mask_minus(a: list[dict], b: list[dict]) -> list[dict]:
-    bset = {tuple(sorted((k, str(v)) for k, v in row.items())) for row in b}
-    return [
-        row
-        for row in a
-        if tuple(sorted((k, str(v)) for k, v in row.items())) not in bset
-    ]
+    entry = {"path": path, "live_files": None if files is None else sorted(files)}
+    return table._scan(snap, [entry])
 
 
 def _union(frames: list[DataFrame]) -> DataFrame | None:
@@ -140,28 +116,18 @@ def _version_slices(
     never visible)."""
     snap_p = _under_head(m_prev, head) if m_prev else None
     snap_c = _under_head(m_cur, head)
-    prev = {p: (excl, live) for p, excl, live in map(_entry_norm, m_prev["data_dirs"] if m_prev else [])}
-    cur = {p: (excl, live) for p, excl, live in map(_entry_norm, m_cur["data_dirs"])}
+    prev = {e["path"]: e.get("live_files") for e in (m_prev["data_dirs"] if m_prev else [])}
+    cur = {e["path"]: e.get("live_files") for e in m_cur["data_dirs"]}
     dvs_p = m_prev.get("deletion_vectors", []) if m_prev else []
     dvs_c = m_cur.get("deletion_vectors", [])
 
     removed: list[DataFrame] = []
     added: list[DataFrame] = []
-    for path, (excl_p, live_p) in prev.items():
+    for path, live_p in prev.items():
         if path not in cur:
-            removed.append(_read_slice(table, snap_p, path, live_p, excl_p))
+            removed.append(_read_slice(table, snap_p, path, live_p))
             continue
-        excl_c, live_c = cur[path]
-        new_excl = _mask_minus(excl_c, excl_p)
-        if new_excl:
-            removed.append(
-                _read_slice(table, snap_p, path, live_p, excl_p, only_mask=new_excl)
-            )
-        un_excl = _mask_minus(excl_p, excl_c)
-        if un_excl:  # restore() can re-expose masked partitions
-            added.append(
-                _read_slice(table, snap_c, path, live_c, excl_c, only_mask=un_excl)
-            )
+        live_c = cur[path]
         if live_p != live_c:
             all_files = (
                 None
@@ -172,12 +138,12 @@ def _version_slices(
             cf = set(live_c) if live_c is not None else all_files
             dropped, gained = pf - cf, cf - pf
             if dropped:
-                removed.append(_read_slice(table, snap_p, path, dropped, excl_p))
+                removed.append(_read_slice(table, snap_p, path, dropped))
             if gained:
-                added.append(_read_slice(table, snap_c, path, gained, excl_c))
-    for path, (excl_c, live_c) in cur.items():
+                added.append(_read_slice(table, snap_c, path, gained))
+    for path, live_c in cur.items():
         if path not in prev:
-            added.append(_read_slice(table, snap_c, path, live_c, excl_c))
+            added.append(_read_slice(table, snap_c, path, live_c))
 
     # merge-on-read DELETE (and its rollback): rows appear/vanish with no
     # file change — deletion vectors name them by (file, row_index). Read
@@ -193,7 +159,7 @@ def _version_slices(
         # path is an absolute percent-encoded URI; manifest paths may be
         # relative). A DV file outside the snapshot's dirs contributes no
         # rows to it.
-        owner_by_abs = {os.path.abspath(e[0]): e[0] for e in map(_entry_norm, snap["data_dirs"])}
+        owner_by_abs = {os.path.abspath(e["path"]): e["path"] for e in snap["data_dirs"]}
         by_dir: dict[str, list[str]] = {}
         for f in files:
             local = os.path.abspath(unquote(urlparse(f).path))

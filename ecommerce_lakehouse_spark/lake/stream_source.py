@@ -51,13 +51,10 @@ from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPart
 
 from ecommerce_lakehouse_spark.lake.table import (
     _PHYSICAL_OPS,
-    _entry_norm,
-    _entry_path,
     _head_version,
     _hive_values,
     _read_manifest,
     _recorded_schema,
-    _row_canon,
     check_table_features,
 )
 
@@ -78,18 +75,14 @@ def _parquet_files(d: str) -> list[str]:
     return sorted(out)
 
 
-def _live_files(entry) -> list[tuple[str, str]]:
-    """(dir, rel) of the files a manifest entry actually exposes:
-    honors ``live_files`` subsets (file-pruned DML) and skips files in
-    partitions behind the entry's ``exclude`` mask — the same visibility
-    LakeTable.read() enforces, so clones/restored snapshots stream the
-    rows the table reads, not the raw dir contents."""
-    path, excl, live = _entry_norm(entry)
-    rels = sorted(live) if live is not None else _parquet_files(path)
-    if excl:
-        dead = {_row_canon(row) for row in excl}
-        rels = [r for r in rels if _row_canon(_hive_values(r)) not in dead]
-    return [(path, r) for r in rels]
+def _live_files(entry: dict) -> list[tuple[str, str]]:
+    """(dir, rel) of the files a manifest entry actually exposes: its
+    ``live_files`` (copy-on-write DML) when listed, else the whole dir —
+    the same visibility LakeTable.read() enforces, so clones/restored
+    snapshots stream the rows the table reads, not the raw dir contents."""
+    live = entry.get("live_files")
+    rels = sorted(live) if live is not None else _parquet_files(entry["path"])
+    return [(entry["path"], r) for r in rels]
 
 
 def _snapshot_arrow_schema(root: str):
@@ -109,27 +102,24 @@ def _snapshot_arrow_schema(root: str):
 def _carryover_visibility_changes(m_prev: dict | None, m: dict) -> list[str]:
     """Row-visibility changes among data dirs CARRIED OVER from the
     previous manifest — changes with no new files for a source to emit:
-    a partition exclude-mask grow (a DELETE emptied whole partitions), a
-    mask shrink (RESTORE re-exposed them), a ``live_files`` change
-    (file-pruned DML), or a dir dropped from the manifest entirely.
-    Without this check a mask-only data commit would fall through the
-    ``no new entries`` skip and silently vanish from the stream
-    (contradicting the module contract and Delta's ignoreDeletes
-    semantics). Row-level detail for such commits lives in the batch
-    diff, lake/cdf.py."""
+    a ``live_files`` change (copy-on-write DML dropped files, RESTORE
+    brought them back) or a dir dropped from the manifest entirely.
+    Without this check such a data commit (e.g. a DELETE that emptied
+    every file it touched) would fall through the ``no new entries``
+    skip and silently vanish from the stream (contradicting the module
+    contract and Delta's ignoreDeletes semantics). Row-level detail for
+    such commits lives in the batch diff, lake/cdf.py."""
     if m_prev is None:
         return []
-    prev = {p: (e, l) for p, e, l in map(_entry_norm, m_prev["data_dirs"])}
-    cur = {p: (e, l) for p, e, l in map(_entry_norm, m["data_dirs"])}
+    prev = {e["path"]: e.get("live_files") for e in m_prev["data_dirs"]}
+    cur = {e["path"]: e.get("live_files") for e in m["data_dirs"]}
     changes = []
-    for p, (ep, lp) in prev.items():
+    for p, lp in prev.items():
         if p not in cur:
             changes.append(f"data dir dropped: {p}")
             continue
-        ec, lc = cur[p]
-        if {_row_canon(r) for r in ep} != {_row_canon(r) for r in ec}:
-            changes.append(f"partition exclude mask changed: {p}")
-        elif (lp is None) != (lc is None) or (
+        lc = cur[p]
+        if (lp is None) != (lc is None) or (
             lp is not None and sorted(lp) != sorted(lc)
         ):
             changes.append(f"live_files changed: {p}")
@@ -240,10 +230,10 @@ class LakeTableStreamReader(DataSourceStreamReader):
                     "renamed columns — use batch changes() or read()"
                 )
             prev_dirs = (
-                {_entry_path(e) for e in m_prev["data_dirs"]} if m_prev else set()
+                {e["path"] for e in m_prev["data_dirs"]} if m_prev else set()
             )
             new_entries = [
-                e for e in m["data_dirs"] if _entry_path(e) not in prev_dirs
+                e for e in m["data_dirs"] if e["path"] not in prev_dirs
             ]
             op = m.get("operation", "")
             prev_dvs = set(m_prev.get("deletion_vectors", [])) if m_prev else set()
@@ -260,10 +250,10 @@ class LakeTableStreamReader(DataSourceStreamReader):
                         "or use the batch LakeTable.changes() API."
                     )
             if op not in _PHYSICAL_OPS and not new_entries:
-                # mask-only / file-list-only data commit: rows appeared or
-                # disappeared with no new dir to emit (e.g. a partitioned
-                # DELETE that emptied every touched partition, or a RESTORE
-                # that only flipped masks)
+                # file-list-only data commit: rows appeared or
+                # disappeared with no new dir to emit (e.g. a DELETE that
+                # emptied every file it touched, or a RESTORE that only
+                # re-listed files)
                 changed = _carryover_visibility_changes(m_prev, m)
                 if changed and (not self._ignore_changes or self._cdf):
                     raise ValueError(

@@ -11,6 +11,16 @@ Layout:
       _manifest/_LATEST               (roll-forward cache of the head)
       data/v00000001-<uuid>/ ... parquet (optionally partitioned subdirs)
 
+A manifest lists its data dirs as entries ``{path, files, live_files?}``:
+``files`` holds each file's footer min/max stats keyed by its
+hive-relative path (``col=value/part-....parquet`` on a partitioned
+table), and ``live_files``, when present, names the files of the dir the
+snapshot still serves. Together with the deletion vectors it is the one
+record of which rows are live, in both layouts — a partition value is
+only a path segment of a file. Copy-on-write DML finds the files it
+touches, rewrites them into a new dir and commits the rest by name
+(:meth:`LakeTable._rewrite_touched`).
+
 Each operation reads the head manifest ONCE and commits against it (the
 Delta snapshot): it writes a fresh, uniquely-named data directory, then
 publishes the next version's manifest with an atomic ``os.link`` — the
@@ -59,8 +69,8 @@ class ConcurrentWriteError(RuntimeError):
     number cannot both win. Logical conflict resolution
     (what delta-spark's commit protocol adds on top) is implemented for
     the common cases: blind appends rebase over any winner, and
-    partition-pruned merge/delete/update rebase automatically when every
-    intervening winner's touched partitions are disjoint from theirs AND
+    merge/delete/update on a partitioned table rebase automatically when
+    every intervening winner's touched partitions are disjoint from theirs AND
     the winner's newly-added data cannot affect this operation's read set
     (checked by scanning only the winners' delta dirs). Overlapping
     writers — and full-table rewrites (overwrite/compact/optimize) racing
@@ -128,25 +138,6 @@ def check_table_features(manifest: dict, *, for_write: bool, where: str) -> None
             f"(manifest v{manifest.get('version')}); upgrade the engine "
             "or use a client that supports them"
         )
-
-
-def _part_key(v):
-    """JSON-safe canonical form of a partition value (dates/timestamps
-    become strings; comparison happens through a string cast on read)."""
-    if v is None or isinstance(v, (int, bool)):
-        return v
-    return str(v)
-
-
-def _entry_path(e) -> str:
-    return e["path"] if isinstance(e, dict) else e
-
-
-def _entry_norm(e) -> tuple[str, list[dict], list[str] | None]:
-    """(path, exclude mask, live_files) of a manifest data-dir entry."""
-    if isinstance(e, dict):
-        return e["path"], e.get("exclude") or [], e.get("live_files")
-    return e, [], None
 
 
 # physical-only reorganizations: no logical row change (Delta dataChange=false)
@@ -257,8 +248,20 @@ def _widen(prior: dict, written: dict, where: str) -> dict:
 
 
 def _read_manifest(root: str, version: int) -> dict:
+    """Manifest ``version`` of the table at ``root``. A data-dir entry in
+    a retired shape (a bare path, or an ``exclude`` partition mask) is
+    refused by name: readers know only ``{path, files, live_files?}``."""
     with open(os.path.join(root, "_manifest", f"v{version:08d}.json")) as f:
-        return json.load(f)
+        m = json.load(f)
+    for e in m["data_dirs"]:
+        if not isinstance(e, dict) or "exclude" in e:
+            raise ValueError(
+                f"table {root}: manifest v{version} holds a data-dir entry "
+                f"in a retired shape ({str(e)[:80]}); recreate the table "
+                "with overwrite() or re-adopt its files with "
+                "convert_from_parquet()"
+            )
+    return m
 
 
 def _head_version(root: str) -> int:
@@ -318,31 +321,6 @@ _DV_SCHEMA = "__file_path string, __row_index long"
 def _read_dvs(spark: SparkSession, paths: list[str]) -> DataFrame:
     """The (file, row) ids named by the deletion-vector sidecars ``paths``."""
     return spark.read.schema(_DV_SCHEMA).parquet(*paths)
-
-
-def _partition_predicate(pcols: list[str], rows: list[dict]):
-    """OR-of-AND equality predicate over partition columns for the given
-    partition tuples. Values compare through a string cast (partition
-    values round-trip the JSON manifest as strings), which Spark still
-    evaluates against the in-memory partition spec at planning time —
-    i.e. this prunes directories, it doesn't scan-and-drop."""
-    import pyspark.sql.functions as F
-
-    pred = F.lit(False)
-    for row in rows:
-        clause = F.lit(True)
-        for c in pcols:
-            v = row[c]
-            # eqNullSafe (SQL <=>): every clause is TRUE/FALSE, never NULL,
-            # so rows whose partition value is NULL survive ~pred exclusion
-            # masks instead of being silently dropped by 3-valued logic.
-            clause = clause & (
-                F.col(c).isNull()
-                if v is None
-                else F.col(c).cast("string").eqNullSafe(str(v))
-            )
-        pred = pred | clause
-    return pred
 
 
 def _row_canon(row: dict) -> tuple:
@@ -527,17 +505,27 @@ def _written(df, partition_by: list[str]) -> dict:
     return {"schema": _schema_json(df.schema, partition_by), "partition_by": partition_by}
 
 
-def _has_parquet(d: str) -> bool:
-    return any(n.endswith(".parquet") for _, _, names in os.walk(d) for n in names)
+def _files_entries(files: list[tuple]) -> list[dict]:
+    """Scan entries naming ``files`` ((dir, rel, ...) inventory tuples):
+    one per data dir, ``basePath`` at the dir so hive partition values
+    come from the path. Files with no hive segment share ONE entry under
+    their common directory instead, so they scan as one relation across
+    data dirs (Spark's partition discovery refuses that once the paths
+    carry partition values under different dirs)."""
+    if files and not any(_hive_values(f[1]) for f in files):
+        paths = [os.path.join(f[0], f[1]) for f in files]
+        base = os.path.commonpath([os.path.dirname(p) for p in paths])
+        return [{"path": base, "live_files": [os.path.relpath(p, base) for p in paths]}]
+    by_dir: dict[str, list[str]] = {}
+    for f in files:
+        by_dir.setdefault(f[0], []).append(f[1])
+    return [{"path": d, "live_files": rels} for d, rels in by_dir.items()]
 
 
-def _files_entry(files: list[tuple]) -> dict:
-    """One data-dir entry naming ``files`` ((dir, rel, ...) tuples of an
-    unpartitioned snapshot) under their common directory, so they scan
-    as ONE relation across data dirs."""
-    paths = [os.path.join(f[0], f[1]) for f in files]
-    base = os.path.commonpath([os.path.dirname(p) for p in paths])
-    return {"path": base, "live_files": [os.path.relpath(p, base) for p in paths]}
+def _partition_of(rel: str) -> tuple:
+    """Canonical partition tuple of a hive-relative file path (``()`` on
+    an unpartitioned table) — the form rebase disjointness compares."""
+    return _row_canon(_hive_values(rel))
 
 
 class LakeTable:
@@ -795,6 +783,8 @@ class LakeTable:
                 )
             except ConcurrentWriteError as err:
                 last_err = err
+                if touched is None and not blind:
+                    raise  # full-table op: never auto-rebase
                 base = prior["version"]
                 head = self.current_version() if self.exists() else 0
                 if head <= base:
@@ -823,8 +813,6 @@ class LakeTable:
                             "validated/allocated against it"
                         ) from err
                 if not blind:
-                    if touched is None:
-                        raise  # full-table op: never auto-rebase
                     # partition-scoped op: every winner must have recorded
                     # a touched list disjoint from ours
                     mine = {_row_canon(r) for r in touched}
@@ -847,16 +835,16 @@ class LakeTable:
         """Union of data dirs the winners added beyond our base manifest —
         the winners' write delta, whole dirs under the newest winner's
         schema and names (bounded by what they wrote)."""
-        base_paths = {_entry_path(e) for e in prior.get("data_dirs", [])}
+        base_paths = {e["path"] for e in prior.get("data_dirs", [])}
         new_paths: list[str] = []
         for w in winners:
             for e in w["data_dirs"]:
-                p = _entry_path(e)
+                p = e["path"]
                 if p not in base_paths and p not in new_paths:
                     new_paths.append(p)
         if not new_paths:
             return None
-        return self._scan(winners[-1], new_paths)
+        return self._scan(winners[-1], [{"path": p} for p in new_paths])
 
     def _new_data_dir(self, prior: dict) -> str:
         # Unique per writer (Delta-style GUID naming): two racing writers
@@ -867,49 +855,19 @@ class LakeTable:
         n = prior["version"] + 1
         return os.path.join(self.root, "data", f"v{n:08d}-{uuid.uuid4().hex[:12]}")
 
-    @staticmethod
-    def _carry_prior_dirs(
-        prior: dict, touched_rows: list[dict], new_dir: str | None
-    ) -> list:
-        """Manifest entries for a partition-pruned rewrite: every prior
-        data dir passes through with ``touched_rows`` added to its
-        exclusion mask; the new dir (holding the rewritten partitions) is
-        appended unmasked. A prior dir whose physically-present partitions
-        are ALL excluded contributes nothing to any future read, so its
-        entry is dropped — which lets vacuum() reclaim the dir once the
-        old versions age out, instead of storage growing monotonically.
-
-        ``new_dir=None``: the rewrite produced no rows (a DELETE emptied
-        every touched partition); the empty dir adds nothing to any read,
-        so it is omitted and vacuum reclaims it."""
-        pcols = prior["partition_by"]
-        entries = []
-        for e in prior["data_dirs"]:
-            e = dict(e) if isinstance(e, dict) else {"path": e, "exclude": []}
-            seen = {tuple(sorted(x.items())) for x in e.get("exclude", [])}
-            extra = [t for t in touched_rows if tuple(sorted(t.items())) not in seen]
-            e["exclude"] = e.get("exclude", []) + extra
-            present = _dir_partition_tuples(e["path"], pcols)
-            excluded = {_row_canon(x) for x in e["exclude"]}
-            if present and present <= excluded:
-                continue  # fully superseded: reclaimable by vacuum
-            entries.append(e)
-        if new_dir is not None:
-            entries.append(new_dir)
-        return entries
-
     def _file_inventory(self, manifest: dict) -> list[tuple]:
         """(dir, relpath, footer_stats|None) for every live parquet file of
-        an unpartitioned snapshot. Entries carrying a ``live_files`` list
-        (from a prior file-pruned DML) enumerate exactly those; plain dirs
-        are walked. Control-plane: bounded by file count."""
+        snapshot ``manifest``, in either layout: relpaths are
+        hive-relative (``col=value/part-....parquet`` on a partitioned
+        table), so each file carries its partition values. Entries
+        carrying a ``live_files`` list (from a prior copy-on-write DML)
+        enumerate exactly those; the others are walked. Control-plane:
+        bounded by file count."""
         inv = []
         for e in manifest["data_dirs"]:
-            dpath = _entry_path(e)
-            stats = e.get("files", {}) if isinstance(e, dict) else {}
-            if isinstance(e, dict) and e.get("live_files") is not None:
-                rels = e["live_files"]
-            else:
+            dpath, stats = e["path"], e.get("files", {})
+            rels = e.get("live_files")
+            if rels is None:
                 rels = sorted(
                     os.path.relpath(os.path.join(root, n), dpath)
                     for root, _, names in os.walk(dpath)
@@ -921,7 +879,7 @@ class LakeTable:
         return inv
 
     @staticmethod
-    def _surviving_file_entries(prior: dict, untouched: list[tuple]) -> list:
+    def _surviving_file_entries(untouched: list[tuple]) -> list:
         """Manifest entries carrying the untouched files forward by name —
         the files themselves are never copied (byte-identical pass-through,
         like Delta keeping unrewritten AddFiles in the log)."""
@@ -937,13 +895,82 @@ class LakeTable:
             for dpath, rels in by_dir.items()
         ]
 
-    def _touched_partitions(self, df, pcols: list[str]) -> list[dict]:
-        """Distinct partition tuples present in ``df`` (control-plane
-        collect — bounded by partition count, never data volume)."""
-        touched = {
-            tuple(_part_key(v) for v in r) for r in df.select(*pcols).distinct().collect()
-        }
-        return [dict(zip(pcols, t)) for t in sorted(touched, key=str)]
+    def _rewrite(self, prior: dict, touched: list[tuple], df: DataFrame):
+        """Write ``df`` — the new content of the ``touched`` inventory
+        files of ``prior`` — into a fresh data dir. Returns
+        ``(entries, partitions, entry)``: ``entries(head)`` builds the
+        manifest entry list against ``head`` (``prior``, or a newer head
+        a rebase moves to): every live file of ``head`` but the touched
+        ones, carried by name, plus the new entry unless the rewrite left
+        no rows. It raises ConcurrentWriteError when a touched file is no
+        longer live in ``head`` (a winner rewrote it). ``partitions``: the
+        hive partitions of the touched files plus those the new dir
+        holds (a filesystem walk, no job) — the commit's touched list;
+        None on an unpartitioned table, whose rewrites never rebase."""
+        entry = self._write_dir_entry(df, prior)
+        pcols = prior["partition_by"]
+        partitions = None
+        if pcols:
+            found = {_partition_of(f[1]) for f in touched}
+            found |= _dir_partition_tuples(entry["path"], pcols)
+            partitions = [dict(t) for t in sorted(found, key=str)]
+        gone = {os.path.join(f[0], f[1]) for f in touched}
+        new = [entry] if entry["files"] else []
+
+        def entries(head: dict) -> list:
+            inv = self._file_inventory(head)
+            kept = [f for f in inv if os.path.join(f[0], f[1]) not in gone]
+            if len(inv) - len(kept) != len(gone):
+                raise ConcurrentWriteError(
+                    f"a concurrent commit v{head['version']} rewrote a file "
+                    "this operation rewrote; re-read and retry"
+                )
+            return self._surviving_file_entries(kept) + new
+
+        return entries, partitions, entry
+
+    def _rewrite_touched(
+        self,
+        prior: dict,
+        operation: str,
+        matches,
+        rewrite,
+        *,
+        key_ranges: dict | None = None,
+        always: bool = False,
+        delta_check=None,
+        txn: dict | None = None,
+    ) -> int:
+        """The copy-on-write DML path of both layouts (Delta's
+        find-touched-files, rewrite, commit): footer stats narrow the
+        files of ``prior`` to ``key_ranges``; one column-pruned scan
+        finds the files holding a row of ``matches(scan)``
+        (:meth:`_files_holding`); ``rewrite(scan of those files)`` is
+        written to a fresh data dir; the commit carries every other file
+        by name, byte-identical, plus the new entry (see
+        :meth:`_rewrite`). Nothing matched and not ``always``: no
+        commit, ``prior``'s version is returned.
+
+        Concurrency: an unpartitioned table's rewrite never rebases. A
+        partitioned one records its touched partitions and rebases over
+        winners whose recorded partitions are disjoint and whose new rows
+        pass ``delta_check`` (see :meth:`_commit_rebasing`), rebuilding
+        its entries from the new head."""
+        inventory = self._file_inventory(prior)
+        candidates = [f for f in inventory if _ranges_intersect(f[2], key_ranges or {})]
+        touched = self._files_holding(prior, candidates, matches)
+        if not touched and not always:
+            return prior["version"]
+        out = rewrite(self._scan(prior, _files_entries(touched)))
+        entries, partitions, entry = self._rewrite(prior, touched, out)
+        return self._commit_rebasing(
+            prior, entries, operation,
+            touched=partitions,
+            delta_check=delta_check,
+            txn=txn,
+            written=out.schema,
+            **self._identity_changes(prior, [entry["path"]]),
+        )
 
     # ---------------- CHECK constraints (Delta invariants) ----------------
 
@@ -1325,15 +1352,14 @@ class LakeTable:
         applies when the logical name is absent).
 
         Partition columns are refused: their name is baked into hive
-        paths and every partition-pruning mask — renaming one is a
-        rewrite, not metadata. Time travel to pre-rename versions shows
-        the old name (the mapping lives in the manifest it was committed
-        to, exactly like Delta)."""
+        paths — renaming one is a rewrite, not metadata. Time travel to
+        pre-rename versions shows the old name (the mapping lives in the
+        manifest it was committed to, exactly like Delta)."""
         prior = self._head("rename_column")
         if old in prior["partition_by"]:
             raise ValueError(
                 f"rename_column({old!r}): partition columns are baked into "
-                "hive paths and pruning masks; rewrite the table instead"
+                "hive paths; rewrite the table instead"
             )
         cur_cols = self.read(_snapshot=prior).columns
         if old not in cur_cols:
@@ -1459,13 +1485,12 @@ class LakeTable:
         """Write ``df`` into a fresh uniquely-named data dir; return the
         manifest entry. Layout (``partition_by``, default ``prior``'s) and
         bloom indexes come from ``prior``, the manifest the op read.
-        Every dir carries per-file footer min/max stats
-        (Delta data-skipping analogue): unpartitioned DML file-prunes on
-        them, and read_skipping() uses them on the query side — for
-        partitioned dirs the file keys are hive-relative paths, so
-        partition values ride along for path-level pruning too. (The
-        partition-pruned DML rewrite paths write their dirs directly and
-        stay stats-less; reads fall back to plain filters there.)"""
+        Every dir, in either layout and whichever op wrote it, carries
+        per-file footer min/max stats (Delta data-skipping analogue)
+        keyed by hive-relative path: DML file-prunes on them, and
+        read_skipping() uses them on the query side, with the partition
+        values the keys carry for path-level pruning. Indexed columns get
+        a file-level bloom sidecar too."""
         if partition_by is None:
             partition_by = prior["partition_by"]
         d = self._new_data_dir(prior)
@@ -1480,12 +1505,9 @@ class LakeTable:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(d)
-        if bloom_cols and not partition_by:
-            # file-level bloom sidecar (unpartitioned dirs only — the
-            # partitioned read path prunes on partition values; its
-            # interior columns keep the row-group blooms above)
+        if bloom_cols:
             self._write_bloom_sidecar(
-                self._scan(_written(df, []), [d], row_ids=True),
+                self._scan(_written(df, partition_by), [{"path": d}], row_ids=True),
                 d,
                 {c: bloom[c] for c in bloom_cols},
             )
@@ -1628,7 +1650,7 @@ class LakeTable:
         partition_by = partition_by or prior["partition_by"]
         if partition_by != prior["partition_by"]:
             # Delta parity: appends cannot change the partitioning scheme
-            # (mixed hive layouts would break mask-based DML pruning);
+            # (mixed hive layouts would break hive-value file pruning);
             # repartitioning a table is an explicit overwrite.
             raise SchemaMismatchError(
                 f"append to {self.root}: partition_by={partition_by} differs "
@@ -1645,7 +1667,7 @@ class LakeTable:
         # freshly-written dir — no extra Spark job) so OTHER writers'
         # disjointness checks see them; the append itself rebases blindly.
         touched = (
-            [dict(t) for t in sorted(_dir_partition_tuples(_entry_path(entry), partition_by), key=str)]
+            [dict(t) for t in sorted(_dir_partition_tuples(entry["path"], partition_by), key=str)]
             if partition_by
             else []
         )
@@ -1678,26 +1700,21 @@ class LakeTable:
         src/glue_etl.py:439-497, Delta ``whenMatchedUpdateAll /
         whenNotMatchedInsertAll``).
 
-        Partition-pruned copy-on-write (the Delta-at-scale behavior: rewrite
-        only matched files, never the whole table): the set of *touched*
-        partitions is the union of the updates' partition values and the
-        partitions of target rows whose keys match an update (so a key that
-        moved partitions is still rewritten, exactly like Delta's
-        touched-file inner join). Only those partitions are read, merged,
-        and rewritten into the new data dir; every other partition's files
-        pass through into the new manifest untouched — at 100 TB a daily
-        increment rewrites only the partitions it lands in.
-
-        Unpartitioned tables use FILE-level pruning instead (Delta's data
-        skipping): per-file footer min/max stats recorded at write time
-        narrow the candidate files by key range, then one column-pruned
-        scan of only the candidates finds the exactly-touched files
-        (Delta's touched-file inner join); every other file passes through
-        into the new manifest untouched, byte-identical.
+        File-pruned copy-on-write in both layouts (the Delta-at-scale
+        behavior: rewrite only matched files, never the whole table):
+        per-file footer min/max stats recorded at write time narrow the
+        candidate files by key range, then one column-pruned scan of only
+        the candidates finds the exactly-touched files (Delta's
+        touched-file inner join). Only those files are read, merged and
+        rewritten into the new data dir — inserted rows land in their own
+        partitions there, and a key that moved partitions leaves its old
+        file rewritten without it; every other file passes through into
+        the new manifest untouched, byte-identical (see
+        :meth:`_rewrite_touched`).
 
         Schema evolution (Delta ``withSchemaEvolution()`` semantics,
         SURVEY K4): updates may carry NEW columns — merged/inserted rows
-        store them, untouched partitions/files pass through under their
+        store them, untouched files pass through under their
         old schema (never rewritten for a metadata change), the recorded
         schema widens to the new columns, and scans serve old rows with
         NULLs in them. Contract locked by
@@ -1705,7 +1722,7 @@ class LakeTable:
 
         ``_delete_keys`` (internal, used by :meth:`apply_changes`): a
         key-columns frame whose rows are REMOVED in the same commit —
-        the touched-partition/file discovery spans both key sets, and
+        the touched-file discovery spans both key sets, and
         the rewritten slice is anti-joined before writing, so a CDC
         batch of upserts + deletes lands as one pruned commit.
 
@@ -1742,97 +1759,44 @@ class LakeTable:
         if _delete_keys is not None:
             key_frame = key_frame.unionByName(_delete_keys.select(*keys))
         key_frame = key_frame.distinct()
-        pcols = prior["partition_by"]
-        if not pcols:
-            inventory = self._file_inventory(prior)
-            # key ranges of the updates: one tiny agg (collects 1 row)
-            rng = key_frame.agg(
-                *[F.min(k).alias(f"{k}__lo") for k in keys],
-                *[F.max(k).alias(f"{k}__hi") for k in keys],
-            ).first()
-            key_ranges = {}
-            for k in keys:
-                lo, hi = rng[f"{k}__lo"], rng[f"{k}__hi"]
-                if isinstance(lo, (int, float, str, bool)) and isinstance(
-                    hi, (int, float, str, bool)
-                ):
-                    key_ranges[k] = (lo, hi)
-            candidates = [
-                f for f in inventory if _ranges_intersect(f[2], key_ranges)
-            ]
-            # exact touched-file check (Delta's matched-file join): scan
-            # only the candidates, semi-join the updates
-            touched = self._files_holding(
-                prior, candidates, lambda scan: scan.join(key_frame, on=keys, how="left_semi")
-            )
-            target = self._scan(prior, [_files_entry(touched)] if touched else [])
+        # key ranges of the updates: one tiny agg (collects 1 row)
+        rng = key_frame.agg(
+            *[F.min(k).alias(f"{k}__lo") for k in keys],
+            *[F.max(k).alias(f"{k}__hi") for k in keys],
+        ).first()
+        key_ranges = {}
+        for k in keys:
+            lo, hi = rng[f"{k}__lo"], rng[f"{k}__hi"]
+            if isinstance(lo, (int, float, str, bool)) and isinstance(
+                hi, (int, float, str, bool)
+            ):
+                key_ranges[k] = (lo, hi)
+
+        def rewrite(target: DataFrame) -> DataFrame:
             merged = merge_upsert(target, updates, keys)
             if _delete_keys is not None:
                 merged = merged.join(_delete_keys, on=keys, how="left_anti")
-            entry = self._write_dir_entry(merged, prior)
-            untouched = [f for f in inventory if f not in touched]
-            # a CDC batch can delete every touched row: a fileless dir
-            # adds nothing to any read, so it stays out of the manifest
-            # and vacuum reclaims it
-            new_entries = [entry] if entry["files"] else []
-            v = self._commit(
-                prior,
-                self._surviving_file_entries(prior, untouched) + new_entries,
-                _operation,
-                txn=txn,
-                written=merged.schema,
-                **self._identity_changes(prior, [entry["path"]]),
-            )
-            if prior.get("properties", {}).get("auto_compact"):
-                self._auto_compact()
-            return v
+            return merged
 
-        target = self.read(_snapshot=prior)
-        # Touched partitions: the updates' own partitions plus partitions
-        # of target rows whose keys match (key-column-pruned semi-join —
-        # one slim shuffle), so a key that moved partitions is rewritten.
-        tgt_matched = target.join(key_frame, on=keys, how="left_semi")
-        touched_rows = self._touched_partitions(
-            updates.select(*pcols).unionByName(tgt_matched.select(*pcols)), pcols
-        )
-
-        merged = merge_upsert(
-            target.filter(_partition_predicate(pcols, touched_rows)), updates, keys
-        )
-        if _delete_keys is not None:
-            merged = merged.join(_delete_keys, on=keys, how="left_anti")
-        d = self._new_data_dir(prior)
-        merged.write.mode("overwrite").partitionBy(*pcols).parquet(d)
-        # a CDC batch can delete every row of the touched partitions: a
-        # fileless dir stays out of the manifest (as in DELETE)
-        if not _has_parquet(d):
-            d = None
-
-        # Prior dirs pass through with the touched partitions masked out;
-        # read() turns the mask into a partition-pruning filter, so those
-        # directories are skipped at scan planning, not scanned-and-dropped.
-        # On a concurrent commit: auto-rebase iff every winner touched
-        # disjoint partitions and its new data contains none of our merge
-        # keys (incremental scan of the winners' delta only).
-        upd_keys = key_frame
-
-        def _no_key_overlap(winners_delta: DataFrame) -> bool:
-            cols = set(winners_delta.columns)
-            if not set(keys) <= cols:
+        def no_key_overlap(winners_delta: DataFrame) -> bool:
+            # rebase safety: the winners' new rows hold none of our keys
+            if not set(keys) <= set(winners_delta.columns):
                 return True  # winner's data has no key columns: can't match
             return (
-                winners_delta.select(*keys).join(upd_keys, on=keys, how="left_semi").isEmpty()
+                winners_delta.select(*keys).join(key_frame, on=keys, how="left_semi").isEmpty()
             )
 
-        v = self._commit_rebasing(
+        v = self._rewrite_touched(
             prior,
-            lambda head: self._carry_prior_dirs(head, touched_rows, d),
             _operation,
-            touched=touched_rows,
-            delta_check=_no_key_overlap,
+            # exact touched-file check (Delta's matched-file join): scan
+            # only the candidates, semi-join the keys
+            lambda scan: scan.join(key_frame, on=keys, how="left_semi"),
+            rewrite,
+            key_ranges=key_ranges,
+            always=True,
+            delta_check=no_key_overlap,
             txn=txn,
-            written=merged.schema,
-            **self._identity_changes(prior, [d] if d else []),
         )
         if prior.get("properties", {}).get("auto_compact"):
             self._auto_compact()
@@ -1921,8 +1885,8 @@ class LakeTable:
 
         Lands as ONE merge-shaped commit keyed on ``keys + __start_at``
         (operation ``apply_changes_scd2``): re-opened rows update in
-        place, new intervals insert, untouched partitions/files pass
-        through — the same pruned-commit shape as :meth:`apply_changes`.
+        place, new intervals insert, untouched files pass through — the
+        same pruned-commit shape as :meth:`apply_changes`.
 
         Scale: the only shuffle beyond the merge itself is the per-key
         ``lead()`` window — partitioned by key, so each task holds one
@@ -1989,16 +1953,16 @@ class LakeTable:
         )
 
     def _files_holding(self, prior: dict, files: list[tuple], rows) -> list[tuple]:
-        """The ``files`` (inventory tuples of unpartitioned snapshot
-        ``prior``) holding a row of ``rows(scan)`` — Delta's
-        find-touched-files scan: one column-pruned scan of ``files``
-        (parquet footer pushdown does the skipping), then a bounded
-        distinct-file collect."""
+        """The ``files`` (inventory tuples of snapshot ``prior``) holding a
+        row of ``rows(scan)`` — Delta's find-touched-files scan: one
+        column-pruned scan of ``files`` (parquet footer pushdown and hive
+        partition pruning do the skipping), then a bounded distinct-file
+        collect."""
         import pyspark.sql.functions as F
 
         if not files:
             return []
-        scan = self._scan(prior, [_files_entry(files)])
+        scan = self._scan(prior, _files_entries(files))
         hit = rows(scan.withColumn("__file", F.input_file_name()))
         hit = hit.select("__file").distinct().collect()
         paths = {_local_path(r["__file"]) for r in hit}
@@ -2006,8 +1970,8 @@ class LakeTable:
 
     @staticmethod
     def _cond_delta_check(cond):
-        """Rebase safety for partition-scoped delete/update: the winners'
-        new data must contain no row matching our condition (else a serial
+        """Rebase safety for delete/update on a partitioned table: the
+        winners' new data must contain no row matching our condition (else a serial
         re-run would have rewritten it too)."""
         import pyspark.sql.functions as F
 
@@ -2022,10 +1986,9 @@ class LakeTable:
     def delete(self, condition, mode: str = "copy-on-write") -> int:
         """Delta-style ``DELETE FROM t WHERE condition``.
 
-        ``mode="copy-on-write"`` (default): rewrite only what contains
-        matches — partition-pruned like merge() on partitioned tables,
-        file-pruned on unpartitioned ones; everything else passes through
-        byte-identical.
+        ``mode="copy-on-write"`` (default): rewrite only the files that
+        hold a match, in either layout (see :meth:`_rewrite_touched`);
+        everything else passes through byte-identical.
 
         ``mode="merge-on-read"``: Delta DELETION VECTORS — no data file
         is rewritten at all; the doomed rows' (file, row_index) ids land
@@ -2037,7 +2000,6 @@ class LakeTable:
         import pyspark.sql.functions as F
 
         prior = self._head("delete")
-        pcols = prior["partition_by"]
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if mode == "merge-on-read":
             return self._delete_merge_on_read(prior, cond)
@@ -2049,47 +2011,15 @@ class LakeTable:
         # SQL/Delta DELETE removes only rows where the condition is TRUE;
         # rows where it evaluates to NULL are kept. filter(~cond) would
         # silently drop them (3-valued logic), so coalesce NULL -> FALSE.
-        keep_pred = ~F.coalesce(cond, F.lit(False))
-        if not pcols:
-            inventory = self._file_inventory(prior)
-            touched = self._files_holding(
-                prior, inventory, lambda scan: scan.filter(F.coalesce(cond, F.lit(False)))
-            )
-            untouched = [f for f in inventory if f not in touched]
-            if not touched:
-                return prior["version"]  # no-op delete
-            kept = self._scan(prior, [_files_entry(touched)]).filter(keep_pred)
-            entry = self._write_dir_entry(kept, prior)
-            # every touched row deleted → the rewrite dir is empty and
-            # stays out of the manifest (vacuum reclaims it)
-            new_entries = [entry] if entry["files"] else []
-            return self._commit(
-                prior,
-                self._surviving_file_entries(prior, untouched) + new_entries,
-                "delete",
-                written=kept.schema,
-            )
-
-        target = self.read(_snapshot=prior)
-        touched_rows = self._touched_partitions(target.filter(cond), pcols)
-        if not touched_rows:
-            return prior["version"]  # no-op delete: nothing matched
-        kept = target.filter(_partition_predicate(pcols, touched_rows)).filter(keep_pred)
-        d = self._new_data_dir(prior)
-        kept.write.mode("overwrite").partitionBy(*pcols).parquet(d)
-        # a DELETE can empty every touched partition: the dir then holds
-        # no parquet files, adds nothing to any read and stays out of the
-        # manifest (filesystem check, no extra Spark job; the orphan dir
-        # is vacuum-reclaimable)
-        if not _has_parquet(d):
-            d = None
-        return self._commit_rebasing(
+        matched = F.coalesce(cond, F.lit(False))
+        # every touched row deleted leaves the rewrite dir empty: it stays
+        # out of the manifest (vacuum reclaims it)
+        return self._rewrite_touched(
             prior,
-            lambda head: self._carry_prior_dirs(head, touched_rows, d),
             "delete",
-            touched=touched_rows,
+            lambda scan: scan.filter(matched),
+            lambda target: target.filter(~matched),
             delta_check=self._cond_delta_check(cond),
-            written=kept.schema,
         )
 
     def _reject_cow_with_dvs(self, prior: dict, operation: str) -> None:
@@ -2127,16 +2057,15 @@ class LakeTable:
 
     def update(self, condition, assignments: dict) -> int:
         """Delta-style ``UPDATE t SET col = expr WHERE condition`` as
-        copy-on-write, partition-pruned: rewrites only partitions holding
-        matching rows (assignments must not change partition columns —
-        use merge() for partition-moving updates, which handles the old
-        partition correctly)."""
+        copy-on-write: rewrites only the files holding matching rows, in
+        either layout (see :meth:`_rewrite_touched`). Assignments must not
+        change partition columns — use merge() for partition-moving
+        updates, which rewrites the old file without the row."""
         import pyspark.sql.functions as F
 
         prior = self._head("update")
         self._reject_cow_with_dvs(prior, "update")
-        pcols = prior["partition_by"]
-        bad = set(assignments) & set(pcols)
+        bad = set(assignments) & set(prior["partition_by"])
         if bad:
             raise ValueError(f"update() cannot modify partition columns {sorted(bad)}; use merge()")
         gen = prior.get("generated_columns", {})
@@ -2158,39 +2087,19 @@ class LakeTable:
                 df = df.withColumn(c, F.expr(e))
             return df
 
-        if not pcols:
-            # file-pruned: rewrite only files containing matching rows
-            inventory = self._file_inventory(prior)
-            touched = self._files_holding(
-                prior, inventory, lambda scan: scan.filter(F.coalesce(cond, F.lit(False)))
-            )
-            untouched = [f for f in inventory if f not in touched]
-            if not touched:
-                return prior["version"]
-            rewritten = apply(self._scan(prior, [_files_entry(touched)]))
-            self._enforce_constraints(rewritten, prior.get("constraints", {}))
-            entry = self._write_dir_entry(rewritten, prior)
-            return self._commit(
-                prior,
-                self._surviving_file_entries(prior, untouched) + [entry],
-                "update",
-                written=rewritten.schema,
-            )
-        target = self.read(_snapshot=prior)
-        touched_rows = self._touched_partitions(target.filter(cond), pcols)
-        if not touched_rows:
-            return prior["version"]
-        rewritten = apply(target.filter(_partition_predicate(pcols, touched_rows)))
-        self._enforce_constraints(rewritten, prior.get("constraints", {}))
-        d = self._new_data_dir(prior)
-        rewritten.write.mode("overwrite").partitionBy(*pcols).parquet(d)
-        return self._commit_rebasing(
+        cons = prior.get("constraints", {})
+
+        def rewrite(target: DataFrame) -> DataFrame:
+            out = apply(target)
+            self._enforce_constraints(out, cons)
+            return out
+
+        return self._rewrite_touched(
             prior,
-            lambda head: self._carry_prior_dirs(head, touched_rows, d),
             "update",
-            touched=touched_rows,
+            lambda scan: scan.filter(F.coalesce(cond, F.lit(False))),
+            rewrite,
             delta_check=self._cond_delta_check(cond),
-            written=rewritten.schema,
         )
 
     # ---------------- readers (S4 + time travel) ----------------
@@ -2236,19 +2145,18 @@ class LakeTable:
         (default ``manifest``'s data dirs) as ``manifest``'s snapshot
         serves them. Each entry is one parquet scan under the recorded
         schema (no footer read, no Spark job) with ``basePath`` at its
-        dir, served under the logical names AS OF ``manifest`` (time
-        travel before a rename shows the old name, like Delta), masked
-        partitions filtered out; the scans are unioned (partitioned roots
-        cannot share one) and the manifest's deletion vectors anti-joined
-        on :data:`_ROW_ID`, which ``row_ids`` keeps."""
+        dir (only its ``live_files`` when the entry lists them), served
+        under the logical names AS OF ``manifest`` (time travel before a
+        rename shows the old name, like Delta); the scans are unioned
+        (partitioned roots cannot share one) and the manifest's deletion
+        vectors anti-joined on :data:`_ROW_ID`, which ``row_ids`` keeps."""
         import pyspark.sql.functions as F
 
         schema = _recorded_schema(manifest, self.root)
-        pcols = manifest.get("partition_by", [])
         dvs = manifest.get("deletion_vectors", [])
         frames = []
         for e in manifest["data_dirs"] if entries is None else entries:
-            path, excl, live = _entry_norm(e)
+            path, live = e["path"], e.get("live_files")
             if live is not None and not live:
                 continue
             paths = [path] if live is None else [os.path.join(path, r) for r in live]
@@ -2264,8 +2172,6 @@ class LakeTable:
                     F.col("_metadata.file_path").alias(_ROW_ID[0]),
                     F.col("_metadata.row_index").alias(_ROW_ID[1]),
                 )
-            if excl:
-                df = df.filter(~_partition_predicate(pcols, excl))
             frames.append(df)
         if not frames:  # limit(0): plans as an empty local relation
             return _apply_column_mapping(
@@ -2305,9 +2211,12 @@ class LakeTable:
         file-granular. Pairs with ``optimize(zorder_by=...)``: Z-order
         clustering is what makes per-file ranges narrow enough to skip.
 
-        Falls back to a full filtered read when stats aren't available
-        (partitioned snapshots record partition values, not file stats —
-        partition pruning via the filter covers those)."""
+        One path for both layouts: footer stats prune on data columns,
+        hive path values prune on partition-column EQUALITY bounds
+        (string compare of the decoded value — range bounds on partition
+        columns stay filter-only, because path strings don't order
+        numerically), and bloom sidecars prune equality bounds on indexed
+        columns. A file without stats is never skipped."""
         import pyspark.sql.functions as F
 
         v = version if version is not None else self.current_version()
@@ -2327,25 +2236,29 @@ class LakeTable:
             # the DV anti-join needs row ids from every surviving file —
             # serve the exact filtered read instead of file pruning
             return bound_filter(self.read(_snapshot=manifest))
-        pcols = manifest["partition_by"]
-        if pcols:
-            return self._read_skipping_partitioned(manifest, bounds, bound_filter)
-        inventory = self._file_inventory(manifest)
-        keep = [
-            (d, rel)
-            for d, rel, stats in inventory
-            if _ranges_intersect(stats, bounds)
-        ]
-        # bloom skipping: equality bounds on indexed columns test each
-        # surviving file's bitmap — an unset probe bit proves absence
-        # (false positives only cost an extra file read, never a row)
         eq = {
             c: lo
             for c, (lo, hi) in bounds.items()
             if lo is not None and lo == hi
         }
+        # hive writes booleans lowercase — same canonicalization as
+        # _row_canon, which exists for exactly this mismatch
+        eq_hive = {
+            c: str(lo).lower() if isinstance(lo, bool) else str(lo)
+            for c, lo in eq.items()
+            if c in manifest["partition_by"]
+        }
+        keep = [
+            (d, rel)
+            for d, rel, stats in self._file_inventory(manifest)
+            if _ranges_intersect(stats, bounds)
+            and all(_hive_values(rel).get(c) == val for c, val in eq_hive.items())
+        ]
+        # bloom skipping: equality bounds on indexed columns test each
+        # surviving file's bitmap — an unset probe bit proves absence
+        # (false positives only cost an extra file read, never a row)
         bloom_cfg = manifest.get("properties", {}).get("bloom_index", {})
-        if keep and eq and any(c in bloom_cfg for c in eq):
+        if keep and any(c in bloom_cfg for c in eq):
             probes = {
                 c: self._bloom_probe_positions(bloom_cfg[c], v)
                 for c, v in eq.items()
@@ -2365,42 +2278,7 @@ class LakeTable:
                     continue  # proven absent from this file
                 kept.append((d, rel))
             keep = kept
-        return bound_filter(self._scan(manifest, [_files_entry(keep)] if keep else []))
-
-    def _read_skipping_partitioned(self, manifest, bounds, bound_filter):
-        """Hybrid skipping for partitioned snapshots: hive path values
-        prune on partition-column EQUALITY bounds (string compare of the
-        encoded value — range bounds on partition columns stay filter-only
-        because path strings don't order numerically), footer stats prune
-        on data columns; dirs written by pruned-DML rewrites carry no
-        stats and pass through un-skipped. Exclusion masks still apply."""
-        pcols = manifest["partition_by"]
-
-        def hive_str(v):
-            # hive writes booleans lowercase — same canonicalization as
-            # _row_canon, which exists for exactly this mismatch
-            return str(v).lower() if isinstance(v, bool) else str(v)
-
-        eq_bounds = {
-            c: hive_str(lo)
-            for c, (lo, hi) in bounds.items()
-            if c in pcols and lo is not None and lo == hi
-        }
-
-        entries = []
-        for e in manifest["data_dirs"]:
-            stats = e.get("files") if isinstance(e, dict) else None
-            if stats:
-                keep = []
-                for rel, fs in stats.items():
-                    pvals = _hive_values(rel)
-                    if _ranges_intersect(fs, bounds) and all(
-                        pvals.get(c, val) == val for c, val in eq_bounds.items()
-                    ):
-                        keep.append(rel)
-                e = {"path": e["path"], "live_files": keep, "exclude": e.get("exclude") or []}
-            entries.append(e)
-        return bound_filter(self._scan(manifest, entries))
+        return bound_filter(self._scan(manifest, _files_entries(keep)))
 
     def register(self, name: str, version: int | None = None) -> None:
         """K7 catalog registration (CREATE TABLE ... USING ... LOCATION)."""
@@ -2411,8 +2289,8 @@ class LakeTable:
     def describe_detail(self) -> dict:
         """Delta ``DESCRIBE DETAIL`` analogue: one dict of table facts —
         location, current version, partition columns, LIVE file count and
-        byte size (exclusion masks and ``live_files`` honored, exactly
-        the files a read would open), properties, constraints, generated
+        byte size (``live_files`` honored, exactly the files a read would
+        open), properties, constraints, generated
         columns, deletion-vector sidecar count, created/last-modified
         timestamps, version count. Control-plane only: manifest reads
         plus a filesystem walk, zero Spark jobs."""
@@ -2470,35 +2348,17 @@ class LakeTable:
             properties={**prior.get("properties", {}), **props},
         )
 
-    def _live_partition_file_counts(self, m: dict) -> dict[tuple, int]:
-        """{canonical partition tuple: live parquet file count} for a
-        partitioned snapshot, honoring exclude masks. Control-plane
-        filesystem walk, bounded by file count."""
-        counts: dict[tuple, int] = {}
-        for e in m["data_dirs"]:
-            d, excl, _ = _entry_norm(e)
-            dead = {_row_canon(x) for x in excl}
-            for base, _, names in os.walk(d):
-                for name in names:
-                    if not name.endswith(".parquet"):
-                        continue
-                    rel = os.path.relpath(os.path.join(base, name), d)
-                    key = _row_canon(_hive_values(rel))
-                    if key in dead:
-                        continue
-                    counts[key] = counts.get(key, 0) + 1
-        return counts
-
     def _auto_compact(self) -> int | None:
         """Auto-compaction (Delta ``delta.autoOptimize.autoCompact``):
-        invoked after an append when the ``auto_compact`` property is
-        set. Partitions (or, unpartitioned, the small-file set) whose
-        live file count reached ``auto_compact_min_files`` are rewritten
-        toward ``target_file_bytes`` as a SEPARATE commit with operation
-        ``auto-compact`` — a physical-only op (_PHYSICAL_OPS), so CDF and
-        the streaming source see no logical change, exactly like manual
-        compact(). Untouched partitions / right-sized files are carried
-        by name, never copied.
+        invoked after an append or merge when the ``auto_compact``
+        property is set. In each partition (the whole table when
+        unpartitioned), the live files below ``target_file_bytes`` are
+        folded toward that size once there are ``auto_compact_min_files``
+        of them and the fold reduces their count — as a SEPARATE commit
+        with operation ``auto-compact``, a physical-only op
+        (_PHYSICAL_OPS), so CDF and the streaming source see no logical
+        change, exactly like manual compact(). A partition's files fold
+        into one file; every other file is carried by name, never copied.
 
         Best-effort janitor: an OCC race is swallowed (the data commit
         this trails is already durable; the next append retries), and
@@ -2506,52 +2366,38 @@ class LakeTable:
         have to split DV sidecars — run compact() to purge DVs first).
         Returns the compaction commit's version, or None if nothing to
         do."""
+        import math
+
         prior = self._head()
         props = prior.get("properties", {})
         minf = int(props.get("auto_compact_min_files", 8))
         target_bytes = int(props.get("target_file_bytes", 128 << 20))
         if prior.get("deletion_vectors"):
             return None
-        pcols = prior["partition_by"]
-        import math
-
+        groups: dict[tuple, list] = {}
+        for f in self._file_inventory(prior):
+            size = os.path.getsize(os.path.join(f[0], f[1]))
+            if size < target_bytes:
+                groups.setdefault(_partition_of(f[1]), []).append((f, size))
+        small, nbytes = [], 0
+        for files in groups.values():
+            total = sum(sz for _, sz in files)
+            if len(files) >= minf and math.ceil(total / target_bytes) < len(files):
+                small += [f for f, _ in files]
+                nbytes += total
+        if not small:
+            return None
+        df = self._scan(prior, _files_entries(small))
+        # rows hash to their partition's task, so each partition folds
+        # into one file (an unpartitioned fold into ~target-sized ones)
+        nout = max(1, math.ceil(nbytes / target_bytes))
+        entries, partitions, _ = self._rewrite(
+            prior, small, df.repartition(nout, *prior["partition_by"])
+        )
         try:
-            if pcols:
-                counts = self._live_partition_file_counts(prior)
-                touched = [dict(k) for k, n in sorted(counts.items()) if n >= minf]
-                if not touched:
-                    return None
-                df = self.read(_snapshot=prior).filter(
-                    _partition_predicate(pcols, touched)
-                )
-                # one output file per partition: rows hash to their
-                # partition's task, each task writes one file per hive dir
-                entry = self._write_dir_entry(df.repartition(*pcols), prior)
-                entries = self._carry_prior_dirs(prior, touched, entry)
-                return self._commit(
-                    prior, entries, "auto-compact", touched=touched,
-                    deletion_vectors=[], written=df.schema,
-                )
-            inv = self._file_inventory(prior)
-            sized = [
-                (d, rel, st, os.path.getsize(os.path.join(d, rel)))
-                for d, rel, st in inv
-            ]
-            small = [x for x in sized if x[3] < target_bytes]
-            if len(small) < minf:
-                return None
-            nout = max(1, math.ceil(sum(x[3] for x in small) / target_bytes))
-            if nout >= len(small):
-                return None
-            df = self._scan(prior, [_files_entry(small)])
-            entry = self._write_dir_entry(df.coalesce(nout), prior)
-            untouched = [
-                (d, rel, st) for d, rel, st, sz in sized if sz >= target_bytes
-            ]
-            entries = self._surviving_file_entries(prior, untouched) + [entry]
             return self._commit(
-                prior, entries, "auto-compact", deletion_vectors=[],
-                written=df.schema,
+                prior, entries(prior), "auto-compact", touched=partitions,
+                deletion_vectors=[], written=df.schema,
             )
         except ConcurrentWriteError:
             return None
@@ -2585,11 +2431,11 @@ class LakeTable:
         missing_dirs: list[str] = []
         repaired: list = []
         for e in prior["data_dirs"]:
-            dpath = _entry_path(e)
+            dpath = e["path"]
             if not os.path.isdir(dpath):
                 missing_dirs.append(dpath)
                 continue
-            if isinstance(e, dict) and e.get("live_files") is not None:
+            if e.get("live_files") is not None:
                 gone = {
                     r
                     for r in e["live_files"]
@@ -2636,41 +2482,39 @@ class LakeTable:
         (reference docs/data_model.md:302-308's 128-512 MB targets; here
         AQE coalescing + optional repartition pick the file count).
 
-        ``where`` (Delta ``OPTIMIZE ... WHERE``): compact ONLY the
-        partitions matching the predicate — at 100 TB you optimize
-        yesterday's partition, never the table; untouched partitions'
-        files pass through the manifest byte-identical behind an
-        exclusion mask, the same pruned-commit shape as MERGE. Deletion
-        vectors are carried (new files have new paths, so DVs can't
-        name rows in them; rows DVs removed from rewritten files stay
-        removed because read() applied them before the rewrite);
-        full-table compaction still materializes DVs (Delta PURGE)."""
+        ``where`` (Delta ``OPTIMIZE ... WHERE``): a predicate over the
+        partition columns; compact ONLY the files of the partitions it
+        holds for — at 100 TB you optimize yesterday's partition, never
+        the table. The partitions are chosen by their hive values (one
+        row per partition, a local relation: no Spark job), and every
+        other file passes through the manifest byte-identical, carried
+        by name — the same commit shape as MERGE. Deletion vectors are
+        carried (new files have new paths, so DVs can't name rows in
+        them; rows DVs removed from rewritten files stay removed because
+        the scan applied them before the rewrite); full-table compaction
+        still materializes DVs (Delta PURGE)."""
         prior = self._head("compact")
         pcols = prior["partition_by"]
-        if where is not None and not pcols:
-            raise ValueError(
-                "compact(where=...): partition-scoped compaction needs a "
-                "partitioned table; use plain compact() instead"
-            )
-        target = self.read(_snapshot=prior)
         if where is not None:
-            touched_rows = self._touched_partitions(target.filter(where), pcols)
-            if not touched_rows:
+            if not pcols:
+                raise ValueError(
+                    "compact(where=...): partition-scoped compaction needs a "
+                    "partitioned table; use plain compact() instead"
+                )
+            touched = self._files_in_partitions(prior, where)
+            if not touched:
                 return prior["version"]
-            df = target.filter(_partition_predicate(pcols, touched_rows))
+            df = self._scan(prior, _files_entries(touched))
             if target_partitions:
                 df = df.repartition(target_partitions, *pcols)
-            d = self._new_data_dir(prior)
-            df.write.mode("overwrite").partitionBy(*pcols).parquet(d)
+            entries, partitions, _ = self._rewrite(prior, touched, df)
             return self._commit(
-                prior,
-                self._carry_prior_dirs(prior, touched_rows, d),
-                "compact",
-                touched=touched_rows,
+                prior, entries(prior), "compact", touched=partitions,
                 written=df.schema,
             )
+        target = self.read(_snapshot=prior)
         if target_partitions:
-            target = target.repartition(target_partitions, *(pcols or []))
+            target = target.repartition(target_partitions, *pcols)
         entry = self._write_dir_entry(target, prior)
         # DVs may have deleted every row: a fileless dir stays out of the
         # manifest (as the cow delete path does)
@@ -2679,6 +2523,27 @@ class LakeTable:
             deletion_vectors=[],  # rewrite via read() materializes DVs (Delta PURGE)
             written=target.schema,
         )
+
+    def _files_in_partitions(self, prior: dict, where: str) -> list[tuple]:
+        """The live files of partitioned snapshot ``prior`` whose hive
+        partition values satisfy ``where``: the predicate runs over one
+        row per partition, its values cast to the recorded column types
+        (a local relation: no Spark job)."""
+        import pyspark.sql.functions as F
+
+        pcols = prior["partition_by"]
+        schema = _recorded_schema(prior, self.root)
+        inventory = self._file_inventory(prior)
+        parts = sorted({_partition_of(f[1]) for f in inventory}, key=str)
+        local = self.spark.createDataFrame(
+            [(i, *[dict(p).get(c) for c in pcols]) for i, p in enumerate(parts)],
+            "__i int, " + ", ".join(f"`{c}` string" for c in pcols),
+        )
+        hit = local.select(
+            "__i", *[F.col(c).cast(schema[c].dataType).alias(c) for c in pcols]
+        ).filter(where)
+        chosen = {parts[r["__i"]] for r in hit.collect()}
+        return [f for f in inventory if _partition_of(f[1]) in chosen]
 
     def optimize(self, zorder_by: list[str], target_partitions: int = 8, bits: int = 8) -> int:
         """OPTIMIZE ZORDER analogue (reference docs/etl_processes.md:381-386,
@@ -2763,7 +2628,7 @@ class LakeTable:
         missing = [
             p
             for p in (
-                [_entry_path(e) for e in m["data_dirs"]]
+                [e["path"] for e in m["data_dirs"]]
                 + list(m.get("deletion_vectors", []))
             )
             if not os.path.isdir(_local_path(p))
@@ -2788,7 +2653,7 @@ class LakeTable:
         bytes copied, metadata (constraints, generated columns, table
         properties, column mapping) carried. The clone is independent
         from then on: DML copy-on-writes into its OWN data dirs (shared
-        dirs are only carried/masked, never rewritten in place), and its
+        files are only carried by name, never rewritten in place), and its
         vacuum() walks only its own data root, so it can never reclaim
         source files. Delta's caveat carries over unchanged: vacuum() on
         the SOURCE may remove files a shallow clone still references.
@@ -2872,7 +2737,7 @@ class LakeTable:
         live_dv: set[str] = set()
         for v in sorted(protected):
             m = self._manifest(v)
-            live.update(_entry_path(e) for e in m["data_dirs"])
+            live.update(e["path"] for e in m["data_dirs"])
             live_dv.update(m.get("deletion_vectors", []))
         removed = []
         data_root = os.path.join(self.root, "data")

@@ -58,8 +58,8 @@ def test_cdf_partitioned_merge_reads_only_touched_partitions(spark, tmp_path):
 
     import re
 
-    # long metadata so the plan string keeps paths + PartitionFilters;
-    # baked in at node build time, so set it BEFORE constructing the feed
+    # long metadata so the plan string keeps the scanned paths; baked in
+    # at node build time, so set it BEFORE constructing the feed
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
     try:
         feed = t.changes(2, 2, keys=["id"])
@@ -69,12 +69,11 @@ def test_cdf_partitioned_merge_reads_only_touched_partitions(spark, tmp_path):
         spark.conf.unset("spark.sql.maxMetadataStringLength")
     assert rows == [("update_postimage", 2), ("update_preimage", 2)]
     # touched-only scan, proven at plan level: every scan of the PRIOR
-    # dir prunes to the touched partition (the new dir physically holds
-    # only k=b, so the whole feed never opens k=a / k=c files)
-    prior_filters = re.findall(
-        r"v00000001[^\]]*\], PartitionFilters: \[([^\]]*)\]", plan
-    )
-    assert prior_filters and all("<=> b" in f for f in prior_filters)
+    # dir lists only the k=b file the merge rewrote (the new dir
+    # physically holds only k=b, so the whole feed never opens k=a / k=c
+    # files)
+    prior_parts = re.findall(r"v00000001-[0-9a-f]{12}/(k=[^/]*)/", plan)
+    assert prior_parts and set(prior_parts) == {"k=b"}, prior_parts
 
 
 def test_cdf_compaction_and_metadata_emit_nothing(spark, tmp_path):

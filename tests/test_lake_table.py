@@ -308,9 +308,7 @@ def test_optimize_zorder_clusters_all_dims(spark, tmp_path):
     assert t.history()[-1]["operation"] == "optimize-zorder"
     assert t.read().count() == 20000
 
-    from ecommerce_lakehouse_spark.lake.table import _entry_path
-
-    data_dir = _entry_path(t._manifest(t.current_version())["data_dirs"][0])
+    data_dir = t._manifest(t.current_version())["data_dirs"][0]["path"]
     files = glob.glob(f"{data_dir}/*.parquet")
     assert len(files) >= 8
     spans = []
@@ -646,7 +644,7 @@ def test_racing_writers_never_share_data_dirs(spark, tmp_path):
 
 
 def test_superseded_dir_dropped_and_vacuumed(spark, tbl, tmp_path):
-    """A dir whose every partition is excluded by later DML leaves the
+    """A dir whose every file is superseded by later DML leaves the
     manifest, so vacuum reclaims it (ADVICE: no monotonic growth)."""
     import glob
 
@@ -872,7 +870,8 @@ def test_read_skipping_prunes_files_after_zorder(spark, tmp_path):
 
 def test_read_skipping_partitioned_hybrid(spark, tmp_path):
     """Partitioned snapshots skip by hive path (partition equality) AND
-    footer stats (data-column ranges) while exclusion masks still apply."""
+    footer stats (data-column ranges), and keep doing so after DML: every
+    dir merge, delete, update and compact(where=) write carries stats."""
     from ecommerce_lakehouse_spark.lake.table import LakeTable
 
     t = LakeTable(spark, str(tmp_path / "pskip"))
@@ -880,7 +879,8 @@ def test_read_skipping_partitioned_hybrid(spark, tmp_path):
         [(i, ["a", "b", "c"][i % 3], i * 10) for i in range(300)],
         "id int, lang string, amount int",
     )
-    t.overwrite(df.repartition(2, "id"), partition_by=["lang"])
+    # range-clustered on id: per-file id ranges are narrow enough to skip
+    t.overwrite(df.repartitionByRange(2, "id"), partition_by=["lang"])
 
     # partition equality prune: only lang=b files open
     got = t.read_skipping({"lang": ("b", "b")})
@@ -892,13 +892,19 @@ def test_read_skipping_partitioned_hybrid(spark, tmp_path):
     assert sorted(r.id for r in got.collect()) == list(range(10, 21))
     assert len(got.inputFiles()) <= len(t.read().inputFiles())
 
-    # after a partition-pruned MERGE (stats-less rewrite dir), results
-    # stay exact — the new dir passes through un-skipped
+    # after DML, every data-dir entry carries footer stats, so the
+    # rewritten dirs skip like the first one and results stay exact
     upd = spark.createDataFrame([(5, "c", 999)], "id int, lang string, amount int")
     t.merge(upd, keys=["id"])
+    t.delete("id = 7")
+    t.update("id = 9", {"amount": "amount + 1"})
+    t.compact(where="lang = 'a'")
+    entries = t._manifest(t.current_version())["data_dirs"]
+    assert len(entries) > 1 and all(e["files"] for e in entries), entries
     got = t.read_skipping({"id": (5, 5)})
     rows = got.collect()
     assert len(rows) == 1 and rows[0].amount == 999 and rows[0].lang == "c"
+    assert len(got.inputFiles()) < len(t.read().inputFiles())
 
 
 def test_generated_columns_compute_validate_backfill(spark, tmp_path):
@@ -1184,8 +1190,10 @@ def test_auto_compact_partitioned_policy(spark, tmp_path):
     t.set_properties({"auto_compact": True, "auto_compact_min_files": 3})  # v2
     for i in range(1, 7):
         t.append(spark.createDataFrame([(i, "a")], "id int, k string"))
-    m = t._manifest(t.current_version())
-    counts = t._live_partition_file_counts(m)
+    from collections import Counter
+
+    inv = t._file_inventory(t._manifest(t.current_version()))
+    counts = Counter(rel.split("/")[0] for _, rel, _ in inv)
     assert max(counts.values()) < 3 + 1, counts  # bounded, not monotone
     assert sorted(r.id for r in t.read().collect()) == [0, 1, 2, 3, 4, 5, 6, 100]
     ops = [h["operation"] for h in t.history()]

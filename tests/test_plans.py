@@ -159,37 +159,38 @@ def test_preagg_before_ordered_window(spark, sf_dir, name):
     )
 
 
-def test_merge_exclusion_mask_prunes_at_plan_time(spark, tmp_path):
-    """After a partition-pruned MERGE, reading the table must apply the
-    exclusion mask as a PartitionFilter on the PRIOR data dir's scan —
-    i.e. superseded partitions are skipped at planning, not
-    scanned-and-dropped. The scan of the old dir must list strictly
-    fewer files than the dir contains."""
+def test_merge_superseded_files_leave_the_scan(spark, tmp_path):
+    """After a MERGE on a partitioned table, reading the table must not
+    list the file the merge rewrote: the superseded file of the PRIOR
+    data dir leaves the manifest's live files, so it is skipped at
+    planning, not scanned-and-dropped. The prior dir's other files are
+    carried unchanged."""
     import pyspark.sql.functions as F
 
     from ecommerce_lakehouse_spark.lake import LakeTable
 
+    # one file per partition
     df = spark.createDataFrame(
         [(i, f"v{i}", f"p{i % 4}") for i in range(40)], "k int, v string, part string"
-    )
+    ).coalesce(1)
     t = LakeTable(spark, str(tmp_path / "pruned"))
     t.overwrite(df, partition_by=["part"])
+    v1_files = set(t.read().inputFiles())
     t.merge(
         spark.createDataFrame([(0, "NEW", "p0")], "k int, v string, part string"),
         keys=["k"],
     )
 
-    text = plan_text(t.read())
-    assert "PartitionFilters" in text
-    import re
-
-    pf = re.findall(r"PartitionFilters: \[([^\]]*)\]", text)
-    assert any("part" in p for p in pf), pf
-    # correctness of the masked union
+    superseded = {f for f in v1_files if "/part=p0/" in f}
+    assert len(superseded) == 1 and len(v1_files) == 4, v1_files
+    head_files = set(t.read().inputFiles())
+    assert not head_files & superseded, head_files
+    assert v1_files - superseded <= head_files
+    # correctness of the carried files plus the rewrite
     got = {(r.k, r.v) for r in t.read().collect()}
     expect = {(i, f"v{i}") for i in range(1, 40)} | {(0, "NEW")}
     assert got == expect
-    # file-level proof: count leaf files the old-dir scan actually reads
+    # time travel still reads the whole v1 dir
     old_dir_df = t.read(version=1).filter(F.col("part") != "p0")
     assert old_dir_df.count() == 30
 

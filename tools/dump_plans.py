@@ -9,9 +9,12 @@ decisions without spinning up Spark.
 ``DIR/<name>.txt``: the optimized logical plan of each named registry
 query (every query when no names are given), with expression ids
 (``#123``) and LakeTable data-dir names (``v00000003-<12 hex>``)
-normalized, so two checkouts' dumps diff cleanly. A refactor that claims
-to be a pure move dumps before and after and expects ``diff -r`` to be
-empty. Both modes read the tables under ``$SPARK_GRAFT_SF_DIR``.
+normalized, and the group order of distinct-aggregate ``Expand``\s made
+canonical (see :func:`canonical_expand`), so two dumps of one checkout
+are byte-identical and two checkouts' dumps diff cleanly. A refactor
+that claims to be a pure move dumps before and after and expects
+``diff -r`` to be empty. Both modes read the tables under
+``$SPARK_GRAFT_SF_DIR``.
 """
 
 from __future__ import annotations
@@ -38,7 +41,7 @@ NAMES = {
     "span_dedup_spans": "map-side window slide (HOF) -> single fixed-width shuffle on span hash",
     "span_dedup_rewrite": "span counts + slim position join; text shuffles once, id-keyed",
     "apply_mixture_sample": "broadcast per-domain factors; per-doc pass is map-side only",
-    "merge_upsert_snapshot": "partition-pruned MERGE via LakeTable: only touched partitions rescanned",
+    "merge_upsert_snapshot": "MERGE as DataFrame algebra (updates union the key-anti-joined target): one key shuffle, no LakeTable",
     "value_quantiles_exact": "distributed exact quantiles: distinct-value collapse, bounded bucket-offset window, per-bucket running totals — NO unpartitioned window over raw input",
     "customer_spend_deciles": "bucketed two-pass global rank + closed-form ntile: the only windows are per-bucket / over the <=1024-row bucket histogram",
     "tpch_q11_important_parts": "global scalar via one-row agg broadcast-joined back; no single-partition window over the per-part frame",
@@ -75,6 +78,73 @@ NAMES = {
 
 _EXPR_ID = re.compile(r"#\d+")
 _DATA_DIR = re.compile(r"v\d+-[0-9a-f]{12}")
+_GID = re.compile(r"\(gid# = (\d+)\)")
+
+
+def _split(s: str) -> list[str]:
+    """The top-level comma-separated items of ``s`` (brackets and
+    parentheses nest)."""
+    items, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            items.append(s[start:i].strip())
+            start = i + 1
+    return items + [s[start:].strip()]
+
+
+def _parent(lines: list[str], i: int) -> int:
+    """Index of the plan-tree parent of line ``i``: the nearest line
+    above whose operator starts further left."""
+    def col(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    return next(j for j in range(i - 1, -1, -1) if col(lines[j]) < col(lines[i]))
+
+
+def canonical_expand(plan: str) -> str:
+    """Catalyst's distinct-aggregate rewrite (``RewriteDistinctAggregates``)
+    orders the distinct children and the ``gid`` of each group by hashes
+    of expression ids, so one query's ``Expand`` differs between JVM runs
+    (``daily_sales``, ``profile_constraint_suggestions``, ...). Put each
+    Expand in one order: the distinct-child columns (those some group row
+    leaves null, ahead of ``gid#``) sorted by name, the group rows sorted
+    by content with their gids renumbered in that order; the same column
+    order goes into the Aggregate above and the renumbered gids into the
+    FILTER clauses of the Aggregate above that."""
+    lines = plan.split("\n")
+    for i, line in enumerate(lines):
+        at = line.find("Expand [[")
+        if at < 0:
+            continue
+        rows_s, out_s = _split(line[at + len("Expand "):])
+        rows = [_split(r[1:-1]) for r in _split(rows_s[1:-1])]
+        out = _split(out_s[1:-1])
+        if "gid#" not in out:
+            continue  # GROUPING SETS / ROLLUP: a fixed order
+        g = out.index("gid#")
+        dcols = [j for j in range(g) if any(r[j] == "null" for r in rows)]
+        perm = list(range(len(out)))
+        perm[dcols[0]:dcols[-1] + 1] = sorted(dcols, key=lambda j: out[j])
+        rows = sorted(([r[k] for k in perm] for r in rows), key=lambda r: r[:g] + r[g + 1:])
+        gids = sorted((r[g] for r in rows), key=int)
+        renumber = {r[g]: n for r, n in zip(rows, gids)}
+        for r, n in zip(rows, gids):
+            r[g] = n
+        lines[i] = line[:at] + "Expand [{}], [{}]".format(
+            ", ".join("[" + ", ".join(r) + "]" for r in rows),
+            ", ".join(out[k] for k in perm),
+        )
+        up = _parent(lines, i)
+        lines[up] = lines[up].replace(
+            ", ".join(out[j] for j in dcols), ", ".join(out[k] for k in perm[dcols[0]:g])
+        )
+        top = _parent(lines, up)
+        lines[top] = _GID.sub(lambda m: f"(gid# = {renumber[m.group(1)]})", lines[top])
+    return "\n".join(lines)
 
 
 def dump_optimized(spark, sf: str, out_dir: str, names: list[str]) -> None:
@@ -82,7 +152,7 @@ def dump_optimized(spark, sf: str, out_dir: str, names: list[str]) -> None:
     os.makedirs(out_dir, exist_ok=True)
     for name in names or list(REGISTRY):
         plan = REGISTRY[name](spark, sf)._jdf.queryExecution().optimizedPlan().toString()
-        plan = _DATA_DIR.sub("v{n}-{uuid}", _EXPR_ID.sub("#", plan))
+        plan = canonical_expand(_DATA_DIR.sub("v{n}-{uuid}", _EXPR_ID.sub("#", plan)))
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(plan)
         print("wrote", name, flush=True)
