@@ -28,7 +28,13 @@ def merge_upsert(target: DataFrame, updates: DataFrame, keys: list[str]) -> Data
     Scale note: one shuffle on the merge keys for the anti-join; with both
     sides bucketed/pre-partitioned by key it is co-partitioned. The
     anti-join side prunes to key columns only (column pruning keeps the
-    shuffle narrow).
+    shuffle narrow), and a small batch is broadcast instead.
+
+    ``updates`` is read twice (the anti-join keys and the union), so a
+    non-deterministic source must be materialized first:
+    ``LakeTable.merge`` passes its batch already materialized by one
+    ``localCheckpoint`` pass, which makes both reads — and its
+    touched-file discovery — see the same rows.
     """
     untouched = target.join(updates.select(*keys), on=keys, how="left_anti")
     return updates.unionByName(untouched, allowMissingColumns=True)

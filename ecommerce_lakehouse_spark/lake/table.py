@@ -944,12 +944,15 @@ class LakeTable:
         """The copy-on-write DML path of both layouts (Delta's
         find-touched-files, rewrite, commit): footer stats narrow the
         files of ``prior`` to ``key_ranges``; one column-pruned scan
-        finds the files holding a row of ``matches(scan)``
-        (:meth:`_files_holding`); ``rewrite(scan of those files)`` is
-        written to a fresh data dir; the commit carries every other file
-        by name, byte-identical, plus the new entry (see
-        :meth:`_rewrite`). Nothing matched and not ``always``: no
-        commit, ``prior``'s version is returned.
+        with no exchange finds the files holding a row of
+        ``matches(scan)`` (:meth:`_files_holding`);
+        ``rewrite(scan of those files)`` is written to a fresh data dir;
+        the commit carries every other file by name, byte-identical,
+        plus the new entry (see :meth:`_rewrite`). Nothing matched and
+        not ``always``: no commit, ``prior``'s version is returned.
+        ``delete`` and ``update`` thus run 2 Spark jobs, the discovery
+        scan and the write; ``merge`` adds the pass that materializes its
+        batch and a broadcast of the batch keys for each join.
 
         Concurrency: an unpartitioned table's rewrite never rebases. A
         partitioned one records its touched partitions and rebases over
@@ -978,44 +981,76 @@ class LakeTable:
         """Current CHECK constraints ({name: sql_expr})."""
         return self._head().get("constraints", {})
 
+    @staticmethod
+    def _violation_flags(cons: dict[str, str]) -> list:
+        """One aggregate per constraint of ``cons``, in name order, that
+        is 1 when some row violates it (NULL-evaluating rows violate,
+        matching Delta — a CHECK must be provably TRUE). An ``agg`` or
+        an ``observe`` computes them; :meth:`_raise_violations` reads the
+        result."""
+        import pyspark.sql.functions as F
+
+        return [
+            F.max((~F.coalesce(F.expr(cons[n]), F.lit(False))).cast("int")).alias(f"c{i}")
+            for i, n in enumerate(sorted(cons))
+        ]
+
+    def _raise_violations(self, flags, cons: dict[str, str]) -> None:
+        """Raise ConstraintViolationError naming every constraint whose
+        :meth:`_violation_flags` value in ``flags`` (a Row or a dict) is
+        set."""
+        violated = {
+            n: cons[n] for i, n in enumerate(sorted(cons)) if (flags[f"c{i}"] or 0) > 0
+        }
+        if violated:
+            raise ConstraintViolationError(self.root, violated)
+
     def _enforce_constraints(self, df: DataFrame, cons: dict[str, str]) -> None:
         """Reject ``df`` if any row violates any constraint in ``cons``
         (the op's prior manifest's, plus any the write sets in the same
         commit).
 
         One Spark job regardless of constraint count: a single aggregate
-        computes a violation flag per constraint (NULL-evaluating rows
-        violate, matching Delta — a CHECK must be provably TRUE). At
-        100 TB this is a map-side-combined boolean agg over the incoming
-        batch only, never the table.
+        computes every :meth:`_violation_flags` flag. At 100 TB this is a
+        map-side-combined boolean agg over the incoming batch only, never
+        the table.
 
         Determinism caveat: validating a DataFrame re-evaluates its plan,
         so for a non-deterministic input the rows checked here may differ
         from the rows a later write materializes. The bulk-ingest paths
         (overwrite/append) therefore validate AFTER the write via
-        ``_enforce_constraints_on_entry`` (the written bytes themselves);
-        the DML rewrite paths (merge/update/backfill) keep the pre-write
-        check and assume a deterministic source frame — their inputs are
-        table scans plus caller data, and a non-deterministic caller
-        source should be materialized (e.g. localCheckpoint) first."""
-        import pyspark.sql.functions as F
+        ``_enforce_constraints_on_entry`` (the written bytes themselves),
+        and ``merge`` computes the flags in the one pass that
+        materializes its batch (:meth:`_materialize_observed`), so the
+        rows checked are the rows written. Only ``update`` still checks
+        before its write: its input is a scan of the touched files, and
+        only a non-deterministic assignment could make the check and the
+        write see different rows."""
+        if cons:
+            self._raise_violations(df.agg(*self._violation_flags(cons)).first(), cons)
 
-        if not cons:
-            return
-        names = sorted(cons)
-        row = df.agg(
-            *[
-                F.max(
-                    (~F.coalesce(F.expr(cons[n]), F.lit(False))).cast("int")
-                ).alias(f"c{i}")
-                for i, n in enumerate(names)
-            ]
-        ).first()
-        violated = {
-            n: cons[n] for i, n in enumerate(names) if (row[f"c{i}"] or 0) > 0
-        }
-        if violated:
-            raise ConstraintViolationError(self.root, violated)
+    def _materialize_observed(
+        self, df: DataFrame, keys: list[str], cons: dict[str, str]
+    ) -> tuple[DataFrame, dict]:
+        """``df`` evaluated once, by one ``localCheckpoint`` pass (one
+        Spark job, plus the shuffle stages of ``df``'s own plan), and
+        what that pass observed: each key's min and max
+        (``{k}__lo`` / ``{k}__hi``) and the :meth:`_violation_flags` of
+        ``cons``. Every later read of the returned frame reads the
+        materialized rows, so a non-deterministic source cannot differ
+        between the steps of a DML op (Delta's
+        ``merge.materializeSource``)."""
+        import pyspark.sql.functions as F
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        out = df.observe(
+            obs,
+            *[F.min(k).alias(f"{k}__lo") for k in keys],
+            *[F.max(k).alias(f"{k}__hi") for k in keys],
+            *self._violation_flags(cons),
+        ).localCheckpoint()
+        return out, obs.get
 
     def _enforce_constraints_on_entry(
         self, entry: dict, written: dict, cons: dict[str, str]
@@ -1702,15 +1737,24 @@ class LakeTable:
 
         File-pruned copy-on-write in both layouts (the Delta-at-scale
         behavior: rewrite only matched files, never the whole table):
-        per-file footer min/max stats recorded at write time narrow the
-        candidate files by key range, then one column-pruned scan of only
-        the candidates finds the exactly-touched files (Delta's
-        touched-file inner join). Only those files are read, merged and
-        rewritten into the new data dir — inserted rows land in their own
-        partitions there, and a key that moved partitions leaves its old
-        file rewritten without it; every other file passes through into
-        the new manifest untouched, byte-identical (see
-        :meth:`_rewrite_touched`).
+        the batch is evaluated exactly once — after generated columns and
+        identity are applied, one ``localCheckpoint`` pass materializes it
+        and observes each key's min and max plus the CHECK-constraint
+        violation flags (:meth:`_materialize_observed`, Delta's
+        ``merge.materializeSource``), so the rows checked are the rows
+        written and every later step reads the same rows. Per-file footer
+        min/max stats recorded at write time narrow the candidate files
+        to those key ranges, then one column-pruned scan of only the
+        candidates, semi-joined with the batch keys, finds the
+        exactly-touched files (:meth:`_files_holding`). Only those files
+        are read, merged and rewritten into the new data dir — inserted
+        rows land in their own partitions there, and a key that moved
+        partitions leaves its old file rewritten without it; every other
+        file passes through into the new manifest untouched,
+        byte-identical (see :meth:`_rewrite_touched`). A small batch read
+        from parquet commits in 5 Spark jobs in either layout: the
+        materializing pass, the key broadcast and scan of discovery, and
+        the key broadcast and write of the rewrite.
 
         Schema evolution (Delta ``withSchemaEvolution()`` semantics,
         SURVEY K4): updates may carry NEW columns — merged/inserted rows
@@ -1722,7 +1766,8 @@ class LakeTable:
 
         ``_delete_keys`` (internal, used by :meth:`apply_changes`): a
         key-columns frame whose rows are REMOVED in the same commit —
-        the touched-file discovery spans both key sets, and
+        materialized once like the batch, with its ranges observed; the
+        touched-file discovery spans both key sets, and
         the rewritten slice is anti-joined before writing, so a CDC
         batch of upserts + deletes lands as one pruned commit.
 
@@ -1754,23 +1799,23 @@ class LakeTable:
                 .drop("__tgt_id")
             )
             updates = self._apply_identity(updates, prior)
-        self._enforce_constraints(updates, prior.get("constraints", {}))
-        key_frame = updates.select(*keys)
+        cons = prior.get("constraints", {})
+        updates, seen = self._materialize_observed(updates, keys, cons)
+        self._raise_violations(seen, cons)
+        key_frame, observed = updates.select(*keys), [seen]
         if _delete_keys is not None:
-            key_frame = key_frame.unionByName(_delete_keys.select(*keys))
-        key_frame = key_frame.distinct()
-        # key ranges of the updates: one tiny agg (collects 1 row)
-        rng = key_frame.agg(
-            *[F.min(k).alias(f"{k}__lo") for k in keys],
-            *[F.max(k).alias(f"{k}__hi") for k in keys],
-        ).first()
+            _delete_keys, seen_deletes = self._materialize_observed(
+                _delete_keys.select(*keys), keys, {}
+            )
+            key_frame = key_frame.unionByName(_delete_keys)
+            observed.append(seen_deletes)
+        # footer-pruning ranges spanning both key sets
         key_ranges = {}
         for k in keys:
-            lo, hi = rng[f"{k}__lo"], rng[f"{k}__hi"]
-            if isinstance(lo, (int, float, str, bool)) and isinstance(
-                hi, (int, float, str, bool)
-            ):
-                key_ranges[k] = (lo, hi)
+            bounds = [o[f"{k}__{e}"] for o in observed for e in ("lo", "hi")]
+            bounds = [b for b in bounds if b is not None]
+            if bounds and all(isinstance(b, (int, float, str, bool)) for b in bounds):
+                key_ranges[k] = (min(bounds), max(bounds))
 
         def rewrite(target: DataFrame) -> DataFrame:
             merged = merge_upsert(target, updates, keys)
@@ -1956,16 +2001,21 @@ class LakeTable:
         """The ``files`` (inventory tuples of snapshot ``prior``) holding a
         row of ``rows(scan)`` — Delta's find-touched-files scan: one
         column-pruned scan of ``files`` (parquet footer pushdown and hive
-        partition pruning do the skipping), then a bounded distinct-file
-        collect."""
+        partition pruning do the skipping) runs into the ``noop`` sink
+        while an ``Observation`` collects the set of files its rows came
+        from — no exchange, and the set is bounded by the touched-file
+        count (Delta's ``findTouchedFiles`` set accumulator)."""
         import pyspark.sql.functions as F
+        from pyspark.sql import Observation
 
         if not files:
             return []
         scan = self._scan(prior, _files_entries(files))
-        hit = rows(scan.withColumn("__file", F.input_file_name()))
-        hit = hit.select("__file").distinct().collect()
-        paths = {_local_path(r["__file"]) for r in hit}
+        obs = Observation()
+        hit = rows(scan.withColumn("__file", F.input_file_name())).select("__file")
+        hit = hit.observe(obs, F.collect_set("__file").alias("files"))
+        hit.write.format("noop").mode("overwrite").save()
+        paths = {_local_path(p) for p in obs.get["files"]}
         return [f for f in files if os.path.abspath(os.path.join(f[0], f[1])) in paths]
 
     @staticmethod
@@ -2528,7 +2578,8 @@ class LakeTable:
         """The live files of partitioned snapshot ``prior`` whose hive
         partition values satisfy ``where``: the predicate runs over one
         row per partition, its values cast to the recorded column types
-        (a local relation: no Spark job)."""
+        (built from pandas, a local relation: no Spark job)."""
+        import pandas as pd
         import pyspark.sql.functions as F
 
         pcols = prior["partition_by"]
@@ -2536,7 +2587,10 @@ class LakeTable:
         inventory = self._file_inventory(prior)
         parts = sorted({_partition_of(f[1]) for f in inventory}, key=str)
         local = self.spark.createDataFrame(
-            [(i, *[dict(p).get(c) for c in pcols]) for i, p in enumerate(parts)],
+            pd.DataFrame(
+                [(i, *[dict(p).get(c) for c in pcols]) for i, p in enumerate(parts)],
+                columns=["__i", *pcols],
+            ),
             "__i int, " + ", ".join(f"`{c}` string" for c in pcols),
         )
         hit = local.select(

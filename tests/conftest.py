@@ -1,5 +1,8 @@
+import contextlib
 import os
 import sys
+import time
+import types
 
 import pytest
 
@@ -19,6 +22,42 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """Job counter: ``with spark_jobs(group) as jobs:`` runs the block
+    under Spark job group ``group`` (unique per use); on exit
+    ``jobs.ids`` lists the ids of the jobs the block launched, and
+    ``jobs.before`` / ``jobs.after`` are the ids of one-task probe jobs
+    run just before and after it in groups of their own. The status
+    store is asynchronous: once it reports the after-probe, it has seen
+    every job launched before it."""
+    sc = spark.sparkContext
+
+    def probe(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([1], 1).count()
+        deadline = time.time() + 30
+        while not sc.statusTracker().getJobIdsForGroup(group):
+            assert time.time() < deadline, f"job of {group} never reported"
+            time.sleep(0.05)
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    @contextlib.contextmanager
+    def jobs(group: str):
+        got = types.SimpleNamespace()
+        try:
+            got.before = probe(f"{group}-before")
+            sc.setJobGroup(group, group)
+            yield got
+            got.after = probe(f"{group}-after")
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        got.ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs
 
 
 @pytest.fixture

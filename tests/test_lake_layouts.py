@@ -2,11 +2,15 @@
 LakeTable and its unpartitioned twin run the same seeded op sequence and
 must serve the rows a pandas model holds after every step, and the same
 change feed; two-handle interleavings pin the partitioned rebase rules.
+Each op runs a fixed number of Spark jobs in either layout, and merge
+evaluates its batch once: one pass materializes it and observes its key
+ranges and CHECK-constraint flags.
 """
 
 import random
 
 import pandas as pd
+import pyspark.sql.functions as F
 import pytest
 
 from ecommerce_lakehouse_spark.lake import ConcurrentWriteError, LakeTable
@@ -193,3 +197,135 @@ def test_winning_compaction_of_touched_file_raises(spark, handles):
         restore()
     assert a.history()[-1]["operation"] == "compact"
     assert sorted(r.k for r in a.read().collect()) == [1, 2, 3, 4]
+
+
+BASE = [(i, f"v{i}", "ab"[i % 2], i) for i in range(40)]
+
+
+def _ranged(spark, root: str, partition_by=None) -> LakeTable:
+    """BASE in four files, each holding one range of ten ids."""
+    t = LakeTable(spark, root)
+    t.overwrite(_frame(spark, BASE, SCHEMA).repartitionByRange(4, "id"), partition_by=partition_by)
+    return t
+
+
+@pytest.mark.parametrize("partition_by", [None, ["p"]], ids=["unpartitioned", "partitioned"])
+def test_dml_job_budget(spark, tmp_path, spark_jobs, partition_by):
+    """merge runs at most 5 Spark jobs (materialize the batch, broadcast
+    its keys and scan for touched files, broadcast them again for the
+    upsert's anti-join and write); delete and update run 2 (touched-file
+    scan, write); compact(where=) runs 1 (the write: its files are
+    chosen on a local relation). apply_changes with deletes runs 9: its
+    upserts and its delete keys are materialized apart, each pass running
+    the sequencing window's shuffle, and the rewrite anti-joins both."""
+    layout = "partitioned" if partition_by else "unpartitioned"
+    t = _ranged(spark, str(tmp_path / layout), partition_by)
+    model = pd.DataFrame(BASE, columns=COLS)
+    launched = {}
+
+    batch = [(3, "m3", "a", 3), (5, "m5", "b", 5), (41, "new", "b", 41)]
+    df = _frame(spark, batch, SCHEMA)
+    with spark_jobs(f"dml-budget-merge-{layout}") as jobs:
+        t.merge(df, keys=["id"])
+    launched["merge"] = len(jobs.ids)
+    model = _upsert(model, batch)
+
+    with spark_jobs(f"dml-budget-delete-{layout}") as jobs:
+        t.delete("id = 7")
+    launched["delete"] = len(jobs.ids)
+    model = model[model.id != 7]
+
+    with spark_jobs(f"dml-budget-update-{layout}") as jobs:
+        t.update("id = 9", {"v": "'u9'"})
+    launched["update"] = len(jobs.ids)
+    model = model.assign(v=model.v.where(model.id != 9, "u9"))
+
+    if partition_by:
+        with spark_jobs(f"dml-budget-compact-{layout}") as jobs:
+            t.compact(where="p = 'a'")
+        launched["compact"] = len(jobs.ids)
+
+    cdc = _frame(
+        spark,
+        [(11, "c11", "b", 11, "update_postimage", 1), (13, "x", "b", 13, "delete", 1)],
+        SCHEMA + ", _change_type string, _seq int",
+    )
+    with spark_jobs(f"dml-budget-apply-changes-{layout}") as jobs:
+        t.apply_changes(cdc, ["id"], "_seq")
+    launched["apply_changes"] = len(jobs.ids)
+    model = _upsert(model, [(11, "c11", "b", 11)])
+    model = model[model.id != 13]
+
+    assert _rows(t) == _model_rows(model)
+    assert launched.pop("merge") <= 5, launched
+    want = {"delete": 2, "update": 2, "apply_changes": 9}
+    if partition_by:
+        want["compact"] = 1
+    assert launched == want
+
+
+def _offset_udf(path: str):
+    """A non-deterministic UDF adding the integer stored in ``path`` to
+    its input: rewrite the file and a re-evaluated frame changes."""
+
+    def shifted(x):
+        with open(path) as f:
+            return x + int(f.read())
+
+    return F.udf(shifted, "int").asNondeterministic()
+
+
+@pytest.fixture
+def reevaluation_offset(tmp_path, monkeypatch):
+    """``(udf, set_after_discovery)``: the offset starts at 0; calling
+    ``set_after_discovery(k)`` makes every later _files_holding call
+    store ``k`` once it returns, so a frame evaluated again after
+    touched-file discovery reads the new offset."""
+    path = str(tmp_path / "offset")
+    with open(path, "w") as f:
+        f.write("0")
+    real = LakeTable._files_holding
+
+    def set_after_discovery(k: int):
+        def files_holding(self, *args, **kwargs):
+            out = real(self, *args, **kwargs)
+            with open(path, "w") as f:
+                f.write(str(k))
+            return out
+
+        monkeypatch.setattr(LakeTable, "_files_holding", files_holding)
+
+    return _offset_udf(path), set_after_discovery
+
+
+def test_merge_commits_one_evaluation_of_its_batch(spark, tmp_path, reevaluation_offset):
+    """A batch whose keys change between evaluations: a second
+    evaluation after file discovery would insert keys 21 and 22 next to
+    their untouched live copies. The table must hold each key once and
+    equal the upsert of one evaluation."""
+    shifted, set_after_discovery = reevaluation_offset
+    t = _ranged(spark, str(tmp_path / "t"))
+    batch = [(1, "m1", "b", 1), (2, "m2", "a", 2)]
+    set_after_discovery(20)
+    t.merge(_frame(spark, batch, SCHEMA).withColumn("id", shifted("id")), keys=["id"])
+
+    got = _rows(t)
+    assert len({r[0] for r in got}) == len(got), "a key was committed twice"
+    base = pd.DataFrame(BASE, columns=COLS)
+    first = _model_rows(_upsert(base, batch))
+    second = _model_rows(_upsert(base, [(i + 20, *rest) for i, *rest in batch]))
+    assert got in (first, second)
+
+
+def test_merge_checks_the_rows_it_writes(spark, tmp_path, reevaluation_offset):
+    """CHECK constraints are enforced on the rows merge writes: a
+    violating value that only a re-evaluation after file discovery would
+    produce must never commit."""
+    shifted, set_after_discovery = reevaluation_offset
+    t = _ranged(spark, str(tmp_path / "t"))
+    t.add_constraint("n_nonneg", "n >= 0")
+    batch = [(1, "m1", "b", 5), (2, "m2", "a", 6)]
+    set_after_discovery(-100)
+    t.merge(_frame(spark, batch, SCHEMA).withColumn("n", shifted("n")), keys=["id"])
+
+    assert _rows(t) == _model_rows(_upsert(pd.DataFrame(BASE, columns=COLS), batch))

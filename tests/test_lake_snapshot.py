@@ -6,7 +6,6 @@ exactly one manifest file per operation."""
 
 import builtins
 import os
-import time
 
 import pytest
 
@@ -188,12 +187,11 @@ def test_warm_handle_dml_opens_one_manifest(spark, tmp_path, monkeypatch):
     assert not over_budget, f"(v*.json, _LATEST) opens per op: {got}"
 
 
-def test_read_of_many_dirs_launches_no_spark_job(spark, tmp_path):
+def test_read_of_many_dirs_launches_no_spark_job(spark, tmp_path, spark_jobs):
     """Building read() of a version spanning several data dirs launches
     no Spark job, partitioned or not: every scan passes the schema the
     manifest records instead of inferring it from parquet footers (one
     job per dir)."""
-    sc = spark.sparkContext
     launched = {}
     for layout, pby in (("unpartitioned", None), ("partitioned", ["part"])):
         t = LakeTable(spark, str(tmp_path / layout))
@@ -201,22 +199,9 @@ def test_read_of_many_dirs_launches_no_spark_job(spark, tmp_path):
         t.append(_df(spark, [(3, "c", "x")]))
         t.append(_df(spark, [(4, "d", "y")]))
         assert len(t._manifest(t.current_version())["data_dirs"]) == 3
-        group, probe = f"lake-read-budget-{layout}", f"lake-read-probe-{layout}"
-        try:
-            sc.setJobGroup(group, group)
+        with spark_jobs(f"lake-read-budget-{layout}") as jobs:
             df = LakeTable(spark, t.root).read()
-            # a probe job after it: once the (async) status store reports
-            # the probe, it has seen every job the read launched
-            sc.setJobGroup(probe, probe)
-            sc.parallelize([1], 1).count()
-        finally:
-            for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-                sc.setLocalProperty(prop, None)
-        deadline = time.time() + 30
-        while not sc.statusTracker().getJobIdsForGroup(probe):
-            assert time.time() < deadline, f"job of {probe} never reported"
-            time.sleep(0.05)
-        launched[layout] = len(sc.statusTracker().getJobIdsForGroup(group))
+        launched[layout] = len(jobs.ids)
         assert sorted(r.k for r in df.collect()) == [1, 2, 3, 4]
     assert launched == {"unpartitioned": 0, "partitioned": 0}
 

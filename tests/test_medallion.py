@@ -2,7 +2,6 @@
 (slow tier), and on hand-written inputs of a few rows (default tier)."""
 
 import datetime
-import time
 
 import pyspark.sql.functions as F
 import pytest
@@ -121,35 +120,15 @@ def test_medallion_tiny_input_counts(spark, tmp_path, medallion_inputs):
     }
 
 
-def _probe_job(spark, group: str) -> int:
-    """Run one job under ``group`` and return its id once the (async)
-    status store has seen it — and so every job launched before it."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    sc.parallelize([1], 1).count()
-    deadline = time.time() + 30
-    while not sc.statusTracker().getJobIdsForGroup(group):
-        assert time.time() < deadline, f"job of {group} never reported"
-        time.sleep(0.05)
-    return max(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_medallion_jobs_inherit_caller_job_group(spark, tmp_path, medallion_inputs):
+def test_medallion_jobs_inherit_caller_job_group(spark, tmp_path, medallion_inputs, spark_jobs):
     """Every job the concurrent flows launch carries the caller's job
     group, so ``cancelJobGroup`` reaches the whole run."""
     d = medallion_inputs(ORDERS, LINEITEM)
-    sc = spark.sparkContext
-    try:
-        before = _probe_job(spark, "medallion-test-before")
-        sc.setJobGroup("medallion-test-run", "medallion-test-run")
+    with spark_jobs("medallion-test-run") as jobs:
         run_medallion(spark, d, str(tmp_path / "lake"))
-        after = _probe_job(spark, "medallion-test-after")
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
-    launched = set(range(before + 1, after))
+    launched = set(range(jobs.before + 1, jobs.after))
     assert launched
-    assert set(sc.statusTracker().getJobIdsForGroup("medallion-test-run")) == launched
+    assert set(jobs.ids) == launched
 
 
 def test_medallion_flow_failure_waits_for_siblings(spark, tmp_path, medallion_inputs):
