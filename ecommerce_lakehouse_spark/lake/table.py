@@ -191,6 +191,22 @@ def _recorded_schema(manifest: dict, where: str):
     return StructType.fromJson(manifest["schema"])
 
 
+def _recorded_txns(manifest: dict, where: str) -> dict:
+    """The {app_id: version} map ``manifest`` records (Delta's
+    SetTransaction state); ``{"version": 0}``, the prior of a first
+    commit, records none. A manifest without the map is refused by
+    name."""
+    if not manifest["version"]:
+        return {}
+    if "txns" not in manifest:
+        raise ValueError(
+            f"table {where}: manifest v{manifest['version']} records no "
+            "txns; rewrite the table with overwrite() or re-adopt its "
+            "files with convert_from_parquet()"
+        )
+    return manifest["txns"]
+
+
 def _nullable(t):
     """Spark schema JSON with every field, array element and map value
     nullable — what any parquet scan reports, whatever the writer said."""
@@ -607,7 +623,11 @@ class LakeTable:
         append); None = full-table (overwrite/compact/unpartitioned DML) —
         the rebase protocol's disjointness check reads it. ``txn``: Delta's
         {"app_id", "version"} idempotent-replay marker (streaming
-        foreachBatch records its batch id here)."""
+        foreachBatch records its batch id here). A commit that loses the
+        version to another writer returns the winner's version, writing
+        nothing, when the new head already records ``txn`` (see
+        :meth:`_txn_applied`): the concurrent replay of one transaction
+        lands once. The loser's data dir is left for :meth:`vacuum`."""
         unknown = set(changes) - set(_METADATA) - {"features"}
         if unknown:
             raise TypeError(f"_commit: not table metadata: {sorted(unknown)}")
@@ -615,6 +635,9 @@ class LakeTable:
         base = prior["version"]
         current = self.current_version() if self.exists() else 0
         if current != base:
+            head = self._head()
+            if self._txn_applied(head, txn):
+                return head["version"]
             raise ConcurrentWriteError(
                 f"{operation}: table advanced v{base} -> v{current} "
                 "since this operation read it; re-read and retry"
@@ -643,10 +666,9 @@ class LakeTable:
         if meta["properties"].get("auto_compact"):
             writer_feats.add("auto-compaction")
         version = current + 1
-        txns = self._txn_map(prior)
+        txns = dict(_recorded_txns(prior, self.root))
         if txn:
-            a, tv = txn["app_id"], txn["version"]
-            txns[a] = tv if a not in txns else max(txns[a], tv)
+            txns[txn["app_id"]] = txn["version"]
         os.makedirs(self._manifest_dir, exist_ok=True)
         manifest = {
             "version": version,
@@ -687,6 +709,9 @@ class LakeTable:
             try:
                 os.link(tmp, mpath)
             except FileExistsError:
+                head = self._head()
+                if self._txn_applied(head, txn):
+                    return head["version"]
                 raise ConcurrentWriteError(
                     f"{operation}: lost the race for v{version} "
                     f"(another writer committed it); re-read and retry"
@@ -719,30 +744,21 @@ class LakeTable:
         """Highest transaction version committed for ``app_id`` (Delta's
         ``txnAppId``/``txnVersion`` idempotent-write pattern), or None.
 
-        O(1): every commit carries the accumulated {app_id: version} map
-        (Delta's SetTransaction state, which its checkpoints exist to
-        serve) — a streaming writer's replay check reads ONE manifest,
-        never the whole log; at 100k commits the walk this replaces is
-        the difference between a microbatch and a pause. Tables whose
-        head predates the map fall back to the walk once."""
-        return self._txn_map(self._head()).get(app_id)
+        Reads ONE manifest: every commit carries the accumulated
+        {app_id: version} map (Delta's SetTransaction state). Writers
+        need not call it to stay exactly-once: a write whose ``txn`` the
+        table already records is skipped (:meth:`_txn_applied`)."""
+        return _recorded_txns(self._head(), self.root).get(app_id)
 
-    def _txn_map(self, prior: dict) -> dict:
-        """Accumulated SetTransaction state as of manifest ``prior``
-        (building it by one walk for pre-map tables)."""
-        if "txns" in prior:
-            return dict(prior["txns"])
-        if not prior["version"]:
-            return {}
-        txns: dict[str, int] = {}
-        for h in self.history():
-            if h["version"] > prior["version"]:
-                break
-            t = h.get("txn")
-            if t:
-                a, v = t["app_id"], t["version"]
-                txns[a] = v if a not in txns else max(txns[a], v)
-        return txns
+    def _txn_applied(self, manifest: dict, txn: dict | None) -> bool:
+        """Whether ``manifest`` records ``txn``'s app at ``txn``'s version
+        or later. A write op that reads such a head returns its version
+        at once — no data, no commit, no Spark job — so a replayed
+        at-least-once batch lands exactly once."""
+        if not txn:
+            return False
+        last = _recorded_txns(manifest, self.root).get(txn["app_id"])
+        return last is not None and last >= txn["version"]
 
     def _commit_rebasing(
         self,
@@ -1107,39 +1123,24 @@ class LakeTable:
             deletion_vectors=[], generated_columns=gen, written=backfilled.schema,
         )
 
-    def _apply_generated(self, df: DataFrame, prior: dict) -> DataFrame:
-        """Compute absent generated columns of manifest ``prior``; validate
-        supplied ones (one aggregate job for all disagreements, like
-        constraint checks)."""
+    def _apply_generated(
+        self, df: DataFrame, prior: dict
+    ) -> tuple[DataFrame, dict[str, str]]:
+        """``df`` with the absent generated columns of manifest ``prior``
+        computed, and the checks the write must pass: the table's CHECK
+        constraints plus ``generated:<col>`` for each supplied generated
+        column. The write's own constraint pass checks them, so the rows
+        checked are the rows written and no separate job runs."""
         import pyspark.sql.functions as F
 
         gen = prior.get("generated_columns", {})
-        if not gen:
-            return df
-        supplied = [c for c in gen if c in df.columns]
-        if supplied:
-            row = df.agg(
-                *[
-                    F.max(
-                        (~F.col(c).eqNullSafe(F.expr(gen[c]))).cast("int")
-                    ).alias(f"g{i}")
-                    for i, c in enumerate(supplied)
-                ]
-            ).first()
-            bad = {
-                c: gen[c]
-                for i, c in enumerate(supplied)
-                if (row[f"g{i}"] or 0) > 0
-            }
-            if bad:
-                raise ConstraintViolationError(
-                    self.root,
-                    {f"generated:{c}": f"{c} = {e}" for c, e in bad.items()},
-                )
+        cons = dict(prior.get("constraints", {}))
         for c, e in gen.items():
-            if c not in df.columns:
+            if c in df.columns:
+                cons[f"generated:{c}"] = f"{c} <=> ({e})"
+            else:
                 df = df.withColumn(c, F.expr(e))
-        return df
+        return df, cons
 
     def set_identity(self, col: str, start: int = 1, step: int = 1) -> int:
         """``GENERATED BY DEFAULT AS IDENTITY`` (Delta identity columns):
@@ -1624,16 +1625,16 @@ class LakeTable:
         the table once per constraint and burn a commit each."""
         partition_by = partition_by or []
         prior = self._head()
-        df = self._apply_generated(df, prior)
+        if self._txn_applied(prior, txn):
+            return prior["version"]
+        df, cons = self._apply_generated(df, prior)
         df = self._apply_identity(df, prior)
         entry = self._write_dir_entry(df, prior, partition_by)
         # post-write validation (see _enforce_constraints_on_entry: checks
         # the written bytes, immune to non-deterministic inputs); explicit
         # same-commit constraints merge into one aggregate pass
         self._enforce_constraints_on_entry(
-            entry,
-            _written(df, partition_by),
-            {**prior.get("constraints", {}), **(constraints or {})},
+            entry, _written(df, partition_by), {**cons, **(constraints or {})}
         )
         changes = self._identity_changes(prior, [entry["path"]])
         if constraints is not None:
@@ -1662,6 +1663,8 @@ class LakeTable:
         type changes before anything is written; the comparison reads
         the recorded schema, never data)."""
         prior = self._head()
+        if self._txn_applied(prior, txn):
+            return prior["version"]
         if not prior["version"]:
             return self.overwrite(df, partition_by, txn=txn)
         if schema_mode == "strict":
@@ -1692,12 +1695,10 @@ class LakeTable:
                 f"from the table's {prior['partition_by']}; use overwrite() "
                 "to change partitioning"
             )
-        df = self._apply_generated(df, prior)
+        df, cons = self._apply_generated(df, prior)
         df = self._apply_identity(df, prior)
         entry = self._write_dir_entry(df, prior)
-        self._enforce_constraints_on_entry(
-            entry, _written(df, partition_by), prior.get("constraints", {})
-        )
+        self._enforce_constraints_on_entry(entry, _written(df, partition_by), cons)
         # Record the partitions this append wrote (filesystem walk of the
         # freshly-written dir — no extra Spark job) so OTHER writers'
         # disjointness checks see them; the append itself rebases blindly.
@@ -1739,8 +1740,8 @@ class LakeTable:
         behavior: rewrite only matched files, never the whole table):
         the batch is evaluated exactly once — after generated columns and
         identity are applied, one ``localCheckpoint`` pass materializes it
-        and observes each key's min and max plus the CHECK-constraint
-        violation flags (:meth:`_materialize_observed`, Delta's
+        and observes each key's min and max plus the CHECK-constraint and
+        supplied-generated-column violation flags (:meth:`_materialize_observed`, Delta's
         ``merge.materializeSource``), so the rows checked are the rows
         written and every later step reads the same rows. Per-file footer
         min/max stats recorded at write time narrow the candidate files
@@ -1778,10 +1779,12 @@ class LakeTable:
         import pyspark.sql.functions as F
 
         prior = self._head() if _prior is None else _prior
+        if self._txn_applied(prior, txn):
+            return prior["version"]
         if not prior["version"]:
             return self.overwrite(updates, txn=txn)
         self._reject_cow_with_dvs(prior, "merge")
-        updates = self._apply_generated(updates, prior)
+        updates, cons = self._apply_generated(updates, prior)
         if (prior.get("properties") or {}).get("identity"):
             # MERGE + identity: matched keys must KEEP the target row's id
             # (the update payload usually omits it), only true inserts
@@ -1799,7 +1802,6 @@ class LakeTable:
                 .drop("__tgt_id")
             )
             updates = self._apply_identity(updates, prior)
-        cons = prior.get("constraints", {})
         updates, seen = self._materialize_observed(updates, keys, cons)
         self._raise_violations(seen, cons)
         key_frame, observed = updates.select(*keys), [seen]
@@ -1954,6 +1956,8 @@ class LakeTable:
         # lands in between raises ConcurrentWriteError instead of being
         # absorbed into intervals computed without it
         prior = self._head()
+        if self._txn_applied(prior, txn):
+            return prior["version"]
         if prior["version"]:
             tgt = self.read(_snapshot=prior)
             affected = tgt.join(

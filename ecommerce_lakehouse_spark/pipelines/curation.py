@@ -100,29 +100,21 @@ def curate(
     Safe to call repeatedly with new batches (see module docstring for
     the incrementality contract); returns the stage tables. ``txn``
     (Delta txnAppId/txnVersion dict) is recorded on EVERY stage commit,
-    and each stage is skipped when its own table has already applied
-    this version — so an at-least-once replay (streaming foreachBatch)
-    that crashed anywhere mid-DAG resumes from the first unapplied
-    stage instead of skipping the batch or double-merging it. Stage
+    and each stage table skips a write whose version it has already
+    applied — so an at-least-once replay (streaming foreachBatch) that
+    crashed anywhere mid-DAG resumes from the first unapplied stage
+    instead of skipping the batch or double-merging it. Stage
     inputs are derived from TABLE STATE (canonical rows not yet in the
     band index; index rows tagged with this batch's version), never
     from in-memory deltas that a crash would lose."""
     t = _tables(spark, root)
-
-    def done(stage: str) -> bool:
-        if txn is None or not t[stage].exists():
-            return False
-        last = t[stage].last_txn(txn["app_id"])
-        return last is not None and last >= txn["version"]
 
     # ---- stage 1: quality gate (MERGE-incremental, partitioned by lang)
     # One output file per partition value (small-file hygiene — the
     # standard pre-write repartition; at larger batch sizes use
     # repartition(n, col) so hot languages still parallelize)
     qual = quality_gate(batch).repartition("lang")
-    if done("quality"):
-        pass  # replayed batch: stage already committed
-    elif t["quality"].exists():
+    if t["quality"].exists():
         t["quality"].merge(qual, keys=["doc_id"], txn=txn)
     else:
         # Declare the stage's invariants as table CHECK constraints in the
@@ -159,9 +151,7 @@ def curate(
         )
     )
     batch_canon = batch_canon.repartition("lang")
-    if done("canonical"):
-        pass  # replayed: multiplicity already combined; never re-merge
-    elif t["canonical"].exists():
+    if t["canonical"].exists():
         existing = t["canonical"].read().select(
             "content_hash",
             F.col("doc_id").alias("e_doc_id"),
@@ -240,9 +230,7 @@ def curate(
     # the auto_compact table property folds accumulated small files into
     # target-sized ones as physical-only commits, while each batch's
     # write keeps the cluster's natural parallelism.
-    if done("band_index"):
-        pass
-    elif had_index:
+    if had_index:
         t["band_index"].append(new_bands, txn=txn)
     else:
         t["band_index"].overwrite(new_bands, txn=txn)
@@ -255,7 +243,7 @@ def curate(
     # stops stage 4 from re-deriving the whole minhash lineage a second
     # time — the signatures are computed exactly once, inside the
     # commit (measured ~1.5 s of the driver query's wall). Txn runs
-    # read exactly this version's rows (the txn guard handles replay);
+    # read exactly this version's rows (the table skips a replay);
     # txn-less runs read every tag below the paired-through watermark —
     # the current batch plus any crash-orphaned predecessors.
     readback = (
@@ -299,9 +287,7 @@ def curate(
         .filter(F.col("est_jaccard") >= MH_EST_THRESHOLD)
         .select("doc_a", "doc_b", "est_jaccard")
     )
-    if done("pairs"):
-        pass
-    elif t["pairs"].exists():
+    if t["pairs"].exists():
         # pairs between two already-indexed docs were found when the later
         # one arrived; merge dedups re-discovered (new,new) pairs.
         # File-count hygiene comes from the table's auto_compact policy
@@ -330,14 +316,11 @@ def curate(
     ids = t["canonical"].read().select("doc_id")
     pairs = t["pairs"].read().select("doc_a", "doc_b")
     if not t["clusters"].exists():
-        if not done("clusters"):
-            t["clusters"].overwrite(
-                _connected_components(ids, pairs), txn=txn
-            )
-            t["clusters"].set_properties(
-                {"auto_compact": True, "auto_compact_min_files": 16}
-            )
-    elif not done("clusters"):
+        t["clusters"].overwrite(_connected_components(ids, pairs), txn=txn)
+        t["clusters"].set_properties(
+            {"auto_compact": True, "auto_compact_min_files": 16}
+        )
+    else:
         from ecommerce_lakehouse_spark.operators.graph import (
             incremental_components,
         )
@@ -356,8 +339,7 @@ def curate(
         .select("doc_id", "content_hash", "n_copies", "lang")
     )
     surv = surv.repartition("lang")
-    if not done("survivors"):
-        t["survivors"].overwrite(surv, partition_by=["lang"], txn=txn)
+    t["survivors"].overwrite(surv, partition_by=["lang"], txn=txn)
     # stage 7 reads the COMMITTED survivors instead of re-running the
     # representative join — table state is also the correct input on a
     # crash replay that skipped the survivors overwrite above
@@ -374,10 +356,9 @@ def curate(
         .when(F.col("bucket") < 90, "val")
         .otherwise("test"),
     )
-    if not done("splits"):
-        t["splits"].overwrite(
-            splits.repartition("split"), partition_by=["split"], txn=txn
-        )
+    t["splits"].overwrite(
+        splits.repartition("split"), partition_by=["split"], txn=txn
+    )
     return t
 
 

@@ -204,8 +204,8 @@ def stream_rollup_refresh(
     Exactly-once: additive combines are NOT naturally idempotent under
     micro-batch replay (foreachBatch is at-least-once), so each commit
     records the batch id in the LakeTable manifest (Delta's txnAppId /
-    txnVersion pattern) and a replayed batch whose id was already applied
-    is skipped — see apply_rollup_batch."""
+    txnVersion pattern) and the table skips a write whose batch id it
+    already applied — see apply_rollup_batch."""
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         apply_rollup_batch(table, batch_df, batch_id)
@@ -225,17 +225,13 @@ def apply_rollup_batch(table: LakeTable, batch_df: DataFrame, batch_id: int) -> 
 
     The LakeTable commit carries ``{"app_id": ROLLUP_TXN_APP, "version":
     batch_id}``; if a crash between the table commit and the checkpoint
-    commit causes Spark to replay the batch, ``last_txn`` shows it was
-    already applied and the additive combine is skipped — exactly Delta's
+    commit causes Spark to replay the batch, the table sees the batch id
+    already applied and skips the additive combine — exactly Delta's
     idempotent-writes pattern for foreachBatch."""
     from ecommerce_lakehouse_spark.lake.merge import merge_aggregate
 
     if batch_df.isEmpty():
         return
-    if table.exists():
-        last = table.last_txn(ROLLUP_TXN_APP)
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already committed
     delta = (
         batch_df.groupBy(F.date_trunc("hour", "ts").alias("bucket"), "event_type")
         .agg(
@@ -311,25 +307,16 @@ def ingest_curation_batch(spark, batch_df: DataFrame, batch_id: int, root: str) 
     """One idempotent micro-batch through the FULL incremental curation
     DAG (pipelines/curation.py): quality MERGE, cross-batch exact-dedup
     combine, append-only band index, derived clusters/survivors/splits.
-    The batch id rides on EVERY stage commit (Delta txn pattern), so an
-    at-least-once foreachBatch replay after a crash anywhere in the DAG
-    resumes from the first unapplied stage — never skipped wholesale,
-    never double-merged — the streaming front door a 100 TB corpus
-    build runs at the ingest edge."""
-    from ecommerce_lakehouse_spark.pipelines.curation import _tables, curate
+    The batch id rides on EVERY stage commit (Delta txn pattern) and
+    each stage table skips a write whose batch id it already applied, so
+    an at-least-once foreachBatch replay after a crash anywhere in the
+    DAG resumes from the first unapplied stage — never skipped
+    wholesale, never double-merged — the streaming front door a 100 TB
+    corpus build runs at the ingest edge."""
+    from ecommerce_lakehouse_spark.pipelines.curation import curate
 
     if batch_df.isEmpty():
         return
-    # fully-applied check anchors on the LAST stage: if splits carries
-    # this batch's txn, every stage before it does too (curate() commits
-    # in order). A crash anywhere earlier leaves splits behind, and
-    # curate()'s per-stage txn checks resume from the first unapplied
-    # stage instead of skipping or double-merging the batch.
-    st = _tables(spark, root)["splits"]
-    if st.exists():
-        last = st.last_txn(CURATION_TXN_APP)
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already fully curated
     curate(
         spark,
         batch_df,
@@ -406,12 +393,12 @@ def stream_replicate(
     composition of the storage layer's CDC producer and consumer.
 
     Exactly-once: each microbatch commit records
-    ``{"app_id": replicate:<src>, "version": batch_id}``; a replayed
-    batch (crash between table commit and checkpoint commit) is detected
-    via ``last_txn`` and skipped — Delta's idempotent foreachBatch
-    pattern. Append-only sources by contract: a rewrite commit on the
-    source raises in the stream source itself (honest, not silent); for
-    tables with DML history, replicate in batch via
+    ``{"app_id": replicate:<src>, "version": batch_id}``; the table
+    skips a replayed batch (crash between table commit and checkpoint
+    commit) whose id it already applied — Delta's idempotent
+    foreachBatch pattern. Append-only sources by contract: a rewrite
+    commit on the source raises in the stream source itself (honest,
+    not silent); for tables with DML history, replicate in batch via
     ``dst.apply_changes(src.changes(...), ...)``.
 
     Returns the started StreamingQuery (caller picks the trigger by
@@ -428,10 +415,6 @@ def stream_replicate(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if dst.exists():
-            last = dst.last_txn(app_id)
-            if last is not None and batch_id <= last:
-                return  # replayed micro-batch: already applied
         dst.apply_changes(
             batch_df,
             keys=keys,
@@ -467,9 +450,9 @@ def stream_mv_refresh(
     "materialized view refresh" running as a Structured Streaming job.
 
     Exactly-once: each fold commits ``{"app_id": mv-stream:<src>,
-    "version": batch_id}``; replayed microbatches (crash between mart
-    commit and checkpoint commit) are detected via ``last_txn`` and
-    skipped. The mart must be maintained by THIS mode only — the batch
+    "version": batch_id}``; the mart skips a replayed microbatch (crash
+    between mart commit and checkpoint commit) whose id it already
+    applied. The mart must be maintained by THIS mode only — the batch
     ``refresh()`` records source versions, not batch ids, and mixing
     the two double-counts (see MaterializedAggregate.fold).
 
@@ -488,10 +471,6 @@ def stream_mv_refresh(
     def fold(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if mart.exists():
-            last = mart.last_txn(app_id)
-            if last is not None and batch_id <= last:
-                return  # replayed micro-batch: already folded
         mv.fold(batch_df, txn={"app_id": app_id, "version": batch_id})
 
     return (
@@ -534,9 +513,9 @@ def stream_apply_changes_scd2(
     than corrupting history).
 
     Exactly-once: each microbatch commit records ``{"app_id":
-    scd2:<src>-><dst>, "version": batch_id}``; a replayed batch (crash
-    between dimension commit and checkpoint commit) is detected via
-    ``last_txn`` and skipped. Because apply_changes_scd2 orders
+    scd2:<src>-><dst>, "version": batch_id}``; the dimension skips a
+    replayed batch (crash between dimension commit and checkpoint
+    commit) whose id it already applied. Because apply_changes_scd2 orders
     multi-change keys within a batch and joins the open row into that
     ordering, the incremental history is identical to one batch apply
     over the whole feed (tests/test_streaming.py asserts equality).
@@ -552,10 +531,6 @@ def stream_apply_changes_scd2(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if dst.exists():
-            last = dst.last_txn(app_id)
-            if last is not None and batch_id <= last:
-                return  # replayed micro-batch: already applied
         dst.apply_changes_scd2(
             batch_df,
             keys=keys,
@@ -598,13 +573,13 @@ def stream_drift_monitor(
     receives the full histogram each trigger, computes PSI with the
     batch query's exact arithmetic (Laplace-smoothed shares, each
     ln-term rounded once into integer nanos, exact integer total), and
-    commits the log row with the Delta txn pattern — a replayed batch
-    after a crash is detected via last_txn and skipped, so the log is
-    exactly-once.
+    commits the log row with the Delta txn pattern — the log skips a
+    replayed batch whose id it already applied, so it is exactly-once.
 
     The batch/stream contract (tested): after draining the second-half
     events against a first-half reference, the final logged psi_nanos
     equals `psi_value_drift`'s total exactly."""
+    import pandas as pd
     import pyspark.sql.functions as F
 
     log = LakeTable(events.sparkSession, log_root)
@@ -619,10 +594,6 @@ def stream_drift_monitor(
         cur = {int(r.bin): int(r.c) for r in batch_df.collect()}  # <=10 rows
         if not cur:
             return
-        if log.exists():
-            last = log.last_txn(app_id)
-            if last is not None and batch_id <= last:
-                return  # replayed micro-batch
         bins = sorted(set(ref) | set(cur))
         n1, n2, k = sum(ref.values()), sum(cur.values()), len(bins)
         total = 0
@@ -632,22 +603,22 @@ def stream_drift_monitor(
             x = (p - q) * math.log(p / q) * 1e9
             total += int(math.floor(x + 0.5) if x >= 0 else math.ceil(x - 0.5))
         row = log.spark.createDataFrame(
-            [
-                (
-                    int(batch_id),
-                    int(n2),
-                    int(total),
-                    float(total) / 1e9,
-                    bool(total > psi_alert_nanos),
-                )
-            ],
+            pd.DataFrame(
+                [
+                    (
+                        int(batch_id),
+                        int(n2),
+                        int(total),
+                        float(total) / 1e9,
+                        bool(total > psi_alert_nanos),
+                    )
+                ],
+                columns=["batch_id", "n_seen", "psi_nanos", "psi", "alert"],
+            ),
             "batch_id bigint, n_seen bigint, psi_nanos bigint, "
             "psi double, alert boolean",
         )
-        if log.exists():
-            log.append(row, txn={"app_id": app_id, "version": int(batch_id)})
-        else:
-            log.overwrite(row, txn={"app_id": app_id, "version": int(batch_id)})
+        log.append(row, txn={"app_id": app_id, "version": int(batch_id)})
 
     return (
         binned.writeStream.outputMode("complete")
@@ -679,9 +650,10 @@ def stream_heavy_hitters(
     because a sketch alone cannot enumerate keys).
 
     Exactly-once: both tables commit with the Delta txn pattern keyed
-    by batch id; a replayed micro-batch is skipped on the cells fold
-    (the non-idempotent addition) and recomputes identically on the
-    candidate overwrite.
+    by batch id, and each table skips a write whose batch id it already
+    applied: a crash between the two commits replays the batch past the
+    cells fold (the non-idempotent addition) into the candidate
+    overwrite.
 
     Hashing matches the batch query exactly (md5(f"{i}|{key}") % width),
     so estimates agree across engines, retries and partitionings."""
@@ -731,27 +703,15 @@ def stream_heavy_hitters(
             .groupBy(F.col("ib.i").alias("i"), F.col("ib.b").alias("b"))
             .agg(F.sum("cnt").cast("long").alias("cell"))
         )
-        # Replay guards are PER TABLE: the cells fold is non-idempotent
-        # (addition), so a replayed micro-batch must skip it — but the
-        # candidate overwrite below is idempotent and must still run, or a
-        # crash between the two commits would leave cand_t permanently
-        # missing this batch's keys on replay.
-        _cells_last = cells_t.last_txn(app) if cells_t.exists() else None
-        if _cells_last is not None and _cells_last >= batch_id:
-            pass  # replayed micro-batch: sketch already folded
-        elif cells_t.exists():
-            merged = (
+        txn = {"app_id": app, "version": int(batch_id)}
+        if cells_t.exists():
+            inc = (
                 cells_t.read()
                 .unionByName(inc)
                 .groupBy("i", "b")
                 .agg(F.sum("cell").cast("long").alias("cell"))
             )
-            cells_t.overwrite(merged, txn={"app_id": app, "version": int(batch_id)})
-        else:
-            cells_t.overwrite(inc, txn={"app_id": app, "version": int(batch_id)})
-        _cand_last = cand_t.last_txn(app) if cand_t.exists() else None
-        if _cand_last is not None and _cand_last >= batch_id:
-            return  # candidate table also committed this batch already
+        cells_t.overwrite(inc, txn=txn)
         # candidate set: prior candidates + this batch's keys, re-estimated
         # against the UPDATED sketch, kept to the top max_candidates
         prior = (
@@ -780,7 +740,7 @@ def stream_heavy_hitters(
             .orderBy(F.desc("est_cnt"), "o_custkey")
             .limit(max_candidates)
         )
-        cand_t.overwrite(est, txn={"app_id": app, "version": int(batch_id)})
+        cand_t.overwrite(est, txn=txn)
 
     return (
         orders.writeStream.outputMode("append")
@@ -810,8 +770,9 @@ def stream_kll_quantiles(
     State is ONE LakeTable row (n, level, items — O(k) whatever the
     volume); quantile queries are element_at on the sorted item array.
     Exactly-once: the merge is NOT idempotent (n accumulates), so the
-    fold commits with the Delta txn pattern and a replayed micro-batch
-    is skipped; single-table state means no torn-commit window exists.
+    fold commits with the Delta txn pattern and the table skips a
+    replayed micro-batch; single-table state means no torn-commit window
+    exists.
     """
     from ecommerce_lakehouse_spark.operators.sketch import (
         kll_level_sketch,
@@ -831,15 +792,10 @@ def stream_kll_quantiles(
         if bsk.isEmpty():
             return  # empty micro-batch: nothing to fold
         if sk_t.exists():
-            _sk_last = sk_t.last_txn(app)
-            if _sk_last is not None and _sk_last >= batch_id:
-                return  # replayed micro-batch: n already accumulated
             from ecommerce_lakehouse_spark.operators.sketch import kll_merge
 
-            merged = kll_merge(sk_t.read().unionByName(bsk), k=k)
-            sk_t.overwrite(merged, txn={"app_id": app, "version": int(batch_id)})
-        else:
-            sk_t.overwrite(bsk, txn={"app_id": app, "version": int(batch_id)})
+            bsk = kll_merge(sk_t.read().unionByName(bsk), k=k)
+        sk_t.overwrite(bsk, txn={"app_id": app, "version": int(batch_id)})
 
     return (
         events.writeStream.outputMode("append")
@@ -864,10 +820,10 @@ def stream_page_hinkley(
     (`ph_summary_from_daily`) — so after any chunking of the order
     stream the summary is BIT-IDENTICAL to the batch query (tested).
 
-    Exactly-once: the daily fold is non-idempotent, so it commits with
-    the Delta txn pattern (explicit-None batch-0 guard); the summary
-    overwrite is idempotent and still runs on a replayed batch (the
-    torn-commit lesson).
+    Exactly-once: both tables commit with the Delta txn pattern and
+    each skips a batch it already applied, so a crash between the
+    non-idempotent daily fold and the summary overwrite replays into the
+    summary only (the torn-commit lesson).
 
     Scale: state is one row per DATE; the PH windows run over that
     bounded frame — the sanctioned class."""
@@ -890,22 +846,14 @@ def stream_page_hinkley(
         if inc.isEmpty():
             return
         txn = {"app_id": app, "version": int(batch_id)}
-        _daily_last = daily_t.last_txn(app) if daily_t.exists() else None
-        if _daily_last is not None and _daily_last >= batch_id:
-            pass  # replayed micro-batch: cents already folded
-        elif daily_t.exists():
-            merged = (
+        if daily_t.exists():
+            inc = (
                 daily_t.read()
                 .unionByName(inc)
                 .groupBy("day")
                 .agg(F.sum("cents").cast("long").alias("cents"))
             )
-            daily_t.overwrite(merged, txn=txn)
-        else:
-            daily_t.overwrite(inc, txn=txn)
-        _sum_last = sum_t.last_txn(app) if sum_t.exists() else None
-        if _sum_last is not None and _sum_last >= batch_id:
-            return
+        daily_t.overwrite(inc, txn=txn)
         sum_t.overwrite(ph_summary_from_daily(daily_t.read()), txn=txn)
 
     return (
@@ -934,9 +882,8 @@ def stream_grouped_quantiles(
     any chunking, any restart (tested).
 
     Exactly-once: the fold is non-idempotent (per-type n accumulates),
-    so it commits with the Delta txn pattern and a replayed micro-batch
-    — including batch_id 0 (the `or -1` lesson, round-7 fix) — skips
-    the merge.
+    so it commits with the Delta txn pattern and the table skips a
+    replayed micro-batch, batch_id 0 included.
 
     Scale: state is O(k) rows per event type; the merge stages all key
     by type, so a million-tenant profile folds in one fixed-width
@@ -964,15 +911,10 @@ def stream_grouped_quantiles(
         if bsk.isEmpty():
             return  # empty micro-batch: nothing to fold
         if sk_t.exists():
-            last = sk_t.last_txn(app)
-            if last is not None and last >= batch_id:
-                return  # replayed micro-batch: n already accumulated
-            merged = kll_merge_grouped(
+            bsk = kll_merge_grouped(
                 sk_t.read().unionByName(bsk), ["event_type"], k=k
             )
-            sk_t.overwrite(merged, txn={"app_id": app, "version": int(batch_id)})
-        else:
-            sk_t.overwrite(bsk, txn={"app_id": app, "version": int(batch_id)})
+        sk_t.overwrite(bsk, txn={"app_id": app, "version": int(batch_id)})
 
     return (
         events.writeStream.outputMode("append")
@@ -999,11 +941,11 @@ def stream_spike_monitor(
     to the batch query over the same data (tested).
 
     Exactly-once: the daily fold is non-idempotent (cents accumulate),
-    so it commits with the Delta txn pattern and replays skip it; the
-    flags overwrite is idempotent and MUST still run on a replayed
-    batch (the stream_heavy_hitters torn-commit lesson: a crash between
-    the two commits otherwise leaves flags permanently stale), so its
-    replay guard is per-table.
+    so it commits with the Delta txn pattern and the table skips a
+    replayed batch; the flags overwrite must still run on a batch
+    replayed after a crash between the two commits (the
+    stream_heavy_hitters torn-commit lesson), and it does: each table
+    checks the batch id against its own head.
 
     Scale: state is one row per DATE (domain-bounded); the rolling
     window runs over that aggregated frame — the sanctioned class."""
@@ -1026,23 +968,14 @@ def stream_spike_monitor(
         if inc.isEmpty():
             return
         txn = {"app_id": app, "version": int(batch_id)}
-        _daily_last = daily_t.last_txn(app) if daily_t.exists() else None
-        if _daily_last is not None and _daily_last >= batch_id:
-            pass  # replayed micro-batch: cents already folded
-        elif daily_t.exists():
-            merged = (
+        if daily_t.exists():
+            inc = (
                 daily_t.read()
                 .unionByName(inc)
                 .groupBy("d")
                 .agg(F.sum("cents").cast("long").alias("cents"))
             )
-            daily_t.overwrite(merged, txn=txn)
-        else:
-            daily_t.overwrite(inc, txn=txn)
-        # idempotent recompute: still runs when the fold was replayed
-        _flags_last = flags_t.last_txn(app) if flags_t.exists() else None
-        if _flags_last is not None and _flags_last >= batch_id:
-            return
+        daily_t.overwrite(inc, txn=txn)
         flags_t.overwrite(spike_flags_from_daily(daily_t.read()), txn=txn)
 
     return (
@@ -1071,10 +1004,10 @@ def stream_holt_winters(
     the monthly revenue double is one division of exact cents, the
     same nearest-double the batch decimal sum lands on).
 
-    Exactly-once: the monthly fold is non-idempotent, so it commits
-    with the Delta txn pattern (explicit-None batch-0 guard); the
-    forecast overwrite is idempotent and still runs on a replayed
-    batch (the torn-commit lesson).
+    Exactly-once: both tables commit with the Delta txn pattern and
+    each skips a batch it already applied, so a crash between the
+    non-idempotent monthly fold and the forecast overwrite replays into
+    the forecast only (the torn-commit lesson).
 
     Scale: state is one row per MONTH; the fit is an in-row fold over
     that bounded frame — the sanctioned class."""
@@ -1099,22 +1032,14 @@ def stream_holt_winters(
         if inc.isEmpty():
             return
         txn = {"app_id": app, "version": int(batch_id)}
-        _m_last = monthly_t.last_txn(app) if monthly_t.exists() else None
-        if _m_last is not None and _m_last >= batch_id:
-            pass  # replayed micro-batch: cents already folded
-        elif monthly_t.exists():
-            merged = (
+        if monthly_t.exists():
+            inc = (
                 monthly_t.read()
                 .unionByName(inc)
                 .groupBy("month")
                 .agg(F.sum("cents").cast("long").alias("cents"))
             )
-            monthly_t.overwrite(merged, txn=txn)
-        else:
-            monthly_t.overwrite(inc, txn=txn)
-        _f_last = fc_t.last_txn(app) if fc_t.exists() else None
-        if _f_last is not None and _f_last >= batch_id:
-            return
+        monthly_t.overwrite(inc, txn=txn)
         m = monthly_t.read().select(
             "month",
             (F.col("cents").cast("double") / 100).alias("revenue"),
@@ -1148,12 +1073,12 @@ def stream_mixture_shift(
     BIT-IDENTICAL to the batch query (tested; equal exact integers in,
     identical single-division doubles out).
 
-    Exactly-once: the raw-counter fold is non-idempotent, so it
-    commits with the Delta txn pattern (explicit-None batch-0 guard).
-    The hash-state merge is idempotent by construction (min of min),
-    but carries the same guard so a replay costs nothing; the summary
-    overwrite is idempotent and still runs on a replayed batch (the
-    torn-commit lesson).
+    Exactly-once: all three tables commit with the Delta txn pattern
+    and each skips a batch it already applied. The raw-counter fold is
+    non-idempotent, so the skip is what keeps it exact; the hash-state
+    merge is idempotent by construction (min of min), so its skip only
+    saves the work; a crash between commits replays into the tables
+    not yet written (the torn-commit lesson).
 
     Scale: raw state is one row per SOURCE; hash state is one row per
     DISTINCT content hash — exactly the state any streaming exact-dedup
@@ -1188,11 +1113,8 @@ def stream_mixture_shift(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_tok").cast("long").alias("tok_raw"),
         )
-        _r_last = raw_t.last_txn(app) if raw_t.exists() else None
-        if _r_last is not None and _r_last >= batch_id:
-            pass  # replayed micro-batch: counters already folded
-        elif raw_t.exists():
-            merged = (
+        if raw_t.exists():
+            raw_inc = (
                 raw_t.read()
                 .unionByName(raw_inc)
                 .groupBy("source")
@@ -1201,19 +1123,14 @@ def stream_mixture_shift(
                     F.sum("tok_raw").cast("long").alias("tok_raw"),
                 )
             )
-            raw_t.overwrite(merged, txn=txn)
-        else:
-            raw_t.overwrite(raw_inc, txn=txn)
+        raw_t.overwrite(raw_inc, txn=txn)
 
         hash_inc = d.groupBy("h").agg(
             F.min("doc_id").alias("keep"),
             F.min_by("source", "doc_id").alias("keep_source"),
             F.min_by("n_tok", "doc_id").alias("keep_ntok"),
         )
-        _h_last = hash_t.last_txn(app) if hash_t.exists() else None
-        if _h_last is not None and _h_last >= batch_id:
-            pass  # replayed: min-merge is idempotent anyway
-        elif hash_t.exists():
+        if hash_t.exists():
             # Upsert ONLY the batch's hashes (ADVICE r08: the old
             # read-union-groupBy-overwrite rewrote the corpus-sized
             # state on every micro-batch, so per-batch write cost grew
@@ -1260,9 +1177,6 @@ def stream_mixture_shift(
         else:
             hash_t.overwrite(hash_inc, txn=txn)
 
-        _s_last = sum_t.last_txn(app) if sum_t.exists() else None
-        if _s_last is not None and _s_last >= batch_id:
-            return
         canon = hash_t.read().groupBy(
             F.col("keep_source").alias("source")
         ).agg(

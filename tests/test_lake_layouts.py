@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from ecommerce_lakehouse_spark.lake import ConcurrentWriteError, LakeTable
+from ecommerce_lakehouse_spark.lake.table import ConstraintViolationError
 
 COLS = ["id", "v", "p", "n"]
 SCHEMA = "id int, v string, p string, n int"
@@ -217,7 +218,9 @@ def test_dml_job_budget(spark, tmp_path, spark_jobs, partition_by):
     scan, write); compact(where=) runs 1 (the write: its files are
     chosen on a local relation). apply_changes with deletes runs 9: its
     upserts and its delete keys are materialized apart, each pass running
-    the sequencing window's shuffle, and the rewrite anti-joins both."""
+    the sequencing window's shuffle, and the rewrite anti-joins both.
+    A merge that supplies a generated column checks it in the pass that
+    materializes the batch, so it stays within merge's 5 jobs."""
     layout = "partitioned" if partition_by else "unpartitioned"
     t = _ranged(spark, str(tmp_path / layout), partition_by)
     model = pd.DataFrame(BASE, columns=COLS)
@@ -262,6 +265,13 @@ def test_dml_job_budget(spark, tmp_path, spark_jobs, partition_by):
     if partition_by:
         want["compact"] = 1
     assert launched == want
+
+    g = _ranged(spark, str(tmp_path / f"{layout}-generated"), partition_by)
+    g.add_generated_column("w", "n * 2")
+    supplied = _frame(spark, [(3, "m3", "a", 3, 6)], SCHEMA + ", w int")
+    with spark_jobs(f"dml-budget-merge-generated-{layout}") as jobs:
+        g.merge(supplied, keys=["id"])
+    assert len(jobs.ids) <= 5, jobs.ids
 
 
 def _offset_udf(path: str):
@@ -329,3 +339,28 @@ def test_merge_checks_the_rows_it_writes(spark, tmp_path, reevaluation_offset):
     t.merge(_frame(spark, batch, SCHEMA).withColumn("n", shifted("n")), keys=["id"])
 
     assert _rows(t) == _model_rows(_upsert(pd.DataFrame(BASE, columns=COLS), batch))
+
+
+def test_merge_checks_the_generated_values_it_writes(spark, tmp_path, monkeypatch):
+    """A supplied generated column is checked on the rows merge writes:
+    a value that agrees with its expression while the generated columns
+    are applied, but not when the batch is evaluated again for the
+    write, must be rejected, never committed."""
+    path = str(tmp_path / "offset")
+    with open(path, "w") as f:
+        f.write("0")
+    real = LakeTable._apply_generated
+
+    def apply_then_shift(self, *args):
+        out = real(self, *args)
+        with open(path, "w") as f:
+            f.write("1")
+        return out
+
+    t = _ranged(spark, str(tmp_path / "t"))
+    t.add_generated_column("w", "n * 2")
+    monkeypatch.setattr(LakeTable, "_apply_generated", apply_then_shift)
+    batch = _frame(spark, [(1, "m1", "b", 5, 10)], SCHEMA + ", w int")
+    with pytest.raises(ConstraintViolationError, match="generated:w"):
+        t.merge(batch.withColumn("w", _offset_udf(path)("w")), keys=["id"])
+    assert t.history()[-1]["operation"] == "add_generated_column"

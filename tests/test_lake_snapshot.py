@@ -2,12 +2,18 @@
 it (Delta's per-operation snapshot): metadata DDL validates and commits
 on one version, the stream source rolls forward over durable commits the
 ``_LATEST`` cache has not caught up with, and a warm handle's DML opens
-exactly one manifest file per operation."""
+exactly one manifest file per operation. A write whose ``txn`` that one
+head already records is skipped, and so is the loser of a race between
+two replays of one transaction."""
 
 import builtins
+import json
 import os
+import re
 
+import pandas as pd
 import pytest
+from test_lake_layouts import _frame, _interleave
 
 import ecommerce_lakehouse_spark.lake.table as lake_table
 from ecommerce_lakehouse_spark.lake.stream_source import (
@@ -16,6 +22,7 @@ from ecommerce_lakehouse_spark.lake.stream_source import (
 )
 from ecommerce_lakehouse_spark.lake.mv import MaterializedAggregate
 from ecommerce_lakehouse_spark.lake.table import ConcurrentWriteError, LakeTable
+from ecommerce_lakehouse_spark.streaming.jobs import ROLLUP_TXN_APP, apply_rollup_batch
 
 
 def _df(spark, rows):
@@ -162,6 +169,12 @@ def test_warm_handle_dml_opens_one_manifest(spark, tmp_path, monkeypatch):
     ops = {
         "merge": lambda t: t.merge(_df(spark, [(2, "B", "y"), (20, "n", "x")]), keys=["k"]),
         "append": lambda t: t.append(_df(spark, [(30, "a", "x")])),
+        "merge_txn": lambda t: t.merge(
+            _df(spark, [(5, "T", "x")]), keys=["k"], txn={"app_id": "w", "version": 1}
+        ),
+        "append_replayed": lambda t: t.append(
+            _df(spark, [(31, "r", "x")]), txn={"app_id": "w", "version": 1}
+        ),
         "update": lambda t: t.update("k = 3", {"v": "'U'"}),
         "delete": lambda t: t.delete("k = 4"),
         "set_properties": lambda t: t.set_properties({"owner": "etl"}),
@@ -243,3 +256,114 @@ def test_apply_changes_scd2_commits_on_the_head_it_read(spark, tmp_path):
         (r.k, r["__start_at"]): (r.v, r["__end_at"]) for r in dim.read().collect()
     }
     assert hist == {(1, 10): ("a", 15), (1, 15): ("b", None)}
+
+
+KVP = "k int, v string, part string"
+
+
+def test_replayed_txn_is_skipped_by_every_write_op(spark, tmp_path, spark_jobs):
+    """Each write op that takes ``txn`` returns the head version when the
+    head already records that transaction: no manifest, no Spark job."""
+    t = LakeTable(spark, str(tmp_path / "t"))
+    txn = {"app_id": "job", "version": 3}
+    t.overwrite(_frame(spark, [(1, "a", "x"), (2, "b", "y")], KVP), txn=txn)
+    head = t.current_version()
+    batch = _frame(spark, [(2, "B", "y"), (9, "n", "x")], KVP)
+    cdc = _frame(
+        spark,
+        [(2, "B", "y", "update_postimage", 1), (1, None, None, "delete", 1)],
+        "k int, v string, part string, _change_type string, _seq int",
+    )
+    ops = {
+        "overwrite": lambda: t.overwrite(batch, txn=txn),
+        "append": lambda: t.append(batch, txn=txn),
+        "merge": lambda: t.merge(batch, keys=["k"], txn=txn),
+        "apply_changes": lambda: t.apply_changes(cdc, ["k"], "_seq", txn=txn),
+        "apply_changes_scd2": lambda: t.apply_changes_scd2(cdc, ["k"], "_seq", txn=txn),
+    }
+    got = {}
+    for name, op in ops.items():
+        with spark_jobs(f"replayed-txn-{name}") as jobs:
+            v = op()
+        got[name] = (v, len(jobs.ids))
+    assert got == {name: (head, 0) for name in ops}
+    assert len(t.history()) == 1
+    assert sorted((r.k, r.v) for r in t.read().collect()) == [(1, "a"), (2, "b")]
+
+
+def test_replayed_scd2_batch_with_two_changes_to_a_key(spark, tmp_path):
+    """A replayed SCD2 batch holding two changes to one key would fail the
+    late-arrival check (its first change is older than the history it
+    wrote); the table skips it before that check runs."""
+    dim = LakeTable(spark, str(tmp_path / "dim"))
+    cdc = _frame(
+        spark,
+        [(1, "a", "insert", 1), (1, "a2", "update_postimage", 2), (2, "b", "insert", 1)],
+        "k int, v string, _change_type string, _seq int",
+    )
+    txn = {"app_id": "scd2", "version": 0}
+    v = dim.apply_changes_scd2(cdc, ["k"], "_seq", txn=txn)
+    assert dim.apply_changes_scd2(cdc, ["k"], "_seq", txn=txn) == v
+    assert dim.current_version() == v
+    rows = dim.read().select("k", "v", "__start_at", "__end_at").collect()
+    assert sorted(map(tuple, rows)) == [(1, "a", 1, 2), (1, "a2", 2, None), (2, "b", 1, None)]
+
+
+def test_racing_append_replays_land_once(spark, tmp_path):
+    """Two handles replay one transaction; the second commits while the
+    first writes its data. The first must see its transaction landed,
+    not rebase over it: the row is committed once."""
+    root = str(tmp_path / "log")
+    a, b = LakeTable(spark, root), LakeTable(spark, root)
+    a.overwrite(_frame(spark, [(1, "a", "x")], KVP))
+    txn = {"app_id": "replay", "version": 7}
+    row = _frame(spark, [(2, "b", "y")], KVP)
+    restore = _interleave(a, lambda: b.append(row, txn=txn))
+    try:
+        v = a.append(row, txn=txn)
+    finally:
+        restore()
+    assert v == a.current_version() == 2
+    assert sorted(r.k for r in a.read().collect()) == [1, 2]
+
+
+def test_racing_rollup_replays_land_once(spark, tmp_path):
+    """The same race on a rollup fold, an overwrite: the loser returns
+    instead of raising ConcurrentWriteError, and the sums hold the
+    batch once."""
+    root = str(tmp_path / "rollup")
+    a, b = LakeTable(spark, root), LakeTable(spark, root)
+    hour = pd.Timestamp("2024-01-01 10:00:00")
+
+    def events(values):
+        rows = [(hour, "view", x) for x in values]
+        return _frame(spark, rows, "ts timestamp, event_type string, value double")
+
+    apply_rollup_batch(a, events([1.0, 2.0]), 0)
+    restore = _interleave(a, lambda: apply_rollup_batch(b, events([4.0]), 1))
+    try:
+        apply_rollup_batch(a, events([4.0]), 1)
+    finally:
+        restore()
+    assert a.current_version() == 2
+    assert a.last_txn(ROLLUP_TXN_APP) == 1
+    assert [(r.n_events, r.total_value) for r in a.read().collect()] == [(3, 7.0)]
+
+
+def test_head_without_txns_map_is_refused_by_name(spark, tmp_path):
+    t = LakeTable(spark, str(tmp_path / "bare"))
+    t.overwrite(_frame(spark, [(1, "a", "x")], KVP), txn={"app_id": "job", "version": 1})
+    path = os.path.join(t._manifest_dir, f"v{t.current_version():08d}.json")
+    with open(path) as f:
+        m = json.load(f)
+    del m["txns"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    refused = re.escape(f"table {t.root}: manifest v1 records no txns")
+    with pytest.raises(ValueError, match=refused):
+        t.last_txn("job")
+    with pytest.raises(ValueError, match=refused):
+        t.append(_frame(spark, [(2, "b", "y")], KVP), txn={"app_id": "job", "version": 1})
+    with pytest.raises(ValueError, match=refused):
+        t.append(_frame(spark, [(2, "b", "y")], KVP))
+    assert t.current_version() == 1

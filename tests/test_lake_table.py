@@ -1813,7 +1813,7 @@ def test_read_skipping_on_renamed_column(spark, tmp_path):
 def test_last_txn_constant_time_map(spark, tmp_path):
     """last_txn reads ONE manifest (the accumulated SetTransaction map),
     never the log: the map carries forward across unrelated commits,
-    keeps per-app maxima, and pre-map tables fall back to the walk."""
+    keeps per-app maxima, and a manifest without the map is refused."""
     t = LakeTable(spark, str(tmp_path / "tx"))
     t.overwrite(
         spark.createDataFrame([(1, "a")], "k int, v string"),
@@ -1838,14 +1838,15 @@ def test_last_txn_constant_time_map(spark, tmp_path):
     )
     assert t.last_txn("stream") == 7
 
-    # pre-map manifests (simulated by stripping the key): walk fallback
+    # pre-map manifests (simulated by stripping the key): refused by name
     import json as _json
 
     p = t._manifest_dir + f"/v{t.current_version():08d}.json"
     m = _json.load(open(p))
     del m["txns"]
     _json.dump(m, open(p, "w"))
-    assert t.last_txn("loader") == 3
+    with pytest.raises(ValueError, match="records no txns"):
+        t.last_txn("loader")
 
 
 def test_compact_where_partition_scoped(spark, tmp_path):

@@ -1,7 +1,9 @@
 """Dependencies point down: queries and pipelines import operators and
 the lake, never the other way round. Every import in every package
 module counts, including imports inside functions, so a lazy import
-cannot hide an upward edge."""
+cannot hide an upward edge. Replay checks stay inside the lake too: a
+``LakeTable`` write skips a ``txn`` it already applied, so no caller
+guards itself with ``last_txn``."""
 
 import ast
 import pathlib
@@ -86,3 +88,28 @@ def test_scan_sees_function_local_and_relative_imports(tmp_path):
         f"{PKG}/lake/m.py:3 imports {PKG}.pipelines",
         f"{PKG}/lake/m.py:3 imports {PKG}.pipelines.curation",
     ]
+
+
+def _last_txn_calls(root=ROOT) -> list[str]:
+    """Every ``.last_txn(`` call in the package outside ``lake/``."""
+    out = []
+    for f in sorted(root.rglob("*.py")):
+        if (root / "lake") in f.parents:
+            continue
+        for node in ast.walk(ast.parse(f.read_text(), str(f))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "last_txn"
+            ):
+                out.append(f"{f.relative_to(root.parent)}:{node.lineno}")
+    return out
+
+
+def test_no_replay_guard_outside_lake(tmp_path):
+    assert _last_txn_calls() == []
+    pkg = tmp_path / PKG
+    for sub in ("lake", "streaming"):
+        (pkg / sub).mkdir(parents=True)
+        (pkg / sub / "m.py").write_text("def f(t):\n    return t.last_txn('a')\n")
+    assert _last_txn_calls(root=pkg) == [f"{PKG}/streaming/m.py:2"]
