@@ -35,24 +35,10 @@ from ecommerce_lakehouse_spark.lake.table import (
     _PHYSICAL_OPS,
     _ROW_ID,
     LakeTable,
+    _live_rels,
     _read_dvs,
     check_table_features,
 )
-
-
-def _rel_parquet_files(d: str) -> set[str]:
-    if not os.path.isdir(d):
-        raise FileNotFoundError(
-            f"change feed: data dir {d} referenced by the manifest is missing "
-            "(vacuumed?). Narrow the version range — silently skipping it "
-            "would misreport changes."
-        )
-    out = set()
-    for base, _dirs, files in os.walk(d):
-        for name in files:
-            if name.endswith(".parquet"):
-                out.add(os.path.relpath(os.path.join(base, name), d))
-    return out
 
 
 def _under_head(snap: dict, head: dict) -> dict:
@@ -132,7 +118,7 @@ def _version_slices(
             all_files = (
                 None
                 if live_p is not None and live_c is not None
-                else _rel_parquet_files(path)
+                else set(_live_rels({"path": path}, m_cur["version"]))
             )
             pf = set(live_p) if live_p is not None else all_files
             cf = set(live_c) if live_c is not None else all_files

@@ -56,6 +56,9 @@ def merge_aggregate(
     recompute. Additive metrics (counts, sums) merge exactly; averages
     must be stored as (sum, count) pairs and derived at read time.
 
+    Keys match null-safely, as a groupBy groups them: a NULL key's
+    partials combine like any other key's.
+
     Scale: the delta side is pre-aggregated to the rollup grain before
     the merge (map-side partials), so the join is rollup-row × delta-row,
     both tiny relative to the fact stream."""
@@ -64,7 +67,8 @@ def merge_aggregate(
     t = target.alias("t")
     u = updates.alias("u")
     other_cols = [c for c in target.columns if c not in keys and c not in sum_cols]
-    combined = t.join(u, on=keys, how="full_outer").select(
+    on = [F.col(f"t.{k}").eqNullSafe(F.col(f"u.{k}")) for k in keys]
+    combined = t.join(u, on=on, how="full_outer").select(
         *[F.coalesce(F.col(f"t.{k}"), F.col(f"u.{k}")).alias(k) for k in keys],
         *[
             (

@@ -53,36 +53,11 @@ from ecommerce_lakehouse_spark.lake.table import (
     _PHYSICAL_OPS,
     _head_version,
     _hive_values,
+    _live_rels,
     _read_manifest,
     _recorded_schema,
     check_table_features,
 )
-
-
-def _parquet_files(d: str) -> list[str]:
-    """Hive-relative paths of the parquet files under a data dir."""
-    if not os.path.isdir(d):
-        raise FileNotFoundError(
-            f"laketable source: data dir {d} referenced by the manifest is "
-            "missing (vacuumed?). Start the stream from a later "
-            "startingVersion — silently skipping it would lose rows."
-        )
-    out = []
-    for base, _dirs, files in os.walk(d):
-        for name in files:
-            if name.endswith(".parquet"):
-                out.append(os.path.relpath(os.path.join(base, name), d))
-    return sorted(out)
-
-
-def _live_files(entry: dict) -> list[tuple[str, str]]:
-    """(dir, rel) of the files a manifest entry actually exposes: its
-    ``live_files`` (copy-on-write DML) when listed, else the whole dir —
-    the same visibility LakeTable.read() enforces, so clones/restored
-    snapshots stream the rows the table reads, not the raw dir contents."""
-    live = entry.get("live_files")
-    rels = sorted(live) if live is not None else _parquet_files(entry["path"])
-    return [(entry["path"], r) for r in rels]
 
 
 def _snapshot_arrow_schema(root: str):
@@ -291,9 +266,11 @@ class LakeTableStreamReader(DataSourceStreamReader):
                         "(downstream must dedup), or start from a later "
                         "startingVersion."
                     )
+            # the files each entry serves (its live_files when listed),
+            # as LakeTable.read() does; a vacuumed dir raises
             for e in new_entries:
-                for d, rel in _live_files(e):
-                    parts.append(_LakeFilePartition(os.path.join(d, rel), rel, v))
+                for rel in sorted(_live_rels(e, v)):
+                    parts.append(_LakeFilePartition(os.path.join(e["path"], rel), rel, v))
         return parts
 
     # -- executor-side read --------------------------------------------

@@ -333,6 +333,10 @@ def _hive_values(rel: str) -> dict[str, str | None]:
 _ROW_ID = ["__file_path", "__row_index"]
 _DV_SCHEMA = "__file_path string, __row_index long"
 
+# flag column of a merge batch (apply_changes, MV refresh): a row where
+# it is true removes its key instead of upserting it, in the same commit
+_DELETE = "__delete"
+
 
 def _read_dvs(spark: SparkSession, paths: list[str]) -> DataFrame:
     """The (file, row) ids named by the deletion-vector sidecars ``paths``."""
@@ -536,6 +540,29 @@ def _files_entries(files: list[tuple]) -> list[dict]:
     for f in files:
         by_dir.setdefault(f[0], []).append(f[1])
     return [{"path": d, "live_files": rels} for d, rels in by_dir.items()]
+
+
+def _live_rels(entry: dict, version: int) -> list[str]:
+    """Hive-relative paths of the parquet files data-dir ``entry`` of
+    manifest ``version`` serves: its ``live_files`` when it lists them,
+    else every parquet file under the dir. A dir the manifest names but
+    storage lacks raises instead of listing as empty — a rewrite would
+    otherwise commit the table without its rows."""
+    path = entry["path"]
+    if not os.path.isdir(path):
+        raise FileNotFoundError(
+            f"data dir {path} named by manifest v{version} is missing from "
+            "storage (vacuumed?); read or stream from a later version, or "
+            "fsck(dry_run=False) to drop it"
+        )
+    if entry.get("live_files") is not None:
+        return list(entry["live_files"])
+    return sorted(
+        os.path.relpath(os.path.join(root, n), path)
+        for root, _, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet")
+    )
 
 
 def _partition_of(rel: str) -> tuple:
@@ -875,24 +902,14 @@ class LakeTable:
         """(dir, relpath, footer_stats|None) for every live parquet file of
         snapshot ``manifest``, in either layout: relpaths are
         hive-relative (``col=value/part-....parquet`` on a partitioned
-        table), so each file carries its partition values. Entries
-        carrying a ``live_files`` list (from a prior copy-on-write DML)
-        enumerate exactly those; the others are walked. Control-plane:
-        bounded by file count."""
-        inv = []
-        for e in manifest["data_dirs"]:
-            dpath, stats = e["path"], e.get("files", {})
-            rels = e.get("live_files")
-            if rels is None:
-                rels = sorted(
-                    os.path.relpath(os.path.join(root, n), dpath)
-                    for root, _, names in os.walk(dpath)
-                    for n in names
-                    if n.endswith(".parquet")
-                )
-            for rel in rels:
-                inv.append((dpath, rel, stats.get(rel)))
-        return inv
+        table), so each file carries its partition values (see
+        :func:`_live_rels`; a missing dir raises). Control-plane: bounded
+        by file count."""
+        return [
+            (e["path"], rel, e.get("files", {}).get(rel))
+            for e in manifest["data_dirs"]
+            for rel in _live_rels(e, manifest["version"])
+        ]
 
     @staticmethod
     def _surviving_file_entries(untouched: list[tuple]) -> list:
@@ -998,17 +1015,21 @@ class LakeTable:
         return self._head().get("constraints", {})
 
     @staticmethod
-    def _violation_flags(cons: dict[str, str]) -> list:
+    def _violation_flags(cons: dict[str, str], rows=None) -> list:
         """One aggregate per constraint of ``cons``, in name order, that
-        is 1 when some row violates it (NULL-evaluating rows violate,
+        is 1 when some row (of those where the Column ``rows`` holds, by
+        default all) violates it (NULL-evaluating rows violate,
         matching Delta — a CHECK must be provably TRUE). An ``agg`` or
         an ``observe`` computes them; :meth:`_raise_violations` reads the
         result."""
         import pyspark.sql.functions as F
 
+        def violated(expr: str):
+            bad = (~F.coalesce(F.expr(expr), F.lit(False))).cast("int")
+            return bad if rows is None else F.when(rows, bad)
+
         return [
-            F.max((~F.coalesce(F.expr(cons[n]), F.lit(False))).cast("int")).alias(f"c{i}")
-            for i, n in enumerate(sorted(cons))
+            F.max(violated(cons[n])).alias(f"c{i}") for i, n in enumerate(sorted(cons))
         ]
 
     def _raise_violations(self, flags, cons: dict[str, str]) -> None:
@@ -1050,21 +1071,22 @@ class LakeTable:
     ) -> tuple[DataFrame, dict]:
         """``df`` evaluated once, by one ``localCheckpoint`` pass (one
         Spark job, plus the shuffle stages of ``df``'s own plan), and
-        what that pass observed: each key's min and max
+        what that pass observed: each key's min and max over every row
         (``{k}__lo`` / ``{k}__hi``) and the :meth:`_violation_flags` of
-        ``cons``. Every later read of the returned frame reads the
-        materialized rows, so a non-deterministic source cannot differ
-        between the steps of a DML op (Delta's
-        ``merge.materializeSource``)."""
+        ``cons`` over the rows not flagged :data:`_DELETE`. Every later
+        read of the returned frame reads the materialized rows, so a
+        non-deterministic source cannot differ between the steps of a DML
+        op (Delta's ``merge.materializeSource``)."""
         import pyspark.sql.functions as F
         from pyspark.sql import Observation
 
+        upserts = ~F.col(_DELETE) if _DELETE in df.columns else None
         obs = Observation()
         out = df.observe(
             obs,
             *[F.min(k).alias(f"{k}__lo") for k in keys],
             *[F.max(k).alias(f"{k}__hi") for k in keys],
-            *self._violation_flags(cons),
+            *self._violation_flags(cons, upserts),
         ).localCheckpoint()
         return out, obs.get
 
@@ -1623,8 +1645,19 @@ class LakeTable:
         rows are validated against them in one aggregate — cheaper than
         overwrite + per-constraint add_constraint, which would re-scan
         the table once per constraint and burn a commit each."""
+        return self._overwrite(self._head(), df, partition_by, txn, constraints)
+
+    def _overwrite(
+        self,
+        prior: dict,
+        df: DataFrame,
+        partition_by: list[str] | None = None,
+        txn: dict | None = None,
+        constraints: dict[str, str] | None = None,
+    ) -> int:
+        """:meth:`overwrite` committed against ``prior``, the head the
+        caller read."""
         partition_by = partition_by or []
-        prior = self._head()
         if self._txn_applied(prior, txn):
             return prior["version"]
         df, cons = self._apply_generated(df, prior)
@@ -1666,7 +1699,7 @@ class LakeTable:
         if self._txn_applied(prior, txn):
             return prior["version"]
         if not prior["version"]:
-            return self.overwrite(df, partition_by, txn=txn)
+            return self._overwrite(prior, df, partition_by, txn)
         if schema_mode == "strict":
             current = {
                 f.name: f.dataType.simpleString()
@@ -1728,9 +1761,6 @@ class LakeTable:
         updates: DataFrame,
         keys: list[str],
         txn: dict | None = None,
-        _delete_keys: DataFrame | None = None,
-        _operation: str = "merge",
-        _prior: dict | None = None,
     ) -> int:
         """K5/K6: MERGE upsert with create-if-absent fallback (reference
         src/glue_etl.py:439-497, Delta ``whenMatchedUpdateAll /
@@ -1764,25 +1794,33 @@ class LakeTable:
         schema widens to the new columns, and scans serve old rows with
         NULLs in them. Contract locked by
         tests/test_lake_table.py::test_merge_schema_evolution_new_column.
-
-        ``_delete_keys`` (internal, used by :meth:`apply_changes`): a
-        key-columns frame whose rows are REMOVED in the same commit —
-        materialized once like the batch, with its ranges observed; the
-        touched-file discovery spans both key sets, and
-        the rewritten slice is anti-joined before writing, so a CDC
-        batch of upserts + deletes lands as one pruned commit.
-
-        ``_prior`` (internal, used by :meth:`apply_changes_scd2`): the
-        head the caller already read and derived ``updates`` from; the
-        merge commits against it instead of reading the head again.
         """
+        return self._merge(self._head(), updates, keys, txn)
+
+    def _merge(
+        self,
+        prior: dict,
+        updates: DataFrame,
+        keys: list[str],
+        txn: dict | None = None,
+        operation: str = "merge",
+    ) -> int:
+        """:meth:`merge` committed against ``prior``, the head the caller
+        read, as ``operation``. Rows of ``updates`` whose :data:`_DELETE`
+        flag is true are delete keys (:meth:`apply_changes`, MV refresh):
+        the pass that materializes the upserts materializes them too, the
+        touched-file discovery and the rewrite's anti-join span both, and
+        the rewrite leaves them out, so a CDC batch of upserts and
+        deletes lands as one pruned commit."""
         import pyspark.sql.functions as F
 
-        prior = self._head() if _prior is None else _prior
         if self._txn_applied(prior, txn):
             return prior["version"]
+        flagged = _DELETE in updates.columns
         if not prior["version"]:
-            return self.overwrite(updates, txn=txn)
+            if flagged:
+                updates = updates.filter(~F.col(_DELETE)).drop(_DELETE)
+            return self._overwrite(prior, updates, txn=txn)
         self._reject_cow_with_dvs(prior, "merge")
         updates, cons = self._apply_generated(updates, prior)
         if (prior.get("properties") or {}).get("identity"):
@@ -1804,25 +1842,20 @@ class LakeTable:
             updates = self._apply_identity(updates, prior)
         updates, seen = self._materialize_observed(updates, keys, cons)
         self._raise_violations(seen, cons)
-        key_frame, observed = updates.select(*keys), [seen]
-        if _delete_keys is not None:
-            _delete_keys, seen_deletes = self._materialize_observed(
-                _delete_keys.select(*keys), keys, {}
-            )
-            key_frame = key_frame.unionByName(_delete_keys)
-            observed.append(seen_deletes)
-        # footer-pruning ranges spanning both key sets
+        key_frame = updates.select(*keys)
+        # footer-pruning ranges spanning upserts and delete keys
         key_ranges = {}
         for k in keys:
-            bounds = [o[f"{k}__{e}"] for o in observed for e in ("lo", "hi")]
-            bounds = [b for b in bounds if b is not None]
-            if bounds and all(isinstance(b, (int, float, str, bool)) for b in bounds):
-                key_ranges[k] = (min(bounds), max(bounds))
+            lo, hi = seen[f"{k}__lo"], seen[f"{k}__hi"]
+            if all(isinstance(b, (int, float, str, bool)) for b in (lo, hi)):
+                key_ranges[k] = (lo, hi)
 
         def rewrite(target: DataFrame) -> DataFrame:
             merged = merge_upsert(target, updates, keys)
-            if _delete_keys is not None:
-                merged = merged.join(_delete_keys, on=keys, how="left_anti")
+            if flagged:
+                # target rows carry no flag; the batch's delete rows leave
+                kept = ~F.coalesce(F.col(_DELETE), F.lit(False))
+                merged = merged.filter(kept).drop(_DELETE)
             return merged
 
         def no_key_overlap(winners_delta: DataFrame) -> bool:
@@ -1835,7 +1868,7 @@ class LakeTable:
 
         v = self._rewrite_touched(
             prior,
-            _operation,
+            operation,
             # exact touched-file check (Delta's matched-file join): scan
             # only the candidates, semi-join the keys
             lambda scan: scan.join(key_frame, on=keys, how="left_semi"),
@@ -1848,6 +1881,28 @@ class LakeTable:
         if prior.get("properties", {}).get("auto_compact"):
             self._auto_compact()
         return v
+
+    def fold(
+        self, step, txn: dict | None = None, keys: list[str] | None = None
+    ) -> int:
+        """Read-modify-write on ONE snapshot (Delta's MERGE reads the
+        target and commits in one transaction): the head is read once;
+        when it already records ``txn`` its version is returned at once —
+        ``step`` is never called and no Spark job runs. Otherwise
+        ``step(snapshot)`` (``None`` on a table with no commit yet) is
+        committed against that same head: as an :meth:`overwrite`, or
+        with ``keys`` as a :meth:`merge` on them. A commit landing after
+        the read raises ConcurrentWriteError (the same ``txn`` landing
+        returns its version) instead of being replaced. Returns the
+        version holding the fold: state derived from it reads
+        ``read(version=...)`` of that version, not the head."""
+        prior = self._head()
+        if self._txn_applied(prior, txn):
+            return prior["version"]
+        out = step(self.read(_snapshot=prior) if prior["version"] else None)
+        if keys is None:
+            return self._overwrite(prior, out, txn=txn)
+        return self._merge(prior, out, keys, txn)
 
     def apply_changes(
         self,
@@ -1874,11 +1929,13 @@ class LakeTable:
         ``sequence_col`` are bookkeeping, not payload — both are dropped
         before the write.
 
-        One MERGE-shaped commit (operation ``apply_changes``):
-        upserts and deletes share the touched-partition / touched-file
-        discovery, so a CDC batch lands partition- or file-pruned exactly
-        like a merge, and the commit is OCC-protected with the same
-        winner-overlap checks (delete keys included)."""
+        One MERGE-shaped commit (operation ``apply_changes``): each
+        key's winning change, flagged :data:`_DELETE` when it is a
+        delete, is materialized in one pass — the sequencing window runs
+        once — and upserts and deletes share the touched-partition /
+        touched-file discovery, so a CDC batch lands partition- or
+        file-pruned exactly like a merge, and the commit is OCC-protected
+        with the same winner-overlap checks (delete keys included)."""
         import pyspark.sql.functions as F
         from pyspark.sql import Window
 
@@ -1887,21 +1944,10 @@ class LakeTable:
         latest = (
             live.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
-            .drop("__rn")
+            .withColumn(_DELETE, F.col(change_type_col) == "delete")
+            .drop("__rn", change_type_col, sequence_col)
         )
-        upserts = (
-            latest.filter(F.col(change_type_col) != "delete")
-            .drop(change_type_col, sequence_col)
-        )
-        deletes = (
-            latest.filter(F.col(change_type_col) == "delete")
-            .select(*keys)
-            .distinct()
-        )
-        return self.merge(
-            upserts, keys, txn=txn, _delete_keys=deletes,
-            _operation="apply_changes",
-        )
+        return self._merge(self._head(), latest, keys, txn, "apply_changes")
 
     def apply_changes_scd2(
         self,
@@ -1993,12 +2039,8 @@ class LakeTable:
             .filter(~F.col("__is_delete"))
             .drop("__is_delete")
         )
-        return self.merge(
-            intervals,
-            keys + ["__start_at"],
-            txn=txn,
-            _operation="apply_changes_scd2",
-            _prior=prior,
+        return self._merge(
+            prior, intervals, keys + ["__start_at"], txn, "apply_changes_scd2"
         )
 
     def _files_holding(self, prior: dict, files: list[tuple], rows) -> list[tuple]:
@@ -2348,16 +2390,10 @@ class LakeTable:
         columns, deletion-vector sidecar count, created/last-modified
         timestamps, version count. Control-plane only: manifest reads
         plus a filesystem walk, zero Spark jobs."""
-        from ecommerce_lakehouse_spark.lake.stream_source import _live_files
-
         m = self._head("describe_detail")
         v = m["version"]
         hist = self.history()
-        files = [
-            os.path.join(d, rel)
-            for e in m["data_dirs"]
-            for d, rel in _live_files(e)
-        ]
+        files = [os.path.join(d, rel) for d, rel, _ in self._file_inventory(m)]
         return {
             "format": "laketable-parquet",
             "location": self.root,

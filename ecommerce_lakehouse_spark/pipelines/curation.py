@@ -312,25 +312,28 @@ def curate(
     # components adjacent to this batch's docs/pairs re-propagate, and
     # the delta MERGEs over the clusters table (untouched components are
     # never rewritten). First batch (no seeds) is the global fixpoint.
-    # All inputs are table state, so crash replays stay correct.
+    # All inputs are table state, so crash replays stay correct; the
+    # fold reads the seeds and merges at one head, and a replayed batch
+    # returns before any label propagation runs.
     ids = t["canonical"].read().select("doc_id")
     pairs = t["pairs"].read().select("doc_a", "doc_b")
-    if not t["clusters"].exists():
-        t["clusters"].overwrite(_connected_components(ids, pairs), txn=txn)
-        t["clusters"].set_properties(
-            {"auto_compact": True, "auto_compact_min_files": 16}
-        )
-    else:
+
+    def label(prev):
+        if prev is None:
+            return _connected_components(ids, pairs)
         from ecommerce_lakehouse_spark.operators.graph import (
             incremental_components,
         )
 
-        prev = t["clusters"].read().select("doc_id", "cluster_id")
-        sub_labels, _sub_ids = incremental_components(
-            prev, ids, pairs, pointer_jump=True
+        seeds = prev.select("doc_id", "cluster_id")
+        return incremental_components(seeds, ids, pairs, pointer_jump=True)[0]
+
+    v = t["clusters"].fold(label, txn=txn, keys=["doc_id"])
+    if v == 1:  # the fold created the table
+        t["clusters"].set_properties(
+            {"auto_compact": True, "auto_compact_min_files": 16}
         )
-        t["clusters"].merge(sub_labels, keys=["doc_id"], txn=txn)
-    labels = t["clusters"].read().select("doc_id", "cluster_id")
+    labels = t["clusters"].read(version=v).select("doc_id", "cluster_id")
 
     # ---- stage 6: canonical survivors (cluster representatives)
     surv = (

@@ -26,7 +26,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ecommerce_lakehouse_spark.lake import LakeTable
+from ecommerce_lakehouse_spark.lake import LakeTable, merge_aggregate
 from ecommerce_lakehouse_spark.operators.timeseries import (
     hw_forecast_from_monthly,
     mixture_shift_summary,
@@ -204,8 +204,7 @@ def stream_rollup_refresh(
     Exactly-once: additive combines are NOT naturally idempotent under
     micro-batch replay (foreachBatch is at-least-once), so each commit
     records the batch id in the LakeTable manifest (Delta's txnAppId /
-    txnVersion pattern) and the table skips a write whose batch id it
-    already applied — see apply_rollup_batch."""
+    txnVersion pattern) — see apply_rollup_batch."""
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         apply_rollup_batch(table, batch_df, batch_id)
@@ -220,18 +219,27 @@ def stream_rollup_refresh(
 ROLLUP_TXN_APP = "stream_rollup"
 
 
+def _added(state: DataFrame | None, inc: DataFrame, keys: list[str], sum_cols: list[str]):
+    """``inc`` added into the additive fold state ``state`` (None before
+    the first fold) by key: matched keys sum, new keys insert."""
+    return inc if state is None else merge_aggregate(state, inc, keys, sum_cols)
+
+
 def apply_rollup_batch(table: LakeTable, batch_df: DataFrame, batch_id: int) -> None:
-    """One idempotent micro-batch application of the continuous rollup.
+    """One idempotent micro-batch application of the continuous rollup:
+    the batch's partials are added to the rollup's rows for its buckets
+    and merged on (bucket, event_type) by ``LakeTable.fold``.
 
-    The LakeTable commit carries ``{"app_id": ROLLUP_TXN_APP, "version":
+    The commit carries ``{"app_id": ROLLUP_TXN_APP, "version":
     batch_id}``; if a crash between the table commit and the checkpoint
-    commit causes Spark to replay the batch, the table sees the batch id
-    already applied and skips the additive combine — exactly Delta's
-    idempotent-writes pattern for foreachBatch."""
-    from ecommerce_lakehouse_spark.lake.merge import merge_aggregate
-
+    commit causes Spark to replay the batch, the fold sees the batch id
+    already applied and returns before any Spark job — Delta's
+    idempotent-writes pattern for foreachBatch. A fold by another writer
+    landing after this one read the rollup makes it raise
+    ConcurrentWriteError instead of replacing that commit."""
     if batch_df.isEmpty():
         return
+    keys = ["bucket", "event_type"]
     delta = (
         batch_df.groupBy(F.date_trunc("hour", "ts").alias("bucket"), "event_type")
         .agg(
@@ -239,17 +247,12 @@ def apply_rollup_batch(table: LakeTable, batch_df: DataFrame, batch_id: int) -> 
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
     )
-    txn = {"app_id": ROLLUP_TXN_APP, "version": batch_id}
-    if not table.exists():
-        table.overwrite(delta, txn=txn)
-        return
-    table.overwrite(
-        merge_aggregate(
-            table.read(), delta, keys=["bucket", "event_type"],
-            sum_cols=["n_events", "total_value"],
-        ),
-        txn=txn,
-    )
+
+    def combine(rollup):
+        touched = None if rollup is None else rollup.join(delta.select(*keys), keys, "left_semi")
+        return _added(touched, delta, keys, ["n_events", "total_value"])
+
+    table.fold(combine, txn={"app_id": ROLLUP_TXN_APP, "version": batch_id}, keys=keys)
 
 
 def deduped_stream(events: DataFrame, keys: list[str] | None = None, watermark: str = "2 hours") -> DataFrame:
@@ -649,11 +652,12 @@ def stream_heavy_hitters(
     (estimate desc, key) — the SpaceSaving-style companion CMS needs
     because a sketch alone cannot enumerate keys).
 
-    Exactly-once: both tables commit with the Delta txn pattern keyed
-    by batch id, and each table skips a write whose batch id it already
-    applied: a crash between the two commits replays the batch past the
-    cells fold (the non-idempotent addition) into the candidate
-    overwrite.
+    Exactly-once: both tables commit through ``LakeTable.fold`` with
+    the Delta txn pattern keyed by batch id, which skips a batch its
+    table already applied before any Spark job and raises on a
+    concurrent fold: a crash between the two commits replays the batch
+    past the cells fold (the non-idempotent addition) into the candidate
+    fold, which reads the cells at the version their fold returned.
 
     Hashing matches the batch query exactly (md5(f"{i}|{key}") % width),
     so estimates agree across engines, retries and partitionings."""
@@ -678,69 +682,47 @@ def stream_heavy_hitters(
             % width
         )
 
+    def cells_of(df: DataFrame) -> DataFrame:
+        # each row of df once per sketch row i, with its cell b
+        ib = F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(i).cast("long").alias("i"), bucket(i).alias("b"))
+                    for i in range(depth)
+                ]
+            )
+        )
+        return df.select("*", ib.alias("ib")).select(
+            *df.columns, F.col("ib.i").alias("i"), F.col("ib.b").alias("b")
+        )
+
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         keys = batch_df.groupBy("o_custkey").agg(
             F.count(F.lit(1)).cast("long").alias("cnt")
         )
         if keys.isEmpty():
             return
-        inc = (
-            keys.select(
-                "o_custkey",
-                "cnt",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(i).cast("long").alias("i"),
-                                bucket(i).alias("b"),
-                            )
-                            for i in range(depth)
-                        ]
-                    )
-                ).alias("ib"),
-            )
-            .groupBy(F.col("ib.i").alias("i"), F.col("ib.b").alias("b"))
-            .agg(F.sum("cnt").cast("long").alias("cell"))
-        )
+        inc = cells_of(keys).groupBy("i", "b").agg(F.sum("cnt").cast("long").alias("cell"))
         txn = {"app_id": app, "version": int(batch_id)}
-        if cells_t.exists():
-            inc = (
-                cells_t.read()
-                .unionByName(inc)
-                .groupBy("i", "b")
-                .agg(F.sum("cell").cast("long").alias("cell"))
+        v = cells_t.fold(lambda cells: _added(cells, inc, ["i", "b"], ["cell"]), txn=txn)
+
+        def estimate(cand):
+            # candidate set: prior candidates + this batch's keys,
+            # re-estimated against the UPDATED sketch, kept to the top
+            # max_candidates
+            cand_keys = keys.select("o_custkey")
+            if cand is not None:
+                cand_keys = cand.select("o_custkey").unionByName(cand_keys).distinct()
+            return (
+                cells_of(cand_keys)
+                .join(F.broadcast(cells_t.read(version=v)), on=["i", "b"])
+                .groupBy("o_custkey")
+                .agg(F.min("cell").cast("long").alias("est_cnt"))
+                .orderBy(F.desc("est_cnt"), "o_custkey")
+                .limit(max_candidates)
             )
-        cells_t.overwrite(inc, txn=txn)
-        # candidate set: prior candidates + this batch's keys, re-estimated
-        # against the UPDATED sketch, kept to the top max_candidates
-        prior = (
-            cand_t.read().select("o_custkey")
-            if cand_t.exists()
-            else spark.createDataFrame([], "o_custkey bigint")
-        )
-        cand_keys = prior.unionByName(keys.select("o_custkey")).distinct()
-        probes = cand_keys.select(
-            "o_custkey",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).cast("long").alias("i"), bucket(i).alias("b")
-                        )
-                        for i in range(depth)
-                    ]
-                )
-            ).alias("ib"),
-        ).select("o_custkey", F.col("ib.i").alias("i"), F.col("ib.b").alias("b"))
-        est = (
-            probes.join(F.broadcast(cells_t.read()), on=["i", "b"])
-            .groupBy("o_custkey")
-            .agg(F.min("cell").cast("long").alias("est_cnt"))
-            .orderBy(F.desc("est_cnt"), "o_custkey")
-            .limit(max_candidates)
-        )
-        cand_t.overwrite(est, txn=txn)
+
+        cand_t.fold(estimate, txn=txn)
 
     return (
         orders.writeStream.outputMode("append")
@@ -769,13 +751,14 @@ def stream_kll_quantiles(
 
     State is ONE LakeTable row (n, level, items — O(k) whatever the
     volume); quantile queries are element_at on the sorted item array.
-    Exactly-once: the merge is NOT idempotent (n accumulates), so the
-    fold commits with the Delta txn pattern and the table skips a
-    replayed micro-batch; single-table state means no torn-commit window
-    exists.
+    Exactly-once: the merge is NOT idempotent (n accumulates), so it is
+    a ``LakeTable.fold`` with the Delta txn pattern, which skips a
+    replayed micro-batch before any Spark job and raises on a concurrent
+    fold; single-table state means no torn-commit window exists.
     """
     from ecommerce_lakehouse_spark.operators.sketch import (
         kll_level_sketch,
+        kll_merge,
         md5_hash60,
     )
 
@@ -791,11 +774,10 @@ def stream_kll_quantiles(
         bsk = kll_level_sketch(src, "cents", "h", k=k)
         if bsk.isEmpty():
             return  # empty micro-batch: nothing to fold
-        if sk_t.exists():
-            from ecommerce_lakehouse_spark.operators.sketch import kll_merge
-
-            bsk = kll_merge(sk_t.read().unionByName(bsk), k=k)
-        sk_t.overwrite(bsk, txn={"app_id": app, "version": int(batch_id)})
+        sk_t.fold(
+            lambda sk: bsk if sk is None else kll_merge(sk.unionByName(bsk), k=k),
+            txn={"app_id": app, "version": int(batch_id)},
+        )
 
     return (
         events.writeStream.outputMode("append")
@@ -821,9 +803,12 @@ def stream_page_hinkley(
     stream the summary is BIT-IDENTICAL to the batch query (tested).
 
     Exactly-once: both tables commit with the Delta txn pattern and
-    each skips a batch it already applied, so a crash between the
-    non-idempotent daily fold and the summary overwrite replays into the
-    summary only (the torn-commit lesson).
+    each skips a batch it already applied (the daily state is a
+    ``LakeTable.fold``: no Spark job on a replay, a concurrent fold
+    raises), so a crash between the non-idempotent daily fold and the
+    summary overwrite replays into the summary only (the torn-commit
+    lesson), which reads the daily state at the version its fold
+    returned.
 
     Scale: state is one row per DATE; the PH windows run over that
     bounded frame — the sanctioned class."""
@@ -846,15 +831,8 @@ def stream_page_hinkley(
         if inc.isEmpty():
             return
         txn = {"app_id": app, "version": int(batch_id)}
-        if daily_t.exists():
-            inc = (
-                daily_t.read()
-                .unionByName(inc)
-                .groupBy("day")
-                .agg(F.sum("cents").cast("long").alias("cents"))
-            )
-        daily_t.overwrite(inc, txn=txn)
-        sum_t.overwrite(ph_summary_from_daily(daily_t.read()), txn=txn)
+        v = daily_t.fold(lambda daily: _added(daily, inc, ["day"], ["cents"]), txn=txn)
+        sum_t.overwrite(ph_summary_from_daily(daily_t.read(version=v)), txn=txn)
 
     return (
         orders.writeStream.outputMode("append")
@@ -882,8 +860,9 @@ def stream_grouped_quantiles(
     any chunking, any restart (tested).
 
     Exactly-once: the fold is non-idempotent (per-type n accumulates),
-    so it commits with the Delta txn pattern and the table skips a
-    replayed micro-batch, batch_id 0 included.
+    so it is a ``LakeTable.fold`` with the Delta txn pattern, which skips
+    a replayed micro-batch, batch_id 0 included, before any Spark job
+    and raises on a concurrent fold.
 
     Scale: state is O(k) rows per event type; the merge stages all key
     by type, so a million-tenant profile folds in one fixed-width
@@ -910,11 +889,10 @@ def stream_grouped_quantiles(
         )
         if bsk.isEmpty():
             return  # empty micro-batch: nothing to fold
-        if sk_t.exists():
-            bsk = kll_merge_grouped(
-                sk_t.read().unionByName(bsk), ["event_type"], k=k
-            )
-        sk_t.overwrite(bsk, txn={"app_id": app, "version": int(batch_id)})
+        sk_t.fold(
+            lambda sk: bsk if sk is None else kll_merge_grouped(sk.unionByName(bsk), ["event_type"], k=k),
+            txn={"app_id": app, "version": int(batch_id)},
+        )
 
     return (
         events.writeStream.outputMode("append")
@@ -941,11 +919,13 @@ def stream_spike_monitor(
     to the batch query over the same data (tested).
 
     Exactly-once: the daily fold is non-idempotent (cents accumulate),
-    so it commits with the Delta txn pattern and the table skips a
-    replayed batch; the flags overwrite must still run on a batch
+    so it is a ``LakeTable.fold`` with the Delta txn pattern, which
+    skips a replayed batch before any Spark job and raises on a
+    concurrent fold; the flags overwrite must still run on a batch
     replayed after a crash between the two commits (the
     stream_heavy_hitters torn-commit lesson), and it does: each table
-    checks the batch id against its own head.
+    checks the batch id against its own head, and the flags read the
+    daily state at the version its fold returned.
 
     Scale: state is one row per DATE (domain-bounded); the rolling
     window runs over that aggregated frame — the sanctioned class."""
@@ -968,15 +948,8 @@ def stream_spike_monitor(
         if inc.isEmpty():
             return
         txn = {"app_id": app, "version": int(batch_id)}
-        if daily_t.exists():
-            inc = (
-                daily_t.read()
-                .unionByName(inc)
-                .groupBy("d")
-                .agg(F.sum("cents").cast("long").alias("cents"))
-            )
-        daily_t.overwrite(inc, txn=txn)
-        flags_t.overwrite(spike_flags_from_daily(daily_t.read()), txn=txn)
+        v = daily_t.fold(lambda daily: _added(daily, inc, ["d"], ["cents"]), txn=txn)
+        flags_t.overwrite(spike_flags_from_daily(daily_t.read(version=v)), txn=txn)
 
     return (
         orders.writeStream.outputMode("append")
@@ -1005,9 +978,12 @@ def stream_holt_winters(
     same nearest-double the batch decimal sum lands on).
 
     Exactly-once: both tables commit with the Delta txn pattern and
-    each skips a batch it already applied, so a crash between the
-    non-idempotent monthly fold and the forecast overwrite replays into
-    the forecast only (the torn-commit lesson).
+    each skips a batch it already applied (the monthly state is a
+    ``LakeTable.fold``: no Spark job on a replay, a concurrent fold
+    raises), so a crash between the non-idempotent monthly fold and the
+    forecast overwrite replays into the forecast only (the torn-commit
+    lesson), which reads the monthly state at the version its fold
+    returned.
 
     Scale: state is one row per MONTH; the fit is an in-row fold over
     that bounded frame — the sanctioned class."""
@@ -1032,15 +1008,10 @@ def stream_holt_winters(
         if inc.isEmpty():
             return
         txn = {"app_id": app, "version": int(batch_id)}
-        if monthly_t.exists():
-            inc = (
-                monthly_t.read()
-                .unionByName(inc)
-                .groupBy("month")
-                .agg(F.sum("cents").cast("long").alias("cents"))
-            )
-        monthly_t.overwrite(inc, txn=txn)
-        m = monthly_t.read().select(
+        v = monthly_t.fold(
+            lambda monthly: _added(monthly, inc, ["month"], ["cents"]), txn=txn
+        )
+        m = monthly_t.read(version=v).select(
             "month",
             (F.col("cents").cast("double") / 100).alias("revenue"),
         )
@@ -1074,11 +1045,14 @@ def stream_mixture_shift(
     identical single-division doubles out).
 
     Exactly-once: all three tables commit with the Delta txn pattern
-    and each skips a batch it already applied. The raw-counter fold is
-    non-idempotent, so the skip is what keeps it exact; the hash-state
-    merge is idempotent by construction (min of min), so its skip only
-    saves the work; a crash between commits replays into the tables
-    not yet written (the torn-commit lesson).
+    and each skips a batch it already applied (the two states are
+    ``LakeTable.fold``s: no Spark job on a replay, a concurrent fold
+    raises). The raw-counter fold is non-idempotent, so the skip is what
+    keeps it exact; the hash-state merge is idempotent by construction
+    (min of min), so its skip only saves the work; a crash between
+    commits replays into the tables not yet written (the torn-commit
+    lesson), and the summary reads both states at the versions their
+    folds returned.
 
     Scale: raw state is one row per SOURCE; hash state is one row per
     DISTINCT content hash — exactly the state any streaming exact-dedup
@@ -1106,31 +1080,27 @@ def stream_mixture_shift(
         )
         if d.isEmpty():
             return
-        d = d.localCheckpoint(eager=True)  # both folds read it
+        # both folds read it; lazy, so a replay both folds skip runs no job
+        d = d.localCheckpoint(eager=False)
         txn = {"app_id": app, "version": int(batch_id)}
 
         raw_inc = d.groupBy("source").agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_tok").cast("long").alias("tok_raw"),
         )
-        if raw_t.exists():
-            raw_inc = (
-                raw_t.read()
-                .unionByName(raw_inc)
-                .groupBy("source")
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("tok_raw").cast("long").alias("tok_raw"),
-                )
-            )
-        raw_t.overwrite(raw_inc, txn=txn)
+        v_raw = raw_t.fold(
+            lambda raw: _added(raw, raw_inc, ["source"], ["n_docs", "tok_raw"]), txn=txn
+        )
 
         hash_inc = d.groupBy("h").agg(
             F.min("doc_id").alias("keep"),
             F.min_by("source", "doc_id").alias("keep_source"),
             F.min_by("n_tok", "doc_id").alias("keep_ntok"),
         )
-        if hash_t.exists():
+
+        def keep_min(state):
+            if state is None:
+                return hash_inc
             # Upsert ONLY the batch's hashes (ADVICE r08: the old
             # read-union-groupBy-overwrite rewrote the corpus-sized
             # state on every micro-batch, so per-batch write cost grew
@@ -1149,7 +1119,7 @@ def stream_mixture_shift(
             # carry identical payloads anyway, and an at-least-once
             # redelivery of the same doc_id is assumed to carry the
             # same (source, n_tok).
-            existing = hash_t.read().select(
+            existing = state.select(
                 "h",
                 F.col("keep").alias("e_keep"),
                 F.col("keep_source").alias("e_source"),
@@ -1168,23 +1138,22 @@ def stream_mixture_shift(
             # GENUINE updates (an at-least-once redelivery of a large
             # already-seen batch would otherwise rewrite every file it
             # touches with identical bytes)
-            delta = (
+            return (
                 hash_inc.join(F.broadcast(relevant), "h", "left")
                 .filter(new_wins)
                 .select("h", "keep", "keep_source", "keep_ntok")
             )
-            hash_t.merge(delta, keys=["h"], txn=txn)
-        else:
-            hash_t.overwrite(hash_inc, txn=txn)
 
-        canon = hash_t.read().groupBy(
+        v_hash = hash_t.fold(keep_min, txn=txn, keys=["h"])
+
+        canon = hash_t.read(version=v_hash).groupBy(
             F.col("keep_source").alias("source")
         ).agg(
             F.count(F.lit(1)).cast("long").alias("n_canonical"),
             F.sum("keep_ntok").cast("long").alias("tok_dedup"),
         )
         per_source = (
-            raw_t.read()
+            raw_t.read(version=v_raw)
             .join(canon, "source", "left")
             .select(
                 "source",

@@ -10,10 +10,16 @@ Invariants asserted:
 - the version chain is contiguous (one manifest per version, pointer
   healed to the head);
 - a full-table op racing appends either wins cleanly or surfaces
-  ConcurrentWriteError — never silently clobbers.
+  ConcurrentWriteError — never silently clobbers;
+- a state fold whose read went stale surfaces ConcurrentWriteError, so
+  retried folds count every batch exactly once.
 """
 
+import sys
 import threading
+import time
+
+import pandas as pd
 
 import pytest
 
@@ -115,6 +121,55 @@ def test_concurrent_disjoint_partition_merges(spark, tbl):
         for b in range(BATCHES_PER_THREAD)
     }
     assert got == expected
+
+
+def test_concurrent_folds_lose_no_batch(spark, tbl):
+    """Threads fold additive batches into ONE key of one table
+    (``LakeTable.fold`` merged on the key, a txn app per thread): a fold
+    whose read went stale raises and is retried, so the sum counts every
+    batch exactly once — a replaced commit would drop a batch."""
+    from ecommerce_lakehouse_spark.lake import merge_aggregate
+
+    n_threads, n_batches = 3, 2
+    errors: list = []
+
+    def writer(tid: int):
+        for b in range(n_batches):
+            inc = spark.createDataFrame(
+                pd.DataFrame({"g": ["g"], "n": [1], "s": [10 ** (tid * n_batches + b)]}),
+                "g string, n long, s long",
+            )
+
+            def add(state):
+                # a step takes a while, as Spark work in a step does, and
+                # a different while per thread, so commits land between
+                # another fold's read and its commit
+                time.sleep(0.5 + tid)
+                return inc if state is None else merge_aggregate(state, inc, ["g"], ["n", "s"])
+
+            for _ in range(50):
+                try:
+                    tbl.fold(add, txn={"app_id": f"t{tid}", "version": b}, keys=["g"])
+                    break
+                except ConcurrentWriteError:
+                    continue
+            else:
+                errors.append((tid, b, "exhausted retries"))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer, args=(t,)) for t in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=900)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    total = sum(10**i for i in range(n_threads * n_batches))
+    assert [(r.g, r.n, r.s) for r in tbl.read().collect()] == [("g", n_threads * n_batches, total)]
 
 
 def test_overwrite_racing_appends_never_silently_clobbers(spark, tbl):

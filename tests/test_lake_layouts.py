@@ -216,9 +216,10 @@ def test_dml_job_budget(spark, tmp_path, spark_jobs, partition_by):
     its keys and scan for touched files, broadcast them again for the
     upsert's anti-join and write); delete and update run 2 (touched-file
     scan, write); compact(where=) runs 1 (the write: its files are
-    chosen on a local relation). apply_changes with deletes runs 9: its
-    upserts and its delete keys are materialized apart, each pass running
-    the sequencing window's shuffle, and the rewrite anti-joins both.
+    chosen on a local relation). apply_changes with deletes runs 6: one
+    pass materializes its upserts and delete keys together (the
+    sequencing window's shuffle runs as a job of its own), and the
+    rewrite anti-joins both in one broadcast.
     A merge that supplies a generated column checks it in the pass that
     materializes the batch, so it stays within merge's 5 jobs."""
     layout = "partitioned" if partition_by else "unpartitioned"
@@ -261,7 +262,7 @@ def test_dml_job_budget(spark, tmp_path, spark_jobs, partition_by):
 
     assert _rows(t) == _model_rows(model)
     assert launched.pop("merge") <= 5, launched
-    want = {"delete": 2, "update": 2, "apply_changes": 9}
+    want = {"delete": 2, "update": 2, "apply_changes": 6}
     if partition_by:
         want["compact"] = 1
     assert launched == want

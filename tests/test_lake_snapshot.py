@@ -4,12 +4,17 @@ on one version, the stream source rolls forward over durable commits the
 ``_LATEST`` cache has not caught up with, and a warm handle's DML opens
 exactly one manifest file per operation. A write whose ``txn`` that one
 head already records is skipped, and so is the loser of a race between
-two replays of one transaction."""
+two replays of one transaction. A state fold (``LakeTable.fold``) reads
+and commits at one head too: a commit landing in between raises instead
+of being replaced, and a replayed fold runs no step and no Spark job.
+DML refuses a data dir the manifest names but storage lacks."""
 
 import builtins
 import json
 import os
 import re
+import shutil
+from decimal import Decimal
 
 import pandas as pd
 import pytest
@@ -234,7 +239,7 @@ def test_apply_changes_scd2_commits_on_the_head_it_read(spark, tmp_path):
         )
 
     dim.apply_changes_scd2(feed([(1, "a", "insert", 10)]), keys=["k"], sequence_col="seq")
-    orig_merge = dim.merge
+    orig_merge = dim._merge
     fired = []
 
     def race_then_merge(*args, **kwargs):
@@ -245,12 +250,12 @@ def test_apply_changes_scd2_commits_on_the_head_it_read(spark, tmp_path):
             )
         return orig_merge(*args, **kwargs)
 
-    dim.merge = race_then_merge
+    dim._merge = race_then_merge
     with pytest.raises(ConcurrentWriteError):
         dim.apply_changes_scd2(
             feed([(1, "c", "update_postimage", 20)]), keys=["k"], sequence_col="seq"
         )
-    del dim.merge
+    del dim._merge
     assert fired
     hist = {
         (r.k, r["__start_at"]): (r.v, r["__end_at"]) for r in dim.read().collect()
@@ -367,3 +372,162 @@ def test_head_without_txns_map_is_refused_by_name(spark, tmp_path):
     with pytest.raises(ValueError, match=refused):
         t.append(_frame(spark, [(2, "b", "y")], KVP))
     assert t.current_version() == 1
+
+
+def _after_read(t: LakeTable, winner_op):
+    """Run ``winner_op`` (another handle's commit) right after ``t``'s
+    next read() returns: between a fold's read and its write."""
+    orig = t.read
+
+    def read_then_race(*args, **kwargs):
+        df = orig(*args, **kwargs)
+        del t.read
+        winner_op()
+        return df
+
+    t.read = read_then_race
+    return lambda: t.__dict__.pop("read", None)
+
+
+# where another handle's commit lands inside a fold of handle ``a``
+RACES = {"after_read": _after_read, "during_write": _interleave}
+
+
+def _events(spark, values):
+    hour = pd.Timestamp("2024-01-01 10:00:00")
+    rows = [(hour, "view", x) for x in values]
+    return _frame(spark, rows, "ts timestamp, event_type string, value double")
+
+
+@pytest.mark.parametrize("race", sorted(RACES))
+def test_racing_rollup_fold_raises_instead_of_replacing(spark, tmp_path, race):
+    """Handle a folds batch 2 while handle b's batch 1 lands after a
+    read the rollup: a raises ConcurrentWriteError and the rollup holds
+    batches 0 and 1; a retry of batch 2 folds on top of them. Replacing
+    b's commit would leave 2 events and 101.0."""
+    root = str(tmp_path / "rollup")
+    a, b = LakeTable(spark, root), LakeTable(spark, root)
+
+    def sums():
+        return [(r.n_events, r.total_value) for r in a.read().collect()]
+
+    apply_rollup_batch(a, _events(spark, [1.0]), 0)
+    restore = RACES[race](a, lambda: apply_rollup_batch(b, _events(spark, [10.0]), 1))
+    try:
+        with pytest.raises(ConcurrentWriteError):
+            apply_rollup_batch(a, _events(spark, [100.0]), 2)
+    finally:
+        restore()
+    assert sums() == [(2, 11.0)]
+    apply_rollup_batch(a, _events(spark, [100.0]), 2)
+    assert sums() == [(3, 111.0)]
+    assert a.last_txn(ROLLUP_TXN_APP) == 2
+
+
+@pytest.mark.parametrize("race", sorted(RACES))
+def test_racing_mv_fold_raises_instead_of_replacing(spark, tmp_path, race):
+    """The same race on a merge-shaped fold: two handles fold change-feed
+    slices into one materialized aggregate."""
+    src = LakeTable(spark, str(tmp_path / "src"))
+    root = str(tmp_path / "mart")
+    a, b = LakeTable(spark, root), LakeTable(spark, root)
+    mv_a = MaterializedAggregate(src, a, ["g"], {"s": "x"})
+    mv_b = MaterializedAggregate(src, b, ["g"], {"s": "x"})
+
+    def feed(x):
+        return _frame(spark, [("g1", x, "insert")], "g string, x double, _change_type string")
+
+    def mart():
+        return [(r.g, r.n_rows, r.s) for r in a.read().collect()]
+
+    mv_a.fold(feed(1.0), txn={"app_id": "mv", "version": 0})
+    restore = RACES[race](a, lambda: mv_b.fold(feed(10.0), txn={"app_id": "mv", "version": 1}))
+    try:
+        with pytest.raises(ConcurrentWriteError):
+            mv_a.fold(feed(100.0), txn={"app_id": "mv", "version": 2})
+    finally:
+        restore()
+    assert mart() == [("g1", 2, Decimal("11.00"))]
+    mv_a.fold(feed(100.0), txn={"app_id": "mv", "version": 2})
+    assert mart() == [("g1", 3, Decimal("111.00"))]
+    assert a.history()[-1]["operation"] == "mv_refresh"
+
+
+def test_fold_with_an_applied_txn_runs_no_step(spark, tmp_path, spark_jobs):
+    """A fold whose txn the head records (at that version or a later
+    one) returns the head version without calling its step: no commit,
+    no Spark job, in either shape."""
+    t = LakeTable(spark, str(tmp_path / "state"))
+    t.overwrite(_frame(spark, [(1, "a", "x")], KVP), txn={"app_id": "fold", "version": 4})
+    t.append(_frame(spark, [(2, "b", "y")], KVP))
+    head = t.current_version()
+    called = []
+
+    def step(snapshot):
+        called.append(snapshot)
+        return snapshot
+
+    got = {}
+    for shape, keys in (("overwrite", None), ("merge", ["k"])):
+        for version in (3, 4):
+            with spark_jobs(f"fold-replay-{shape}-{version}") as jobs:
+                v = t.fold(step, txn={"app_id": "fold", "version": version}, keys=keys)
+            got[(shape, version)] = (v, len(jobs.ids))
+    assert got == {k: (head, 0) for k in got}
+    assert called == []
+    assert t.current_version() == head
+
+
+def test_replayed_curate_batch_runs_no_label_propagation(spark, tmp_path, monkeypatch):
+    """A replay of a fully applied curate batch skips the clusters fold
+    before its step: incremental_components never runs, and no stage
+    commits."""
+    import ecommerce_lakehouse_spark.operators.graph as graph
+    from ecommerce_lakehouse_spark.pipelines.curation import curate
+
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+
+    def docs(rows):
+        return _frame(spark, rows, "doc_id bigint, lang string, source string, text string")
+
+    root = str(tmp_path / "cur")
+    curate(spark, docs([(1, "en", "web", text)]), root, txn={"app_id": "c", "version": 1})
+    calls = []
+    real = graph.incremental_components
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(graph, "incremental_components", counted)
+    batch = docs([(2, "en", "web", text.replace("lazy", "sleepy"))])
+    t = curate(spark, batch, root, txn={"app_id": "c", "version": 2})
+    assert calls == [1]
+    versions = {s: t[s].current_version() for s in t}
+    t = curate(spark, batch, root, txn={"app_id": "c", "version": 2})
+    assert calls == [1]
+    assert {s: t[s].current_version() for s in t} == versions
+
+
+def test_dml_refuses_a_data_dir_storage_lacks(spark, tmp_path):
+    """A data dir the head manifest names but storage lacks: merge,
+    delete, update and compact(where=) raise naming the dir and the
+    manifest version, and commit nothing — never a version without the
+    dir's rows. fsck() then reports the dir."""
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.overwrite(_frame(spark, [(1, "a", "x"), (2, "b", "y")], KVP), partition_by=["part"])
+    t.append(_frame(spark, [(3, "c", "x")], KVP))
+    lost = t._manifest(1)["data_dirs"][0]["path"]
+    shutil.rmtree(lost)
+    ops = {
+        "merge": lambda: t.merge(_frame(spark, [(4, "d", "y")], KVP), keys=["k"]),
+        "delete": lambda: t.delete("k = 3"),
+        "update": lambda: t.update("k = 3", {"v": "'C'"}),
+        "compact": lambda: t.compact(where="part = 'x'"),
+    }
+    named = re.escape(f"data dir {lost} named by manifest v2 is missing")
+    for op in ops.values():
+        with pytest.raises(FileNotFoundError, match=named):
+            op()
+    assert t.current_version() == 2
+    assert t.fsck()["missing_dirs"] == [lost]

@@ -351,6 +351,21 @@ def test_merge_aggregate_incremental_rollup(spark, tmp_path):
     }
 
 
+def test_merge_aggregate_combines_null_keys_like_groupby(spark):
+    """A NULL key's partials combine across folds, as a groupBy over the
+    union of the batches groups them — the additive streaming states
+    fold through merge_aggregate and must equal the batch query."""
+    from ecommerce_lakehouse_spark.lake import merge_aggregate
+
+    schema = "d string, cents long"
+    state = spark.createDataFrame([(None, 1), ("x", 2)], schema)
+    for batch in ([(None, 10)], [(None, 100), ("x", 20)]):
+        state = merge_aggregate(state, spark.createDataFrame(batch, schema), ["d"], ["cents"])
+    assert sorted(state.collect(), key=str) == sorted(
+        [(None, 111), ("x", 22)], key=str
+    )
+
+
 def test_table_diff_between_versions(spark, tmp_path):
     """CDC-style change feed from time travel: diff(v1, v2) classifies
     inserts, deletes, and updates."""

@@ -3,7 +3,9 @@ the lake, never the other way round. Every import in every package
 module counts, including imports inside functions, so a lazy import
 cannot hide an upward edge. Replay checks stay inside the lake too: a
 ``LakeTable`` write skips a ``txn`` it already applied, so no caller
-guards itself with ``last_txn``."""
+guards itself with ``last_txn``; and a streaming fold's fresh-table
+branch lives in ``LakeTable.fold``, so no streaming job asks a table
+whether it ``exists()``."""
 
 import ast
 import pathlib
@@ -90,20 +92,31 @@ def test_scan_sees_function_local_and_relative_imports(tmp_path):
     ]
 
 
-def _last_txn_calls(root=ROOT) -> list[str]:
-    """Every ``.last_txn(`` call in the package outside ``lake/``."""
+def _calls(attr: str, files, root) -> list[str]:
+    """``path:line`` of every ``<receiver>.<attr>(...)`` call in
+    ``files`` whose receiver is not ``os.path``."""
     out = []
-    for f in sorted(root.rglob("*.py")):
-        if (root / "lake") in f.parents:
-            continue
+    for f in files:
         for node in ast.walk(ast.parse(f.read_text(), str(f))):
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "last_txn"
+                and node.func.attr == attr
+                and ast.unparse(node.func.value) != "os.path"
             ):
                 out.append(f"{f.relative_to(root.parent)}:{node.lineno}")
     return out
+
+
+def _last_txn_calls(root=ROOT) -> list[str]:
+    """Every ``.last_txn(`` call in the package outside ``lake/``."""
+    files = [f for f in sorted(root.rglob("*.py")) if (root / "lake") not in f.parents]
+    return _calls("last_txn", files, root)
+
+
+def _table_exists_calls(root=ROOT) -> list[str]:
+    """Every ``.exists()`` call in ``streaming/`` but ``os.path.exists``."""
+    return _calls("exists", sorted((root / "streaming").rglob("*.py")), root)
 
 
 def test_no_replay_guard_outside_lake(tmp_path):
@@ -113,3 +126,13 @@ def test_no_replay_guard_outside_lake(tmp_path):
         (pkg / sub).mkdir(parents=True)
         (pkg / sub / "m.py").write_text("def f(t):\n    return t.last_txn('a')\n")
     assert _last_txn_calls(root=pkg) == [f"{PKG}/streaming/m.py:2"]
+
+
+def test_no_fresh_table_branch_in_streaming(tmp_path):
+    assert _table_exists_calls() == []
+    pkg = tmp_path / PKG
+    (pkg / "streaming").mkdir(parents=True)
+    (pkg / "streaming" / "m.py").write_text(
+        "import os\n\ndef f(t, p):\n    return os.path.exists(p) or t.exists()\n"
+    )
+    assert _table_exists_calls(root=pkg) == [f"{PKG}/streaming/m.py:4"]
