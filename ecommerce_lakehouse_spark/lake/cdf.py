@@ -31,14 +31,12 @@ import os
 
 from pyspark.sql import DataFrame
 
-from ecommerce_lakehouse_spark.lake.table import (
+from ecommerce_lakehouse_spark.lake.log import (
     _PHYSICAL_OPS,
-    _ROW_ID,
-    LakeTable,
-    _live_rels,
-    _read_dvs,
+    Commit,
     check_table_features,
 )
+from ecommerce_lakehouse_spark.lake.table import _ROW_ID, LakeTable, _read_dvs
 
 
 def _under_head(snap: dict, head: dict) -> dict:
@@ -93,43 +91,17 @@ def _conform(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def _version_slices(
-    table: LakeTable, head: dict, m_prev: dict | None, m_cur: dict
+    table: LakeTable, head: dict, c: Commit
 ) -> tuple[DataFrame | None, DataFrame | None]:
-    """(pre, post): rows visible at ``m_prev`` (None before v1) but not
-    carried into ``m_cur``, and rows newly visible at ``m_cur`` — reading
-    only what that commit touched, each side as its own snapshot read it
-    (rows behind that snapshot's deletion vectors were already gone /
-    never visible)."""
-    snap_p = _under_head(m_prev, head) if m_prev else None
-    snap_c = _under_head(m_cur, head)
-    prev = {e["path"]: e.get("live_files") for e in (m_prev["data_dirs"] if m_prev else [])}
-    cur = {e["path"]: e.get("live_files") for e in m_cur["data_dirs"]}
-    dvs_p = m_prev.get("deletion_vectors", []) if m_prev else []
-    dvs_c = m_cur.get("deletion_vectors", [])
-
-    removed: list[DataFrame] = []
-    added: list[DataFrame] = []
-    for path, live_p in prev.items():
-        if path not in cur:
-            removed.append(_read_slice(table, snap_p, path, live_p))
-            continue
-        live_c = cur[path]
-        if live_p != live_c:
-            all_files = (
-                None
-                if live_p is not None and live_c is not None
-                else set(_live_rels({"path": path}, m_cur["version"]))
-            )
-            pf = set(live_p) if live_p is not None else all_files
-            cf = set(live_c) if live_c is not None else all_files
-            dropped, gained = pf - cf, cf - pf
-            if dropped:
-                removed.append(_read_slice(table, snap_p, path, dropped))
-            if gained:
-                added.append(_read_slice(table, snap_c, path, gained))
-    for path, live_c in cur.items():
-        if path not in prev:
-            added.append(_read_slice(table, snap_c, path, live_c))
+    """(pre, post): rows visible before commit ``c`` but not carried
+    into it, and rows newly visible at it — reading only the files and
+    deletion vectors it touched (see :meth:`Log.actions_between`),
+    each side as its own snapshot read it (rows behind that snapshot's
+    deletion vectors were already gone / never visible)."""
+    snap_p = _under_head(c.prior, head) if c.prior else None
+    snap_c = _under_head(c.manifest, head)
+    removed = [_read_slice(table, snap_p, p, files) for p, files in c.removed.items()]
+    added = [_read_slice(table, snap_c, p, files) for p, files in c.added.items()]
 
     # merge-on-read DELETE (and its rollback): rows appear/vanish with no
     # file change — deletion vectors name them by (file, row_index). Read
@@ -166,12 +138,10 @@ def _version_slices(
         )
         return [rows.join(dv, on=_ROW_ID, how="left_semi").drop(*_ROW_ID)]
 
-    new_dvs = [p for p in dvs_c if p not in set(dvs_p)]
-    if new_dvs and m_prev is not None:  # rows removed FROM the prior snapshot
-        removed.extend(_dv_rows(new_dvs, snap_p))
-    dropped_dvs = [p for p in dvs_p if p not in set(dvs_c)]
-    if dropped_dvs:  # restore() to a pre-delete version: rows come back
-        added.extend(_dv_rows(dropped_dvs, snap_c))
+    if c.dvs_added and c.prior is not None:  # rows removed FROM the prior snapshot
+        removed.extend(_dv_rows(c.dvs_added, snap_p))
+    if c.dvs_removed:  # restore() to a pre-delete version: rows come back
+        added.extend(_dv_rows(c.dvs_removed, snap_c))
     return _union(removed), _union(added)
 
 
@@ -197,12 +167,10 @@ def table_changes(
             f"history [1, {head['version']}]"
         )
     frames: list[DataFrame] = []
-    m_cur = table._manifest(starting_version - 1) if starting_version > 1 else None
-    for v in range(starting_version, end + 1):
-        m_prev, m_cur = m_cur, table._manifest(v)
-        if m_cur.get("operation") in _PHYSICAL_OPS:
+    for c in table.actions_between(starting_version - 1, end):
+        if c.operation in _PHYSICAL_OPS:
             continue  # physical-only: pre == post by construction
-        pre, post = _version_slices(table, head, m_prev, m_cur)
+        pre, post = _version_slices(table, head, c)
         if pre is None and post is None:
             continue  # metadata-only commit
         if pre is None:
@@ -255,7 +223,7 @@ def table_changes(
                 F.explode(F.expr("array_repeat(1, int(abs(__net)))")),
             )
             .select(*data_cols, "_change_type")
-            .withColumn("_commit_version", F.lit(v))
+            .withColumn("_commit_version", F.lit(c.version))
         )
         frames.append(changed)
     if not frames:

@@ -49,15 +49,13 @@ from typing import Iterator
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
-from ecommerce_lakehouse_spark.lake.table import (
+from ecommerce_lakehouse_spark.lake.log import (
     _PHYSICAL_OPS,
-    _head_version,
+    Log,
     _hive_values,
-    _live_rels,
-    _read_manifest,
-    _recorded_schema,
     check_table_features,
 )
+from ecommerce_lakehouse_spark.lake.table import _recorded_schema
 
 
 def _snapshot_arrow_schema(root: str):
@@ -67,38 +65,12 @@ def _snapshot_arrow_schema(root: str):
     with no data dirs (a DELETE removed every row) has one too."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    m = _read_manifest(root, _head_version(root))
+    log = Log(root)
+    m = log._manifest(log.current_version())
     # the stream decodes snapshot bytes like any reader — gate on
     # protocol features before serving a schema for them
     check_table_features(m, for_write=False, where=root)
     return to_arrow_schema(_recorded_schema(m, root))
-
-
-def _carryover_visibility_changes(m_prev: dict | None, m: dict) -> list[str]:
-    """Row-visibility changes among data dirs CARRIED OVER from the
-    previous manifest — changes with no new files for a source to emit:
-    a ``live_files`` change (copy-on-write DML dropped files, RESTORE
-    brought them back) or a dir dropped from the manifest entirely.
-    Without this check such a data commit (e.g. a DELETE that emptied
-    every file it touched) would fall through the ``no new entries``
-    skip and silently vanish from the stream (contradicting the module
-    contract and Delta's ignoreDeletes semantics). Row-level detail for
-    such commits lives in the batch diff, lake/cdf.py."""
-    if m_prev is None:
-        return []
-    prev = {e["path"]: e.get("live_files") for e in m_prev["data_dirs"]}
-    cur = {e["path"]: e.get("live_files") for e in m["data_dirs"]}
-    changes = []
-    for p, lp in prev.items():
-        if p not in cur:
-            changes.append(f"data dir dropped: {p}")
-            continue
-        lc = cur[p]
-        if (lp is None) != (lc is None) or (
-            lp is not None and sorted(lp) != sorted(lc)
-        ):
-            changes.append(f"live_files changed: {p}")
-    return changes
 
 
 class _LakeFilePartition(InputPartition):
@@ -151,11 +123,12 @@ class LakeTableStreamReader(DataSourceStreamReader):
         if not root:
             raise ValueError("laketable source requires .option('path', <table root>)")
         self._root = root
+        self._log = Log(root)
         self._ignore_changes = str(options.get("ignorechanges", "false")).lower() == "true"
         self._cdf = str(options.get("readchangefeed", "false")).lower() == "true"
         sv = str(options.get("startingversion", "latest")).lower()
         if sv == "latest":
-            self._start = _head_version(root)
+            self._start = self._log.current_version()
         elif sv == "earliest":
             self._start = 0
         else:
@@ -171,7 +144,7 @@ class LakeTableStreamReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        actual = _head_version(self._root)
+        actual = self._log.current_version()
         if self._max_commits is None:
             return {"version": actual}
         # rate limit (Delta maxFilesPerTrigger analogue, commit granule):
@@ -190,9 +163,8 @@ class LakeTableStreamReader(DataSourceStreamReader):
             known if self._last_end is None else max(self._last_end, known)
         )
         parts: list[_LakeFilePartition] = []
-        m = _read_manifest(self._root, start["version"]) if start["version"] else None
-        for v in range(start["version"] + 1, end["version"] + 1):
-            m_prev, m = m, _read_manifest(self._root, v)
+        for c in self._log.actions_between(start["version"], end["version"]):
+            m, v, op = c.manifest, c.version, c.operation
             if m.get("column_mapping") or m.get("dropped_columns"):
                 # this source serves files under their PHYSICAL schema
                 # (pyarrow reads, no mapping layer): streaming across a
@@ -204,15 +176,7 @@ class LakeTableStreamReader(DataSourceStreamReader):
                     f"v{m['version']}; the file-level stream cannot serve "
                     "renamed columns — use batch changes() or read()"
                 )
-            prev_dirs = (
-                {e["path"] for e in m_prev["data_dirs"]} if m_prev else set()
-            )
-            new_entries = [
-                e for e in m["data_dirs"] if e["path"] not in prev_dirs
-            ]
-            op = m.get("operation", "")
-            prev_dvs = set(m_prev.get("deletion_vectors", [])) if m_prev else set()
-            if set(m.get("deletion_vectors", [])) - prev_dvs:
+            if c.dvs_added:
                 # merge-on-read DELETE: rows disappeared without any file
                 # change — a source cannot emit a retraction. ignoreChanges
                 # doubles as Delta's ignoreDeletes here (skip the commit).
@@ -224,22 +188,22 @@ class LakeTableStreamReader(DataSourceStreamReader):
                         "ignoreChanges=true to skip delete-only commits, "
                         "or use the batch LakeTable.changes() API."
                     )
-            if op not in _PHYSICAL_OPS and not new_entries:
+            if op not in _PHYSICAL_OPS and not c.new_dirs:
                 # file-list-only data commit: rows appeared or
                 # disappeared with no new dir to emit (e.g. a DELETE that
                 # emptied every file it touched, or a RESTORE that only
                 # re-listed files)
-                changed = _carryover_visibility_changes(m_prev, m)
+                changed = list(dict.fromkeys([*c.removed, *c.added]))
                 if changed and (not self._ignore_changes or self._cdf):
                     raise ValueError(
                         f"laketable stream source at {self._root}: commit "
                         f"v{v} ({op!r}) changed row visibility without "
-                        f"adding files ({'; '.join(changed)}); a stream "
+                        f"adding files (in {', '.join(changed)}); a stream "
                         "cannot emit retractions. Set ignoreChanges=true "
                         "to skip such commits, or use the batch "
                         "LakeTable.changes() API."
                     )
-            if not new_entries or op in _PHYSICAL_OPS:
+            if not c.new_dirs or op in _PHYSICAL_OPS:
                 continue
             if m.get("deletion_vectors") and (v == 1 or op != "append"):
                 raise ValueError(
@@ -266,11 +230,11 @@ class LakeTableStreamReader(DataSourceStreamReader):
                         "(downstream must dedup), or start from a later "
                         "startingVersion."
                     )
-            # the files each entry serves (its live_files when listed),
+            # the files each new dir serves (its live_files when listed),
             # as LakeTable.read() does; a vacuumed dir raises
-            for e in new_entries:
-                for rel in sorted(_live_rels(e, v)):
-                    parts.append(_LakeFilePartition(os.path.join(e["path"], rel), rel, v))
+            for path in c.new_dirs:
+                for rel in c.files(path):
+                    parts.append(_LakeFilePartition(os.path.join(path, rel), rel, v))
         return parts
 
     # -- executor-side read --------------------------------------------

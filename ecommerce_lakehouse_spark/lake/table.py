@@ -5,327 +5,48 @@ delta-spark (not installed here): versioned copy-on-write commits,
 partitioned writes, append/overwrite/merge, and time-travel reads by
 version.
 
-Layout:
-    <root>/
-      _manifest/ v00000001.json ...   (one JSON per committed version)
-      _manifest/_LATEST               (roll-forward cache of the head)
-      data/v00000001-<uuid>/ ... parquet (optionally partitioned subdirs)
-
-A manifest lists its data dirs as entries ``{path, files, live_files?}``:
-``files`` holds each file's footer min/max stats keyed by its
-hive-relative path (``col=value/part-....parquet`` on a partitioned
-table), and ``live_files``, when present, names the files of the dir the
-snapshot still serves. Together with the deletion vectors it is the one
-record of which rows are live, in both layouts — a partition value is
-only a path segment of a file. Copy-on-write DML finds the files it
-touches, rewrites them into a new dir and commits the rest by name
-(:meth:`LakeTable._rewrite_touched`).
-
-Each operation reads the head manifest ONCE and commits against it (the
-Delta snapshot): it writes a fresh, uniquely-named data directory, then
-publishes the next version's manifest with an atomic ``os.link`` — the
-commit point. The link fails if another writer already claimed that
-version, so concurrent writers never overwrite each other (see
-ConcurrentWriteError). ``_LATEST`` is moved afterwards as a cache that
-readers roll forward over; readers never see partial writes.
+The manifest layout and the commit protocol live in lake/log.py
+(:class:`~ecommerce_lakehouse_spark.lake.log.Log`, no Spark);
+``LakeTable`` is the Spark data plane over it: scans under the recorded
+schema, writes, constraints, generated and identity columns, bloom
+indexes and the rewrites of DML and compaction. Copy-on-write DML finds
+the files it touches, rewrites them into a new dir and commits the rest
+by name (:meth:`LakeTable._rewrite_touched`).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import tempfile
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ecommerce_lakehouse_spark.lake.log import (  # noqa: F401 (re-exported errors)
+    ConcurrentWriteError,
+    ConstraintViolationError,
+    Log,
+    SchemaMismatchError,
+    UnsupportedTableFeatureError,
+    _dir_partition_tuples,
+    _hive_values,
+    _local_path,
+    _metadata,
+    _partition_of,
+    _recorded_schema_json,
+    _schema_json,
+    check_table_features,
+)
 from ecommerce_lakehouse_spark.lake.merge import merge_upsert
 
 
-def _crash_hook(point: str) -> None:
-    """Fault-injection seam for the commit protocol (no-op in
-    production). tests/test_lake_fault_injection.py monkeypatches this
-    to abort a commit at a named internal step and asserts the table
-    reads back EITHER exactly the pre-commit version (crash before the
-    manifest link) OR exactly the committed version (crash after it) —
-    never partial state — and that the next writer is never wedged.
-    Points, in commit order: ``commit_enter`` (data files written, no
-    manifest yet), ``manifest_tmp_written`` (content durable in a temp
-    file, version not claimed), ``manifest_linked`` (commit point
-    passed, ``_LATEST`` pointer not yet moved)."""
-
-
-class ConcurrentWriteError(RuntimeError):
-    """Another writer committed a conflicting version this operation
-    didn't see.
-
-    LakeTable's commit protocol is optimistic concurrency control in the
-    Delta style: an operation reads the head manifest once when it
-    starts and validates, writes and commits against it; the commit (a)
-    refuses if the table moved past that head and (b) publishes its
-    manifest with an atomic ``os.link``, which fails if the version's
-    name already exists, so two writers racing for the same version
-    number cannot both win. Logical conflict resolution
-    (what delta-spark's commit protocol adds on top) is implemented for
-    the common cases: blind appends rebase over any winner, and
-    merge/delete/update on a partitioned table rebase automatically when
-    every intervening winner's touched partitions are disjoint from theirs AND
-    the winner's newly-added data cannot affect this operation's read set
-    (checked by scanning only the winners' delta dirs). Overlapping
-    writers — and full-table rewrites (overwrite/compact/optimize) racing
-    anything — still surface this error."""
-
-
-class SchemaMismatchError(RuntimeError):
-    """Incoming rows do not match the table schema under strict mode
-    (Delta's default write behavior: new columns and type changes are
-    rejected unless schema evolution is explicitly enabled)."""
-
-
-class ConstraintViolationError(RuntimeError):
-    """Incoming rows violate a table CHECK constraint (Delta's
-    ``ALTER TABLE .. ADD CONSTRAINT`` invariant enforcement): the write
-    is rejected before any commit, listing every violated constraint."""
-
-    def __init__(self, table_root: str, violated: dict[str, str]):
-        self.violated = violated
-        detail = "; ".join(f"{n}: CHECK ({e})" for n, e in sorted(violated.items()))
-        super().__init__(
-            f"write to {table_root} violates constraint(s) {detail}"
-        )
-
-
-class UnsupportedTableFeatureError(RuntimeError):
-    """The manifest lists a protocol feature this build does not implement
-    (Delta's table-features / minReaderVersion contract): refuse LOUDLY
-    instead of proceeding — a reader that ignored 'deletion-vectors'
-    would resurrect deleted rows; one that ignored 'column-mapping'
-    would serve physical column names; a writer that ignored an unknown
-    writer feature could corrupt invariants it cannot see."""
-
-
-# Protocol features this build implements. Features are recorded in the
-# manifest the first time a commit exercises the capability and are
-# carried forward monotonically (Delta: once a feature is on the table,
-# every client must support it). READER features change what bytes mean;
-# WRITER features only constrain how commits are produced, so an
-# unknown writer feature still permits reads (Delta's reader/writer
-# split).
-SUPPORTED_READER_FEATURES = frozenset({"deletion-vectors", "column-mapping"})
-SUPPORTED_WRITER_FEATURES = frozenset(
-    {"check-constraints", "generated-columns", "auto-compaction"}
-)
-
-
-def check_table_features(manifest: dict, *, for_write: bool, where: str) -> None:
-    """Gate an operation on the manifest's protocol features. Reads need
-    the reader set; writes need BOTH sets (a writer must preserve reader
-    features' invariants in the files it produces)."""
-    feats = manifest.get("features") or {}
-    unknown = set(feats.get("reader", [])) - SUPPORTED_READER_FEATURES
-    if for_write:
-        unknown |= (
-            set(feats.get("writer", []))
-            - SUPPORTED_WRITER_FEATURES
-            - SUPPORTED_READER_FEATURES
-        )
-    if unknown:
-        mode = "write to" if for_write else "read of"
-        raise UnsupportedTableFeatureError(
-            f"{mode} {where} requires table feature(s) "
-            f"{sorted(unknown)} this build does not implement "
-            f"(manifest v{manifest.get('version')}); upgrade the engine "
-            "or use a client that supports them"
-        )
-
-
-# physical-only reorganizations: no logical row change (Delta dataChange=false)
-_PHYSICAL_OPS = ("compact", "optimize", "optimize-zorder", "auto-compact")
-
-# Table metadata every commit carries from the manifest its operation
-# read unless the operation changes it (Delta: metadata lives in the log
-# and survives data operations), with the value for tables predating a key.
-_METADATA = {
-    "partition_by": [],
-    # CHECK constraints: {name: sql_expr}, enforced on every write
-    "constraints": {},
-    # generated columns: {col: sql_expr}, computed/validated on write
-    "generated_columns": {},
-    # merge-on-read DELETE sidecars: parquet dirs of (__file_path,
-    # __row_index) rows the snapshot excludes; rewrites that materialize
-    # them commit []
-    "deletion_vectors": [],
-    # table properties (Delta TBLPROPERTIES): auto_compact,
-    # auto_compact_min_files, target_file_bytes, identity, bloom_index
-    "properties": {},
-    # Delta column mapping: {logical: [physical aliases, newest-first]}
-    # applied at read; renames never rewrite files
-    "column_mapping": {},
-    # dead names (DROP COLUMN): hidden from every read; a dropped name
-    # stays dead — see drop_column's contract
-    "dropped_columns": [],
-    # the PHYSICAL schema every scan passes (StructType JSON, Delta's
-    # metaData.schemaString): the columns written since the last
-    # overwrite, under their stored names; every commit records one
-    "schema": None,
-}
-
-
-def _metadata(manifest: dict) -> dict:
-    """The table metadata (:data:`_METADATA` keys) of ``manifest``."""
-    return {k: manifest.get(k, d) for k, d in _METADATA.items()}
-
-
 def _recorded_schema(manifest: dict, where: str):
-    """The StructType ``manifest`` records; a manifest without one is
-    refused by name — no scan falls back to footer inference."""
+    """The StructType ``manifest`` records (see
+    :func:`~ecommerce_lakehouse_spark.lake.log._recorded_schema_json`)."""
     from pyspark.sql.types import StructType
 
-    if not manifest.get("schema"):
-        raise ValueError(
-            f"table {where}: manifest v{manifest.get('version')} records no "
-            "schema; rewrite the table with overwrite() or re-adopt its "
-            "files with convert_from_parquet()"
-        )
-    return StructType.fromJson(manifest["schema"])
-
-
-def _recorded_txns(manifest: dict, where: str) -> dict:
-    """The {app_id: version} map ``manifest`` records (Delta's
-    SetTransaction state); ``{"version": 0}``, the prior of a first
-    commit, records none. A manifest without the map is refused by
-    name."""
-    if not manifest["version"]:
-        return {}
-    if "txns" not in manifest:
-        raise ValueError(
-            f"table {where}: manifest v{manifest['version']} records no "
-            "txns; rewrite the table with overwrite() or re-adopt its "
-            "files with convert_from_parquet()"
-        )
-    return manifest["txns"]
-
-
-def _nullable(t):
-    """Spark schema JSON with every field, array element and map value
-    nullable — what any parquet scan reports, whatever the writer said."""
-    if isinstance(t, list):
-        return [_nullable(x) for x in t]
-    if not isinstance(t, dict):
-        return t
-    out = {k: v if k == "metadata" else _nullable(v) for k, v in t.items()}
-    for k in ("nullable", "containsNull", "valueContainsNull"):
-        if k in out:
-            out[k] = True
-    return out
-
-
-def _schema_json(schema, partition_by: list[str]) -> dict:
-    """The schema a write of a frame with ``schema`` records: hive
-    partition columns last, in ``partition_by`` order (where a scan puts
-    them), everything nullable — from the frame, never the footers."""
-    from pyspark.sql.types import StructType
-
-    fields = [f for f in schema.fields if f.name not in partition_by]
-    fields += [schema[c] for c in partition_by]
-    return _nullable(json.loads(StructType(fields).json()))
-
-
-# type changes a recorded schema widens across (the parquet reader
-# upcasts older files' values on scan), narrowest first
-_WIDENING = (("byte", "short", "integer", "long"), ("float", "double"))
-
-
-def _widen(prior: dict, written: dict, where: str) -> dict:
-    """Union of two recorded schemas, in the order a merged-schema scan
-    lists them: ``prior``'s columns, then the ones ``written`` adds. A
-    column written under another type takes the wider one (int -> long,
-    float -> double); any other type change raises."""
-    fields = [dict(f) for f in prior["fields"]]
-    at = {f["name"]: i for i, f in enumerate(fields)}
-    for f in written["fields"]:
-        i = at.get(f["name"])
-        if i is None:
-            fields.append(f)
-            continue
-        old, new = fields[i]["type"], f["type"]
-        if old == new:
-            continue
-        ladder = next((t for t in _WIDENING if old in t and new in t), None)
-        if ladder is None:
-            raise SchemaMismatchError(
-                f"write to {where}: column {f['name']!r} changes type "
-                f"{old} -> {new}; overwrite() the table to change a "
-                "column's type"
-            )
-        fields[i]["type"] = max(old, new, key=ladder.index)
-    return {"type": "struct", "fields": fields}
-
-
-def _read_manifest(root: str, version: int) -> dict:
-    """Manifest ``version`` of the table at ``root``. A data-dir entry in
-    a retired shape (a bare path, or an ``exclude`` partition mask) is
-    refused by name: readers know only ``{path, files, live_files?}``."""
-    with open(os.path.join(root, "_manifest", f"v{version:08d}.json")) as f:
-        m = json.load(f)
-    for e in m["data_dirs"]:
-        if not isinstance(e, dict) or "exclude" in e:
-            raise ValueError(
-                f"table {root}: manifest v{version} holds a data-dir entry "
-                f"in a retired shape ({str(e)[:80]}); recreate the table "
-                "with overwrite() or re-adopt its files with "
-                "convert_from_parquet()"
-            )
-    return m
-
-
-def _head_version(root: str) -> int:
-    """Head version of the table at ``root`` (no SparkSession needed —
-    the streaming source calls this from its reader). The COMMIT POINT
-    of the protocol is the atomic ``os.link`` of a version's manifest
-    (see :meth:`LakeTable._commit`); the ``_LATEST`` pointer is only an
-    O(1) cache of the head and may lag by any number of versions if
-    writers crash between the link and the pointer swap. Reads roll
-    FORWARD from the pointer over contiguously-present manifests — a
-    lagging pointer can therefore never hide a durable commit, and a
-    crashed writer can never wedge the next one (fault-injection
-    contract: tests/test_lake_fault_injection.py). The healed head is
-    written back opportunistically so the next read is O(1) again.
-    Raises FileNotFoundError when there is neither pointer nor manifest."""
-    mdir = os.path.join(root, "_manifest")
-    latest = os.path.join(mdir, "_LATEST")
-    try:
-        with open(latest) as f:
-            head = int(f.read().strip())
-    except FileNotFoundError:
-        if not os.path.exists(os.path.join(mdir, "v00000001.json")):
-            raise
-        head = 0
-    rolled = head
-    while os.path.exists(os.path.join(mdir, f"v{rolled + 1:08d}.json")):
-        rolled += 1
-    if rolled > head:
-        try:
-            fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
-            with os.fdopen(fd, "w") as f:
-                f.write(str(rolled))
-            os.replace(tmp, latest)
-        except OSError:
-            pass  # healing is best-effort; roll-forward re-applies
-    return rolled
-
-
-def _hive_values(rel: str) -> dict[str, str | None]:
-    """Partition column values encoded in a hive-relative file path."""
-    from urllib.parse import unquote
-
-    vals: dict[str, str | None] = {}
-    for seg in rel.split(os.sep)[:-1]:
-        if "=" in seg:
-            c, v = seg.split("=", 1)
-            vals[c] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-    return vals
+    return StructType.fromJson(_recorded_schema_json(manifest, where))
 
 
 # parquet row identity (_metadata file_path + row_index), as
@@ -342,50 +63,6 @@ def _read_dvs(spark: SparkSession, paths: list[str]) -> DataFrame:
     """The (file, row) ids named by the deletion-vector sidecars ``paths``."""
     return spark.read.schema(_DV_SCHEMA).parquet(*paths)
 
-
-def _row_canon(row: dict) -> tuple:
-    """Canonical hashable form of a partition tuple for disjointness checks
-    and for comparison against hive-path values: None stays None, bools
-    lowercase (hive writes true/false), everything else via str."""
-    out = []
-    for k in sorted(row):
-        v = row[k]
-        if isinstance(v, bool):
-            v = str(v).lower()
-        elif v is not None:
-            v = str(v)
-        out.append((k, v))
-    return tuple(out)
-
-
-def _dir_partition_tuples(path: str, pcols: list[str]) -> set[tuple]:
-    """Partition tuples physically present under ``path`` (hive-style
-    ``col=value`` dirs; filesystem walk — control-plane, bounded by
-    partition count, never data volume)."""
-    from urllib.parse import unquote
-
-    found: set[tuple] = set()
-
-    def walk(d: str, depth: int, acc: list):
-        if depth == len(pcols):
-            found.add(_row_canon(dict(zip(pcols, acc))))
-            return
-        try:
-            names = os.listdir(d)
-        except FileNotFoundError:
-            return
-        prefix = pcols[depth] + "="
-        for name in names:
-            if name.startswith(prefix):
-                v = unquote(name[len(prefix):])
-                walk(
-                    os.path.join(d, name),
-                    depth + 1,
-                    acc + [None if v == "__HIVE_DEFAULT_PARTITION__" else v],
-                )
-
-    walk(path, 0, [])
-    return found
 
 
 def _apply_column_mapping(df, manifest: dict):
@@ -511,18 +188,10 @@ def _ranges_intersect(file_stats: dict | None, key_ranges: dict) -> bool:
     return True
 
 
-def _local_path(uri: str) -> str:
-    """input_file_name() returns file:// URIs; normalize to a local path."""
-    from urllib.parse import unquote, urlparse
-
-    if uri.startswith("file:"):
-        return unquote(urlparse(uri).path)
-    return uri
-
 
 def _written(df, partition_by: list[str]) -> dict:
     """The one-dir snapshot a fresh write of ``df`` scans back as."""
-    return {"schema": _schema_json(df.schema, partition_by), "partition_by": partition_by}
+    return {"schema": _schema_json(df.schema.jsonValue(), partition_by), "partition_by": partition_by}
 
 
 def _files_entries(files: list[tuple]) -> list[dict]:
@@ -542,352 +211,10 @@ def _files_entries(files: list[tuple]) -> list[dict]:
     return [{"path": d, "live_files": rels} for d, rels in by_dir.items()]
 
 
-def _live_rels(entry: dict, version: int) -> list[str]:
-    """Hive-relative paths of the parquet files data-dir ``entry`` of
-    manifest ``version`` serves: its ``live_files`` when it lists them,
-    else every parquet file under the dir. A dir the manifest names but
-    storage lacks raises instead of listing as empty — a rewrite would
-    otherwise commit the table without its rows."""
-    path = entry["path"]
-    if not os.path.isdir(path):
-        raise FileNotFoundError(
-            f"data dir {path} named by manifest v{version} is missing from "
-            "storage (vacuumed?); read or stream from a later version, or "
-            "fsck(dry_run=False) to drop it"
-        )
-    if entry.get("live_files") is not None:
-        return list(entry["live_files"])
-    return sorted(
-        os.path.relpath(os.path.join(root, n), path)
-        for root, _, names in os.walk(path)
-        for n in names
-        if n.endswith(".parquet")
-    )
-
-
-def _partition_of(rel: str) -> tuple:
-    """Canonical partition tuple of a hive-relative file path (``()`` on
-    an unpartitioned table) — the form rebase disjointness compares."""
-    return _row_canon(_hive_values(rel))
-
-
-class LakeTable:
+class LakeTable(Log):
     def __init__(self, spark: SparkSession, root: str):
+        super().__init__(root)
         self.spark = spark
-        self.root = root
-        self._manifest_dir = os.path.join(root, "_manifest")
-
-    # ---------------- manifest plumbing ----------------
-
-    def _latest_path(self) -> str:
-        return os.path.join(self._manifest_dir, "_LATEST")
-
-    def exists(self) -> bool:
-        """K6 create-if-absent check (cleaner than the reference's exception
-        sniffing at src/glue_etl.py:465-467).
-
-        A table exists once its FIRST manifest is durably linked — the
-        ``_LATEST`` pointer is a roll-forward cache (see
-        :meth:`current_version`), so a writer that crashed between
-        linking v1 and writing the pointer still created the table."""
-        return os.path.exists(self._latest_path()) or os.path.exists(
-            os.path.join(self._manifest_dir, "v00000001.json")
-        )
-
-    def current_version(self) -> int:
-        """Head version (roll-forward over durable manifests — see
-        :func:`_head_version`)."""
-        return _head_version(self.root)
-
-    def _manifest(self, version: int) -> dict:
-        return _read_manifest(self.root, version)
-
-    def _head(self, op: str | None = None) -> dict:
-        """The head manifest, read ONCE at the start of an operation: the
-        op validates, reads (``read(_snapshot=prior)``), writes
-        and commits against this one dict (Delta's per-operation
-        snapshot), so a concurrent commit surfaces at :meth:`_commit`
-        instead of mixing two versions' state into one op. A table with
-        no commit yet yields ``{"version": 0}`` — the prior of a first
-        commit — or, when ``op`` names an operation that needs an
-        existing table, raises its "does not exist yet" ValueError."""
-        if self.exists():
-            return _read_manifest(self.root, self.current_version())
-        if op is not None:
-            raise ValueError(f"{op}: table does not exist yet")
-        return {"version": 0}
-
-    def history(self) -> list[dict]:
-        out = []
-        for name in sorted(os.listdir(self._manifest_dir)):
-            if name.endswith(".json"):
-                out.append(self._manifest(int(name[1:-5])))
-        return out
-
-    def _commit(
-        self,
-        prior: dict,
-        data_dirs: list,
-        operation: str,
-        *,
-        touched: list[dict] | None = None,
-        txn: dict | None = None,
-        written=None,
-        **changes,
-    ) -> int:
-        """Commit ``data_dirs`` as the version after ``prior`` — the head
-        manifest the operation read (see :meth:`_head`). Table metadata
-        (:data:`_METADATA`) is carried from ``prior`` unless ``changes``
-        overrides it. ``changes`` may also set ``features`` (drop_feature);
-        features the commit exercises re-add themselves regardless, so a
-        manifest never lies about its own content.
-
-        ``written``: the StructType of the frame this commit wrote; the
-        recorded schema widens to include it (see :func:`_widen`).
-        Writes that replace the schema (overwrite) pass ``schema``.
-
-        ``touched``: partition tuples this commit wrote/rewrote ([] = blind
-        append); None = full-table (overwrite/compact/unpartitioned DML) —
-        the rebase protocol's disjointness check reads it. ``txn``: Delta's
-        {"app_id", "version"} idempotent-replay marker (streaming
-        foreachBatch records its batch id here). A commit that loses the
-        version to another writer returns the winner's version, writing
-        nothing, when the new head already records ``txn`` (see
-        :meth:`_txn_applied`): the concurrent replay of one transaction
-        lands once. The loser's data dir is left for :meth:`vacuum`."""
-        unknown = set(changes) - set(_METADATA) - {"features"}
-        if unknown:
-            raise TypeError(f"_commit: not table metadata: {sorted(unknown)}")
-        _crash_hook("commit_enter")
-        base = prior["version"]
-        current = self.current_version() if self.exists() else 0
-        if current != base:
-            head = self._head()
-            if self._txn_applied(head, txn):
-                return head["version"]
-            raise ConcurrentWriteError(
-                f"{operation}: table advanced v{base} -> v{current} "
-                "since this operation read it; re-read and retry"
-            )
-        # protocol features: gate on what the table already requires, then
-        # record (monotonically) what this commit starts requiring
-        check_table_features(prior, for_write=True, where=self.root)
-        meta = {**_metadata(prior), **changes}
-        if not meta["schema"]:
-            _recorded_schema(prior, self.root)  # raises, naming the table
-        if written is not None:
-            meta["schema"] = _widen(
-                meta["schema"], _schema_json(written, meta["partition_by"]), self.root
-            )
-        feats = meta.pop("features", prior.get("features", {}))
-        reader_feats = set(feats.get("reader", []))
-        writer_feats = set(feats.get("writer", []))
-        if meta["deletion_vectors"]:
-            reader_feats.add("deletion-vectors")
-        if meta["column_mapping"] or meta["dropped_columns"]:
-            reader_feats.add("column-mapping")
-        if meta["constraints"]:
-            writer_feats.add("check-constraints")
-        if meta["generated_columns"]:
-            writer_feats.add("generated-columns")
-        if meta["properties"].get("auto_compact"):
-            writer_feats.add("auto-compaction")
-        version = current + 1
-        txns = dict(_recorded_txns(prior, self.root))
-        if txn:
-            txns[txn["app_id"]] = txn["version"]
-        os.makedirs(self._manifest_dir, exist_ok=True)
-        manifest = {
-            "version": version,
-            "operation": operation,
-            "data_dirs": data_dirs,
-            "touched_partitions": touched,
-            "txn": txn,
-            # accumulated SetTransaction state: O(1) last_txn lookups
-            "txns": txns,
-            **meta,
-            # protocol features (Delta table-features analogue): reader =
-            # "these bytes mean something extra", writer = "commits must
-            # uphold an invariant"; monotone — see check_table_features
-            "features": {
-                "reader": sorted(reader_feats),
-                "writer": sorted(writer_feats),
-            },
-            "committed_at": time.time(),
-        }
-        mpath = os.path.join(self._manifest_dir, f"v{version:08d}.json")
-        # ATOMIC CLAIM: the manifest content is fully written (and synced)
-        # to a temp file first, then os.link() publishes it under the
-        # version name — link is atomic and fails if the name exists, so
-        # exactly one writer wins the version AND a manifest can never be
-        # observed truncated (an O_EXCL create-then-dump would leave a
-        # partial file owning the version if the writer died mid-dump).
-        # The link IS the commit point; the _LATEST pointer below is a
-        # cache that current_version() rolls forward over, so dying
-        # anywhere after the link still yields a durable, visible commit
-        # and dying before it yields exactly the pre-commit table.
-        fd, tmp = tempfile.mkstemp(dir=self._manifest_dir, suffix=".tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(manifest, f)
-                f.flush()
-                os.fsync(f.fileno())
-            _crash_hook("manifest_tmp_written")
-            try:
-                os.link(tmp, mpath)
-            except FileExistsError:
-                head = self._head()
-                if self._txn_applied(head, txn):
-                    return head["version"]
-                raise ConcurrentWriteError(
-                    f"{operation}: lost the race for v{version} "
-                    f"(another writer committed it); re-read and retry"
-                ) from None
-            # POSIX: a new directory entry is only durable once the
-            # PARENT DIRECTORY is fsynced — without this, a power loss
-            # after the link could roll back an acknowledged commit
-            # (the process-crash fault-injection tests cannot see this;
-            # it is the power-failure half of the durability contract)
-            dfd = os.open(self._manifest_dir, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
-        finally:
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:
-                pass
-        _crash_hook("manifest_linked")
-        # move the head cache (temp file then atomic rename); readers
-        # roll forward over the linked manifest if this never happens
-        fd, tmp = tempfile.mkstemp(dir=self._manifest_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._latest_path())
-        return version
-
-    def last_txn(self, app_id: str) -> int | None:
-        """Highest transaction version committed for ``app_id`` (Delta's
-        ``txnAppId``/``txnVersion`` idempotent-write pattern), or None.
-
-        Reads ONE manifest: every commit carries the accumulated
-        {app_id: version} map (Delta's SetTransaction state). Writers
-        need not call it to stay exactly-once: a write whose ``txn`` the
-        table already records is skipped (:meth:`_txn_applied`)."""
-        return _recorded_txns(self._head(), self.root).get(app_id)
-
-    def _txn_applied(self, manifest: dict, txn: dict | None) -> bool:
-        """Whether ``manifest`` records ``txn``'s app at ``txn``'s version
-        or later. A write op that reads such a head returns its version
-        at once — no data, no commit, no Spark job — so a replayed
-        at-least-once batch lands exactly once."""
-        if not txn:
-            return False
-        last = _recorded_txns(manifest, self.root).get(txn["app_id"])
-        return last is not None and last >= txn["version"]
-
-    def _commit_rebasing(
-        self,
-        prior: dict,
-        make_entries,
-        operation: str,
-        *,
-        touched: list[dict] | None,
-        txn: dict | None = None,
-        delta_check=None,
-        blind: bool = False,
-        max_retries: int = 5,
-        **changes,
-    ) -> int:
-        """Commit with Delta-style logical conflict auto-resolution.
-
-        ``make_entries(base_manifest)`` rebuilds the manifest entry list
-        against an arbitrary base — first ``prior``, the head this
-        operation read, then each newer head it rebases onto (``changes``
-        ride every attempt, as in :meth:`_commit`; a ``written`` schema
-        widens the schema of the head each attempt commits on, so a
-        winner's new columns survive the rebase). On ``ConcurrentWriteError``,
-        the winners (manifests between our base and the new head) are
-        examined: a blind append (``touched == []``) rebases over
-        anything; a partition-scoped op rebases only if every winner
-        recorded a touched-partition list disjoint from ours AND
-        ``delta_check`` (given a DataFrame of only the winners' newly
-        added data dirs — an incremental scan, never the full table)
-        confirms the winner's new rows cannot affect our read set.
-        Anything else re-raises: the caller must re-read and retry, since
-        its rewritten data itself may be stale."""
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries + 1):
-            try:
-                return self._commit(
-                    prior, make_entries(prior), operation,
-                    touched=touched, txn=txn, **changes,
-                )
-            except ConcurrentWriteError as err:
-                last_err = err
-                if touched is None and not blind:
-                    raise  # full-table op: never auto-rebase
-                base = prior["version"]
-                head = self.current_version() if self.exists() else 0
-                if head <= base:
-                    # manifest race without an advanced head (half-committed
-                    # writer): nothing to rebase onto
-                    raise
-                winners = [self._manifest(v) for v in range(base + 1, head + 1)]
-                # Metadata changes conflict with EVERYTHING (Delta
-                # semantics): a winner that altered constraints or
-                # generated columns invalidates this writer's pre-commit
-                # validation/computation — even a blind append's rows may
-                # lack a column the head now declares generated, or
-                # violate a constraint it was never checked against.
-                for w in winners:
-                    if (
-                        w.get("constraints", {}) != prior.get("constraints", {})
-                        or w.get("generated_columns", {})
-                        != prior.get("generated_columns", {})
-                        or (w.get("properties") or {}).get("identity")
-                        != (prior.get("properties") or {}).get("identity")
-                    ):
-                        raise ConcurrentWriteError(
-                            f"{operation}: a concurrent commit changed table "
-                            "metadata (constraints/generated columns/identity "
-                            "watermark); re-read and retry so the write is "
-                            "validated/allocated against it"
-                        ) from err
-                if not blind:
-                    # partition-scoped op: every winner must have recorded
-                    # a touched list disjoint from ours
-                    mine = {_row_canon(r) for r in touched}
-                    for w in winners:
-                        w_touched = w.get("touched_partitions")
-                        if w_touched is None:
-                            raise
-                        if mine & {_row_canon(r) for r in w_touched}:
-                            raise
-                    if delta_check is not None:
-                        delta_df = self._winners_delta_df(prior, winners)
-                        if delta_df is not None and not delta_check(delta_df):
-                            raise
-                prior = winners[-1]
-        raise last_err if last_err else ConcurrentWriteError(
-            f"{operation}: exceeded rebase retries"
-        )
-
-    def _winners_delta_df(self, prior: dict, winners: list[dict]) -> DataFrame | None:
-        """Union of data dirs the winners added beyond our base manifest —
-        the winners' write delta, whole dirs under the newest winner's
-        schema and names (bounded by what they wrote)."""
-        base_paths = {e["path"] for e in prior.get("data_dirs", [])}
-        new_paths: list[str] = []
-        for w in winners:
-            for e in w["data_dirs"]:
-                p = e["path"]
-                if p not in base_paths and p not in new_paths:
-                    new_paths.append(p)
-        if not new_paths:
-            return None
-        return self._scan(winners[-1], [{"path": p} for p in new_paths])
 
     def _new_data_dir(self, prior: dict) -> str:
         # Unique per writer (Delta-style GUID naming): two racing writers
@@ -897,19 +224,6 @@ class LakeTable:
         # nothing depends on version-number naming.
         n = prior["version"] + 1
         return os.path.join(self.root, "data", f"v{n:08d}-{uuid.uuid4().hex[:12]}")
-
-    def _file_inventory(self, manifest: dict) -> list[tuple]:
-        """(dir, relpath, footer_stats|None) for every live parquet file of
-        snapshot ``manifest``, in either layout: relpaths are
-        hive-relative (``col=value/part-....parquet`` on a partitioned
-        table), so each file carries its partition values (see
-        :func:`_live_rels`; a missing dir raises). Control-plane: bounded
-        by file count."""
-        return [
-            (e["path"], rel, e.get("files", {}).get(rel))
-            for e in manifest["data_dirs"]
-            for rel in _live_rels(e, manifest["version"])
-        ]
 
     @staticmethod
     def _surviving_file_entries(untouched: list[tuple]) -> list:
@@ -969,9 +283,9 @@ class LakeTable:
         matches,
         rewrite,
         *,
+        delta_check,
         key_ranges: dict | None = None,
         always: bool = False,
-        delta_check=None,
         txn: dict | None = None,
     ) -> int:
         """The copy-on-write DML path of both layouts (Delta's
@@ -990,8 +304,9 @@ class LakeTable:
         Concurrency: an unpartitioned table's rewrite never rebases. A
         partitioned one records its touched partitions and rebases over
         winners whose recorded partitions are disjoint and whose new rows
-        pass ``delta_check`` (see :meth:`_commit_rebasing`), rebuilding
-        its entries from the new head."""
+        — a scan of the dirs they added — pass ``delta_check(frame)``
+        (see :meth:`Log._commit`), rebuilding its entries from the new
+        head."""
         inventory = self._file_inventory(prior)
         candidates = [f for f in inventory if _ranges_intersect(f[2], key_ranges or {})]
         touched = self._files_holding(prior, candidates, matches)
@@ -999,12 +314,12 @@ class LakeTable:
             return prior["version"]
         out = rewrite(self._scan(prior, _files_entries(touched)))
         entries, partitions, entry = self._rewrite(prior, touched, out)
-        return self._commit_rebasing(
+        return self._commit(
             prior, entries, operation,
             touched=partitions,
-            delta_check=delta_check,
+            delta_check=lambda head, new: delta_check(self._scan(head, new)),
             txn=txn,
-            written=out.schema,
+            written=out.schema.jsonValue(),
             **self._identity_changes(prior, [entry["path"]]),
         )
 
@@ -1142,7 +457,7 @@ class LakeTable:
         entry = self._write_dir_entry(backfilled, prior)
         return self._commit(
             prior, [entry], "add_generated_column",
-            deletion_vectors=[], generated_columns=gen, written=backfilled.schema,
+            deletion_vectors=[], generated_columns=gen, written=backfilled.schema.jsonValue(),
         )
 
     def _apply_generated(
@@ -1625,7 +940,7 @@ class LakeTable:
         )
         t._commit(
             {"version": 0}, [entry], "convert",
-            partition_by=pcols, schema=_schema_json(inferred, pcols),
+            partition_by=pcols, schema=_schema_json(inferred.jsonValue(), pcols),
         )
         return t
 
@@ -1675,7 +990,7 @@ class LakeTable:
         return self._commit(
             prior, [entry], "overwrite", txn=txn,
             partition_by=partition_by, deletion_vectors=[],
-            schema=_schema_json(df.schema, partition_by), **changes,
+            schema=_schema_json(df.schema.jsonValue(), partition_by), **changes,
         )
 
     def append(
@@ -1740,14 +1055,14 @@ class LakeTable:
             if partition_by
             else []
         )
-        v = self._commit_rebasing(
+        v = self._commit(
             prior,
             lambda head: head["data_dirs"] + [entry],
             "append",
             touched=touched,
             txn=txn,
             blind=True,
-            written=df.schema,
+            written=df.schema.jsonValue(),
             **self._identity_changes(prior, [entry["path"]]),
         )
         if prior.get("properties", {}).get("auto_compact"):
@@ -2200,20 +1515,6 @@ class LakeTable:
 
     # ---------------- readers (S4 + time travel) ----------------
 
-    def version_as_of(self, ts: float) -> int:
-        """Delta ``timestampAsOf``: the latest version committed at or
-        before ``ts`` (unix seconds). Raises if the table didn't exist
-        yet at that time."""
-        best = None
-        for m in self.history():
-            if m["committed_at"] <= ts:
-                best = m["version"] if best is None else max(best, m["version"])
-        if best is None:
-            raise ValueError(
-                f"no version of {self.root} existed at or before timestamp {ts}"
-            )
-        return best
-
     def read(
         self,
         version: int | None = None,
@@ -2487,83 +1788,10 @@ class LakeTable:
         try:
             return self._commit(
                 prior, entries(prior), "auto-compact", touched=partitions,
-                deletion_vectors=[], written=df.schema,
+                deletion_vectors=[], written=df.schema.jsonValue(),
             )
         except ConcurrentWriteError:
             return None
-
-    def fsck(self, dry_run: bool = True) -> dict:
-        """FSCK REPAIR TABLE (Delta parity): find manifest references to
-        data files that no longer exist in storage and, with
-        ``dry_run=False``, commit a repair that drops them.
-
-        The repair surface is exactly the file references the manifest
-        carries BY NAME: ``live_files`` entries (from file-pruned DML /
-        clones) and whole data dirs — a plain directory entry lists
-        storage at read time, so a file deleted from it disappears from
-        reads on its own, like a directory-listing table. Deletion
-        vectors are the one reference class that REFUSES repair: dropping
-        a missing DV would resurrect the rows it deleted, which is data
-        corruption, not repair — restore a backup or RESTORE to a
-        version before the delete instead.
-
-        The repair is a DATA commit (op ``fsck-repair``, rows vanish):
-        streaming tails raise on it unless ignoreChanges (a source
-        cannot retract), and a change feed crossing it raises because
-        the pre-image of vanished files is unreadable by definition.
-
-        Returns {"missing_files": [(dir, rel)...], "missing_dirs": [...],
-        "missing_dvs": [...], "repaired_version": int | None}.
-        Control-plane only: existence checks against the file inventory,
-        no Spark job."""
-        prior = self._head("fsck")
-        missing_files: list[tuple] = []
-        missing_dirs: list[str] = []
-        repaired: list = []
-        for e in prior["data_dirs"]:
-            dpath = e["path"]
-            if not os.path.isdir(dpath):
-                missing_dirs.append(dpath)
-                continue
-            if e.get("live_files") is not None:
-                gone = {
-                    r
-                    for r in e["live_files"]
-                    if not os.path.exists(os.path.join(dpath, r))
-                }
-                if gone:
-                    missing_files.extend((dpath, r) for r in sorted(gone))
-                    e2 = dict(e)
-                    e2["live_files"] = [
-                        r for r in e["live_files"] if r not in gone
-                    ]
-                    e2["files"] = {
-                        r: st
-                        for r, st in (e.get("files") or {}).items()
-                        if r not in gone
-                    }
-                    if e2["live_files"]:
-                        repaired.append(e2)
-                    continue
-            repaired.append(e)
-        dvs = prior.get("deletion_vectors", [])
-        missing_dvs = [p for p in dvs if not os.path.exists(p)]
-        report = {
-            "missing_files": missing_files,
-            "missing_dirs": missing_dirs,
-            "missing_dvs": missing_dvs,
-            "repaired_version": None,
-        }
-        if dry_run or not (missing_files or missing_dirs or missing_dvs):
-            return report
-        if missing_dvs:
-            raise ValueError(
-                f"fsck: deletion vectors missing from storage {missing_dvs}; "
-                "dropping them would resurrect deleted rows — restore the "
-                "files or RESTORE the table to a version before the delete"
-            )
-        report["repaired_version"] = self._commit(prior, repaired, "fsck-repair")
-        return report
 
     def compact(
         self, target_partitions: int | None = None, where: str | None = None
@@ -2600,7 +1828,7 @@ class LakeTable:
             entries, partitions, _ = self._rewrite(prior, touched, df)
             return self._commit(
                 prior, entries(prior), "compact", touched=partitions,
-                written=df.schema,
+                written=df.schema.jsonValue(),
             )
         target = self.read(_snapshot=prior)
         if target_partitions:
@@ -2611,7 +1839,7 @@ class LakeTable:
         return self._commit(
             prior, [entry] if entry["files"] else [], "compact",
             deletion_vectors=[],  # rewrite via read() materializes DVs (Delta PURGE)
-            written=target.schema,
+            written=target.schema.jsonValue(),
         )
 
     def _files_in_partitions(self, prior: dict, where: str) -> list[tuple]:
@@ -2689,51 +1917,8 @@ class LakeTable:
         entry = self._write_dir_entry(clustered, prior)
         return self._commit(
             prior, [entry], "optimize-zorder", deletion_vectors=[],
-            written=clustered.schema,
+            written=clustered.schema.jsonValue(),
         )
-
-    def restore(self, version: int) -> int:
-        """RESTORE TABLE ... TO VERSION AS OF (Delta RESTORE): commit a
-        new version whose logical state is exactly ``version``'s — the
-        manifest re-references that version's data dirs and deletion
-        vectors and carries its metadata (constraints, generated
-        columns, properties, column mapping). Metadata-only: zero bytes
-        are copied or rewritten, so restoring a petabyte table is O(1)
-        I/O. RESTORE adds a commit, it never erases one — time travel
-        still sees the intermediate versions (the audit trail survives),
-        and a second restore can "undo the undo".
-
-        Refused when any file the target manifest references has been
-        VACUUMed away (Delta's guard): a restore that cannot serve the
-        bytes it advertises would corrupt every later read. Downstream
-        semantics fall out of the commit's shape: the change feed
-        reports the multiset diff vs the pre-restore version (re-added
-        rows surface as inserts, rolled-back rows as deletes), and the
-        streaming source treats it as a non-append change (loud unless
-        ignoreChanges), matching Delta streaming."""
-        prior = self._head("restore")
-        current = prior["version"]
-        if not 1 <= version <= current:
-            raise ValueError(
-                f"restore: version {version} out of range 1..{current}"
-            )
-        m = self._manifest(version)
-        check_table_features(m, for_write=False, where=self.root)
-        missing = [
-            p
-            for p in (
-                [e["path"] for e in m["data_dirs"]]
-                + list(m.get("deletion_vectors", []))
-            )
-            if not os.path.isdir(_local_path(p))
-        ]
-        if missing:
-            raise ValueError(
-                f"restore: v{version} references vacuumed data: {missing[:3]}"
-                f"{'...' if len(missing) > 3 else ''} — cannot restore past "
-                "a vacuum horizon"
-            )
-        return self._commit(prior, m["data_dirs"], "restore", **_metadata(m))
 
     def clone_to(
         self,
@@ -2741,17 +1926,7 @@ class LakeTable:
         version: int | None = None,
         deep: bool = False,
     ) -> "LakeTable":
-        """SHALLOW CLONE (Delta ``CREATE TABLE .. SHALLOW CLONE src
-        [VERSION AS OF n]``): a new table whose first commit references
-        this table's data dirs at ``version`` by absolute path — zero
-        bytes copied, metadata (constraints, generated columns, table
-        properties, column mapping) carried. The clone is independent
-        from then on: DML copy-on-writes into its OWN data dirs (shared
-        files are only carried by name, never rewritten in place), and its
-        vacuum() walks only its own data root, so it can never reclaim
-        source files. Delta's caveat carries over unchanged: vacuum() on
-        the SOURCE may remove files a shallow clone still references.
-
+        """:meth:`Log.clone_to`, a SHALLOW CLONE, as a LakeTable; or with
         ``deep=True`` (Delta DEEP CLONE): the snapshot is MATERIALIZED
         into the clone's own data dir — self-contained, survives source
         vacuum. Implemented as a rewrite of the logical snapshot rather
@@ -2760,98 +1935,25 @@ class LakeTable:
         copies), files come out right-sized, and column-mapped tables
         materialize under their logical schema (dead names stay
         reserved). At 100 TB a deep clone is a full copy either way."""
+        if not deep:
+            super().clone_to(dest_root, version)
+            return LakeTable(self.spark, dest_root)
         m = self._manifest(version) if version is not None else self._head("clone_to")
         dest = LakeTable(self.spark, dest_root)
         if dest.exists():
             raise ValueError(f"clone destination {dest_root!r} already exists")
         os.makedirs(os.path.join(dest_root, "data"), exist_ok=True)
+        snap = self.read(_snapshot=m)
         new = {"version": 0}
-        if deep:
-            snap = self.read(_snapshot=m)
-            entry = dest._write_dir_entry(snap, new, m["partition_by"])
-            dest._commit(
-                new, [entry] if entry["files"] else [], "clone-deep",
-                # the copies hold the logical names: the schema widens to them
-                written=snap.schema,
-                # deletion vectors were applied by read(): rows already gone
-                **{**_metadata(m), "deletion_vectors": []},
-            )
-        else:
-            dest._commit(new, m["data_dirs"], "clone", **_metadata(m))
+        entry = dest._write_dir_entry(snap, new, m["partition_by"])
+        dest._commit(
+            new, [entry] if entry["files"] else [], "clone-deep",
+            # the copies hold the logical names: the schema widens to them
+            written=snap.schema.jsonValue(),
+            # deletion vectors were applied by read(): rows already gone
+            **{**_metadata(m), "deletion_vectors": []},
+        )
         return dest
-
-    def vacuum(
-        self,
-        keep_last: int = 2,
-        retention_hours: float | None = None,
-        dry_run: bool = False,
-    ) -> list[str]:
-        """VACUUM analogue (reference docs/data_model.md:310-316: age-based
-        retention, 7/30/90 days for bronze/silver/gold): delete data dirs
-        (and deletion-vector sidecars) referenced by no protected version.
-
-        Protection is TIME-based when ``retention_hours`` is given — every
-        version committed within the window survives, so time travel
-        anywhere inside the retention period keeps working — with
-        ``keep_last`` as a version-count FLOOR on top (Delta posture:
-        retention governs, a floor guards against commit-frequency
-        changes silently shrinking the window's version count). Without
-        ``retention_hours`` the pre-existing version-count behavior is
-        unchanged.
-
-        A too-aggressive combination (``keep_last=0`` with a window older
-        than the current commit) raises before touching anything rather
-        than reclaiming the live snapshot.
-
-        ``dry_run=True`` (Delta ``VACUUM ... DRY RUN``): return the list
-        of dirs that WOULD be reclaimed, deleting nothing."""
-        import shutil
-
-        cur = self.current_version()
-        history = self.history()
-        versions = [m["version"] for m in history]
-        protected: set[int] = set(versions[-keep_last:]) if keep_last else set()
-        if retention_hours is not None:
-            cutoff = time.time() - retention_hours * 3600.0
-            protected |= {
-                m["version"]
-                for m in history
-                if m.get("committed_at", float("inf")) >= cutoff
-            }
-            if cur not in protected:
-                raise ValueError(
-                    f"vacuum(retention_hours={retention_hours}, "
-                    f"keep_last={keep_last}): the retention window excludes "
-                    f"the CURRENT version v{cur}; refusing to reclaim the "
-                    "live snapshot. Raise retention_hours or keep_last."
-                )
-        elif not keep_last:
-            protected = {cur}
-        live: set[str] = set()
-        live_dv: set[str] = set()
-        for v in sorted(protected):
-            m = self._manifest(v)
-            live.update(e["path"] for e in m["data_dirs"])
-            live_dv.update(m.get("deletion_vectors", []))
-        removed = []
-        data_root = os.path.join(self.root, "data")
-        if not os.path.isdir(data_root):
-            return removed  # converted table with no post-convert commits
-        for name in sorted(os.listdir(data_root)):
-            d = os.path.join(data_root, name)
-            if d not in live:
-                if not dry_run:
-                    shutil.rmtree(d)
-                removed.append(d)
-        dv_root = os.path.join(self.root, "_dv")
-        if os.path.isdir(dv_root):
-            for name in sorted(os.listdir(dv_root)):
-                d = os.path.join(dv_root, name)
-                if d not in live_dv:
-                    if not dry_run:
-                        shutil.rmtree(d)
-                    removed.append(d)
-        return removed
 
     # ---------------- statistics (§4: ANALYZE TABLE analogue) -------------
 

@@ -7,7 +7,7 @@ OR exactly the committed snapshot (crash after it), never partial
 state; the next writer proceeds normally (a crashed writer can never
 wedge the table); and orphan data dirs are vacuumable.
 
-The seam is ``lake.table._crash_hook`` — a no-op the production code
+The seam is ``lake.log._crash_hook`` — a no-op the production code
 calls at each step; tests monkeypatch it to raise at one chosen point.
 """
 
@@ -15,7 +15,7 @@ import os
 
 import pytest
 
-import ecommerce_lakehouse_spark.lake.table as lake_table
+import ecommerce_lakehouse_spark.lake.log as lake_log
 from ecommerce_lakehouse_spark.lake import LakeTable
 
 pytestmark = pytest.mark.slow
@@ -49,11 +49,11 @@ def _crash_at(monkeypatch, point, skip=0):
                 raise InjectedCrash(point)
             seen["n"] += 1
 
-    monkeypatch.setattr(lake_table, "_crash_hook", hook)
+    monkeypatch.setattr(lake_log, "_crash_hook", hook)
 
 
 def _release(monkeypatch):
-    monkeypatch.setattr(lake_table, "_crash_hook", lambda p: None)
+    monkeypatch.setattr(lake_log, "_crash_hook", lambda p: None)
 
 
 # every commit path: name -> (callable(t, spark), expected rows AFTER a

@@ -20,7 +20,7 @@ import pandas as pd
 import pytest
 from test_lake_layouts import _frame, _interleave
 
-import ecommerce_lakehouse_spark.lake.table as lake_table
+import ecommerce_lakehouse_spark.lake.log as lake_log
 from ecommerce_lakehouse_spark.lake.stream_source import (
     LakeTableStreamReader,
     _snapshot_arrow_schema,
@@ -121,14 +121,14 @@ def test_stream_source_rolls_forward_over_torn_commit(spark, tmp_path, monkeypat
         if point == "manifest_linked":
             raise RuntimeError(point)
 
-    monkeypatch.setattr(lake_table, "_crash_hook", crash)
+    monkeypatch.setattr(lake_log, "_crash_hook", crash)
     with pytest.raises(RuntimeError, match="manifest_linked"):
         t.append(
             spark.createDataFrame(
                 [(2, "b", 2.0, "new")], "id int, k string, v double, extra string"
             )
         )
-    monkeypatch.setattr(lake_table, "_crash_hook", lambda p: None)
+    monkeypatch.setattr(lake_log, "_crash_hook", lambda p: None)
     latest = os.path.join(root, "_manifest", "_LATEST")
 
     def lagging_pointer():
@@ -531,3 +531,55 @@ def test_dml_refuses_a_data_dir_storage_lacks(spark, tmp_path):
             op()
     assert t.current_version() == 2
     assert t.fsck()["missing_dirs"] == [lost]
+
+
+def _race_into_commit(monkeypatch, winner_op):
+    """Run ``winner_op`` (another handle's commit) when the next commit
+    enters: the loser has read its head and written its data."""
+    fired = []
+
+    def hook(point):
+        if point == "commit_enter" and not fired:
+            fired.append(point)
+            winner_op()
+
+    monkeypatch.setattr(lake_log, "_crash_hook", hook)
+
+
+PQ = "k int, p string, q string"
+
+
+def test_append_refuses_to_rebase_over_a_repartition(spark, tmp_path, monkeypatch):
+    """A blind append racing an overwrite that changes ``partition_by``
+    must not rebase: its ``p=``-laid-out dir under a manifest that says
+    ``["q"]`` reads back, but ``read_skipping`` on ``q`` drops its row."""
+    root = str(tmp_path / "t")
+    a, b = LakeTable(spark, root), LakeTable(spark, root)
+    a.overwrite(_frame(spark, [(1, "x", "o")], PQ), partition_by=["p"])
+    _race_into_commit(
+        monkeypatch,
+        lambda: a.overwrite(_frame(spark, [(2, "y", "o")], PQ), partition_by=["q"]),
+    )
+    with pytest.raises(ConcurrentWriteError, match="partition_by"):
+        b.append(_frame(spark, [(3, "z", "o")], PQ))
+    assert b.current_version() == 2
+    assert b._manifest(2)["partition_by"] == ["q"]
+    got = b.read_skipping({"q": ("o", "o")}).select("k", "p", "q").collect()
+    assert [tuple(r) for r in got] == [(2, "y", "o")]
+
+
+def test_append_refuses_to_rebase_over_a_property_change(spark, tmp_path, monkeypatch):
+    """A blind append on an identity table racing ``set_properties``
+    must not rebase: it would commit its stale ``properties`` (with the
+    advanced identity watermark) and drop the winner's key."""
+    root = str(tmp_path / "t")
+    a, b = LakeTable(spark, root), LakeTable(spark, root)
+    a.overwrite(_frame(spark, [(1, "x", "o")], PQ))
+    a.set_identity("k")
+    _race_into_commit(monkeypatch, lambda: a.set_properties({"target_file_bytes": 1234}))
+    with pytest.raises(ConcurrentWriteError, match="properties"):
+        b.append(_frame(spark, [(5, "z", "o")], PQ))
+    assert b.current_version() == 3
+    assert b.properties()["target_file_bytes"] == 1234
+    assert b.properties()["identity"]["high_watermark"] == 2
+    assert sorted(r.k for r in b.read().collect()) == [1]

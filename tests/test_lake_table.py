@@ -243,9 +243,9 @@ def test_optimistic_concurrency_detects_conflicts(spark, tbl):
     # the window between this writer's manifest staging and its link —
     # the loser must never clobber (simulated at the fault-injection
     # seam; see tests/test_lake_fault_injection.py)
-    import ecommerce_lakehouse_spark.lake.table as lake_table
+    import ecommerce_lakehouse_spark.lake.log as lake_log
 
-    saved_hook = lake_table._crash_hook
+    saved_hook = lake_log._crash_hook
 
     fired = {"n": False}
 
@@ -255,24 +255,24 @@ def test_optimistic_concurrency_detects_conflicts(spark, tbl):
             _plant(tbl.current_version() + 1)
 
     race_v = tbl.current_version() + 1
-    lake_table._crash_hook = racer
+    lake_log._crash_hook = racer
     try:
         # blind append loses the link, auto-rebases over the planted
         # winner, and lands one version later — the Delta retry loop
         tbl.append(_df(spark, [(4, "d", "x")]))
     finally:
-        lake_table._crash_hook = saved_hook
+        lake_log._crash_hook = saved_hook
     assert tbl.current_version() == race_v + 1
 
     # a non-rebasable op (full-table overwrite) surfaces the race to
     # the caller instead of retrying blind
     fired["n"] = False
-    lake_table._crash_hook = racer
+    lake_log._crash_hook = racer
     try:
         with _pytest.raises(ConcurrentWriteError):
             tbl.overwrite(_df(spark, [(9, "z", "x")]))
     finally:
-        lake_table._crash_hook = saved_hook
+        lake_log._crash_hook = saved_hook
 
     assert {(r.k, r.v) for r in tbl.read().collect()} == {
         (1, "a"), (2, "b"), (3, "c"), (4, "d"),
@@ -1037,7 +1037,7 @@ def test_blind_append_conflicts_with_concurrent_metadata_change(spark, tmp_path)
     entry = writer_a._write_dir_entry(df_a, prior)
     t.add_generated_column("amount_cents", "CAST(amount * 100 AS BIGINT)")  # B wins
     with pytest.raises(ConcurrentWriteError, match="metadata"):
-        writer_a._commit_rebasing(
+        writer_a._commit(
             prior,
             lambda head: head["data_dirs"] + [entry],
             "append",

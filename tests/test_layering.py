@@ -5,7 +5,9 @@ cannot hide an upward edge. Replay checks stay inside the lake too: a
 ``LakeTable`` write skips a ``txn`` it already applied, so no caller
 guards itself with ``last_txn``; and a streaming fold's fresh-table
 branch lives in ``LakeTable.fold``, so no streaming job asks a table
-whether it ``exists()``."""
+whether it ``exists()``. The commit protocol (``lake/log.py``) imports no
+``pyspark``, and the change feed and the stream source read commits
+only through it."""
 
 import ast
 import pathlib
@@ -54,15 +56,19 @@ def _imported(path: pathlib.Path, root: pathlib.Path):
                 yield node.lineno, f"{base}.{alias.name}"
 
 
-def _violations(layer: str, banned: tuple[str, ...], root=ROOT) -> list[str]:
+def _violations(
+    layer: str, banned: tuple[str, ...], root=ROOT, outside: tuple[str, ...] = ()
+) -> list[str]:
+    """Imports in ``layer`` of the package's ``banned`` modules, or of the
+    top-level packages ``outside`` it."""
     target = root / layer
     files = [target] if target.suffix == ".py" else sorted(target.rglob("*.py"))
     assert files, f"no modules found for layer {layer}"
+    prefixes = [f"{PKG}.{b}" for b in banned] + list(outside)
     out = []
     for f in files:
         for line, name in _imported(f, root):
-            for b in banned:
-                prefix = f"{PKG}.{b}"
+            for prefix in prefixes:
                 if name == prefix or name.startswith(prefix + "."):
                     out.append(f"{f.relative_to(root.parent)}:{line} imports {name}")
     return sorted(set(out))
@@ -71,6 +77,25 @@ def _violations(layer: str, banned: tuple[str, ...], root=ROOT) -> list[str]:
 @pytest.mark.parametrize("layer", sorted(FORBIDDEN))
 def test_layer_imports_point_down(layer):
     assert _violations(layer, FORBIDDEN[layer]) == []
+
+
+def test_log_core_imports_no_pyspark():
+    """The commit protocol runs without a SparkSession or a JVM."""
+    assert _violations("lake/log.py", (), outside=("pyspark",)) == []
+
+
+# manifest plumbing the change feed and the stream source leave to Log:
+# they read commits through it and its actions_between walk
+LOG_PLUMBING = tuple(
+    f"lake.{m}.{name}"
+    for m in ("log", "table")
+    for name in ("_read_manifest", "_head_version", "_live_rels")
+)
+
+
+@pytest.mark.parametrize("layer", ["lake/cdf.py", "lake/stream_source.py"])
+def test_commit_readers_go_through_the_log(layer):
+    assert _violations(layer, LOG_PLUMBING) == []
 
 
 def test_scan_sees_function_local_and_relative_imports(tmp_path):
@@ -83,12 +108,18 @@ def test_scan_sees_function_local_and_relative_imports(tmp_path):
         "def f():\n"
         "    from ecommerce_lakehouse_spark.queries.llm2 import x\n"
         "from ..pipelines import curation\n"
+        "def g():\n"
+        "    from pyspark.sql import DataFrame\n"
     )
     assert _violations("lake", FORBIDDEN["lake"], root=pkg) == [
         f"{PKG}/lake/m.py:2 imports {PKG}.queries.llm2",
         f"{PKG}/lake/m.py:2 imports {PKG}.queries.llm2.x",
         f"{PKG}/lake/m.py:3 imports {PKG}.pipelines",
         f"{PKG}/lake/m.py:3 imports {PKG}.pipelines.curation",
+    ]
+    assert _violations("lake", (), root=pkg, outside=("pyspark",)) == [
+        f"{PKG}/lake/m.py:5 imports pyspark.sql",
+        f"{PKG}/lake/m.py:5 imports pyspark.sql.DataFrame",
     ]
 
 
